@@ -16,9 +16,9 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import pipelines
 from .operators import dedup, similarity, stats
 from .plans import serving
-from .plans.combinator import resolve_query
 from .sources import writer
 
 
@@ -44,25 +44,12 @@ class RclipServerApi:
         return writer.live_rows(self.spark.read.parquet(self.table_path))
 
     def _resolve(self, q: str):
-        df = self._live()
-        return resolve_query(
-            q,
-            self.embedder,
-            image_lookup=lambda i: similarity.point_lookup_embedding(
-                df, i, id_col="id", vec_col="vector"
-            ),
-            random_image=lambda: similarity.random_row_embedding(df, vec_col="vector"),
-        )
+        return pipelines.resolve_live(self._live(), q, self.embedder)
 
     # -- endpoints --------------------------------------------------------
     def search_api(self, q: str, num: int | None = None) -> list[list]:
         """/search_api → [[image_id, score], ...] top-(num or 12) (RS:386-393)."""
-        qv = self._resolve(q)
-        if qv is None:
-            return []
-        top = similarity.topk_similar(
-            self._live(), qv, k=num or 12, id_col="id", vec_col="vector"
-        )
+        top = pipelines.search_api(self.spark, self.table_path, q, self.embedder, num)
         return [[r["id"], r["score"]] for r in top.collect()]
 
     def similar_words(self, q: str) -> dict:

@@ -67,7 +67,7 @@ _PRIORITY = [
     # centroids+codebooks; the oracle recomputes codes, ADC scores,
     # the shortlist, and the exact re-rank from shared literals);
     # (c) the 12 index rows whose machinery r14 touched (the unified
-    # refresh skeleton matview._refresh_index now drives every
+    # refresh skeleton, now indexkind.refresh, drives every
     # text/ANN/IVF refresh; these rows' fixtures all refresh through
     # it) stay; (d) the 4 delete-vector read rows stay — r14 re-keyed
     # the pinned vector read on the new delete_typed manifest marker
@@ -94,7 +94,7 @@ _PRIORITY = [
     # no-oracle retrieval row; verdict task 1) ---
     "ii_ivfadc_topk",
     # --- index rows whose machinery r14 touched: every refresh now
-    # dispatches through matview._refresh_index (text/ANN/IVF), and
+    # dispatches through indexkind.refresh (text/ANN/IVF), and
     # every serving read sits over the delete_typed-keyed vector read
     "ii_ivf_indexed_topk", "sql_knn_join_indexed",
     "sql_hybrid_search_rrf",

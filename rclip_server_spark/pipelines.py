@@ -169,6 +169,25 @@ def index_images_stream(
     q.awaitTermination()
 
 
+def resolve_live(live: DataFrame, q: str, embedder):
+    """Resolve a grammar query against a table's live rows: text terms
+    embed, ``{"image_id": N}`` terms look the row up and
+    ``{"random_seed": s}`` terms draw a row, both over ``live``.
+    Returns the unit query vector, or None (no terms, or terms that
+    cancel)."""
+    from .operators import similarity
+    from .plans.combinator import resolve_query
+
+    return resolve_query(
+        q,
+        embedder,
+        image_lookup=lambda i: similarity.point_lookup_embedding(
+            live, i, id_col="id", vec_col="vector"
+        ),
+        random_image=lambda: similarity.random_row_embedding(live, vec_col="vector"),
+    )
+
+
 def search_api(
     spark: SparkSession,
     table_path: str,
@@ -177,19 +196,12 @@ def search_api(
     num: int | None = None,
 ) -> DataFrame:
     """The /search_api lifecycle (reference §3.1) over an indexed table:
-    parse → combinator → live-row filter → cosine top-k → (id, score)."""
+    parse → combinator → live-row filter → cosine top-k → (id, score).
+    The table is opened once; resolution and the scan share it."""
     from .operators import similarity
-    from .plans.combinator import resolve_query
 
     df = writer.live_rows(spark.read.parquet(table_path))
-    qv = resolve_query(
-        q,
-        embedder,
-        image_lookup=lambda i: similarity.point_lookup_embedding(
-            df, i, id_col="id", vec_col="vector"
-        ),
-        random_image=lambda: similarity.random_row_embedding(df, vec_col="vector"),
-    )
+    qv = resolve_live(df, q, embedder)
     if qv is None:
         return values_df(spark, [], "id long, score double")
     return similarity.topk_similar(df, qv, k=num or 12, id_col="id", vec_col="vector")

@@ -26,7 +26,10 @@ buckets and score only those rows. At rest the state can additionally
 be laid out by versioned.convert_to_bucketed on the bucket for
 physical pruning. Joins the matview graph through the standard marker
 registry (``ai_source``), so REFRESH / CASCADE / DESCRIBE / cursor-
-safe VACUUM / refresh streams all work with no extra wiring.
+safe VACUUM / refresh streams all work with no extra wiring. The
+lifecycle it shares with the other index kinds (spec and state reads,
+refresh, bucketed layout) is one descriptor in indexkind.py; this
+module holds the bucketing and the probe rule.
 """
 
 from __future__ import annotations
@@ -36,22 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as VEC
-from ..functions.localrel import values_df
 from ..operators.ann import hyperplane_bucket_col, hyperplanes
+from . import indexkind as IK
 from . import matview as M
 from . import versioned as V
-from .matview import (_apply_where, _check_include_cols,
-                      _where_expr)
-
-
-def _bucketed_rows(df: DataFrame, key: str, vec_col: str,
-                   n_planes: int, dim: int, seed: int,
-                   include_cols: tuple[str, ...] = ()) -> DataFrame:
-    planes = hyperplanes(n_planes, dim, seed)
-    return df.select(
-        hyperplane_bucket_col(vec_col, planes).alias("bucket"),
-        F.col(key), F.col(vec_col),
-        *[F.col(c) for c in include_cols])
+from .indexkind import convert_index_to_bucketed  # noqa: F401  (public)
 
 
 def create_ann_index(
@@ -75,8 +67,8 @@ def create_ann_index(
             raise ValueError("cannot infer embedding dim from an "
                              "empty source; pass dim=")
         dim = int(probe[0])
-    inc = _check_include_cols(df, key, vec_col, include_cols,
-                              reserved=("bucket",))
+    inc = IK.check_include_cols(df, key, vec_col, include_cols,
+                                reserved=("bucket",))
     spec = {
         "ai_source": source_path, "ai_key": key,
         "ai_vec_col": vec_col, "ai_n_planes": int(n_planes),
@@ -84,79 +76,24 @@ def create_ann_index(
         "ai_source_version": src_v,
         "ai_include_cols": inc,
     }
-    state = _bucketed_rows(df, key, vec_col, n_planes, dim, seed,
-                           include_cols=tuple(inc))
-    return V.create(spark, view_path, state, extra={"app": spec})
+    return V.create(spark, view_path, _rows_of(spec, df),
+                    extra={"app": spec})
 
 
-def _spec_ai(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    spec = V._manifest(path, v).get("app") or {}
-    if "ai_source" not in spec:
-        raise ValueError(f"{path} is not an ann-index view (no "
-                         f"ai_source in its manifest app namespace)")
-    return spec
-
-
-def _state(spark: SparkSession, view_path: str, v: int,
-           probes: list[int] | None = None) -> DataFrame:
-    """The index state at a version, layout-dispatched through the
-    shared serving read (versioned.read_probed): on the bucketed
-    at-rest layout the probed LSH bucket VALUES resolve to physical
-    buckets driver-side and only those buckets' segment files enter
-    the plan, schema pinned from the manifest — zero pre-scan Spark
-    jobs."""
-    return V.read_probed(spark, view_path, v, "bucket",
-                         probe_values=probes)
+def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
+    """(bucket, key, vec, payload…) of source rows: the bucket is the
+    row's sign-bit fold under the spec's frozen planes."""
+    return df.select(
+        hyperplane_bucket_col(spec["ai_vec_col"], _planes(spec))
+        .alias("bucket"),
+        F.col(spec["ai_key"]), F.col(spec["ai_vec_col"]),
+        *[F.col(c) for c in spec.get("ai_include_cols", [])])
 
 
 def read_ann_index(spark: SparkSession, view_path: str,
                    version: int | None = None) -> DataFrame:
     """The bucketed rows at a version, canonical column order."""
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ai(view_path, v)
-    return _state(spark, view_path, v).select(
-        "bucket", spec["ai_key"], spec["ai_vec_col"],
-        *spec.get("ai_include_cols", []))
-
-
-def convert_index_to_bucketed(spark: SparkSession, view_path: str,
-                              n_buckets: int | None = None) -> int:
-    """Physically lay the index out by its LSH ``bucket`` column
-    (versioned.convert_to_bucketed): one rewrite, after which a probe
-    query's candidate read SKIPS FILES, not rows — the probed LSH
-    buckets hash to a subset of the physical buckets, and only those
-    buckets' segment directories are ever named in the scan plan (at
-    100 TB the untouched ~(1 - probe fraction) of the corpus costs
-    zero IO, zero tasks). Refreshes keep working unchanged: the
-    delete_and_append refresh commit dispatches to the bucketed twin
-    (per-bucket appends + a delete vector), and compact_bucketed /
-    maybe_compact fold refresh accretion back down.
-
-    Default ``n_buckets`` = 2^n_planes (one physical bucket per LSH
-    bucket modulo hash collisions), capped at 256 — beyond that the
-    per-bucket segments at toy scale are empty files for no pruning
-    gain."""
-    spec = _spec_ai(view_path)
-    if n_buckets is None:
-        n_buckets = min(2 ** int(spec["ai_n_planes"]), 256)
-    return V.convert_to_bucketed(spark, view_path, "bucket",
-                                 int(n_buckets))
-
-
-def _probe_hash_buckets(probes: list[int], n_buckets: int) -> list[int]:
-    """Physical hash buckets of the probed LSH bucket VALUES — the
-    exact writer-side expression (pmod(xxhash64(cast string), n))
-    evaluated DRIVER-SIDE in pure Python (functions/xxh.py, parity
-    pinned against the live Spark expression by tests/test_xxh.py):
-    zero Spark jobs on the serving path, a few microseconds for the
-    ≤(1+p+C(p,2))-entry probe list. (r12 ran a createDataFrame+collect
-    round trip here — bounded, but a full Spark job per query.) The
-    serving path itself routes through versioned.read_probed; this
-    helper remains as the parity-test seam for that resolution rule."""
-    from ..functions.xxh import buckets_of
-
-    return buckets_of([int(b) for b in probes], int(n_buckets))
+    return IK.read(spark, "ann_index", view_path, version)
 
 
 def refresh_ann_index(
@@ -167,18 +104,9 @@ def refresh_ann_index(
     rows (key delete vector), append the new rows WITH their buckets —
     ONE delete_and_append commit, O(changed rows). Rollback/vacuumed-
     past-cursor heals by full recompute. All structure lives in the
-    shared skeleton (matview._refresh_index); this kind contributes
-    only the bucket derivation under the spec's frozen planes."""
-    return M._refresh_index(
-        spark, view_path,
-        spec_of=_spec_ai, src_field="ai_source",
-        cursor_field="ai_source_version", key_field="ai_key",
-        rows_of=lambda spec, df: _bucketed_rows(
-            df, spec["ai_key"], spec["ai_vec_col"],
-            int(spec["ai_n_planes"]), int(spec["ai_dim"]),
-            int(spec["ai_seed"]),
-            include_cols=tuple(spec.get("ai_include_cols", []))),
-        recompute_fraction=recompute_fraction)
+    shared lifecycle (indexkind.refresh); this kind contributes only
+    the bucket derivation under the spec's frozen planes."""
+    return IK.refresh(spark, "ann_index", view_path, recompute_fraction)
 
 
 def refresh_ann_index_with_retry(
@@ -186,10 +114,8 @@ def refresh_ann_index_with_retry(
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """OCC rebase loop (the standard view-refresh retry contract)."""
-    return M._refresh_with_retry(
-        lambda: refresh_ann_index(
-            spark, view_path, recompute_fraction=recompute_fraction),
-        max_retries)
+    return IK.refresh_with_retry(spark, "ann_index", view_path,
+                                 max_retries, recompute_fraction)
 
 
 def query_ann_index(
@@ -216,18 +142,13 @@ def query_ann_index(
     exact filtered answer) and costs one extra count job, so the
     common non-selective case stops at the first tier with one count.
     Returns (<key>, score[, payload cols referenced stay internal])."""
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ai(view_path, v)
+    v, spec = IK.spec_at("ann_index", view_path, version)
     key, vec_col = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, dim, seed = (int(spec["ai_n_planes"]),
-                           int(spec["ai_dim"]), int(spec["ai_seed"]))
+    n_planes, dim = int(spec["ai_n_planes"]), int(spec["ai_dim"])
     qv = np.asarray(query_vec, dtype=np.float64)
     if qv.shape != (dim,):
         raise ValueError(f"query dim {qv.shape} != index dim ({dim},)")
-    planes = hyperplanes(n_planes, dim, seed)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes)
-                      if float(p @ qv) >= 0))
-    flt = _where_expr(where) if where is not None else None
+    qbucket = _bucket_of(_planes(spec), qv)
 
     def _plan(probes: set | None) -> DataFrame:
         # at-rest pruning: on a hash-bucketed index state
@@ -235,16 +156,11 @@ def query_ann_index(
         # to their physical buckets driver-side and ONLY those
         # buckets' segment files are named in the plan — non-probed
         # buckets are skipped at manifest resolution (files, not
-        # rows). The residual bucket IN-list then prunes hash-collided
-        # rows inside survivors. probes=None is the guarantee tier:
-        # every bucket (exact filtered scan).
-        cand = _state(
-            spark, view_path, v,
-            probes=sorted(int(b) for b in probes) if probes else None)
-        if probes is not None:
-            cand = cand.where(F.col("bucket").isin(sorted(probes)))
-        if flt is not None:
-            cand = _apply_where(cand, flt, where)
+        # rows). probes=None is the guarantee tier: every bucket
+        # (exact filtered scan).
+        cand = IK.apply_where(IK.probed(
+            spark, "ann_index", view_path, v,
+            None if probes is None else sorted(probes)), where)
         scored = cand.withColumn(
             "score", VEC.dot(vec_col, VEC.vec_lit_sql(qv)))
         return (scored.select(key, "score")
@@ -270,17 +186,36 @@ def query_ann_index(
     return out
 
 
+def _planes(spec: dict) -> np.ndarray:
+    return hyperplanes(int(spec["ai_n_planes"]), int(spec["ai_dim"]),
+                       int(spec["ai_seed"]))
+
+
+def _bucket_of(planes: np.ndarray, q: np.ndarray) -> int:
+    """The LSH bucket of one query vector: bit i set when it lies on
+    the non-negative side of plane i."""
+    return int(sum((1 << i) for i, p in enumerate(planes)
+                   if float(p @ q) >= 0))
+
+
+def _flip_masks(n_planes: int, n_probe_bits: int) -> list[int]:
+    """Every XOR mask of at most ``n_probe_bits`` (≤ 2) bit flips, the
+    identity first — the single multiprobe rule all serving tiers
+    share."""
+    masks = [0]
+    if n_probe_bits >= 1:
+        masks += [1 << i for i in range(n_planes)]
+    if n_probe_bits >= 2:
+        masks += [(1 << i) | (1 << j)
+                  for i in range(n_planes)
+                  for j in range(i + 1, n_planes)]
+    return masks
+
+
 def _probe_set(qbucket: int, n_planes: int, n_probe_bits: int) -> set:
     """The query bucket plus every bucket within n_probe_bits bit
-    flips — the single multiprobe rule all serving tiers share."""
-    probes = {int(qbucket)}
-    if n_probe_bits >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
-    if n_probe_bits >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qbucket ^ (1 << i) ^ (1 << j))
-    return probes
+    flips."""
+    return {int(qbucket) ^ m for m in _flip_masks(n_planes, n_probe_bits)}
 
 
 def query_ann_index_batch(
@@ -289,89 +224,29 @@ def query_ann_index_batch(
     qid_col: str = "qid", where: str | None = None,
 ) -> DataFrame:
     """M queries against the maintained index in ONE plan — the
-    amortized serving tier a training-data pipeline needs (millions of
-    lookups arrive in batches; per-call plan-build cost dominates even
-    at zero Spark jobs per plan). ``queries`` is a driver-side list of
-    ``(qid, vector)`` pairs (chunk huge query streams into batches of
-    ~1k; each batch is one job).
+    amortized serving tier a training-data pipeline needs (per-call
+    plan-build cost dominates even at zero Spark jobs per plan).
+    ``queries`` is a driver-side list of ``(qid, vector)`` pairs; the
+    measured batch size is M=32 (one plan, 4 Spark jobs per
+    execution). ``qid_col`` names the output's query-id column and
+    must not name an index column or contain a backtick.
 
-    Plan shape: every query's probe set resolves driver-side (spec
-    planes, pure numpy), the UNION of probed buckets drives ONE
-    file-pruned state scan, and two constant-folded literal maps
-    attach queries to candidates row-locally — bucket -> [qid]
-    explodes each candidate into its matching (row, query) pairs and
-    qid -> qvec fetches the scoring vector (r15, guide §2.4: the r14
-    broadcast (qid, bucket, qvec) frame burned a broadcast-build job
-    + an AQE stage for what a literal lookup does inside the scan
-    stage; a row occupies exactly ONE bucket, so the explode emits
-    each (row, query) pair at most once — same inner-join semantics,
-    no dedup exchange). Exact dots score JVM-side, and a per-qid
-    window takes top-k. Shuffles: the qid window over candidate rows
-    only — never the corpus. Per query, rows returned are IDENTICAL
-    to query_ann_index (same probe rule, same fold-order dot over
+    Every query's probe set resolves driver-side (spec planes, pure
+    numpy) and the shared literal-map fan-out
+    (indexkind.query_vector_batch) scores the union of probed buckets
+    in one scan. Per query, rows returned are IDENTICAL to
+    query_ann_index (same probe rule, same fold-order dot over
     bit-identical literals, same (score DESC, key ASC) total order).
 
     Returns (qid, <key>, score) ordered (qid, score DESC, key)."""
-    from ..functions.localrel import _render
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ai(view_path, v)
-    key, vec_col = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, dim, seed = (int(spec["ai_n_planes"]),
-                           int(spec["ai_dim"]), int(spec["ai_seed"]))
-    if not queries:
-        raise ValueError("query_ann_index_batch needs at least one "
-                         "(qid, vector) pair")
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError("duplicate qids in batch")
-    planes = hyperplanes(n_planes, dim, seed)
-    by_bucket: dict[int, list] = {}
-    qvec_lit: dict = {}
-    union = set()
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        if q.shape != (dim,):
-            raise ValueError(
-                f"query {qid!r} dim {q.shape} != index dim ({dim},)")
-        qb = int(sum((1 << i) for i, p in enumerate(planes)
-                     if float(p @ q) >= 0))
-        probes = _probe_set(qb, n_planes, n_probe_bits)
-        union |= probes
-        ql = [float(x) for x in q]
-        qvec_lit[qid] = _render(ql, "array<double>")
-        for b in sorted(probes):
-            by_bucket.setdefault(int(b), []).append(qid)
-    qid_t = "string" if isinstance(qids[0], str) else "bigint"
-    # bucket -> array(qid) and qid -> qvec as literal maps: ConstantFolding
-    # evaluates both once per plan, and the per-row element_at lookups run
-    # inside the scan stage — the rendering reuses localrel's shortest-repr
-    # double text, so the vectors are bit-identical to the r14 VALUES frame
-    bmap_text = "map(" + ", ".join(
-        f"CAST({b} AS BIGINT), array({', '.join(_render(q, qid_t) for q in qs)})"
-        for b, qs in sorted(by_bucket.items())) + ")"
-    qmap_text = "map(" + ", ".join(
-        f"{_render(q, qid_t)}, {qvec_lit[q]}" for q in qids) + ")"
-    cand = _state(spark, view_path, v,
-                  probes=sorted(int(b) for b in union)).where(
-        F.col("bucket").isin(sorted(union)))
-    if where is not None:
-        # shared metadata filter across the batch (payload predicate
-        # pushed into the ONE probed scan, before the query lookup)
-        cand = _apply_where(cand, _where_expr(where), where)
-    from pyspark.sql import Window
+    def rule(spec):
+        planes, n_planes = _planes(spec), int(spec["ai_n_planes"])
+        return lambda q: sorted(_probe_set(_bucket_of(planes, q),
+                                           n_planes, n_probe_bits))
 
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"),
-                                            F.asc(key))
-    return (cand
-            .withColumn(qid_col,
-                        F.explode(F.expr(f"element_at({bmap_text}, bucket)")))
-            .withColumn("score", VEC.dot(
-                F.col(vec_col),
-                F.expr(f"element_at({qmap_text}, `{qid_col}`)")))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select(qid_col, key, "score")
-            .orderBy(qid_col, F.desc("score"), F.asc(key)))
+    return IK.query_vector_batch(spark, "ann_index", view_path, queries,
+                                 k, version, qid_col, where, rule,
+                                 "BIGINT")
 
 
 def knn_join_via_index(
@@ -409,19 +284,10 @@ def knn_join_via_index(
     from ..operators.ann import partition_partial_topk
     from ..operators.dedup import ScaleGuardError
 
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ai(view_path, v)
+    v, spec = IK.spec_at("ann_index", view_path, version)
     key, ivec = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, dim, seed = (int(spec["ai_n_planes"]),
-                           int(spec["ai_dim"]), int(spec["ai_seed"]))
-    planes = hyperplanes(n_planes, dim, seed)
-    masks = [0]
-    if n_probe_bits >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if n_probe_bits >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(n_planes)
-                  for j in range(i + 1, n_planes)]
+    n_planes, planes = int(spec["ai_n_planes"]), _planes(spec)
+    masks = _flip_masks(n_planes, n_probe_bits)
     if max_expected_candidates is not None:
         nl = int(n_left) if n_left is not None else left.count()
         nr = V.table_row_count(view_path, v)  # manifest, zero jobs
@@ -441,10 +307,8 @@ def knn_join_via_index(
         "id_a", "va",
         F.explode(F.array(*[F.col("b0").bitwiseXOR(F.lit(m))
                             for m in masks])).alias("bucket"))
-    rt = _state(spark, view_path, v)
-    if where is not None:
-        rt = _apply_where(rt, _where_expr(where), where)
-    rt = rt.select(
+    rt = IK.apply_where(IK.probed(spark, "ann_index", view_path, v),
+                        where).select(
         "bucket", F.col(key).alias("id_b"), F.col(ivec).alias("vb"))
     scored = (lf.join(rt, "bucket")
               .withColumn("cosine", VEC.dot("va", "vb"))

@@ -35,7 +35,9 @@ Scale: the index build is one map pass (assignment is a
 greatest-of-structs over literal centroids); at rest the state can be
 hash-bucketed on ``ivf_cell`` (convert_index_to_bucketed) so probe
 queries skip FILES at manifest resolution — only the probed cells'
-buckets' segments are ever named in the plan.
+buckets' segments are ever named in the plan. The lifecycle it shares
+with the other index kinds is one descriptor in indexkind.py; this
+module holds cell assignment, the probe rule and drift governance.
 """
 
 from __future__ import annotations
@@ -47,8 +49,10 @@ from pyspark.sql import functions as F
 from ..functions import vector as VEC
 from ..functions.localrel import values_df
 from ..operators.ann import ivf_assign, ivf_train_kmeans
+from . import indexkind as IK
 from . import matview as M
 from . import versioned as V
+from .indexkind import convert_index_to_bucketed  # noqa: F401  (public)
 from .matview import _INSERTING, _RETRACTING
 
 
@@ -111,26 +115,17 @@ def create_ivf_index(
     rows as FILTERABLE PAYLOAD (query_ivf_index ``where=``): the
     predicate evaluates inside the probed-cell scan, parquet-pushed,
     so filtered vector search never joins back to the source."""
-    from .matview import _check_include_cols
-
     src_v = V.current_version(source_path)
     df = M._read_source(spark, source_path, src_v)
-    inc = _check_include_cols(df, key, vec_col, include_cols,
-                              reserved=("ivf_cell", "pq_codes"))
+    inc = IK.check_include_cols(df, key, vec_col, include_cols,
+                                reserved=("ivf_cell", "pq_codes"))
     if centroids is None:
         centroids = ivf_train_kmeans(df, k=int(n_cells), iters=int(iters),
                                      id_col=key, vec_col=vec_col,
                                      init=init)
         trained = f"kmeans:{init}:{int(iters)}"
     else:
-        centroids = np.asarray(centroids, dtype=np.float64)
-        if centroids.ndim == 2:
-            norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-            if not (norms > 0).all():
-                raise ValueError("explicit centroids must be non-zero "
-                                 "rows (assignment is by max dot)")
-            if not np.allclose(norms, 1.0, rtol=0.0, atol=1e-9):
-                centroids = centroids / norms
+        centroids = _unit_rows(centroids)
         trained = "explicit"
     if centroids.ndim != 2:
         raise ValueError(f"centroids must be a (n_cells, dim) matrix, "
@@ -145,48 +140,27 @@ def create_ivf_index(
         "ii_vec_col": vec_col, "ii_n_cells": int(centroids.shape[0]),
         "ii_dim": int(dim), "ii_trained": trained,
         "ii_source_version": src_v,
-        "ii_centroids": [[float(x) for x in c] for c in centroids],
+        "ii_centroids": _json_floats(centroids),
         "ii_include_cols": inc,
     }
-    books = None
     if codebooks is not None:
         if pq_m is not None:
             raise ValueError("pass pq_m (train residual codebooks) OR "
                              "codebooks (explicit), not both")
-        books = np.asarray(codebooks, dtype=np.float64)
-        if books.ndim != 3 or books.shape[0] * books.shape[2] != dim:
-            raise ValueError(
-                f"explicit codebooks must be (m_sub, k_cent, "
-                f"dim/m_sub) with m_sub*dsub == {dim}, got shape "
-                f"{books.shape}")
-        spec["ii_codebooks"] = [[[float(x) for x in c] for c in b]
-                                for b in books]
+        spec["ii_codebooks"] = _json_floats(_explicit_books(codebooks,
+                                                            dim))
     if pq_m is not None:
-        from ..operators.ann import ivf_pq_train
-
         if dim % int(pq_m):
             raise ValueError(f"pq_m={pq_m} must divide dim {dim}")
-        # deterministic sample: min-key rows (content-keyed, no rand)
-        sample_rows = (df.orderBy(F.asc(key)).limit(int(pq_sample))
-                       .select(vec_col).collect())
-        if not sample_rows:
-            raise ValueError("cannot train PQ codebooks on an empty "
-                             "source")
-        sample = np.asarray([r[0] for r in sample_rows],
-                            dtype=np.float64)
-        books = ivf_pq_train(sample, centroids, m_sub=int(pq_m),
-                             k_cent=int(pq_k), iters=int(pq_iters),
-                             seed=int(pq_seed))
-        spec["ii_codebooks"] = [[[float(x) for x in c] for c in b]
-                                for b in books]
         # training recipe recorded so retrain_ivf_index (the drift
         # heal) can rebuild the books against the NEW centroids with
         # the same parameters
         spec["ii_pq_params"] = {
             "m": int(pq_m), "k": int(pq_k), "iters": int(pq_iters),
             "sample": int(pq_sample), "seed": int(pq_seed)}
-    state = _assigned_rows(df, key, vec_col, centroids,
-                           codebooks=books, include_cols=tuple(inc))
+        spec["ii_codebooks"] = _json_floats(_train_books(
+            df, key, vec_col, centroids, spec["ii_pq_params"]))
+    state = _rows_of(spec, df)
     # drift governance baseline: per-cell counts + summed quantization
     # error of the create-time corpus, frozen alongside the centroids.
     # One extra assignment pass at create (rare, already O(corpus));
@@ -198,6 +172,51 @@ def create_ivf_index(
         "ii_drift_tv_threshold": 0.25, "ii_drift_mqe_threshold": 1.5,
     }
     return V.create(spark, view_path, state, extra={"app": spec})
+
+
+def _unit_rows(centroids) -> np.ndarray:
+    """Explicit centroids, UNIT-NORMALIZED like the kmeans path's
+    output (rows already unit within 1e-9 stay bit-as-given)."""
+    c = np.asarray(centroids, dtype=np.float64)
+    if c.ndim == 2:
+        norms = np.linalg.norm(c, axis=1, keepdims=True)
+        if not (norms > 0).all():
+            raise ValueError("explicit centroids must be non-zero "
+                             "rows (assignment is by max dot)")
+        if not np.allclose(norms, 1.0, rtol=0.0, atol=1e-9):
+            c = c / norms
+    return c
+
+
+def _explicit_books(codebooks, dim: int) -> np.ndarray:
+    books = np.asarray(codebooks, dtype=np.float64)
+    if books.ndim != 3 or books.shape[0] * books.shape[2] != dim:
+        raise ValueError(
+            f"explicit codebooks must be (m_sub, k_cent, dim/m_sub) "
+            f"with m_sub*dsub == {dim}, got shape {books.shape}")
+    return books
+
+
+def _train_books(df: DataFrame, key: str, vec_col: str,
+                 centroids: np.ndarray, pq: dict) -> np.ndarray:
+    """Residual PQ codebooks trained on a deterministic sample: the
+    ``pq["sample"]`` min-key rows (content-keyed, no rand)."""
+    from ..operators.ann import ivf_pq_train
+
+    sample_rows = (df.orderBy(F.asc(key)).limit(int(pq["sample"]))
+                   .select(vec_col).collect())
+    if not sample_rows:
+        raise ValueError("cannot train PQ codebooks on an empty source")
+    sample = np.asarray([r[0] for r in sample_rows], dtype=np.float64)
+    return ivf_pq_train(sample, centroids, m_sub=int(pq["m"]),
+                        k_cent=int(pq["k"]), iters=int(pq["iters"]),
+                        seed=int(pq["seed"]))
+
+
+def _json_floats(a: np.ndarray) -> list:
+    """A centroid matrix or codebook tensor as manifest JSON (exact
+    float64 round-trip)."""
+    return np.asarray(a, dtype=np.float64).tolist()
 
 
 def _cell_stats(spark: SparkSession, rows: DataFrame, vec_col: str,
@@ -233,15 +252,6 @@ def _cell_stats(spark: SparkSession, rows: DataFrame, vec_col: str,
     return counts, sum_qe
 
 
-def _spec_ii(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    spec = V._manifest(path, v).get("app") or {}
-    if "ii_source" not in spec:
-        raise ValueError(f"{path} is not an ivf-index view (no "
-                         f"ii_source in its manifest app namespace)")
-    return spec
-
-
 def _centroids(spec: dict) -> np.ndarray:
     return np.asarray(spec["ii_centroids"], dtype=np.float64)
 
@@ -251,44 +261,60 @@ def _codebooks(spec: dict):
     return None if b is None else np.asarray(b, dtype=np.float64)
 
 
-def _state(spark: SparkSession, view_path: str, v: int,
-           cells: list[int] | None = None) -> DataFrame:
-    """Layout-dispatched state read through the shared serving read
-    (versioned.read_probed, bucket key = ivf_cell): on the bucketed
-    at-rest layout the probed CELLS resolve to physical buckets
-    driver-side and only those buckets' segment files enter the plan,
-    schema pinned from the manifest — zero pre-scan Spark jobs."""
-    return V.read_probed(
-        spark, view_path, v, "ivf_cell",
-        probe_values=None if cells is None else [int(c) for c in
-                                                 cells])
+def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
+    """The index rows of source rows under the FROZEN quantizers."""
+    return _assigned_rows(
+        df, spec["ii_key"], spec["ii_vec_col"], _centroids(spec),
+        codebooks=_codebooks(spec),
+        include_cols=tuple(spec.get("ii_include_cols", [])))
+
+
+def _app_on_recompute(spark, spec, head, app):
+    # heal path re-derives the CURRENT drift stats from the head (the
+    # heal already rescans the corpus); the baseline stays frozen — a
+    # heal is layout repair, never a drift absolution
+    if "ii_base_cell_counts" not in spec:
+        return app  # pre-drift index (older manifest): stay quiet
+    cents = _centroids(spec)
+    rows = _assigned_rows(head, spec["ii_key"], spec["ii_vec_col"],
+                          cents, codebooks=_codebooks(spec))
+    counts, sum_qe = _cell_stats(spark, rows, spec["ii_vec_col"], cents)
+    return app | {"ii_cur_cell_counts": counts, "ii_cur_sum_qe": sum_qe}
+
+
+def _app_on_delta(spark, spec, ch, new_rows, app):
+    if "ii_base_cell_counts" not in spec:
+        return app
+    cents = _centroids(spec)
+    key, vec_col = spec["ii_key"], spec["ii_vec_col"]
+    # ONE signed aggregation over the (already persisted) change
+    # frame: inserts count +1, retracted pre-images -1, each
+    # re-assigned under the SAME frozen centroids they carried — exact
+    # roll-forward. Counts/qe never need pq_codes, so the retraction
+    # side skips the IVFADC Arrow re-encode a _assigned_rows call
+    # would pay.
+    signed = (ch.where(F.col("_change_type").isin(
+        *(_RETRACTING + _INSERTING)))
+        .withColumn("_sgn", F.when(
+            F.col("_change_type").isin(*_INSERTING),
+            F.lit(1)).otherwise(F.lit(-1)))
+        .select(key, vec_col, "_sgn"))
+    assigned = ivf_assign(signed, cents, id_col=key, vec_col=vec_col,
+                          keep_cols=["_sgn"])
+    counts, sum_qe = _cell_stats(spark, assigned, vec_col, cents,
+                                 sign_col="_sgn")
+    cur = [int(c) + d for c, d in zip(spec["ii_cur_cell_counts"], counts)]
+    return app | {
+        "ii_cur_cell_counts": cur,
+        "ii_cur_sum_qe": float(spec["ii_cur_sum_qe"]) + sum_qe,
+    }
 
 
 def read_ivf_index(spark: SparkSession, view_path: str,
                    version: int | None = None) -> DataFrame:
     """The assigned rows at a version, canonical column order
     (+ pq_codes on an IVFADC index)."""
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ii(view_path, v)
-    cols = ["ivf_cell", spec["ii_key"], spec["ii_vec_col"]]
-    if spec.get("ii_codebooks") is not None:
-        cols.append("pq_codes")
-    cols += spec.get("ii_include_cols", [])
-    return _state(spark, view_path, v).select(*cols)
-
-
-def convert_index_to_bucketed(spark: SparkSession, view_path: str,
-                              n_buckets: int | None = None) -> int:
-    """Physically lay the index out by its ``ivf_cell`` column
-    (versioned.convert_to_bucketed): one rewrite, after which a probe
-    query's candidate read SKIPS FILES, not rows. Default n_buckets =
-    n_cells (one physical bucket per cell modulo hash collisions),
-    capped at 256."""
-    spec = _spec_ii(view_path)
-    if n_buckets is None:
-        n_buckets = min(int(spec["ii_n_cells"]), 256)
-    return V.convert_to_bucketed(spark, view_path, "ivf_cell",
-                                 int(n_buckets))
+    return IK.read(spark, "ivf_index", view_path, version)
 
 
 def refresh_ivf_index(
@@ -301,7 +327,7 @@ def refresh_ivf_index(
     O(changed rows). Rollback/vacuumed-past-cursor heals by full
     recompute (same assignments — the centroids don't move, so heal
     is layout repair, never a semantic change). All structure lives
-    in the shared skeleton (matview._refresh_index); this kind
+    in the shared lifecycle (indexkind.refresh); this kind
     contributes assignment under the frozen quantizers plus the
     DRIFT-counter hooks: the frozen-centroid contract means recall
     decays SILENTLY under distribution drift, so every refresh rolls
@@ -311,63 +337,7 @@ def refresh_ivf_index(
     create-time baseline frozen in the spec. ivf_drift_report /
     DESCRIBE INDEX read the alarm from the manifest, zero Spark
     jobs; the documented heal is an explicit re-create."""
-
-    def _rows(spec, df):
-        return _assigned_rows(
-            df, spec["ii_key"], spec["ii_vec_col"], _centroids(spec),
-            codebooks=_codebooks(spec),
-            include_cols=tuple(spec.get("ii_include_cols", [])))
-
-    def _app_recompute(spark_, spec, head, app):
-        # heal path re-derives the CURRENT stats from the head (the
-        # heal already rescans the corpus); the baseline stays frozen
-        # — a heal is layout repair, never a drift absolution
-        if "ii_base_cell_counts" not in spec:
-            return app  # pre-drift index (older manifest): stay quiet
-        cents = _centroids(spec)
-        rows = _assigned_rows(head, spec["ii_key"],
-                              spec["ii_vec_col"], cents,
-                              codebooks=_codebooks(spec))
-        counts, sum_qe = _cell_stats(spark_, rows,
-                                     spec["ii_vec_col"], cents)
-        return app | {"ii_cur_cell_counts": counts,
-                      "ii_cur_sum_qe": sum_qe}
-
-    def _app_delta(spark_, spec, ch, new_rows, app):
-        if "ii_base_cell_counts" not in spec:
-            return app
-        cents = _centroids(spec)
-        key, vec_col = spec["ii_key"], spec["ii_vec_col"]
-        # ONE signed aggregation over the (already persisted) change
-        # frame: inserts count +1, retracted pre-images -1, each
-        # re-assigned under the SAME frozen centroids they carried —
-        # exact roll-forward. Counts/qe never need pq_codes, so the
-        # retraction side skips the IVFADC Arrow re-encode a
-        # _assigned_rows call would pay (r14 review finding: the old
-        # two-_cell_stats form ran two jobs + a PQ pass per refresh).
-        signed = (ch.where(F.col("_change_type").isin(
-            *(_RETRACTING + _INSERTING)))
-            .withColumn("_sgn", F.when(
-                F.col("_change_type").isin(*_INSERTING),
-                F.lit(1)).otherwise(F.lit(-1)))
-            .select(key, vec_col, "_sgn"))
-        assigned = ivf_assign(signed, cents, id_col=key,
-                              vec_col=vec_col, keep_cols=["_sgn"])
-        counts, sum_qe = _cell_stats(spark_, assigned, vec_col, cents,
-                                     sign_col="_sgn")
-        cur = [int(c) + d for c, d in
-               zip(spec["ii_cur_cell_counts"], counts)]
-        return app | {
-            "ii_cur_cell_counts": cur,
-            "ii_cur_sum_qe": float(spec["ii_cur_sum_qe"]) + sum_qe,
-        }
-
-    return M._refresh_index(
-        spark, view_path,
-        spec_of=_spec_ii, src_field="ii_source",
-        cursor_field="ii_source_version", key_field="ii_key",
-        rows_of=_rows, recompute_fraction=recompute_fraction,
-        app_on_recompute=_app_recompute, app_on_delta=_app_delta)
+    return IK.refresh(spark, "ivf_index", view_path, recompute_fraction)
 
 
 def ivf_drift_report(view_path: str,
@@ -393,7 +363,7 @@ def ivf_drift_report(view_path: str,
 
     Indexes created before drift tracking report ``tracked: False``
     and never alarm (no baseline to compare against)."""
-    spec = _spec_ii(view_path, version)
+    spec = IK.spec_of("ivf_index", view_path, version)
     if "ii_base_cell_counts" not in spec:
         return {"tracked": False, "alarm": False}
     base = [int(x) for x in spec["ii_base_cell_counts"]]
@@ -436,7 +406,7 @@ def retrain_ivf_index(
     at-rest layout overwrite's layout dispatch re-routes the new state
     into the same bucket map, so file pruning survives the retrain."""
     view_v = V.current_version(view_path)
-    spec = _spec_ii(view_path, view_v)
+    spec = IK.spec_of("ivf_index", view_path, view_v)
     key, vec_col = spec["ii_key"], spec["ii_vec_col"]
     src = spec["ii_source"]
     src_v = V.current_version(src)
@@ -457,26 +427,20 @@ def retrain_ivf_index(
         new_trained = (f"kmeans:{init or c_init}:"
                        f"{int(iters if iters is not None else c_iters)}")
     else:
-        cents = np.asarray(centroids, dtype=np.float64)
-        norms = np.linalg.norm(cents, axis=1, keepdims=True)
-        if not (norms > 0).all():
-            raise ValueError("explicit centroids must be non-zero rows")
-        if not np.allclose(norms, 1.0, rtol=0.0, atol=1e-9):
-            cents = cents / norms
+        cents = _unit_rows(centroids)
         new_trained = "explicit"
     if cents.shape != (int(spec["ii_n_cells"]), int(spec["ii_dim"])):
         raise ValueError(
             f"retrained centroids shape {cents.shape} != the index's "
             f"({spec['ii_n_cells']}, {spec['ii_dim']})")
-    books = None
+    app = dict(spec) | {
+        "ii_centroids": _json_floats(cents),
+        "ii_trained": new_trained,
+        "ii_source_version": src_v,
+    }
     if codebooks is not None:
-        books = np.asarray(codebooks, dtype=np.float64)
-        dim = int(spec["ii_dim"])
-        if books.ndim != 3 or books.shape[0] * books.shape[2] != dim:
-            raise ValueError(
-                f"explicit codebooks must be (m_sub, k_cent, "
-                f"dim/m_sub) with m_sub*dsub == {dim}, got shape "
-                f"{books.shape}")
+        app["ii_codebooks"] = _json_floats(_explicit_books(
+            codebooks, int(spec["ii_dim"])))
     elif spec.get("ii_codebooks") is not None:
         pq = spec.get("ii_pq_params")
         if pq is None:
@@ -484,32 +448,14 @@ def retrain_ivf_index(
                 "this index carries EXPLICIT PQ codebooks — pass "
                 "codebooks= to retrain_ivf_index (residual books are "
                 "centroid-relative and cannot survive a retrain)")
-        from ..operators.ann import ivf_pq_train
-
-        sample_rows = (df.orderBy(F.asc(key)).limit(int(pq["sample"]))
-                       .select(vec_col).collect())
-        if not sample_rows:
-            raise ValueError("cannot retrain on an empty source")
-        sample = np.asarray([r[0] for r in sample_rows],
-                            dtype=np.float64)
-        books = ivf_pq_train(sample, cents, m_sub=int(pq["m"]),
-                             k_cent=int(pq["k"]),
-                             iters=int(pq["iters"]),
-                             seed=int(pq["seed"]))
-    inc = tuple(spec.get("ii_include_cols", []))
-    state = _assigned_rows(df, key, vec_col, cents, codebooks=books,
-                           include_cols=inc)
+        app["ii_codebooks"] = _json_floats(_train_books(
+            df, key, vec_col, cents, pq))
+    state = _rows_of(app, df)
     counts, sum_qe = _cell_stats(spark, state, vec_col, cents)
-    app = dict(spec) | {
-        "ii_centroids": [[float(x) for x in c] for c in cents],
-        "ii_trained": new_trained,
-        "ii_source_version": src_v,
+    app |= {
         "ii_base_cell_counts": counts, "ii_base_sum_qe": sum_qe,
         "ii_cur_cell_counts": list(counts), "ii_cur_sum_qe": sum_qe,
     }
-    if books is not None:
-        app["ii_codebooks"] = [[[float(x) for x in c] for c in b]
-                               for b in books]
     return V.overwrite(spark, view_path, state, extra={"app": app},
                        parent_version=view_v)
 
@@ -519,10 +465,8 @@ def refresh_ivf_index_with_retry(
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """OCC rebase loop (the standard view-refresh retry contract)."""
-    return M._refresh_with_retry(
-        lambda: refresh_ivf_index(
-            spark, view_path, recompute_fraction=recompute_fraction),
-        max_retries)
+    return IK.refresh_with_retry(spark, "ivf_index", view_path,
+                                 max_retries, recompute_fraction)
 
 
 def query_ivf_index(
@@ -560,8 +504,7 @@ def query_ivf_index(
     one extra count job.
 
     Returns (<key>, score); final scores are exact dots either way."""
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ii(view_path, v)
+    v, spec = IK.spec_at("ivf_index", view_path, version)
     key, vec_col = spec["ii_key"], spec["ii_vec_col"]
     dim = int(spec["ii_dim"])
     n_cells = int(spec["ii_n_cells"])
@@ -576,17 +519,11 @@ def query_ivf_index(
     if method not in ("exact", "adc"):
         raise ValueError(f"unknown method {method!r}; "
                          f"use 'exact' or 'adc'")
-    from .matview import _apply_where, _where_expr
-
-    flt = _where_expr(where) if where is not None else None
 
     def _plan(probe_n: int) -> DataFrame:
-        order = np.argsort(-(cents @ qv))[:probe_n]
-        cells = [int(i) for i in order]
-        cand = _state(spark, view_path, v, cells=cells).where(
-            F.col("ivf_cell").isin(cells))
-        if flt is not None:
-            cand = _apply_where(cand, flt, where)
+        cand = IK.apply_where(IK.probed(
+            spark, "ivf_index", view_path, v,
+            _nearest_cells(cents, qv, probe_n)), where)
         if method == "adc":
             from ..operators.ann import ivf_pq_topk
 
@@ -625,6 +562,12 @@ def query_ivf_index(
     return out
 
 
+def _nearest_cells(cents: np.ndarray, q: np.ndarray, n_probe: int) -> list:
+    """The probe rule: the ``n_probe`` cells whose centroids score
+    highest against the query (np.argsort order, ties by cell index)."""
+    return [int(i) for i in np.argsort(-(cents @ q))[:int(n_probe)]]
+
+
 def query_ivf_index_batch(
     spark: SparkSession, view_path: str, queries, k: int = 10,
     n_probe: int = 2, version: int | None = None,
@@ -633,75 +576,21 @@ def query_ivf_index_batch(
     """M queries against the maintained IVF index in ONE plan (the
     exact re-rank tier) — the amortized serving form: each query's
     n_probe cells rank driver-side from the spec's stored centroids
-    (zero Spark jobs), the UNION of probed cells drives ONE
-    file-pruned state scan, a broadcast (qid, ivf_cell, qvec) frame
-    equi-joins candidates to their queries (a row lives in exactly
-    ONE cell — no dedup exchange), exact dots score JVM-side, and a
-    per-qid window takes top-k. Per query, rows are IDENTICAL to
-    query_ivf_index(method='exact'): same probe rule
-    (np.argsort(-dots)), same fold-order dot, same
-    (score DESC, key ASC) total order. The ADC tier stays per-query
-    (each query carries its own LUT; batch it by chunking calls).
+    (zero Spark jobs) and the shared literal-map fan-out
+    (indexkind.query_vector_batch) scores the union of probed cells in
+    one file-pruned scan. ``queries`` is a driver-side list of
+    ``(qid, vector)`` pairs; the measured batch size is M=32.
+    ``qid_col`` names the output's query-id column and must not name
+    an index column or contain a backtick. Per query, rows are
+    IDENTICAL to query_ivf_index(method='exact'): same probe rule,
+    same fold-order dot, same (score DESC, key ASC) total order. The
+    ADC tier stays per-query (each query carries its own LUT; batch it
+    by chunking calls).
 
     Returns (qid, <key>, score) ordered (qid, score DESC, key)."""
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ii(view_path, v)
-    key, vec_col = spec["ii_key"], spec["ii_vec_col"]
-    dim = int(spec["ii_dim"])
-    if not queries:
-        raise ValueError("query_ivf_index_batch needs at least one "
-                         "(qid, vector) pair")
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError("duplicate qids in batch")
-    from ..functions.localrel import _render
+    def rule(spec):
+        cents = _centroids(spec)
+        return lambda q: _nearest_cells(cents, q, n_probe)
 
-    cents = _centroids(spec)
-    by_cell: dict[int, list] = {}
-    qvec_lit: dict = {}
-    union = set()
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        if q.shape != (dim,):
-            raise ValueError(
-                f"query {qid!r} dim {q.shape} != index dim ({dim},)")
-        cells = [int(i) for i in np.argsort(-(cents @ q))[:int(n_probe)]]
-        union |= set(cells)
-        qvec_lit[qid] = _render([float(x) for x in q], "array<double>")
-        for c in cells:
-            by_cell.setdefault(c, []).append(qid)
-    qid_t = "string" if isinstance(qids[0], str) else "bigint"
-    # cell -> array(qid) and qid -> qvec as constant-folded literal maps:
-    # the per-row element_at lookups run inside the probed scan stage,
-    # replacing the r14 broadcast (qid, cell, qvec) frame's build job +
-    # AQE stage (guide §2.4; same rewrite as query_ann_index_batch —
-    # rows occupy exactly one cell, so the explode emits each
-    # (row, query) pair at most once: inner-join semantics preserved)
-    cmap_text = "map(" + ", ".join(
-        f"CAST({c} AS INT), array({', '.join(_render(q, qid_t) for q in qs)})"
-        for c, qs in sorted(by_cell.items())) + ")"
-    qmap_text = "map(" + ", ".join(
-        f"{_render(q, qid_t)}, {qvec_lit[q]}" for q in qids) + ")"
-    cand = _state(spark, view_path, v,
-                  cells=sorted(union)).where(
-        F.col("ivf_cell").isin(sorted(union)))
-    if where is not None:
-        # shared metadata filter across the batch (payload predicate
-        # pushed into the ONE probed scan, before the query lookup)
-        from .matview import _apply_where, _where_expr
-
-        cand = _apply_where(cand, _where_expr(where), where)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"),
-                                            F.asc(key))
-    return (cand
-            .withColumn(qid_col,
-                        F.explode(F.expr(f"element_at({cmap_text}, ivf_cell)")))
-            .withColumn("score", VEC.dot(
-                F.col(vec_col),
-                F.expr(f"element_at({qmap_text}, `{qid_col}`)")))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select(qid_col, key, "score")
-            .orderBy(qid_col, F.desc("score"), F.asc(key)))
+    return IK.query_vector_batch(spark, "ivf_index", view_path, queries,
+                                 k, version, qid_col, where, rule, "INT")

@@ -320,80 +320,6 @@ def _changes_since_cursor(spark, src, v_from, v_to, key, multiset=False):
         ) from e
 
 
-def _refresh_index(
-    spark, view_path: str, *,
-    spec_of,               # (path, version) -> spec dict (validates kind)
-    src_field: str, cursor_field: str, key_field: str,
-    rows_of,               # (spec, source_rows_df) -> index rows
-    recompute_fraction,
-    app_on_recompute=None,  # (spark, spec, head_df, new_app) -> new_app
-    app_on_delta=None,      # (spark, spec, ch_df, new_rows, new_app) -> new_app
-) -> int:
-    """The ONE cursor-advance skeleton the maintained index kinds share
-    (text postings / ANN-LSH buckets / IVF cells): check the cursor,
-    prefer the O(changed rows) path (doc-key delete vector retraction +
-    derived-rows append, ONE delete_and_append commit), heal
-    rollback/vacuumed-past-cursor by full recompute. The kinds diverge
-    ONLY in the row-derivation function (``rows_of`` under the spec's
-    frozen parameters — tokenization, hyperplane buckets, centroid
-    assignment) and in optional manifest-stat maintenance hooks
-    (``app_on_delta`` rolls exact integer corpus stats / drift counters
-    forward from the interval; ``app_on_recompute`` re-derives them
-    from the head). This is the refresh twin of the unified serving
-    read (versioned.read_probed): r13 unified how the three kinds READ,
-    this unifies how they ADVANCE.
-
-    Cost-model stance (inherited from the pair views): the row-model is
-    disabled (_dispatch_recompute(None, ...)) — derived rows scatter
-    across the index layout, so per-row DML would trip full re-derivation
-    on every delete; recompute keeps HEAL semantics only."""
-    view_v = V.current_version(view_path)
-    spec = spec_of(view_path, view_v)
-    src, key = spec[src_field], spec[key_field]
-    v_from = int(spec[cursor_field])
-    v_to = V.current_version(src)
-    if v_to == v_from:
-        return view_v
-    new_app = dict(spec) | {cursor_field: v_to}
-
-    def _recompute() -> int:
-        head = _read_source(spark, src, v_to)
-        app = new_app if app_on_recompute is None else \
-            app_on_recompute(spark, spec, head, dict(new_app))
-        return V.overwrite(spark, view_path, rows_of(spec, head),
-                           extra={"app": app}, parent_version=view_v)
-
-    try:
-        recompute, _bounds = _dispatch_recompute(
-            None, [(src, v_from, v_to)])
-    except RuntimeError:
-        if recompute_fraction is None:
-            raise
-        recompute = True
-    if recompute:
-        return _recompute()
-    try:
-        ch = _changes_since_cursor(spark, src, v_from, v_to, key)
-    except RuntimeError:
-        return _recompute()  # vacuumed past the cursor: heal
-    # persist: the frame is consumed twice inside delete_and_append
-    # (delete-vector write + segment write), and a rewriting interval's
-    # CDC is a snapshot-diff join — don't run it per consumer
-    ch = ch.persist()
-    try:
-        del_keys = (ch.where(F.col("_change_type").isin(
-            *(_RETRACTING + _INSERTING))).select(key).distinct())
-        ins = ch.where(F.col("_change_type").isin(*_INSERTING))
-        new_rows = rows_of(spec, ins)
-        app = new_app if app_on_delta is None else \
-            app_on_delta(spark, spec, ch, new_rows, dict(new_app))
-        return V.delete_and_append(
-            spark, view_path, del_keys, key, new_rows,
-            extra={"app": app}, parent_version=view_v)
-    finally:
-        ch.unpersist()
-
-
 def create_agg_view(
     spark: SparkSession, source_path: str, view_path: str, key: str,
     group_cols: list[str], sum_cols: list[str] | None = None,
@@ -1545,23 +1471,11 @@ def refresh_view(spark: SparkSession, view_path: str,
         return _fold(ND.refresh_embed_near_dup_pairs_view_with_retry(
             spark, view_path, max_retries=max_retries,
             recompute_fraction=recompute_fraction))
-    if kind == "text_index":
-        from . import textindex as TI  # local: TI imports this module
+    from . import indexkind as IK  # local: IK imports this module
 
-        return _fold(TI.refresh_text_index_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction))
-    if kind == "ann_index":
-        from . import annindex as AI  # local: AI imports this module
-
-        return _fold(AI.refresh_ann_index_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction))
-    if kind == "ivf_index":
-        from . import ivfindex as II  # local: II imports this module
-
-        return _fold(II.refresh_ivf_index_with_retry(
-            spark, view_path, max_retries=max_retries,
+    if kind in IK.kinds():
+        return _fold(IK.refresh_with_retry(
+            spark, kind, view_path, max_retries=max_retries,
             recompute_fraction=recompute_fraction))
     if kind == "transform":
         entry = (transforms or {}).get(view_path)
@@ -1757,35 +1671,18 @@ def describe_index(view_path: str) -> dict:
     verdict). Purely driver-side manifest math, ZERO Spark jobs: a
     dashboard can poll it per index per minute for the cost of two KB
     reads."""
-    out = describe_view(view_path)
-    kind = out.get("view_kind")
-    prefix = {"text_index": "ti", "ann_index": "ai",
-              "ivf_index": "ii"}.get(kind)
-    if prefix is None:
-        raise ValueError(f"{view_path} is a {kind} view, not a "
-                         f"maintained index (text_index / ann_index / "
-                         f"ivf_index)")
-    spec = out.get("app") or {}
-    out["index_kind"] = kind
-    out["key"] = spec.get(f"{prefix}_key")
-    if kind == "text_index":
-        out["params"] = {k: spec[k] for k in
-                         ("ti_text_col", "ti_k1", "ti_b",
-                          "ti_positions", "ti_ndocs", "ti_total_len")
-                         if k in spec}
-    elif kind == "ann_index":
-        out["params"] = {k: spec[k] for k in
-                         ("ai_vec_col", "ai_n_planes", "ai_seed",
-                          "ai_dim") if k in spec}
-    else:
-        out["params"] = {k: spec[k] for k in
-                         ("ii_vec_col", "ii_n_cells", "ii_dim",
-                          "ii_trained") if k in spec}
-        out["params"]["ii_pq"] = spec.get("ii_codebooks") is not None
-        from . import ivfindex as _II
+    from . import indexkind as IK  # local: IK imports this module
 
-        out["drift"] = _II.ivf_drift_report(view_path)
-    return out
+    out = describe_view(view_path)
+    kind = IK.kinds().get(out.get("view_kind"))
+    if kind is None:
+        raise ValueError(f"{view_path} is a {out.get('view_kind')} view, "
+                         f"not a maintained index "
+                         f"({' / '.join(IK.kinds())})")
+    spec = out.get("app") or {}
+    out["index_kind"] = kind.name
+    out["key"] = spec.get(f"{kind.prefix}_key")
+    return out | kind.describe(view_path, spec)
 
 
 # ---------------------------------------------------------------------------
@@ -2064,55 +1961,3 @@ def refresh_join_table_view_with_retry(
             auto_compact=auto_compact, compact_threshold=compact_threshold,
             recompute_fraction=recompute_fraction),
         max_retries)
-
-# ---------------------------------------------------------------------------
-# shared FILTERED-SEARCH helpers (r14): payload-column validation at
-# index CREATE and predicate parsing/application at query time — one
-# copy for all three index kinds (annindex / ivfindex / textindex),
-# next to the shared refresh skeleton they already dispatch through.
-# ---------------------------------------------------------------------------
-
-
-def _where_expr(where: str):
-    """Parse a filter predicate string into a Column, surfacing parse
-    errors as the operator-layer ValueError contract (SqlError wraps
-    it at the SQL surface)."""
-    try:
-        return F.expr(where)
-    except Exception as ex:
-        raise ValueError(f"bad filter predicate {where!r}: {ex}") \
-            from ex
-
-
-def _apply_where(cand: DataFrame, flt, where: str) -> DataFrame:
-    """Apply a parsed payload filter, folding resolution failures
-    (filter names a column the index doesn't carry) into the same
-    ValueError contract parse failures use."""
-    try:
-        return cand.where(flt)
-    except Exception as ex:
-        raise ValueError(
-            f"filter predicate {where!r} does not resolve over the "
-            f"index columns {cand.columns} (declare payload columns "
-            f"with include_cols at CREATE): {ex}") from ex
-
-
-def _check_include_cols(df: DataFrame, key: str, vec_col: str,
-                        include_cols, reserved: tuple[str, ...]
-                        ) -> list[str]:
-    """Validate payload columns at CREATE time: they must exist on the
-    source and not collide with the index's own columns — a typo here
-    must fail the CREATE, never a later refresh."""
-    cols = [str(c) for c in (include_cols or [])]
-    lower = {c.lower() for c in df.columns}
-    taken = {key.lower(), vec_col.lower(), *reserved}
-    for c in cols:
-        if c.lower() not in lower:
-            raise ValueError(f"include_cols: {c!r} is not a source "
-                             f"column (have {sorted(df.columns)})")
-        if c.lower() in taken:
-            raise ValueError(f"include_cols: {c!r} collides with an "
-                             f"index column")
-    if len({c.lower() for c in cols}) != len(cols):
-        raise ValueError("include_cols: duplicate column")
-    return cols

@@ -31,7 +31,9 @@ the per-interval stats delta is one tiny aggregation over the change
 frame; queries broadcast a ≤|terms|-row df map. The view joins the
 matview graph through the standard marker registry (``ti_source``), so
 REFRESH / CASCADE / DESCRIBE / cursor-safe VACUUM / refresh STREAMS
-all work on it with no extra wiring.
+all work on it with no extra wiring. The lifecycle it shares with the
+other index kinds is one descriptor in indexkind.py; this module holds
+tokenization and BM25.
 """
 
 from __future__ import annotations
@@ -41,9 +43,10 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions.localrel import values_df
+from . import indexkind as IK
 from . import matview as M
 from . import versioned as V
-
+from .indexkind import convert_index_to_bucketed  # noqa: F401  (public)
 from .matview import _INSERTING, _RETRACTING  # canonical CDC classes
 
 
@@ -106,11 +109,9 @@ def create_text_index(
     FILTERABLE PAYLOAD (query ``where=``): filtered lexical search
     without a join back to the source, at the standard doc-values
     cost of one payload copy per (doc, distinct term)."""
-    from .matview import _check_include_cols
-
     src_v = V.current_version(source_path)
     df = M._read_source(spark, source_path, src_v)
-    inc = _check_include_cols(
+    inc = IK.check_include_cols(
         df, key, text_col, include_cols,
         reserved=("term", "tf", "dl", "positions"))
     n_docs, total_len = _corpus_stats(df, text_col)
@@ -122,73 +123,50 @@ def create_text_index(
         "ti_positions": bool(positions),
         "ti_include_cols": inc,
     }
-    return V.create(spark, view_path,
-                    _postings(df, key, text_col, positions=positions,
-                              include_cols=tuple(inc)),
+    return V.create(spark, view_path, _rows_of(spec, df),
                     extra={"app": spec})
 
 
-def _spec_ti(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    spec = V._manifest(path, v).get("app") or {}
-    if "ti_source" not in spec:
-        raise ValueError(f"{path} is not a text-index view (no "
-                         f"ti_source in its manifest app namespace)")
-    return spec
+def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
+    return _postings(
+        df, spec["ti_key"], spec["ti_text_col"],
+        positions=bool(spec.get("ti_positions")),
+        include_cols=tuple(spec.get("ti_include_cols", [])))
 
 
-def _state(spark: SparkSession, view_path: str, v: int,
-           terms: list[str] | None = None) -> DataFrame:
-    """The postings state at a version, layout-dispatched through the
-    shared serving read (versioned.read_probed, bucket key = term):
-    on the bucketed at-rest layout the query TERMS resolve to their
-    physical buckets driver-side and only those buckets' segment
-    files enter the plan — at 100 TB a 3-term query opens the 3
-    terms' buckets' files, never the whole postings table — with the
-    scan schema pinned from the manifest (zero pre-scan Spark
-    jobs)."""
-    return V.read_probed(spark, view_path, v, "term",
-                         probe_values=terms)
+def _app_on_recompute(spark, spec, head, app):
+    n_docs, total_len = _corpus_stats(head, spec["ti_text_col"])
+    return app | {"ti_ndocs": n_docs, "ti_total_len": total_len}
 
 
-def convert_index_to_bucketed(spark: SparkSession, view_path: str,
-                              n_buckets: int = 64) -> int:
-    """Physically lay the postings out by their ``term`` hash bucket
-    (versioned.convert_to_bucketed) — the text twin of the ANN
-    index's at-rest layout: one rewrite, after which a term/phrase
-    query's read SKIPS FILES, not rows (only the query terms' hash
-    buckets' segment directories are ever named in the scan plan;
-    r12's layout pushed the term IN-list to the scan, which pruned
-    row groups but still OPENED every segment file). Refreshes keep
-    working unchanged — the delete_and_append refresh commit
-    dispatches to the bucketed twin; the doc-key delete vector scopes
-    conservatively to all segments (a doc's postings scatter across
-    term buckets), which costs one broadcast anti-join per read
-    group, not extra IO. compact_bucketed / OPTIMIZE fold refresh
-    accretion back down per bucket.
-
-    Sizing: terms are high-cardinality, so ``n_buckets`` trades probe
-    selectivity (a q-term query reads ≤q buckets = ~q/n of the index)
-    against per-bucket segment size — at 100 TB pick n so a bucket is
-    a few hundred MB; the 64 default keeps toy-scale segments
-    non-empty."""
-    return V.convert_to_bucketed(spark, view_path, "term",
-                                 int(n_buckets))
+def _app_on_delta(spark, spec, ch, new_rows, app):
+    # exact integer stats delta from the interval's pre/post images —
+    # one tiny aggregation over the (persisted) change frame, O(delta)
+    dl_expr = F.size(TXT.tokens(F.col(spec["ti_text_col"]))).cast("long")
+    agg = ch.agg(
+        F.sum(F.col("_change_type").isin(*_INSERTING)
+              .cast("long")).alias("n_ins"),
+        F.sum(F.col("_change_type").isin(*_RETRACTING)
+              .cast("long")).alias("n_del"),
+        F.sum(F.when(F.col("_change_type").isin(*_INSERTING),
+                     dl_expr).otherwise(F.lit(0))).alias("l_ins"),
+        F.sum(F.when(F.col("_change_type").isin(*_RETRACTING),
+                     dl_expr).otherwise(F.lit(0))).alias("l_del"),
+    ).collect()[0]
+    return app | {
+        "ti_ndocs": int(spec["ti_ndocs"])
+        + int(agg["n_ins"] or 0) - int(agg["n_del"] or 0),
+        "ti_total_len": int(spec["ti_total_len"])
+        + int(agg["l_ins"] or 0) - int(agg["l_del"] or 0),
+    }
 
 
 def read_text_index(spark: SparkSession, view_path: str,
                     version: int | None = None) -> DataFrame:
     """The postings table at a version (default head), in the
-    canonical (term, key, tf, dl) column order — a delete_and_append
-    interval can reorder the physical union's columns."""
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ti(view_path, v)
-    key = spec["ti_key"]
-    cols = ["term", key, "tf", "dl"]
-    if spec.get("ti_positions"):
-        cols.append("positions")
-    cols += spec.get("ti_include_cols", [])
-    return _state(spark, view_path, v).select(*cols)
+    canonical (term, key, tf, dl[, positions][, payload…]) column
+    order."""
+    return IK.read(spark, "text_index", view_path, version)
 
 
 def refresh_text_index(
@@ -200,48 +178,9 @@ def refresh_text_index(
     and roll the exact integer corpus stats forward from the interval
     — ONE delete_and_append commit. A vacuumed/rolled-back source
     heals by full recompute (one overwrite, identical rows). All
-    structure lives in the shared skeleton (matview._refresh_index);
-    this kind contributes tokenization and the corpus-stat hooks."""
-
-    def _rows(spec, df):
-        return _postings(
-            df, spec["ti_key"], spec["ti_text_col"],
-            positions=bool(spec.get("ti_positions")),
-            include_cols=tuple(spec.get("ti_include_cols", [])))
-
-    def _app_recompute(spark_, spec, head, app):
-        n_docs, total_len = _corpus_stats(head, spec["ti_text_col"])
-        return app | {"ti_ndocs": n_docs, "ti_total_len": total_len}
-
-    def _app_delta(spark_, spec, ch, new_rows, app):
-        # exact integer stats delta from the interval's pre/post
-        # images — one tiny aggregation over the (persisted) change
-        # frame, O(delta)
-        dl_expr = F.size(TXT.tokens(
-            F.col(spec["ti_text_col"]))).cast("long")
-        agg = ch.agg(
-            F.sum(F.col("_change_type").isin(*_INSERTING)
-                  .cast("long")).alias("n_ins"),
-            F.sum(F.col("_change_type").isin(*_RETRACTING)
-                  .cast("long")).alias("n_del"),
-            F.sum(F.when(F.col("_change_type").isin(*_INSERTING),
-                         dl_expr).otherwise(F.lit(0))).alias("l_ins"),
-            F.sum(F.when(F.col("_change_type").isin(*_RETRACTING),
-                         dl_expr).otherwise(F.lit(0))).alias("l_del"),
-        ).collect()[0]
-        return app | {
-            "ti_ndocs": int(spec["ti_ndocs"])
-            + int(agg["n_ins"] or 0) - int(agg["n_del"] or 0),
-            "ti_total_len": int(spec["ti_total_len"])
-            + int(agg["l_ins"] or 0) - int(agg["l_del"] or 0),
-        }
-
-    return M._refresh_index(
-        spark, view_path,
-        spec_of=_spec_ti, src_field="ti_source",
-        cursor_field="ti_source_version", key_field="ti_key",
-        rows_of=_rows, recompute_fraction=recompute_fraction,
-        app_on_recompute=_app_recompute, app_on_delta=_app_delta)
+    structure lives in the shared lifecycle (indexkind.refresh); this
+    kind contributes tokenization and the corpus-stat hooks."""
+    return IK.refresh(spark, "text_index", view_path, recompute_fraction)
 
 
 def refresh_text_index_with_retry(
@@ -249,10 +188,8 @@ def refresh_text_index_with_retry(
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """OCC rebase loop (the standard view-refresh retry contract)."""
-    return M._refresh_with_retry(
-        lambda: refresh_text_index(
-            spark, view_path, recompute_fraction=recompute_fraction),
-        max_retries)
+    return IK.refresh_with_retry(spark, "text_index", view_path,
+                                 max_retries, recompute_fraction)
 
 
 def query_text_index(
@@ -279,66 +216,68 @@ def query_text_index(
     candidates before the doc-aggregation shuffle (the scan itself
     is already term-pruned; the filter never joins back to the
     source)."""
-    if isinstance(terms, str):
-        terms = [t for t in terms.lower().split() if t]
-    if not terms:
+    mult = _multiplicities(terms)
+    if not mult:
         raise ValueError("query_text_index needs at least one term")
-    # collapse repeats to (unique term, multiplicity): create_map
-    # rejects duplicate keys (mapKeyDedupPolicy=EXCEPTION), and the
-    # batch scorer sums one contribution PER OCCURRENCE — contrib is
-    # linear in idf, so weighting idf by the multiplicity reproduces
-    # it exactly
-    mult = {}
-    for t in terms:
-        mult[t] = mult.get(t, 0) + 1
     terms = list(mult)
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ti(view_path, v)
+    v, spec = IK.spec_at("text_index", view_path, version)
     key = spec["ti_key"]
-    k1, b = float(spec["ti_k1"]), float(spec["ti_b"])
-    n = float(int(spec["ti_ndocs"]))
-    total_len = float(int(spec["ti_total_len"]))
-    if n <= 0:
-        raise ValueError(f"{view_path} indexes an empty corpus")
-    avgdl = total_len / n
+    idf, tfp = _bm25_parts(spec, view_path)
     # bucketed at-rest state: only the query terms' hash buckets'
-    # files enter the plan (driver-side term→bucket resolution); the
-    # residual IN-list prunes hash-collided terms inside survivors
-    hits = _state(spark, view_path, v, terms=terms).where(
-        F.col("term").isin(*terms))
-    # df per query term: a COUNT window over the term partition
-    # (postings carry tf > 0 rows only, so count(rows) IS df) — r12
-    # collected a per-term aggregate to the driver, one full Spark
-    # job per query before the scan; the window keeps the whole
-    # query ONE lazy plan (zero plan-time jobs) over a SINGLE scan of
-    # the probed postings (a broadcast-join formulation would scan
-    # them twice), with idf in the SAME JVM F.log the batch scorer
-    # uses. The term shuffle is O(matching postings), never corpus.
-    from pyspark.sql import Window
-
-    dfq = (F.count(F.lit(1)).over(Window.partitionBy("term"))
-           .cast("double"))
+    # files enter the plan (driver-side term→bucket resolution)
+    hits = IK.probed(spark, "text_index", view_path, v, terms)
     mult_map = F.create_map(*[x for t in terms
                               for x in (F.lit(t),
                                         F.lit(float(mult[t])))])
+    cand = IK.apply_where(
+        hits.withColumn("_c", mult_map[F.col("term")] * idf * tfp), where)
+    scored = cand.groupBy(key).agg(F.sum("_c").alias("bm25"))
+    return (scored.where(F.col("bm25") > 0.0)
+            .orderBy(F.desc("bm25"), F.asc(key))
+            .limit(k)
+            .select(key, "bm25"))
+
+
+def _multiplicities(terms: list[str] | str) -> dict:
+    """Query terms (a string splits on whitespace, lowercased) collapsed
+    to {unique term: multiplicity} in first-occurrence order:
+    create_map rejects duplicate keys (mapKeyDedupPolicy=EXCEPTION),
+    and the batch scorer sums one contribution PER OCCURRENCE — contrib
+    is linear in idf, so weighting idf by the multiplicity reproduces
+    it exactly."""
+    if isinstance(terms, str):
+        terms = [t for t in terms.lower().split() if t]
+    mult: dict = {}
+    for t in terms:
+        mult[t] = mult.get(t, 0) + 1
+    return mult
+
+
+def _bm25_parts(spec: dict, view_path: str):
+    """(idf, tf part) Columns over probed posting rows; a term's
+    contribution is mult * idf * tf part, left-assoc, in every plan.
+    df per term is a COUNT window over the term partition (postings
+    carry tf > 0 rows only, so count(rows) IS df): the whole query
+    stays ONE lazy plan (zero plan-time jobs) over a SINGLE scan of the
+    probed postings, with idf in the SAME JVM F.log the batch scorer
+    uses, and the term shuffle is O(matching postings). N/avgdl come
+    from the spec's exact integer stats."""
+    from pyspark.sql import Window
+
+    k1, b = float(spec["ti_k1"]), float(spec["ti_b"])
+    n = float(int(spec["ti_ndocs"]))
+    if n <= 0:
+        raise ValueError(f"{view_path} indexes an empty corpus")
+    avgdl = float(int(spec["ti_total_len"])) / n
+    dfq = (F.count(F.lit(1)).over(Window.partitionBy("term"))
+           .cast("double"))
     idf = F.log((F.lit(n) - dfq + F.lit(0.5))
                 / (dfq + F.lit(0.5)) + F.lit(1.0))
     tf = F.col("tf").cast("double")
     denom = tf + F.lit(k1) * (F.lit(1.0 - b)
                               + F.lit(b) * (F.col("dl").cast("double")
                                             / F.lit(avgdl)))
-    contrib = (mult_map[F.col("term")] * idf
-               * ((tf * F.lit(k1 + 1.0)) / denom))
-    cand = hits.withColumn("_c", contrib)
-    if where is not None:
-        from .matview import _apply_where, _where_expr
-
-        cand = _apply_where(cand, _where_expr(where), where)
-    scored = cand.groupBy(key).agg(F.sum("_c").alias("bm25"))
-    return (scored.where(F.col("bm25") > 0.0)
-            .orderBy(F.desc("bm25"), F.asc(key))
-            .limit(k)
-            .select(key, "bm25"))
+    return idf, (tf * F.lit(k1 + 1.0)) / denom
 
 
 def query_text_index_batch(
@@ -351,6 +290,8 @@ def query_text_index_batch(
     rerank loop issues thousands of lookups; per-call plan cost
     dominates even at zero Spark jobs per plan). ``queries`` is a
     driver-side list of ``(qid, terms)`` pairs (string or token list).
+    ``qid_col`` names the output's query-id column and must not name
+    an index column or contain a backtick.
 
     Plan shape: the UNION of all queries' terms drives ONE
     file-pruned postings scan; per-term df comes from a COUNT window
@@ -365,58 +306,26 @@ def query_text_index_batch(
     same multiplicity fold, same (bm25 DESC, key ASC) order).
 
     Returns (qid, <key>, bm25) ordered (qid, bm25 DESC, key)."""
-    if not queries:
-        raise ValueError("query_text_index_batch needs at least one "
-                         "(qid, terms) pair")
-    per_q, union_terms = [], set()
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError("duplicate qids in batch")
-    for qid, terms in queries:
-        if isinstance(terms, str):
-            terms = [t for t in terms.lower().split() if t]
-        if not terms:
-            raise ValueError(f"query {qid!r} has no terms")
-        mult: dict = {}
-        for t in terms:
-            mult[t] = mult.get(t, 0) + 1
-        per_q.append((qid, mult))
-        union_terms |= set(mult)
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ti(view_path, v)
-    key = spec["ti_key"]
-    k1, b = float(spec["ti_k1"]), float(spec["ti_b"])
-    n = float(int(spec["ti_ndocs"]))
-    total_len = float(int(spec["ti_total_len"]))
-    if n <= 0:
-        raise ValueError(f"{view_path} indexes an empty corpus")
-    avgdl = total_len / n
-    terms_sorted = sorted(union_terms)
-    hits = _state(spark, view_path, v, terms=terms_sorted).where(
-        F.col("term").isin(*terms_sorted))
     from pyspark.sql import Window
 
-    dfq = (F.count(F.lit(1)).over(Window.partitionBy("term"))
-           .cast("double"))
-    idf = F.log((F.lit(n) - dfq + F.lit(0.5))
-                / (dfq + F.lit(0.5)) + F.lit(1.0))
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b)
-                              + F.lit(b) * (F.col("dl").cast("double")
-                                            / F.lit(avgdl)))
-    # the single-query contrib is mult * idf * ((tf*(k1+1))/denom),
-    # left-assoc — keep the exact fold order for bit-parity
-    base = hits.withColumn("_idf", idf).withColumn(
-        "_tfp", (tf * F.lit(k1 + 1.0)) / denom)
-    if where is not None:
-        # shared payload filter across the batch: applied AFTER the
-        # global-df window (filters select docs, never reshape idf —
-        # the single-query rule), before the query fan-out join
-        from .matview import _apply_where, _where_expr
-
-        base = _apply_where(base, _where_expr(where), where)
-    pairs = [(qid, t, float(m))
-             for qid, mult in per_q for t, m in mult.items()]
+    v, spec = IK.spec_at("text_index", view_path, version)
+    key = spec["ti_key"]
+    qids = IK.check_batch("text_index", spec, queries, qid_col, "bm25",
+                          "terms")
+    pairs = []
+    for qid, terms in queries:
+        mult = _multiplicities(terms)
+        if not mult:
+            raise ValueError(f"query {qid!r} has no terms")
+        pairs += [(qid, t, float(m)) for t, m in mult.items()]
+    idf, tfp = _bm25_parts(spec, view_path)
+    hits = IK.probed(spark, "text_index", view_path, v,
+                     sorted({t for _, t, _ in pairs}))
+    # shared payload filter across the batch: applied AFTER the
+    # global-df window (filters select docs, never reshape idf — the
+    # single-query rule), before the query fan-out join
+    base = IK.apply_where(
+        hits.withColumn("_idf", idf).withColumn("_tfp", tfp), where)
     qid_t = "string" if isinstance(qids[0], str) else "bigint"
     pdf = values_df(
         spark, pairs, f"{qid_col} {qid_t}, term string, _mult double")
@@ -454,23 +363,18 @@ def query_phrase_index(
     terms = [t for t in phrase.lower().split() if t]
     if not terms:
         raise ValueError("query_phrase_index needs a non-empty phrase")
-    v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ti(view_path, v)
+    v, spec = IK.spec_at("text_index", view_path, version)
     if not spec.get("ti_positions"):
         raise ValueError(
             f"{view_path} was built without positions — recreate the "
             f"index with positions=True for phrase queries")
     key = spec["ti_key"]
     uniq = list(dict.fromkeys(terms))
-    hits = (_state(spark, view_path, v, terms=uniq)
-            .where(F.col("term").isin(*uniq)))
-    if where is not None:
-        # phrase matching has no global stats, so the payload filter
-        # applies BEFORE the pivot — pushed into the term-pruned scan
-        from .matview import _apply_where, _where_expr
-
-        hits = _apply_where(hits, _where_expr(where), where)
-    hits = hits.select(key, "term", "positions")
+    # phrase matching has no global stats, so the payload filter
+    # applies BEFORE the pivot — pushed into the term-pruned scan
+    hits = IK.apply_where(
+        IK.probed(spark, "text_index", view_path, v, uniq), where,
+    ).select(key, "term", "positions")
     # one row per candidate doc: term -> sorted offsets (postings hold
     # one row per (doc, term), so the map build is collision-free);
     # docs missing any phrase term can't match — drop them before the

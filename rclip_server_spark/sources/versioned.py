@@ -2563,7 +2563,7 @@ def read_probed(
     bucket_key: str, probe_values=None,
 ) -> DataFrame:
     """The ONE layout-dispatched serving read the maintained index
-    kinds share (ann/text/ivf ``_state``): a flat table reads all
+    kinds share (indexkind.probed): a flat table reads all
     segments; one converted to the hash-bucketed at-rest layout on
     ``bucket_key`` resolves the caller's probe VALUES to physical
     buckets DRIVER-SIDE (functions/xxh.py — the writer's

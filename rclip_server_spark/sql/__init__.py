@@ -1171,26 +1171,18 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
             # index kinds: OPTIMIZE v BUCKET BY (<probe col>, N) lays
             # the maintained index out by its probe column so serving
             # queries skip FILES (only the probed buckets' segments
-            # are named in the plan), not rows — ONE table, not a
-            # branch per kind (the serving contract lives in
-            # versioned.read_probed; this is just its layout knob)
-            _INDEX_BUCKET_COLS = {
-                "ann_index": ("bucket", "annindex"),
-                "ivf_index": ("ivf_cell", "ivfindex"),
-                "text_index": ("term", "textindex"),
-            }
-            if e["kind"] in _INDEX_BUCKET_COLS:
-                col, mod = _INDEX_BUCKET_COLS[e["kind"]]
+            # are named in the plan), not rows
+            from ..sources import indexkind as IK
+
+            kinds = IK.kinds()
+            if e["kind"] in kinds:
+                col = kinds[e["kind"]].probe_col
                 if bcol.lower() != col:
                     raise SqlError(
                         f"a {e['kind']} view buckets by its "
                         f"{col!r} column (got {bcol!r})")
-                import importlib
-
-                m_ = importlib.import_module(f"..sources.{mod}",
-                                             __package__)
                 try:
-                    ver = m_.convert_index_to_bucketed(
+                    ver = IK.convert_index_to_bucketed(
                         spark, e["path"], n_buckets)
                 except ValueError as ex:
                     raise SqlError(str(ex)) from ex
@@ -1201,7 +1193,7 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
                 raise SqlError(
                     f"BUCKET BY migrates base tables (or an index "
                     f"view on its probe column: "
-                    f"{', '.join(f'{k} by {c}' for k, (c, _) in sorted(_INDEX_BUCKET_COLS.items()))}); "
+                    f"{', '.join(f'{k} by {x.probe_col}' for k, x in sorted(kinds.items()))}); "
                     f"{name} is a {e['kind']} view")
             key = e["meta"].get("key")
             if not key:

@@ -644,6 +644,7 @@ def _create_using(spark: SparkSession, catalog: Catalog, name: str,
                        f"near_dup, embed_near_dup, text_index, "
                        f"ann_index, ivf_index (SQL-shaped kinds use "
                        f"AS SELECT)")
+    from ..sources import indexkind as IK
     from ..sources import neardup_view as ND
 
     src_name = opts.get("source")
@@ -658,7 +659,7 @@ def _create_using(spark: SparkSession, catalog: Catalog, name: str,
     vp = catalog.path_for(name)
     internals = [vp + s for s in _kind_internal_suffixes(kind)]
 
-    def _build() -> dict:
+    def _create_index() -> None:
         if kind == "text_index":
             from ..sources import textindex as TI
 
@@ -669,56 +670,39 @@ def _create_using(spark: SparkSession, catalog: Catalog, name: str,
                 pv = opts["positions"]
                 kw["positions"] = (str(pv).strip().lower() == "true"
                                    if isinstance(pv, str) else bool(pv))
-            try:
-                TI.create_text_index(spark, src["path"], vp, key=key,
-                                     **kw)
-                if "buckets" in opts:
-                    # OPTIONS (buckets=N): the at-rest term-hash-
-                    # bucketed layout in one statement — term/phrase
-                    # queries skip segment files from the first query
-                    # (same as OPTIMIZE ... BUCKET BY (term, N))
-                    TI.convert_index_to_bucketed(
-                        spark, vp, int(opts["buckets"]))
-            except ValueError as ex:
-                raise SqlError(str(ex)) from ex
+            TI.create_text_index(spark, src["path"], vp, key=key, **kw)
         elif kind == "ann_index":
             from ..sources import annindex as AI
 
             kw = {k: opts[k] for k in ("vec_col", "n_planes", "seed",
                                        "dim") if k in opts}
             _include_cols_opt(kw, opts)
-            try:
-                AI.create_ann_index(spark, src["path"], vp, key=key,
-                                    **kw)
-                if "buckets" in opts:
-                    # OPTIONS (buckets=N): the at-rest hash-bucketed
-                    # layout in one statement — probe queries skip
-                    # files from the first query (same as OPTIMIZE
-                    # ... BUCKET BY (bucket, N))
-                    AI.convert_index_to_bucketed(
-                        spark, vp, int(opts["buckets"]))
-            except ValueError as ex:
-                raise SqlError(str(ex)) from ex
-        elif kind == "ivf_index":
+            AI.create_ann_index(spark, src["path"], vp, key=key, **kw)
+        else:
             from ..sources import ivfindex as II
 
+            kw = {}
+            for ok, cast in (("vec_col", str), ("n_cells", int),
+                             ("iters", int), ("init", str),
+                             ("pq_m", int), ("pq_k", int),
+                             ("pq_iters", int), ("pq_sample", int)):
+                if ok in opts:
+                    kw[ok] = cast(opts[ok])
+            _include_cols_opt(kw, opts)
+            II.create_ivf_index(spark, src["path"], vp, key=key, **kw)
+        if "buckets" in opts:
+            # OPTIONS (buckets=N): the at-rest layout bucketed by the
+            # index's probe column in one statement — probe queries
+            # skip segment files from the first query (same as
+            # OPTIMIZE ... BUCKET BY (<probe col>, N))
+            IK.convert_index_to_bucketed(spark, vp, int(opts["buckets"]))
+
+    def _build() -> dict:
+        if kind in IK.kinds():
+            # option coercions run inside the wrap too: n_cells='abc'
+            # must surface as SqlError, the layer's error contract
             try:
-                # coercions INSIDE the wrap: n_cells='abc' must
-                # surface as SqlError, the layer's error contract
-                kw = {}
-                for ok, cast in (("vec_col", str), ("n_cells", int),
-                                 ("iters", int), ("init", str),
-                                 ("pq_m", int), ("pq_k", int),
-                                 ("pq_iters", int),
-                                 ("pq_sample", int)):
-                    if ok in opts:
-                        kw[ok] = cast(opts[ok])
-                _include_cols_opt(kw, opts)
-                II.create_ivf_index(spark, src["path"], vp, key=key,
-                                    **kw)
-                if "buckets" in opts:
-                    II.convert_index_to_bucketed(
-                        spark, vp, int(opts["buckets"]))
+                _create_index()
             except ValueError as ex:
                 raise SqlError(str(ex)) from ex
         elif kind == "near_dup":

@@ -154,6 +154,7 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
                 raise SqlError("KNN_JOIN('ann_view', left_table, k"
                                "[, probe_bits[, filter]])")
             from ..sources import annindex as AI
+            from ..sources import indexkind as IK
 
             if e["kind"] != "ann_index":
                 raise SqlError(f"KNN_JOIN reads an ann_index view; "
@@ -213,7 +214,7 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
             # BEFORE the bucket equi-join)
             jwhere = _str_arg(args[4], "KNN_JOIN", "filter") \
                 if len(args) == 5 else None
-            spec = AI._spec_ai(e["path"], ver)
+            spec = IK.spec_of("ann_index", e["path"], ver)
             missing = [c for c in (spec["ai_key"], spec["ai_vec_col"])
                        if c not in left.columns]
             if missing:

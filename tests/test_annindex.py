@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rclip_server_spark import sql as S
+from rclip_server_spark.functions.xxh import buckets_of
 from rclip_server_spark.operators import ann
 from rclip_server_spark.sources import annindex as AI
 
@@ -123,7 +124,7 @@ def test_bucketed_at_rest_layout_prunes_files(spark, vecs, cat):
     qb = int(sum((1 << i) for i, p in enumerate(planes)
                  if float(p @ np.asarray(QV)) >= 0))
     probes = {qb} | {qb ^ (1 << i) for i in range(4)}
-    phys = set(AI._probe_hash_buckets(sorted(probes), 16))
+    phys = set(buckets_of(sorted(probes), 16))
     probed_segs = {s for b in phys
                    for s in m["buckets"].get(str(b), [])}
     other_segs = {s for b, ss in m["buckets"].items()

@@ -33,7 +33,8 @@ def built(spark, documents, embeddings, cat):
     realistic serving shape."""
     documents.select("doc_id", "text").limit(500)\
         .createOrReplaceTempView("bd_seed")
-    embeddings.select("vec_id", "embedding").limit(500)\
+    embeddings.select("vec_id", "embedding",
+                      (F.col("vec_id") % 3).alias("grp")).limit(500)\
         .createOrReplaceTempView("be_seed")
     S.execute(spark, "CREATE TABLE bd OPTIONS (key='doc_id') AS "
                      "SELECT * FROM bd_seed", cat)
@@ -44,7 +45,7 @@ def built(spark, documents, embeddings, cat):
                      "buckets=16)", cat)
     S.execute(spark, "CREATE MATERIALIZED VIEW bai USING ann_index "
                      "OPTIONS (source='be', key='vec_id', n_planes=4, "
-                     "buckets=16)", cat)
+                     "include_cols='grp', buckets=16)", cat)
     S.execute(spark, "CREATE MATERIALIZED VIEW bii USING ivf_index "
                      "OPTIONS (source='be', key='vec_id', n_cells=8, "
                      "iters=2, buckets=8)", cat)
@@ -169,3 +170,21 @@ def test_batch_guards(spark, built):
     with pytest.raises(ValueError, match="dim"):
         II.query_ivf_index_batch(spark, built.get("bii")["path"],
                                  [(1, [0.0] * 7)])
+
+    # a qid_col naming a scanned column would overwrite it with query
+    # ids (the key, the vector/text column, the probe column, a payload
+    # column — case-insensitively); a backtick would break out of the
+    # quoted SQL identifier
+    vp_i = built.get("bii")["path"]
+    for qid_col in ("vec_id", "EMBEDDING", "bucket", "grp", "q`id"):
+        with pytest.raises(ValueError, match="qid_col"):
+            AI.query_ann_index_batch(spark, vp_a, [(1, QVS[0])],
+                                     qid_col=qid_col)
+    for qid_col in ("vec_id", "ivf_cell", "q`id"):
+        with pytest.raises(ValueError, match="qid_col"):
+            II.query_ivf_index_batch(spark, vp_i, [(1, QVS[0])],
+                                     qid_col=qid_col)
+    for qid_col in ("doc_id", "term", "text", "q`id"):
+        with pytest.raises(ValueError, match="qid_col"):
+            TI.query_text_index_batch(spark, vp_t, [(1, "data")],
+                                      qid_col=qid_col)

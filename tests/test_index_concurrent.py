@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from rclip_server_spark import sql as S
 from rclip_server_spark.sources import annindex as AI
+from rclip_server_spark.sources import indexkind as IK
 from rclip_server_spark.sources import textindex as TI
 from rclip_server_spark.sources import versioned as V
 
@@ -115,7 +116,7 @@ def test_text_index_stream_vs_concurrent_ingest(spark, documents,
     want = TI._postings(cur, "doc_id", "text")
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
-    spec = TI._spec_ti(vp)
+    spec = IK.spec_of("text_index", vp)
     assert int(spec["ti_source_version"]) == V.current_version(src)
     nd, tl = TI._corpus_stats(cur, "text")
     assert (spec["ti_ndocs"], spec["ti_total_len"]) == (nd, tl)
@@ -159,7 +160,7 @@ def test_ann_index_stream_vs_concurrent_ingest(spark, embeddings,
     got = AI.read_ann_index(spark, vp).select("bucket", "vec_id")
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
-    spec = AI._spec_ai(vp)
+    spec = IK.spec_of("ann_index", vp)
     assert int(spec["ai_source_version"]) == V.current_version(src)
     # the maintained state still answers exactly (indexed == ad-hoc)
     from rclip_server_spark.operators import ann

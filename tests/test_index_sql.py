@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from rclip_server_spark import sql as S
 from rclip_server_spark.sources import annindex as AI
+from rclip_server_spark.sources import ivfindex as II
 from rclip_server_spark.sources import textindex as TI
 
 QV = [0.125] * 32 + [-0.125] * 32
@@ -268,6 +269,61 @@ def test_describe_index_all_kinds_zero_jobs(spark, both, embeddings):
         S.execute(spark, "DESCRIBE INDEX d", cat)
     with pytest.raises(S.SqlError):
         S.execute(spark, "DESCRIBE INDEX ti extra", cat)
+
+
+@pytest.fixture(scope="module")
+def three(spark, documents, embeddings, tmp_path_factory):
+    """One small view of each index kind, named v_<kind>."""
+    cat = S.Catalog(str(tmp_path_factory.mktemp("three") / "cat"))
+    documents.select("doc_id", "text").limit(60)\
+        .createOrReplaceTempView("k3_docs")
+    embeddings.select("vec_id", "embedding").limit(60)\
+        .createOrReplaceTempView("k3_vecs")
+    S.execute(spark, "CREATE TABLE k3d OPTIONS (key='doc_id') AS "
+                     "SELECT * FROM k3_docs", cat)
+    S.execute(spark, "CREATE TABLE k3e OPTIONS (key='vec_id') AS "
+                     "SELECT * FROM k3_vecs", cat)
+    for kind, opts in (
+            ("text_index", "source='k3d', key='doc_id'"),
+            ("ann_index", "source='k3e', key='vec_id', n_planes=3"),
+            ("ivf_index", "source='k3e', key='vec_id', n_cells=2, "
+                          "iters=1")):
+        S.execute(spark, f"CREATE MATERIALIZED VIEW v_{kind} USING "
+                         f"{kind} OPTIONS ({opts})", cat)
+    return cat
+
+
+# kind -> (read, query, refresh, probe column)
+_KIND_API = {
+    "text_index": (TI.read_text_index,
+                   lambda sp, vp: TI.query_text_index(sp, vp, "data"),
+                   TI.refresh_text_index, "term"),
+    "ann_index": (AI.read_ann_index,
+                  lambda sp, vp: AI.query_ann_index(sp, vp, QV),
+                  AI.refresh_ann_index, "bucket"),
+    "ivf_index": (II.read_ivf_index,
+                  lambda sp, vp: II.query_ivf_index(sp, vp, QV),
+                  II.refresh_ivf_index, "ivf_cell"),
+}
+
+
+@pytest.mark.parametrize("kind,view", [
+    (k, v) for k in _KIND_API for v in _KIND_API if k != v])
+def test_wrong_kind_fails_loudly(spark, three, kind, view):
+    """One kind's read/query/refresh on another kind's view raises
+    ValueError naming the view (never reads it under the wrong spec),
+    and OPTIMIZE ... BUCKET BY on a column that is not the view's probe
+    column raises SqlError."""
+    import re
+
+    vp = three.get(f"v_{view}")["path"]
+    read, query, refresh, probe_col = _KIND_API[kind]
+    for call in (read, query, refresh):
+        with pytest.raises(ValueError, match=re.escape(vp)):
+            call(spark, vp)
+    with pytest.raises(S.SqlError, match="buckets by its"):
+        S.execute(spark, f"OPTIMIZE v_{view} BUCKET BY ({probe_col}, 4)",
+                  three)
 
 
 def test_filtered_search_sql_surface(spark, embeddings, cat):

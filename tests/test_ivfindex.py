@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from rclip_server_spark import sql as S
 from rclip_server_spark.operators import ann
+from rclip_server_spark.sources import indexkind as IK
 from rclip_server_spark.sources import ivfindex as II
 
 QV = [0.125] * 32 + [-0.125] * 32
@@ -42,7 +43,7 @@ def _mk(spark, vecs, cat, name="emb", opts=""):
 
 def test_state_and_query_match_adhoc(spark, vecs, cat):
     vp = _mk(spark, vecs, cat)
-    spec = II._spec_ii(vp)
+    spec = IK.spec_of("ivf_index", vp)
     cents = II._centroids(spec)
     assert cents.shape == (8, 64)
     assert spec["ii_trained"] == "kmeans:first_k:2"
@@ -63,7 +64,7 @@ def test_state_and_query_match_adhoc(spark, vecs, cat):
 def test_incremental_refresh_frozen_centroids(spark, vecs, cat,
                                               embeddings):
     vp = _mk(spark, vecs, cat, "inc")
-    cents_before = II._centroids(II._spec_ii(vp))
+    cents_before = II._centroids(IK.spec_of("ivf_index", vp))
     embeddings.select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     ).where(F.col("vec_id") % 2 == 1).limit(100) \
@@ -73,7 +74,7 @@ def test_incremental_refresh_frozen_centroids(spark, vecs, cat,
     r = S.execute(spark, "REFRESH MATERIALIZED VIEW inc_ivf", cat)
     assert r["status"] == "refreshed"
     # centroids FROZEN across refresh (the O(changed rows) contract)
-    cents_after = II._centroids(II._spec_ii(vp))
+    cents_after = II._centroids(IK.spec_of("ivf_index", vp))
     assert (cents_before == cents_after).all()
     current = S.execute(spark, "SELECT vec_id, embedding FROM inc",
                         cat)
@@ -121,7 +122,7 @@ def test_bucketed_layout_prunes_files_zero_plan_jobs(spark, vecs,
     finally:
         sc.setJobGroup("", "")
     current = S.execute(spark, "SELECT vec_id, embedding FROM bk", cat)
-    spec = II._spec_ii(vp)
+    spec = IK.spec_of("ivf_index", vp)
     want = ann.ivf_topk(current, QV, II._centroids(spec), k=10,
                         n_probe=2)
     assert _ids_scores(got_df) == _ids_scores(want)
@@ -204,7 +205,7 @@ def test_refresh_stream_maintains_ivf_index(spark, vecs, cat):
         q.processAllAvailable()
         current = S.execute(spark, "SELECT vec_id, embedding FROM st",
                             cat)
-        cents = II._centroids(II._spec_ii(vp))
+        cents = II._centroids(IK.spec_of("ivf_index", vp))
         got = II.query_ivf_index(spark, vp, QV, k=10, n_probe=3)
         want = ann.ivf_topk(current, QV, cents, k=10, n_probe=3)
         assert _ids_scores(got) == _ids_scores(want)
@@ -230,7 +231,7 @@ def test_ivfadc_tier_matches_adhoc_and_refreshes(spark, vecs, cat,
                      "n_cells=8, iters=2, pq_m=8, pq_k=16, "
                      "buckets=8)", cat)
     vp = cat.get("adc_ivf")["path"]
-    spec = II._spec_ii(vp)
+    spec = IK.spec_of("ivf_index", vp)
     books = II._codebooks(spec)
     assert books is not None and books.shape == (8, 16, 8)
     # state parity: rows == the ad-hoc IVFADC encode of the source
@@ -254,7 +255,7 @@ def test_ivfadc_tier_matches_adhoc_and_refreshes(spark, vecs, cat,
     S.execute(spark, "INSERT INTO adc SELECT * FROM adc_extra", cat)
     S.execute(spark, "DELETE FROM adc WHERE vec_id % 10 = 0", cat)
     S.execute(spark, "REFRESH MATERIALIZED VIEW adc_ivf", cat)
-    assert (II._codebooks(II._spec_ii(vp)) == books).all()
+    assert (II._codebooks(IK.spec_of("ivf_index", vp)) == books).all()
     current = S.execute(spark, "SELECT vec_id, embedding FROM adc",
                         cat)
     # adc query == ad-hoc ivf_pq_topk over the post-DML encode
@@ -326,7 +327,7 @@ def test_drift_alarm_fires_and_rebuild_recovers(spark, vecs, cat):
     # the O(delta) counters are EXACT: recount the actual state
     recount = dict(II.read_ivf_index(spark, vp)
                    .groupBy("ivf_cell").count().collect())
-    spec = II._spec_ii(vp)
+    spec = IK.spec_of("ivf_index", vp)
     assert [recount.get(i, 0) for i in range(8)] == \
         [int(x) for x in spec["ii_cur_cell_counts"]]
     # deletes retract exactly too (update the counters downward)
@@ -335,7 +336,7 @@ def test_drift_alarm_fires_and_rebuild_recovers(spark, vecs, cat):
     S.execute(spark, "REFRESH MATERIALIZED VIEW dr_ivf", cat)
     recount2 = dict(II.read_ivf_index(spark, vp)
                     .groupBy("ivf_cell").count().collect())
-    spec2 = II._spec_ii(vp)
+    spec2 = IK.spec_of("ivf_index", vp)
     assert [recount2.get(i, 0) for i in range(8)] == \
         [int(x) for x in spec2["ii_cur_cell_counts"]]
     # rebuild-recovery: the documented heal is an explicit re-create —
@@ -368,7 +369,7 @@ def test_filtered_query_and_widening(spark, vecs, cat):
     got = II.query_ivf_index(spark, vp, QV, k=10, n_probe=2,
                              where="category = 2")
     # reference: brute force over the probed cells' state rows
-    spec = II._spec_ii(vp)
+    spec = IK.spec_of("ivf_index", vp)
     cents = II._centroids(spec)
     import numpy as np
 
@@ -479,7 +480,7 @@ def test_retrain_heals_drift_and_requeries_exactly(spark, vecs, cat):
     desc = S.execute(spark, "DESCRIBE INDEX rt_ivf", cat)
     assert desc["fresh"] and desc["layout"] == "bucketed"
     # exact-tier query == ad-hoc ivf_topk under the RETRAINED centroids
-    spec = II._spec_ii(vp)
+    spec = IK.spec_of("ivf_index", vp)
     cents = II._centroids(spec)
     got = II.query_ivf_index(spark, vp, QV, k=10, n_probe=3)
     src_head = V.read(spark, cat.get("rt")["path"])

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from rclip_server_spark import sql as S
 from rclip_server_spark.operators import retrieval
+from rclip_server_spark.sources import indexkind as IK
 from rclip_server_spark.sources import textindex as TI
 
 
@@ -47,7 +48,7 @@ def test_postings_match_direct_tokenization(spark, corpus, cat):
                   cat).collect()[0]["n"]
     assert n == want.count()
     # spec stats are the exact corpus integers
-    spec = TI._spec_ti(vp)
+    spec = IK.spec_of("text_index", vp)
     nd, tl = TI._corpus_stats(corpus, "text")
     assert (spec["ti_ndocs"], spec["ti_total_len"]) == (nd, tl)
 
@@ -84,7 +85,7 @@ def test_incremental_refresh_equals_rebuild(spark, corpus, cat,
     assert _rows(TI.read_text_index(spark, vp)) == \
         _rows(TI._postings(current, "doc_id", "text"))
     # stats rolled forward EXACTLY (integers, no drift)
-    spec = TI._spec_ti(vp)
+    spec = IK.spec_of("text_index", vp)
     nd, tl = TI._corpus_stats(current, "text")
     assert (spec["ti_ndocs"], spec["ti_total_len"]) == (nd, tl)
     # and the indexed query still matches the batch scorer
@@ -256,7 +257,7 @@ def test_bucketed_text_refresh_stays_exact(spark, corpus, cat,
     # full-state parity: postings equal a from-scratch rebuild
     assert _rows(TI.read_text_index(spark, vp)) == \
         _rows(TI._postings(current, "doc_id", "text"))
-    spec = TI._spec_ti(vp)
+    spec = IK.spec_of("text_index", vp)
     nd, tl = TI._corpus_stats(current, "text")
     assert (spec["ti_ndocs"], spec["ti_total_len"]) == (nd, tl)
     terms = ["spark", "rewrite"]

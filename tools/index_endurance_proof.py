@@ -327,6 +327,7 @@ def main() -> None:
             ingest_batch=a_ingest if CONCURRENT else None)
 
         # ------------- ivf index (bucketed at rest, r13) -------------
+        from rclip_server_spark.sources import indexkind as IK
         from rclip_server_spark.sources import ivfindex as II
 
         isrc = os.path.join(tmp, "isrc")
@@ -360,7 +361,7 @@ def main() -> None:
             from rclip_server_spark.operators.ann import ivf_assign
 
             cur = V.read(spark, isrc)
-            cents = II._centroids(II._spec_ii(iidx))
+            cents = II._centroids(IK.spec_of("ivf_index", iidx))
             want = ivf_assign(cur, cents).select("ivf_cell", "vec_id")
             got = II.read_ivf_index(spark, iidx).select("ivf_cell",
                                                         "vec_id")
