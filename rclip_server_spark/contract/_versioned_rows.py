@@ -2019,7 +2019,7 @@ def _sql_bucketed_evo_builder(spark: SparkSession, sf: str,
 def _sql_bucketed_schema_evolution(spark: SparkSession, sf: str
                                    ) -> DataFrame:
     """Schema evolution on the BUCKETED layout (round 11): ALTER ADD
-    is a metadata-only manifest commit (read_bucketed reconciles the
+    is a metadata-only manifest commit (the bucketed read reconciles the
     declared-but-unwritten column as typed NULLs — the bucketed twin
     of the flat path's zero-row evolved segment), ALTER DROP is the
     same hidden_cols projection flat tables use, and bucketed
@@ -2060,7 +2060,7 @@ def _vt_bucketed_zone_builder(spark: SparkSession, sf: str,
     VT.create_bucketed(spark, path, ev.where("value_cents < 5000"),
                        key="event_id", n_buckets=8,
                        stat_cols=["value_cents"])
-    VT.append_bucketed(spark, path, ev.where("value_cents >= 5000"))
+    VT.append(spark, path, ev.where("value_cents >= 5000"))
 
 
 def _vt_bucketed_pruned_read(spark: SparkSession, sf: str
@@ -2075,8 +2075,8 @@ def _vt_bucketed_pruned_read(spark: SparkSession, sf: str
     from ..sources import versioned as VT
 
     path = _vt_build(spark, sf, "vtbzm", _vt_bucketed_zone_builder)
-    return VT.read_bucketed_pruned(
-        spark, path, {"value_cents": (100, 3000)}
+    return VT.read_pruned(
+        spark, path, ranges={"value_cents": (100, 3000)}
     ).select("event_id", "value_cents")
 
 

@@ -64,8 +64,8 @@ def funnel(
     # events first reduce per (user, ts) to a step-index BITMASK via
     # bit_or — a map-side-combining hash aggregation whose exchange is
     # keyed (user, ts), spreading even a bot-grade hot user across
-    # partitions — and the per-user fold then buffers one 16-byte
-    # (ts, mask) element per distinct timestamp instead of a full
+    # partitions — and the per-user fold then buffers one small
+    # (null flag, ts, mask) element per distinct timestamp instead of a full
     # (ts, type-string) struct per raw event. The residual contract is
     # that a user's DISTINCT-timestamp list fits an executor (the same
     # contract the as-of/session windows carry for a user's events).
@@ -85,14 +85,22 @@ def funnel(
         bits[s] = bits.get(s, 0) | (1 << j)
     mask_map = "map(" + ", ".join(
         f"{_q(t)}, CAST({m} AS BIGINT)" for t, m in sorted(bits.items())) + ")"
+    #
+    # NULL timestamps follow the min-rule: step 0's time is the min
+    # NON-NULL step-0 time, and a NULL time never satisfies ts > t. So
+    # NULL-ts elements sort LAST (the leading ``nl`` flag): a NULL-ts
+    # step-0 event still counts a user who has no timed one, with a
+    # NULL step time that no later step can follow (``e.ts > s.t`` is
+    # NULL, i.e. false, past level 0).
     ts_type = dict(events.dtypes)[ts_col]
     walk = f"""
         aggregate(
-          sort_array(collect_list(struct(`{ts_col}` AS ts, `__m` AS m))),
+          sort_array(collect_list(struct(`{ts_col}` IS NULL AS nl,
+                                         `{ts_col}` AS ts, `__m` AS m))),
           named_struct('lvl', 0, 't', CAST(NULL AS {ts_type})),
           (s, e) -> IF(s.lvl < {k}
                        AND (shiftright(e.m, s.lvl) & 1) = 1
-                       AND (s.t IS NULL OR e.ts > s.t),
+                       AND (s.lvl = 0 OR e.ts > s.t),
                        named_struct('lvl', s.lvl + 1, 't', e.ts), s)
         ).lvl
     """

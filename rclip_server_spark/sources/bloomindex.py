@@ -295,8 +295,9 @@ def read_point_lookup(
     then apply the EXACT predicate — false positives cost an extra
     segment read, never a wrong row. Flat tables only: a bucketed
     table's bucket key already routes a point lookup to one bucket
-    (read the bucket), and its non-key columns can be indexed by
-    pointing this module at the bucket segment dirs if ever needed."""
+    (versioned.point_lookup_bucketed), and its non-key columns can be
+    indexed by pointing this module at the bucket segment dirs if ever
+    needed."""
     values = _norm_values(values)
     if not values:
         raise ValueError("empty lookup value set")

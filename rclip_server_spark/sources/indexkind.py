@@ -176,9 +176,9 @@ def convert_index_to_bucketed(spark: SparkSession, view_path: str,
     query's read SKIPS FILES, not rows — only the probed values' hash
     buckets' segment directories are ever named in the scan plan.
     Refreshes keep working unchanged: the delete_and_append refresh
-    commit dispatches to the bucketed twin (a doc-key delete vector
-    scopes conservatively to all segments), and compact_bucketed /
-    OPTIMIZE fold refresh accretion back down per bucket. The default
+    commit dispatches on the manifest's layout (a doc-key delete vector
+    scopes conservatively to all segments), and compact / OPTIMIZE fold
+    refresh accretion back down per bucket. The default
     ``n_buckets`` is the kind's (descriptor ``default_buckets``)."""
     spec = V._manifest(view_path, V.current_version(view_path)).get(
         "app") or {}
@@ -258,7 +258,7 @@ def refresh_with_retry(
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """OCC rebase loop (the standard view-refresh retry contract)."""
-    return M._refresh_with_retry(
+    return V.with_retry(
         lambda: refresh(spark, name, view_path,
                         recompute_fraction=recompute_fraction),
         max_retries)

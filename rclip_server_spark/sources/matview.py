@@ -93,21 +93,16 @@ def _aggregate(df: DataFrame, group_cols: list[str], sum_cols: list[str],
 
 def _read_source(spark: SparkSession, path: str,
                  version: int | None = None) -> DataFrame:
-    """Layout-dispatching source read: flat and bucketed versioned tables
-    both work as view sources (table_changes' snapshot diff already
-    dispatches the same way). Schema-pinned from the manifest
-    (versioned._pinned_schema) — this is the choke point every SQL
+    """Source read (versioned.read, either layout): flat and bucketed
+    versioned tables both work as view sources. Schema-pinned from the
+    manifest (versioned._pinned_schema) — this is the choke point every SQL
     read and view refresh goes through, and mergeSchema footer
     inference here costs one Spark job PER TABLE PER STATEMENT (at
     100 TB, a distributed read of every segment footer). Safe because
     the commit layer enforces it: type changes are blocked, evolution
     null-fills by name; legacy manifests without col_types fall back
     to mergeSchema inside the read."""
-    v = V.current_version(path) if version is None else int(version)
-    m = V._manifest(path, v)
-    if "buckets" in m:
-        return V.read_bucketed(spark, path, v, pin_schema=True)
-    return V.read(spark, path, v, pin_schema=True)
+    return V.read(spark, path, version, pin_schema=True)
 
 
 def _nullsafe_cond(left_alias: str, right_alias: str, cols: list[str]):
@@ -268,18 +263,6 @@ def _check_sum_cols_integral(sum_cols: list[str], types: dict) -> None:
             f"maintenance; {', '.join(f'{c} is {types[c]}' for c in bad)}. "
             f"Pre-scale floats to integer units (the cents rule: "
             f"round(x*100) cast to long) in a projection before the view.")
-
-
-def _refresh_with_retry(refresh, max_retries: int):
-    """The ONE OCC rebase loop all three view refreshers share: the loser
-    re-reads the advanced cursor, so intervals are never double-applied."""
-    for attempt in range(max_retries + 1):
-        try:
-            return refresh()
-        except V.ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
 
 
 def _changes_since_cursor(spark, src, v_from, v_to, key, multiset=False):
@@ -493,7 +476,7 @@ def refresh_agg_view_with_retry(
     the (now advanced) cursor, so the loser applies only the remaining
     interval — never a double-application, because the interval is
     derived from the committed cursor each attempt."""
-    return _refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_agg_view(spark, view_path,
                                  recompute_fraction=recompute_fraction),
         max_retries)
@@ -640,7 +623,7 @@ def refresh_transform_view_with_retry(
     """OCC rebase loop for concurrent transform-view refreshers (same
     contract as refresh_agg_view_with_retry): the loser re-reads the
     advanced cursor, so intervals are never double-applied."""
-    return _refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_transform_view(
             spark, view_path, transform, name,
             auto_compact=auto_compact, compact_threshold=compact_threshold,
@@ -800,7 +783,7 @@ def refresh_topk_view_with_retry(
 ) -> int:
     """OCC rebase loop for concurrent top-k refreshers (the standard
     contract: the loser re-reads the advanced cursor)."""
-    return _refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_topk_view(spark, view_path,
                                   recompute_fraction=recompute_fraction),
         max_retries)
@@ -1349,7 +1332,7 @@ def refresh_join_view_with_retry(
 ) -> int:
     """OCC rebase loop for concurrent join-view refreshers (the standard
     contract: the loser re-reads BOTH advanced cursors)."""
-    return _refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_join_view(spark, view_path,
                                   recompute_fraction=recompute_fraction),
         max_retries)
@@ -1955,7 +1938,7 @@ def refresh_join_table_view_with_retry(
     recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """OCC rebase loop for concurrent join-table refreshers."""
-    return _refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_join_table_view(
             spark, view_path,
             auto_compact=auto_compact, compact_threshold=compact_threshold,

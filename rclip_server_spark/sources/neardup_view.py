@@ -415,7 +415,7 @@ def refresh_near_dup_pairs_view_with_retry(
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """OCC rebase loop (the standard view-refresh retry contract)."""
-    return M._refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_near_dup_pairs_view(
             spark, view_path, recompute_fraction=recompute_fraction),
         max_retries)
@@ -625,7 +625,7 @@ def refresh_embed_near_dup_pairs_view_with_retry(
     spark: SparkSession, view_path: str, max_retries: int = 3,
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
-    return M._refresh_with_retry(
+    return V.with_retry(
         lambda: refresh_embed_near_dup_pairs_view(
             spark, view_path, recompute_fraction=recompute_fraction),
         max_retries)

@@ -233,7 +233,7 @@ def _commit(path: str, version: int, segments: list[str], op: str,
         logging.getLogger(__name__).warning(
             "versioned table %s has %d segments at v%d; manifests and "
             "commit-time footer reads grow with segment count — run "
-            "compact() (flat) or compact_bucketed() to fold them",
+            "compact() to fold them",
             path, n_segs, version,
         )
     target = _snap_path(path, version)
@@ -250,7 +250,10 @@ def _commit(path: str, version: int, segments: list[str], op: str,
         raise ConcurrentWriteError(
             f"version {version} already committed at {target}"
         ) from None
-    os.remove(tmp)
+    # the version is published: nothing below may raise, so a caller
+    # that cleans up its staged segments on failure (_publish) never
+    # deletes the files of a committed version
+    _suppress_remove(tmp)
     # periodic head-resolution checkpoint: keeps current_version() at
     # O(commits since checkpoint) stat calls however long the retained
     # history grows (10^5 streaming micro-batch commits)
@@ -277,26 +280,80 @@ def _json_stat(v):
     return str(v)
 
 
-def _segment_stats(df: DataFrame, stat_cols: list[str]) -> dict:
-    """Per-segment zone map: {col: {min, max, nulls}} from ONE aggregate
-    over the batch being written — the marginal cost of stats is a single
-    partial-agg pass at write time, paid once, saved on every read."""
+def _zone_stats(spark: SparkSession, path: str, parent: dict,
+                live: list[str], types: dict | None = None,
+                cols: list[str] | None = None) -> dict:
+    """The ONE zone-map writer: ``{stat_cols, seg_stats}`` for a child
+    manifest whose data segments are ``live`` (empty when the table
+    tracks no stats). Retained segments keep the parent's entries; the
+    NEW ones are measured from their WRITTEN files — a nondeterministic
+    source must not yield stats that miss the rows on disk (read_pruned's
+    no-false-prune guarantee) — in ONE aggregate grouped by segment dir,
+    however many segments the commit wrote. The read is pinned to the
+    stat columns' committed ``types``: no footer-inference job, and a
+    column a batch omitted reads as NULL (min/max NULL, nulls = row
+    count). A zero-row segment records NULL min/max with zero nulls."""
     import pyspark.sql.functions as F
 
-    aggs = []
-    for c in stat_cols:
-        aggs += [
-            F.min(c).alias(f"__mn_{c}"),
-            F.max(c).alias(f"__mx_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}"),
-        ]
-    row = df.agg(*aggs).first()
-    return {
-        c: {"min": _json_stat(row[f"__mn_{c}"]),
-            "max": _json_stat(row[f"__mx_{c}"]),
-            "nulls": int(row[f"__nl_{c}"] or 0)}
-        for c in stat_cols
-    }
+    cols = list(cols or parent.get("stat_cols") or [])
+    if not cols:
+        return {}
+    old = _manifest_segments(parent)
+    new = [s for s in live if s not in old]
+    kept = set(live)
+    seg_stats = {s: st for s, st in parent.get("seg_stats", {}).items()
+                 if s in kept}
+    if not new:
+        return {"stat_cols": cols, "seg_stats": seg_stats}
+    known = {c.lower(): t for c, t in
+             (types or parent.get("col_types") or {}).items()}
+    dirs = [os.path.join(path, s) for s in new]
+    if all(c.lower() in known for c in cols):
+        df = spark.read.schema(", ".join(
+            f"`{c}` {known[c.lower()]}" for c in cols)).parquet(*dirs)
+    else:
+        # legacy manifest without committed types: infer, then
+        # null-fill the stat columns no new segment carries
+        df = spark.read.option("mergeSchema", "true").parquet(*dirs)
+        have = {c.lower() for c in df.columns}
+        df = df.select("*", *[F.lit(None).cast("string").alias(c)
+                              for c in cols if c.lower() not in have])
+    seg = F.element_at(F.split(F.input_file_name(), "/"), -2)
+    aggs = [a for c in cols for a in (
+        F.min(c), F.max(c), F.sum(F.col(c).isNull().cast("long")))]
+    rows = {r[0]: r[1:] for r in df.groupBy(seg).agg(*aggs).collect()}
+    for s in new:
+        r = rows.get(os.path.basename(s), (None,) * (3 * len(cols)))
+        seg_stats[s] = {
+            c: {"min": _json_stat(r[3 * i]),
+                "max": _json_stat(r[3 * i + 1]),
+                "nulls": int(r[3 * i + 2] or 0)}
+            for i, c in enumerate(cols)}
+    return {"stat_cols": cols, "seg_stats": seg_stats}
+
+
+def _publish(spark: SparkSession, path: str, parent_version: int,
+             parent: dict, op: str, segments: list[str] | None,
+             extra: dict, staged=(), batch_id: int | None = None,
+             stat_cols: list[str] | None = None) -> int:
+    """The commit tail every writing verb shares: add the zone map
+    (_zone_stats over the child's data segments — a flat ``segments``
+    list, or the ``buckets`` map in ``extra``) and publish version
+    ``parent_version + 1``. Any failure before the publish, a lost OCC
+    race included, removes the ``staged`` segment and vector dirs before
+    re-raising, so a failed commit leaves no orphan behind. Returns the
+    new version."""
+    try:
+        live = segments if segments is not None else [
+            s for ss in extra["buckets"].values() for s in ss]
+        _commit(path, parent_version + 1, segments, op, batch_id=batch_id,
+                extra=extra | _zone_stats(spark, path, parent, live,
+                                          extra.get("col_types"),
+                                          stat_cols))
+    except Exception:
+        _cleanup_segments(path, staged)
+        raise
+    return parent_version + 1
 
 
 def create(spark: SparkSession, path: str, df: DataFrame,
@@ -317,27 +374,17 @@ def create(spark: SparkSession, path: str, df: DataFrame,
     col_types/...) always win over caller entries."""
     os.makedirs(os.path.join(path, _SNAP_DIR), exist_ok=False)
     seg = _write_segment(df, path)
-    extra = dict(extra or {})
-    extra |= {"col_types": _col_types(df)}
-    if stat_cols:
-        # stats from the WRITTEN segment, not the input plan — a
-        # nondeterministic source must not produce stats that don't
-        # cover the rows actually on disk (no-false-prune guarantee)
-        seg_df = spark.read.parquet(os.path.join(path, seg))
-        extra |= {"stat_cols": list(stat_cols),
-                  "seg_stats": {seg: _segment_stats(seg_df,
-                                                    list(stat_cols))}}
-    _commit(path, 1, [seg], "create", extra=extra)
-    return 1
+    return _publish(spark, path, 0, {}, "create", [seg],
+                    dict(extra or {}) | {"col_types": _col_types(df)},
+                    staged=[seg], stat_cols=stat_cols)
 
 
 def _reconcile_declared(df: DataFrame, m: dict) -> DataFrame:
     """Surface DECLARED-but-unwritten columns as typed NULLs — the
-    bucketed twin of the flat path's zero-row evolved segment +
-    mergeSchema (add_column is metadata-only there). The ONE copy of
-    the schema-reconciliation contract: read_bucketed,
-    read_bucketed_pruned, and cluster_zorder_bucketed all route
-    through it."""
+    bucketed layout's answer to the flat path's zero-row evolved
+    segment + mergeSchema (add_column is metadata-only there). The ONE
+    copy of the schema-reconciliation contract: every bucketed read
+    (_read_segments) and the bucketed z-sort route through it."""
     import pyspark.sql.functions as F
 
     for c, t in m.get("col_types", {}).items():
@@ -347,8 +394,7 @@ def _reconcile_declared(df: DataFrame, m: dict) -> DataFrame:
 
 
 def _apply_ranges(df: DataFrame, ranges: dict) -> DataFrame:
-    """Residual row predicates of a zone-pruned read (shared by
-    read_pruned and read_bucketed_pruned)."""
+    """Residual row predicates of a zone-pruned read (read_pruned)."""
     import pyspark.sql.functions as F
 
     for c, (c_lo, c_hi) in ranges.items():
@@ -487,24 +533,67 @@ def _read_with_deletes(spark: SparkSession, path: str, m: dict,
     return _apply_hidden(out, m)
 
 
+def _layout_segments(m: dict, buckets: list[int] | None = None
+                     ) -> list[str]:
+    """The data segments a read of manifest ``m`` names: a flat table's
+    segment list, or — on the bucketed layout — the segments of the
+    listed ``buckets`` (all when None). Restricting buckets is directory
+    pruning at MANIFEST-resolution time: the other buckets' segments
+    never enter the plan."""
+    if "buckets" not in m:
+        if buckets is not None:
+            raise ValueError("buckets= restricts a bucketed table's read; "
+                             "this table is flat")
+        return m["segments"]
+    bmap = m["buckets"]
+    ids = sorted(bmap) if buckets is None else [str(b) for b in buckets]
+    return [s for b in ids for s in bmap.get(b, [])]
+
+
+def _read_segments(spark: SparkSession, path: str, m: dict,
+                   segs: list[str], pin_schema: bool = False) -> DataFrame:
+    """Read ``segs`` of the resolved manifest ``m`` with its delete
+    vectors applied. On the bucketed layout, declared-but-unwritten
+    columns surface as typed NULLs (_reconcile_declared), and an empty
+    selection — an empty table, or a bucket subset nothing hashed to —
+    is the zero-row frame of the committed schema (_pinned_schema, which
+    also drops logically-hidden columns like the non-empty read)."""
+    if "buckets" not in m:
+        return _read_with_deletes(spark, path, m, segs,
+                                  pin_schema=pin_schema)
+    if not segs:
+        schema = _pinned_schema(m)
+        if schema:
+            return spark.createDataFrame([], schema)
+        raise FileNotFoundError(
+            f"version {m['version']} holds no segments to read")
+    return _reconcile_declared(
+        _read_with_deletes(spark, path, m, segs, pin_schema=pin_schema), m)
+
+
 def read(spark: SparkSession, path: str, version: int | None = None,
-         pin_schema: bool = False) -> DataFrame:
-    """Read the table AT a version (default: head). Resolves the manifest
-    once — the returned plan names immutable segment dirs, so concurrent
-    commits and even a head overwrite cannot shear this reader. Pending
-    delete vectors (delete_rows) are applied as scoped broadcast
-    anti-joins. ``pin_schema`` reads with the manifest's committed
-    schema instead of mergeSchema footer inference (zero Spark jobs at
-    plan time — serving paths; see _pinned_schema for why it's safe)."""
+         pin_schema: bool = False, buckets: list[int] | None = None
+         ) -> DataFrame:
+    """Read the table AT a version (default: head), whichever layout its
+    manifest records. Resolves the manifest once — the returned plan
+    names immutable segment dirs, so concurrent commits and even a head
+    overwrite cannot shear this reader. Pending delete vectors
+    (delete_rows) are applied as scoped broadcast anti-joins.
+    ``pin_schema`` reads with the manifest's committed schema instead of
+    mergeSchema footer inference (zero Spark jobs at plan time — serving
+    paths; see _pinned_schema for why it's safe). ``buckets`` restricts
+    a bucketed table's read to those buckets (ValueError on a flat
+    table)."""
     v = current_version(path) if version is None else int(version)
     m = _manifest(path, v)
-    return _read_with_deletes(spark, path, m, m["segments"],
-                              pin_schema=pin_schema)
+    return _read_segments(spark, path, m, _layout_segments(m, buckets),
+                          pin_schema=pin_schema)
 
 
 def read_pruned(
     spark: SparkSession, path: str, col: str | None = None, lo=None, hi=None,
     version: int | None = None, ranges: dict | None = None,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
     """Range read with MANIFEST-level segment skipping: keep only segments
     whose recorded [min, max] overlaps the predicate ranges (all-NULL
@@ -513,14 +602,16 @@ def read_pruned(
     inside the survivors — parquet row-group stats prune further below.
     The skip decision costs a KB-sized manifest read, zero file opens:
     pruning BEFORE the storage layer is what keeps a point-in-time range
-    query O(overlap) instead of O(table) at 100 TB.
+    query O(overlap) instead of O(table) at 100 TB. On the bucketed
+    layout ``buckets`` adds the bucket-subset layer (key-equi questions)
+    under the zone maps (range questions), and after cluster_zorder the
+    row groups inside each bucket are range-disjoint on the z key, so
+    all three layers compose.
 
     Single-column form: ``read_pruned(spark, path, col, lo, hi)``.
     Multi-column form: ``ranges={"ts": (t0, t1), "value": (None, 100)}``
     — a segment must overlap EVERY range to survive (conjunction), so
     each additional tracked predicate column can only prune further."""
-    import pyspark.sql.functions as F
-
     if ranges is None:
         if col is None:
             raise ValueError("pass either col/lo/hi or ranges={...}")
@@ -528,14 +619,11 @@ def read_pruned(
     v = current_version(path) if version is None else int(version)
     m = _manifest(path, v)
     stats = m.get("seg_stats", {})
-    keep = [seg for seg in m["segments"]
+    keep = [seg for seg in _layout_segments(m, buckets)
             if zone_survives(stats.get(seg, {}), ranges)]
     if not keep:
-        out = read(spark, path, v).limit(0)
-        ranges = {}
-    else:
-        out = _read_with_deletes(spark, path, m, keep)
-    return _apply_ranges(out, ranges)
+        return read(spark, path, v).limit(0)
+    return _apply_ranges(_read_segments(spark, path, m, keep), ranges)
 
 
 def zone_survives(seg_stats: dict, ranges: dict) -> bool:
@@ -562,26 +650,6 @@ def zone_survives(seg_stats: dict, ranges: dict) -> bool:
         if c_hi is not None and mn is not None and mn > _json_stat(c_hi):
             return False
     return True
-
-
-def _carry_stats(spark: SparkSession, path: str, parent: dict,
-                 new_segs: list[str], retained: list[str]) -> dict:
-    """Manifest stats for a child commit: parent's entries for retained
-    segments plus freshly computed entries for the new segments. Stats
-    are computed from the WRITTEN segment files (not the input plan): a
-    nondeterministic source would otherwise yield stats that may not
-    cover the rows actually written, breaking read_pruned's no-false-
-    prune guarantee. Returns the `extra` dict (empty when the table
-    tracks no stats)."""
-    cols = parent.get("stat_cols")
-    if not cols:
-        return {}
-    old = parent.get("seg_stats", {})
-    seg_stats = {s: old[s] for s in retained if s in old}
-    for seg in new_segs:
-        seg_df = spark.read.parquet(os.path.join(path, seg))
-        seg_stats[seg] = _segment_stats(seg_df, cols)
-    return {"stat_cols": cols, "seg_stats": seg_stats}
 
 
 class SchemaDriftError(TypeError):
@@ -679,22 +747,16 @@ def _apply_constraints(batch: DataFrame, m: dict, op: str) -> DataFrame:
     return batch.select(wrapped.alias(first), *cols[1:])
 
 
-def _constraint_commit_extra(spark: SparkSession, path: str,
-                             m: dict, app: dict) -> dict:
-    """Metadata-only commit payload that carries EVERYTHING (layout,
-    vectors, hidden cols, zone maps) and replaces the app namespace —
-    the add/drop-constraint twin of drop_column's carry dance."""
-    extra: dict = {"col_types": m.get("col_types", {}), "app": app}
-    extra |= _carry_deletes(m) | _carry_hidden(m)
-    if "buckets" in m:
-        extra |= {"bucket_key": m["bucket_key"],
-                  "n_buckets": m["n_buckets"], "buckets": m["buckets"]}
-        extra |= _carry_stats_bucketed(spark, path, m, [],
-                                       m["buckets"])
-    elif m.get("stat_cols"):
-        extra |= {"stat_cols": m["stat_cols"],
-                  "seg_stats": m.get("seg_stats", {})}
-    return extra
+def _set_constraints(spark: SparkSession, path: str, v: int, m: dict,
+                     cons: dict, op: str) -> int:
+    """Metadata-only commit that replaces the table's CHECK constraints
+    and carries EVERYTHING else (layout, vectors, hidden cols, zone
+    maps) — the add/drop-constraint twin of drop_column's carry."""
+    app = dict(m.get("app") or {})
+    app["table_constraints"] = cons
+    extra = {"col_types": m.get("col_types", {}), "app": app}
+    extra |= _layout_meta(m) | _carry_deletes(m) | _carry_hidden(m)
+    return _publish(spark, path, v, m, op, m.get("segments"), extra)
 
 
 def add_constraint(spark: SparkSession, path: str, name: str,
@@ -715,8 +777,7 @@ def add_constraint(spark: SparkSession, path: str, name: str,
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists on "
                          f"{path}: CHECK ({cons[name]})")
-    df = read_bucketed(spark, path, v) if "buckets" in m \
-        else read(spark, path, v)
+    df = read(spark, path, v)
     try:
         cond = F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
         bad = df.where(~cond).count()
@@ -726,11 +787,8 @@ def add_constraint(spark: SparkSession, path: str, name: str,
         raise ValueError(
             f"cannot add constraint {name!r}: {bad} existing row(s) "
             f"violate CHECK ({expr})")
-    app = dict(m.get("app") or {})
-    app["table_constraints"] = cons | {name: expr}
-    _commit(path, v + 1, m.get("segments"), "add-constraint",
-            extra=_constraint_commit_extra(spark, path, m, app))
-    return v + 1
+    return _set_constraints(spark, path, v, m, cons | {name: expr},
+                            "add-constraint")
 
 
 def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
@@ -742,11 +800,48 @@ def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
         raise ValueError(f"no constraint {name!r} on {path} "
                          f"(constraints: {sorted(cons)})")
     del cons[name]
-    app = dict(m.get("app") or {})
-    app["table_constraints"] = cons
-    _commit(path, v + 1, m.get("segments"), "drop-constraint",
-            extra=_constraint_commit_extra(spark, path, m, app))
-    return v + 1
+    return _set_constraints(spark, path, v, m, cons, "drop-constraint")
+
+
+def _layout_meta(m: dict, added: dict | None = None) -> dict:
+    """A bucketed manifest's layout fields for its child commit, with
+    the ``added`` {bucket: segment} map appended to those buckets'
+    lists (accretion); {} on the flat layout, whose segment list
+    travels as the commit's ``segments`` argument."""
+    if "buckets" not in m:
+        return {}
+    bmap = dict(m["buckets"])
+    for b, s in (added or {}).items():
+        bmap[str(b)] = bmap.get(str(b), []) + [s]
+    return {"bucket_key": m["bucket_key"], "n_buckets": m["n_buckets"],
+            "buckets": bmap}
+
+
+def _check_vector_key(m: dict, key_col: str) -> None:
+    if m.get("delete_segs") and m["delete_key"] != key_col:
+        raise ValueError(f"pending delete vectors use key "
+                         f"{m['delete_key']!r}; cannot mix with {key_col!r}")
+
+
+def _add_vector(m: dict, path: str, dseg: str, scope: list[str],
+                key_col: str, ktype: str | None) -> dict:
+    """Register the just-written delete vector ``dseg`` on top of the
+    parent's pending ones. Its SCOPE (the segments it filters) is the
+    parent's segments — rows appended later, or in the same commit, are
+    new segments outside it, so re-inserts of a deleted key are visible
+    (Delta delete-then-insert semantics) — shrunk on the bucketed layout
+    to the deleted keys' own buckets (_vector_scope). An EMPTY scope (no
+    keys, or keys hashing to empty buckets) could never filter a row and
+    no rewrite would ever clear it (OPTIMIZE rewrites scoped buckets),
+    so that vector is removed instead of registered."""
+    if not scope:
+        shutil.rmtree(os.path.join(path, dseg))
+        return _carry_deletes(m)
+    return {"delete_key": key_col,
+            "delete_segs": (m.get("delete_segs") or []) + [dseg],
+            "delete_scopes": m.get("delete_scopes", {}) | {dseg: scope},
+            "delete_typed": m.get("delete_typed", [])
+            + ([dseg] if ktype else [])}
 
 
 def _carry_hidden(parent: dict) -> dict:
@@ -779,7 +874,7 @@ def _carry_deletes(parent: dict) -> dict:
 
 def _prune_vectors(m: dict, live_segs: set[str]) -> dict:
     """Carry pending delete vectors across a PARTIAL rewrite
-    (upsert_bucketed / compact_bucketed), dropping vectors whose scope
+    (upsert_bucketed / the bucketed compact), dropping vectors whose scope
     no longer names any live segment — every row such a vector could
     hide was just materialized out by the rewrite, so carrying it
     would only grow the manifest forever. Vectors still scoped to an
@@ -798,10 +893,11 @@ def _prune_vectors(m: dict, live_segs: set[str]) -> dict:
                              if d in keep]}
 
 
-def _vector_scope_bucketed(m: dict, kdf: DataFrame, key_col: str,
-                           path: str | None = None,
-                           dseg: str | None = None) -> list[str]:
-    """A bucketed delete vector's segment scope. When the vector keys
+def _vector_scope(m: dict, kdf: DataFrame, key_col: str,
+                  path: str | None = None,
+                  dseg: str | None = None) -> list[str]:
+    """A delete vector's segment scope: every current segment of a flat
+    table. On the bucketed layout, when the vector keys
     the table's BUCKET key (the SQL layer's only case — bucketed
     tables hash-route by the declared row identity), a deleted key's
     rows can only live in that key's own hash bucket, so the scope
@@ -818,6 +914,8 @@ def _vector_scope_bucketed(m: dict, kdf: DataFrame, key_col: str,
     already materialized) key segment — bounded by n_buckets."""
     from .writer import _BUCKET_COL, _bucket_expr
 
+    if "buckets" not in m:
+        return m["segments"]
     bkey, n_buckets, bmap = _bucketed_meta(m)
     if key_col != bkey:
         return sorted(_manifest_segments(m))
@@ -890,10 +988,15 @@ def _write_delete_vector(spark: SparkSession, path: str, keys,
 def append(spark: SparkSession, path: str, batch: DataFrame,
            extra: dict | None = None,
            parent_version: int | None = None) -> int:
-    """O(batch) append commit: write one new segment, manifest = parent
-    segments + it. The ingest-path commit — never reads or rewrites
-    existing data. Zone-map stats (when the table tracks them) cost one
-    extra aggregate over the batch, never a table scan. ``extra``:
+    """O(batch) append commit: write the batch as new segment(s), the
+    manifest = parent segments + them. The ingest-path commit — never
+    reads or rewrites existing data. A bucketed table routes the rows
+    into per-bucket segments appended to the touched buckets' lists
+    (compact folds them back down); a batch that touches no bucket
+    commits nothing and returns the parent version. Pending delete
+    vectors carry forward — the new segments are outside every vector's
+    scope. Zone-map stats (when the table tracks them) cost one extra
+    aggregate over the written segments, never a table scan. ``extra``:
     caller metadata (reserved keys win), same contract as create().
 
     ``parent_version`` pins the OCC parent: the commit targets
@@ -903,26 +1006,37 @@ def append(spark: SparkSession, path: str, batch: DataFrame,
     are order-independent and don't need it; view refreshes do)."""
     v = current_version(path) if parent_version is None \
         else int(parent_version)
-    parent = _manifest(path, v)
-    if "buckets" in parent:
-        # layout dispatch: a bucketed table's append routes rows into
-        # per-bucket segments (same O(batch), zero-rewrite contract)
-        return append_bucketed(spark, path, batch, extra=extra,
-                               parent_version=v)
-    compat = _check_schema_compat(parent, batch, "append")
-    batch = _apply_constraints(batch, parent, "append")
-    seg = _write_segment(batch, path)
-    try:
-        _commit(path, v + 1, parent["segments"] + [seg], "append",
-                extra=dict(extra or {})
-                | _carry_stats(spark, path, parent, [seg],
-                               parent["segments"])
-                | _carry_deletes(parent) | _carry_hidden(parent)
-                | compat)
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, seg))  # orphan cleanup, then surface
-        raise
-    return v + 1
+    return _append(spark, path, v, batch, "append", extra)
+
+
+def _append(spark: SparkSession, path: str, v: int, batch: DataFrame,
+            op: str, extra: dict | None = None,
+            batch_id: int | None = None) -> int:
+    """The one append body behind append and append_exactly_once
+    (``batch_id`` recorded in the manifest; an exactly-once commit
+    lands even when the batch is empty, so its id enters the log)."""
+    from .writer import _BUCKET_COL, _bucket_expr
+
+    m = _manifest(path, v)
+    if "buckets" in m:
+        op += "-bucketed"
+    compat = _check_schema_compat(m, batch, op)
+    batch = _apply_constraints(batch, m, op)
+    extra = dict(extra or {}) | _carry_deletes(m) | _carry_hidden(m) \
+        | compat
+    if "buckets" not in m:
+        seg = _write_segment(batch, path)
+        return _publish(spark, path, v, m, op, m["segments"] + [seg],
+                        extra, staged=[seg], batch_id=batch_id)
+    bb = batch.withColumn(_BUCKET_COL, _bucket_expr(
+        m["bucket_key"], int(m["n_buckets"])))
+    touched = _bucket_ids(bb)
+    if not touched and batch_id is None:
+        return v
+    segs = _write_bucket_segments(bb, path, touched) if touched else {}
+    return _publish(spark, path, v, m, op, None,
+                    extra | _layout_meta(m, segs), staged=segs.values(),
+                    batch_id=batch_id)
 
 
 def delete_rows(spark: SparkSession, path: str, keys, key_col: str,
@@ -934,9 +1048,12 @@ def delete_rows(spark: SparkSession, path: str, keys, key_col: str,
     manifest's delete list; no data segment is read or rewritten. Readers
     of the committed version (read / read_pruned / table_changes'
     snapshot diff) apply the vectors as a broadcast anti-join; the next
-    rewrite commit (upsert/overwrite) materializes them — its merged
-    segment is built from the delete-filtered snapshot — and clears the
-    list, after which vacuum reaps the unreferenced ``del-*`` segments.
+    rewrite commit (upsert/overwrite/compact) materializes them — its
+    new segments are built from the delete-filtered snapshot — and drops
+    them, after which vacuum reaps the unreferenced ``del-*`` segments.
+    On the bucketed layout the vector is scoped to the deleted keys' own
+    hash buckets when it keys the bucket key, so reads of every other
+    bucket stay anti-join-free (_vector_scope).
 
     This is the versioned-layer completion of B5: the flat writer's
     soft_delete rewrites the table, the bucketed writer's rewrites the
@@ -950,78 +1067,24 @@ def delete_rows(spark: SparkSession, path: str, keys, key_col: str,
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     m = _manifest(path, v)
-    if m.get("delete_segs") and m["delete_key"] != key_col:
-        raise ValueError(f"pending delete vectors use key "
-                         f"{m['delete_key']!r}; cannot mix with {key_col!r}")
-    if "buckets" in m:
-        # bucketed twin: same zero-rewrite vector commit, with the
-        # scope shrunk to the deleted keys' own hash buckets when the
-        # vector keys the bucket key — reads of every other bucket
-        # stay anti-join-free (_vector_scope_bucketed)
-        ktype = m.get("col_types", {}).get(key_col)
-        dseg, kset = _write_delete_vector(
-        spark, path, keys, key_col, key_type=ktype)
-        scope = _vector_scope_bucketed(m, kset, key_col,
-                                       path=path, dseg=dseg)
-        extra = dict(extra or {})
-        extra |= {
-            "bucket_key": m["bucket_key"], "n_buckets": m["n_buckets"],
-            "buckets": m["buckets"],
-            "col_types": m.get("col_types", {}),
-        } | _carry_stats_bucketed(spark, path, m, [], m["buckets"]) \
-            | _carry_deletes(m) | _carry_hidden(m)
-        if scope:
-            extra |= {
-                "delete_key": key_col,
-                "delete_segs": (m.get("delete_segs") or []) + [dseg],
-                "delete_scopes": m.get("delete_scopes", {})
-                | {dseg: scope},
-                "delete_typed": m.get("delete_typed", [])
-                + ([dseg] if ktype else []),
-            }
-        else:
-            # EMPTY scope (no keys, or keys hashing to empty buckets):
-            # the vector could never filter a row, and no rewrite
-            # would ever clear it (OPTIMIZE rewrites scoped buckets —
-            # an empty scope names none) — commit the version without
-            # registering it
-            shutil.rmtree(os.path.join(path, dseg))
-        try:
-            _commit(path, v + 1, None, "delete", extra=extra)
-        except ConcurrentWriteError:
-            if scope:
-                shutil.rmtree(os.path.join(path, dseg))
-            raise
-        return v + 1
+    _check_vector_key(m, key_col)
     ktype = m.get("col_types", {}).get(key_col)
-    dseg, _ = _write_delete_vector(
+    dseg, kset = _write_delete_vector(
         spark, path, keys, key_col, key_type=ktype)
-    extra = dict(extra or {})  # caller metadata first; reserved keys win
-    extra |= {
-        "delete_key": key_col,
-        "delete_segs": (m.get("delete_segs") or []) + [dseg],
-        # scope: the vector applies to the segments that exist NOW — a key
-        # appended later is a new row the delete never saw (so re-inserts
-        # are visible; Delta delete-then-insert semantics)
-        "delete_scopes": m.get("delete_scopes", {}) | {dseg: m["segments"]},
-        "delete_typed": m.get("delete_typed", [])
-        + ([dseg] if ktype else []),
-        # carry the table's committed column types: without them the next
-        # append's schema-drift guard starts from an empty known-types map
-        # (silently disabled) and resets col_types to the batch's columns,
-        # narrowing the versioned_cdc source's declared schema
-        "col_types": m.get("col_types", {}),
-    }
-    extra |= _carry_hidden(m)
-    if m.get("stat_cols"):
-        extra |= {"stat_cols": m["stat_cols"],
-                  "seg_stats": m.get("seg_stats", {})}
     try:
-        _commit(path, v + 1, m["segments"], "delete", extra=extra)
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, dseg))
+        vec = _add_vector(m, path, dseg, _vector_scope(
+            m, kset, key_col, path=path, dseg=dseg), key_col, ktype)
+    except Exception:
+        _cleanup_segments(path, [dseg])
         raise
-    return v + 1
+    # carry the table's committed column types: without them the next
+    # append's schema-drift guard starts from an empty known-types map
+    # (silently disabled) and resets col_types to the batch's columns,
+    # narrowing the versioned_cdc source's declared schema
+    extra = dict(extra or {}) | _layout_meta(m) \
+        | {"col_types": m.get("col_types", {})} | _carry_hidden(m) | vec
+    return _publish(spark, path, v, m, "delete", m.get("segments"), extra,
+                    staged=[dseg])
 
 
 def delete_and_append(
@@ -1030,131 +1093,59 @@ def delete_and_append(
     precommit=None,
 ) -> int:
     """ONE commit that both deletes by key (delete vector, zero rewrite)
-    and appends a new segment — the atomic replace primitive a derived
-    view's update refresh needs: a reader either sees the pre-refresh
-    state or the fully-refreshed state, never retracted keys without
-    their replacement rows (two separate commits would expose that
-    window, permanently so after a crash between them).
+    and appends new segment(s) — the atomic replace primitive a derived
+    view's update refresh and conditional UPDATE / MERGE need: a reader
+    either sees the pre-refresh state or the fully-refreshed state,
+    never retracted keys without their replacement rows (two separate
+    commits would expose that window, permanently so after a crash
+    between them).
 
-    The vector's SCOPE is the PARENT's segments, so the rows appended in
+    The vector's SCOPE is the PARENT's segments (on the bucketed layout,
+    those of the retracted keys' own buckets), so the rows appended in
     this same commit are never hidden by it — the delete-then-insert
     semantics of delete_rows + append, collapsed into one manifest
-    publication. ``parent_version`` pins the OCC parent (same contract
-    as append). ``precommit(dseg, seg)``, when given, runs after both
-    writes and before the manifest link — raising aborts the commit
-    and cleans up both staged segments (the MERGE dup-key guard checks
-    the WRITTEN files' footer stats here instead of paying a separate
-    validation job)."""
+    publication. Cost is O(matched + appended): at 100 TB a conditional
+    MERGE touching 1k keys writes one KB-sized vector plus the new row
+    images, zero existing bytes read. ``parent_version`` pins the OCC
+    parent (same contract as append). ``precommit(dseg, seg)``, when
+    given, runs after both writes and before the manifest link —
+    raising aborts the commit and cleans up the staged segments (the
+    MERGE dup-key guard checks the WRITTEN files' footer stats here
+    instead of paying a separate validation job). On the bucketed
+    layout it receives ``(dseg or None, {bucket: segment})``."""
+    from concurrent.futures import ThreadPoolExecutor
+
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     m = _manifest(path, v)
-    if m.get("delete_segs") and m["delete_key"] != key_col:
-        raise ValueError(f"pending delete vectors use key "
-                         f"{m['delete_key']!r}; cannot mix with {key_col!r}")
-    if "buckets" in m:
-        return _delete_and_append_bucketed(spark, path, v, m, keys,
-                                           key_col, batch, extra,
-                                           precommit=precommit)
-    compat = _check_schema_compat(m, batch, "delete-append")
-    batch = _apply_constraints(batch, m, "delete-append")
-    ktype = m.get("col_types", {}).get(key_col)
-    # the vector and segment writes are INDEPENDENT jobs over the same
-    # (usually persisted) batch — submit them from two driver threads
-    # so the second job back-fills the first's task tail (guide-§2.6
-    # overlap) instead of paying two sequential per-job floors
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _ex:
-        _fd = _ex.submit(_write_delete_vector, spark, path, keys,
-                         key_col, key_type=ktype)
-        _fs = _ex.submit(_write_segment, batch, path)
-        _errs, dseg, seg = [], None, None
-        try:
-            dseg, _ = _fd.result()
-        except Exception as exc:  # noqa: BLE001 — re-raised below
-            _errs.append(exc)
-        try:
-            seg = _fs.result()
-        except Exception as exc:  # noqa: BLE001
-            _errs.append(exc)
-        if _errs:
-            for staged in (dseg, seg):
-                if staged:
-                    shutil.rmtree(os.path.join(path, staged),
-                                  ignore_errors=True)
-            raise _errs[0]
-    if precommit is not None:
-        try:
-            precommit(dseg, seg)
-        except Exception:
-            shutil.rmtree(os.path.join(path, dseg), ignore_errors=True)
-            shutil.rmtree(os.path.join(path, seg), ignore_errors=True)
-            raise
-    extra = dict(extra or {})
-    extra |= {
-        "delete_key": key_col,
-        "delete_segs": (m.get("delete_segs") or []) + [dseg],
-        "delete_scopes": m.get("delete_scopes", {}) | {dseg: m["segments"]},
-        "delete_typed": m.get("delete_typed", [])
-        + ([dseg] if ktype else []),
-    }
-    try:
-        _commit(path, v + 1, m["segments"] + [seg], "delete-append",
-                extra=extra
-                | _carry_stats(spark, path, m, [seg], m["segments"])
-                | _carry_hidden(m) | compat)
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, dseg))
-        shutil.rmtree(os.path.join(path, seg))
-        raise
-    return v + 1
-
-
-def _delete_and_append_bucketed(
-    spark: SparkSession, path: str, v: int, m: dict, keys,
-    key_col: str, batch: DataFrame, extra: dict | None,
-    precommit=None,
-) -> int:
-    """delete_and_append's bucketed twin — the atomic replace primitive
-    that makes conditional UPDATE / MERGE work on the bucketed layout
-    without rewriting any bucket: the retracted keys land in ONE
-    delete vector scoped to their own hash buckets' current segments
-    (_vector_scope_bucketed), the new row images are appended as
-    per-bucket segments (same accretion as append_bucketed, folded
-    back down by compact_bucketed), and both publish in one manifest
-    link. Cost is O(matched + appended) — at 100 TB a conditional
-    MERGE touching 1k keys writes one KB-sized vector plus ≤1k
-    buckets' worth of new-segment rows, zero existing bytes read."""
-    bkey, n_buckets, bmap = _bucketed_meta(m)
+    _check_vector_key(m, key_col)
+    bucketed = "buckets" in m
     compat = _check_schema_compat(m, batch, "delete-append")
     batch = _apply_constraints(batch, m, "delete-append")
     ktype = m.get("col_types", {}).get(key_col)
 
-    # the vector chain (write keys → resolve scope, driver-side) and
-    # the batch chain (stage image → per-bucket segments) are
-    # INDEPENDENT job sequences — run them from two driver threads so
-    # one chain's tasks back-fill the other's stage tails (guide-§2.6
-    # overlap), same as the flat twin above
+    # the vector chain (write keys → resolve scope) and the batch chain
+    # (segment write; on the bucketed layout stage → per-bucket
+    # segments) are INDEPENDENT jobs over the same (usually persisted)
+    # batch — submit them from two driver threads so one chain's tasks
+    # back-fill the other's task tail (guide-§2.6 overlap) instead of
+    # paying two sequential per-job floors
     def _chain_vector():
         dseg, kset = _write_delete_vector(
             spark, path, keys, key_col, key_type=ktype)
-        # scope = the PARENT's segments (of the touched buckets): the
-        # segments appended in this same commit are new names outside
-        # the scope, so the vector can never hide its own replacement
-        # rows
-        return dseg, _vector_scope_bucketed(m, kset, key_col,
-                                            path=path, dseg=dseg)
+        return dseg, _vector_scope(m, kset, key_col, path=path, dseg=dseg)
 
     def _chain_batch():
-        bb = _stage_bucketed_batch(batch, bkey, n_buckets)
+        if not bucketed:
+            return {None: _write_segment(batch, path)}
+        bb = _stage_bucketed_batch(batch, m["bucket_key"],
+                                   int(m["n_buckets"]))
         try:
             touched = _bucket_ids(bb)
             return _write_bucket_segments(bb, path, touched) \
                 if touched else {}
         finally:
             bb.unpersist()
-
-    from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as _ex:
         _fv = _ex.submit(_chain_vector)
@@ -1168,111 +1159,68 @@ def _delete_and_append_bucketed(
             segs = _fb.result()
         except Exception as exc:  # noqa: BLE001
             _errs.append(exc)
-        if _errs:
-            if dseg:
-                shutil.rmtree(os.path.join(path, dseg),
-                              ignore_errors=True)
-            _cleanup_segments(path, segs.values())
-            raise _errs[0]
-    new_bmap = dict(bmap)
-    for b, s in segs.items():
-        new_bmap[str(b)] = new_bmap.get(str(b), []) + [s]
-    extra = dict(extra or {})
-    extra |= {"bucket_key": bkey, "n_buckets": n_buckets,
-              "buckets": new_bmap} \
-        | _carry_stats_bucketed(spark, path, m, list(segs.values()),
-                                new_bmap) \
-        | _carry_deletes(m) | _carry_hidden(m) | compat
-    if scope:
-        extra |= {
-            "delete_key": key_col,
-            "delete_segs": (m.get("delete_segs") or []) + [dseg],
-            "delete_scopes": m.get("delete_scopes", {}) | {dseg: scope},
-            "delete_typed": m.get("delete_typed", [])
-            + ([dseg] if ktype else []),
-        }
-    else:
-        # empty scope: an unregistrable no-op vector (see delete_rows)
-        shutil.rmtree(os.path.join(path, dseg))
-    if precommit is not None:
-        try:
-            precommit(dseg if scope else None, segs)
-        except Exception:
-            if scope:
-                shutil.rmtree(os.path.join(path, dseg),
-                              ignore_errors=True)
-            _cleanup_segments(path, segs.values())
-            raise
+    staged = ([dseg] if dseg else []) + list(segs.values())
     try:
-        _commit(path, v + 1, None, "delete-append", extra=extra)
-    except ConcurrentWriteError:
-        if scope:
-            shutil.rmtree(os.path.join(path, dseg))
-        _cleanup_segments(path, segs.values())
+        if _errs:
+            raise _errs[0]
+        vec = _add_vector(m, path, dseg, scope, key_col, ktype)
+        if precommit is not None:
+            precommit(dseg if scope else None,
+                      segs if bucketed else segs[None])
+    except Exception:
+        _cleanup_segments(path, staged)
         raise
-    return v + 1
+    extra = dict(extra or {}) | _layout_meta(m, segs) | _carry_hidden(m) \
+        | compat | vec
+    return _publish(spark, path, v, m, "delete-append",
+                    None if bucketed else m["segments"] + [segs[None]],
+                    extra, staged=staged)
 
 
 def overwrite(spark: SparkSession, path: str, df: DataFrame,
               extra: dict | None = None,
               parent_version: int | None = None,
               op: str = "overwrite") -> int:
-    """Full-replace commit (B18-flavored reload target): one new segment is
-    the whole new state. Old versions remain readable until vacuum.
-    ``extra``: caller metadata recorded in the manifest (reserved keys
-    win), same contract as create(). ``parent_version`` pins the OCC
-    parent (same read-modify-write contract as append). ``op`` labels
-    the commit in DESCRIBE HISTORY (truncate() reuses this path)."""
+    """Full-replace commit (B18-flavored reload target): the new
+    segment(s) are the whole new state — pending delete vectors and
+    hidden columns are definitionally materialized. A bucketed table
+    writes a fresh per-bucket segment map (same deterministic hash
+    routing, bucket count preserved). Old versions remain readable until
+    vacuum. ``extra``: caller metadata recorded in the manifest
+    (reserved keys win), same contract as create(). ``parent_version``
+    pins the OCC parent (same read-modify-write contract as append).
+    ``op`` labels the commit in DESCRIBE HISTORY (truncate() reuses this
+    path)."""
+    from .writer import _BUCKET_COL, _bucket_expr
+
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     parent = _manifest(path, v)
     # CHECK constraints apply to the replacement state inline in the
     # write job (truncate's empty frame passes trivially)
     df = _apply_constraints(df, parent, op)
-    if "buckets" in parent:
-        # layout dispatch: the full reload of a bucketed table writes
-        # a fresh per-bucket segment map (same deterministic hash
-        # routing, bucket count preserved); pending delete vectors and
-        # hidden columns are definitionally materialized — the new
-        # state IS df
-        from .writer import _BUCKET_COL, _bucket_expr
-
-        key, n_buckets, _ = _bucketed_meta(parent)
-        if key not in df.columns:
-            raise ValueError(f"overwrite of a bucketed table needs "
-                             f"its bucket key {key!r} (columns: "
-                             f"{df.columns})")
-        df_b = df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-        # ONE pass: _write_bucket_segments skips absent partition dirs,
-        # so probing all bucket ids costs nothing extra, while a
-        # separate _bucket_ids() job would execute the caller's whole
-        # source plan a second time
-        segs = _write_bucket_segments(df_b, path,
-                                      list(range(n_buckets)))
-        try:
-            new_bmap = {str(b): [s] for b, s in segs.items()}
-            _commit(path, v + 1, None, op,
-                    extra=dict(extra or {})
-                    | {"bucket_key": key, "n_buckets": n_buckets,
-                       "buckets": new_bmap,
-                       "col_types": _col_types(df)}
-                    | _carry_stats_bucketed(spark, path, parent,
-                                            list(segs.values()),
-                                            new_bmap))
-        except ConcurrentWriteError:
-            _cleanup_segments(path, segs.values())
-            raise
-        return v + 1
-    seg = _write_segment(df, path)
-    try:
-        _commit(path, v + 1, [seg], op,
-                extra=dict(extra or {})
-                | _carry_stats(spark, path, parent, [seg], [])
-                | {"col_types": _col_types(df)})
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, seg))
-        raise
-    return v + 1
+    extra = dict(extra or {})
+    types = {"col_types": _col_types(df)}
+    if "buckets" not in parent:
+        seg = _write_segment(df, path)
+        return _publish(spark, path, v, parent, op, [seg], extra | types,
+                        staged=[seg])
+    key, n_buckets, _ = _bucketed_meta(parent)
+    if key not in df.columns:
+        raise ValueError(f"overwrite of a bucketed table needs "
+                         f"its bucket key {key!r} (columns: "
+                         f"{df.columns})")
+    # ONE pass: _write_bucket_segments skips absent partition dirs, so
+    # probing all bucket ids costs nothing extra, while a separate
+    # _bucket_ids() job would execute the caller's whole source plan a
+    # second time
+    segs = _write_bucket_segments(
+        df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets)), path,
+        list(range(n_buckets)))
+    return _publish(spark, path, v, parent, op, None,
+                    extra | _layout_meta(parent)
+                    | {"buckets": {str(b): [s] for b, s in segs.items()}}
+                    | types, staged=segs.values())
 
 
 def truncate(spark: SparkSession, path: str) -> int:
@@ -1288,10 +1236,8 @@ def truncate(spark: SparkSession, path: str) -> int:
     hash-route exactly as before. Cost: one empty-segment write —
     zero data read, zero data-sized job, same at 100 TB."""
     v = current_version(path)
-    m = _manifest(path, v)
-    empty = (read_bucketed(spark, path, v) if "buckets" in m
-             else read(spark, path, v)).limit(0)
-    return overwrite(spark, path, empty, op="truncate")
+    return overwrite(spark, path, read(spark, path, v).limit(0),
+                     op="truncate")
 
 
 _CLONE_DIR = "_clones"
@@ -1563,15 +1509,8 @@ def upsert(spark: SparkSession, path: str, updates: DataFrame, key: str) -> int:
         updates.select(key).distinct(), [key], "left_anti"
     ).unionByName(updates, allowMissingColumns=True)
     seg = _write_segment(merged, path)
-    parent = _manifest(path, v)
-    try:
-        _commit(path, v + 1, [seg], "upsert",
-                extra=_carry_stats(spark, path, parent, [seg], [])
-                | {"col_types": _col_types(merged)})
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, seg))
-        raise
-    return v + 1
+    return _publish(spark, path, v, m0, "upsert", [seg],
+                    {"col_types": _col_types(merged)}, staged=[seg])
 
 
 def add_column(spark: SparkSession, path: str, col: str, dtype: str,
@@ -1581,7 +1520,7 @@ def add_column(spark: SparkSession, path: str, col: str, dtype: str,
     segment is written (the flat path appends a zero-row evolved
     segment and lets mergeSchema surface the column; a bucketed table
     has no natural bucket for an empty segment, so the declaration
-    lives in the manifest and ``read_bucketed`` reconciles
+    lives in the manifest and the bucketed ``read`` reconciles
     declared-but-unwritten columns as typed NULLs). Existing rows read
     NULL; batches appended with or without the column both work (the
     drift guard knows the declared type)."""
@@ -1594,7 +1533,7 @@ def add_column(spark: SparkSession, path: str, col: str, dtype: str,
     from .writer import _BUCKET_COL
 
     if col.lower() == _BUCKET_COL:
-        # the internal routing column: append_bucketed overwrites it
+        # the internal routing column: a bucketed append overwrites it
         # and _write_bucket_segments strips it from the files — user
         # data under this name would silently read back NULL forever
         raise ValueError(f"{_BUCKET_COL!r} is the bucketed layout's "
@@ -1615,15 +1554,11 @@ def add_column(spark: SparkSession, path: str, col: str, dtype: str,
             .schema.fields[0]
     except Exception as ex:
         raise ValueError(f"bad column type {dtype!r}: {ex}") from ex
-    extra = {
-        "bucket_key": m["bucket_key"], "n_buckets": m["n_buckets"],
-        "buckets": m["buckets"],
+    extra = _layout_meta(m) | {
         "col_types": dict(types) | {col: field.dataType.simpleString()},
     }
-    extra |= _carry_stats_bucketed(spark, path, m, [], m["buckets"])
     extra |= _carry_deletes(m) | _carry_hidden(m)
-    _commit(path, v + 1, None, "add-column", extra=extra)
-    return v + 1
+    return _publish(spark, path, v, m, "add-column", None, extra)
 
 
 def drop_column(spark: SparkSession, path: str, col: str,
@@ -1671,61 +1606,49 @@ def drop_column(spark: SparkSession, path: str, col: str,
         "col_types": {c: t for c, t in types.items() if c != real},
         "hidden_cols": list(m.get("hidden_cols", [])) + [real],
     }
-    extra |= _carry_deletes(m)
-    if "buckets" in m:
-        # bucketed twin: same metadata-only hide, applied by
-        # _apply_hidden at the shared read choke point; the bytes stay
-        # in the per-bucket segments until a full OPTIMIZE pass
-        # materializes the drop (compact_bucketed rewrites every
-        # non-empty bucket while hidden_cols is set, then clears it)
-        extra |= {"bucket_key": m["bucket_key"],
-                  "n_buckets": m["n_buckets"], "buckets": m["buckets"]}
-        extra |= _carry_stats_bucketed(spark, path, m, [], m["buckets"])
-        _commit(path, v + 1, None, "drop-column", extra=extra)
-        return v + 1
-    if m.get("stat_cols"):
-        extra |= {"stat_cols": m["stat_cols"],
-                  "seg_stats": m.get("seg_stats", {})}
-    _commit(path, v + 1, m["segments"], "drop-column", extra=extra)
-    return v + 1
+    # on the bucketed layout the bytes stay in the per-bucket segments
+    # until a full OPTIMIZE pass materializes the drop (compact
+    # rewrites every non-empty bucket while hidden_cols is set, then
+    # clears it)
+    extra |= _carry_deletes(m) | _layout_meta(m)
+    return _publish(spark, path, v, m, "drop-column", m.get("segments"),
+                    extra)
 
 
-def compact(spark: SparkSession, path: str) -> int:
-    """Fold a flat table's accreted segments into ONE, as a normal
-    committed version: reads the head snapshot (pending delete vectors
-    applied — so deletes are MATERIALIZED by the rewrite and the vector
-    list clears), writes one merged segment, re-points the manifest.
+def compact(spark: SparkSession, path: str, min_segments: int = 2) -> int:
+    """Fold accreted segments as a normal committed version: the new
+    segments are built from the head snapshot with pending delete
+    vectors applied — so deletes are MATERIALIZED by the rewrite and
+    the vector list clears — and readers of older versions stay
+    isolated (old segments live until vacuum). A flat table folds into
+    ONE segment once it holds ``min_segments`` or more; a bucketed one
+    rewrites only the buckets holding >= ``min_segments`` segments or a
+    pending vector's scope (the rest keep their names — maintenance
+    cost tracks ingest churn, not table size). Pending logical column
+    drops and foreign (clone) segment refs force the rewrite on either
+    layout.
 
     Why this is table maintenance, not a luxury: the manifest carries
     ~100 bytes per segment (seg_rows, plus seg_stats when zone maps are
     tracked), and every commit reads new segments' parquet footers — both
     O(#segments). Under many small appends the manifest balloons
     linearly (pinned by test_manifest_growth_and_compaction); periodic
-    compaction restores it to O(1) while readers of older versions stay
-    isolated (old segments live until vacuum). Bucketed tables use
-    compact_bucketed (bucket-at-a-time, only multi-segment buckets).
-    Returns the new version (current version when already compact)."""
+    compaction restores it to O(1). Returns the new version (current
+    version when already compact)."""
     v = current_version(path)
     m = _manifest(path, v)
     if "buckets" in m:
-        raise ValueError("bucketed tables compact via compact_bucketed")
-    if (len(m["segments"]) <= 1 and not m.get("delete_segs")
+        return _compact_buckets(spark, path, v, m, min_segments)
+    if (len(m["segments"]) < min_segments and not m.get("delete_segs")
             and not m.get("hidden_cols")
             and not any(os.path.isabs(s) for s in m["segments"])):
         # nothing to fold, no deletes and no logical drops to
         # materialize, and no foreign (clone) refs to localize: the
         # head is already compact
         return v
-    merged = read(spark, path, v)
-    seg = _write_segment(merged, path)
-    try:
-        _commit(path, v + 1, [seg], "compact",
-                extra=_carry_stats(spark, path, m, [seg], [])
-                | {"col_types": m.get("col_types", {})})
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, seg))
-        raise
-    return v + 1
+    seg = _write_segment(read(spark, path, v), path)
+    return _publish(spark, path, v, m, "compact", [seg],
+                    {"col_types": m.get("col_types", {})}, staged=[seg])
 
 
 def cluster_zorder(
@@ -1733,22 +1656,24 @@ def cluster_zorder(
     n_segments: int = 8, bits: int = 16,
 ) -> int:
     """OPTIMIZE ZORDER as a committed version (the Delta/Databricks idea
-    at manifest altitude): rewrite the head snapshot into ``n_segments``
-    range-disjoint segments ordered by the Morton key of
-    ``(x_col, y_col)`` and record zone maps for BOTH columns — after
-    which a range predicate on EITHER column maps to O(few) contiguous
-    z-ranges, so ``read_pruned`` skips most segments at manifest
-    resolution (pinned by test: the same 2-D range query survives fewer
-    segments after clustering). Appends after clustering accrete
-    unclustered segments as usual; re-run to fold them in.
+    at manifest altitude). A flat table's head snapshot is rewritten
+    into ``n_segments`` range-disjoint segments ordered by the Morton
+    key of ``(x_col, y_col)``, with zone maps recorded for BOTH columns
+    — after which a range predicate on EITHER column maps to O(few)
+    contiguous z-ranges, so ``read_pruned`` skips most segments at
+    manifest resolution (pinned by test: the same 2-D range query
+    survives fewer segments after clustering). Appends after clustering
+    accrete unclustered segments as usual; re-run to fold them in. A
+    bucketed table is clustered WITHIN each bucket instead
+    (_zorder_buckets; ``n_segments`` does not apply — every bucket
+    folds to one segment).
 
     Plan shape: one boundary sample (approxQuantile over the z column),
     one hash repartition on the computed bucket id with a within-
     partition sort, one partitioned write — never a global sort to a
     single task. Pending delete vectors are materialized by the rewrite.
     Readers of older versions stay isolated (old segments live until
-    vacuum). Flat tables only (bucketed layouts already co-locate by
-    key; recluster those bucket-at-a-time instead)."""
+    vacuum)."""
     import pyspark.sql.functions as F
 
     from .writer import zorder_value
@@ -1756,8 +1681,7 @@ def cluster_zorder(
     v = current_version(path)
     m = _manifest(path, v)
     if "buckets" in m:
-        raise ValueError("cluster_zorder is the flat-table path; bucketed "
-                         "tables are already key-clustered")
+        return _zorder_buckets(spark, path, v, m, x_col, y_col, bits)
     df = read(spark, path, v)
     z = zorder_value(F.col(x_col), F.col(y_col), int(bits))
     zdf = df.withColumn("__z", z)
@@ -1791,22 +1715,15 @@ def cluster_zorder(
             # empty schema-bearing segment — a zero-segment manifest
             # would make read() of the head raise FileNotFoundError
             segs.append(_write_segment(df.limit(0), path))
-        stat_cols = sorted(set(m.get("stat_cols") or []) | {x_col, y_col})
-        seg_stats = {
-            s: _segment_stats(
-                spark.read.parquet(os.path.join(path, s)), stat_cols)
-            for s in segs
-        }
-        _commit(path, v + 1, segs, "cluster-zorder",
-                extra={"stat_cols": stat_cols, "seg_stats": seg_stats,
-                       "col_types": m.get("col_types", {})})
-    except (ConcurrentWriteError, OSError):
-        for s in segs:
-            shutil.rmtree(os.path.join(path, s), ignore_errors=True)
+    except OSError:
+        _cleanup_segments(path, segs)
         raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return v + 1
+    return _publish(spark, path, v, m, "cluster-zorder", segs,
+                    {"col_types": m.get("col_types", {})}, staged=segs,
+                    stat_cols=sorted(set(m.get("stat_cols") or [])
+                                     | {x_col, y_col}))
 
 
 def _commit_epoch(path: str, v: int, m: dict | None = None) -> float:
@@ -1902,49 +1819,39 @@ def append_exactly_once(
     the commit manifest, so a crash-replay of the same batch (foreachBatch
     is at-least-once) finds its id already in the log and skips — the
     transactional-sink recipe from the Structured Streaming docs, with the
-    manifest log as the transaction record. Returns the committed version,
+    manifest log as the transaction record. Same O(batch), zero-rewrite
+    commit as append on either layout (a table converted to bucketed
+    mid-stream keeps its sink working). Returns the committed version,
     or None when the batch was already committed (replay)."""
     if int(batch_id) in committed_batch_ids(path):
         return None
-    v = current_version(path)
-    parent = _manifest(path, v)
-    if "buckets" in parent:
-        # layout dispatch: a table converted to bucketed mid-stream
-        # (OPTIMIZE ... BUCKET BY) keeps its exactly-once sink working
-        return append_bucketed_exactly_once(spark, path, batch,
-                                            batch_id)
-    compat = _check_schema_compat(parent, batch, "stream-append")
-    batch = _apply_constraints(batch, parent, "stream-append")
-    seg = _write_segment(batch, path)
-    try:
-        _commit(path, v + 1, parent["segments"] + [seg],
-                "stream-append", batch_id=int(batch_id),
-                extra=_carry_stats(spark, path, parent, [seg],
-                                   parent["segments"])
-                | _carry_deletes(parent) | _carry_hidden(parent)
-                | compat)
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, seg))
-        raise
-    return v + 1
+    return _append(spark, path, current_version(path), batch,
+                   "stream-append", batch_id=int(batch_id))
+
+
+def with_retry(attempt, max_retries: int = 3):
+    """The ONE optimistic-concurrency rebase loop: call ``attempt()``
+    until it commits, re-running it on ConcurrentWriteError — each
+    attempt re-reads the NEW head and re-applies its change against it,
+    so the loser's update is re-based, never lost or double-applied (the
+    Delta commit-retry protocol). Raises after ``max_retries`` rebases.
+    Writers (upsert_with_retry, the bucketed SQL MERGE) and the view
+    refreshers all run under it."""
+    for _ in range(max_retries):
+        try:
+            return attempt()
+        except ConcurrentWriteError:
+            pass
+    return attempt()
 
 
 def upsert_with_retry(
     spark: SparkSession, path: str, updates: DataFrame, key: str,
     max_retries: int = 3,
 ) -> int:
-    """MERGE with the standard optimistic-concurrency loop: on a
-    write-write conflict, re-read the NEW head, re-apply the merge, and
-    retry — each attempt merges against the latest committed state, so the
-    loser's update is re-based, never lost or double-applied (the Delta
-    commit-retry protocol). Raises after ``max_retries`` rebases."""
-    for attempt in range(max_retries + 1):
-        try:
-            return upsert(spark, path, updates, key)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
+    """MERGE (upsert) under the OCC rebase loop (with_retry)."""
+    return with_retry(lambda: upsert(spark, path, updates, key),
+                      max_retries)
 
 
 def table_row_count(path: str, version: int | None = None) -> int:
@@ -1987,12 +1894,10 @@ def history(path: str) -> list[dict]:
     out = []
     for v in _manifest_versions(path):
         m = _manifest(path, v)
-        segs = m.get("segments") or sorted(
-            s for segs in m.get("buckets", {}).values() for s in segs
-        )
         mt = _commit_epoch(path, v, m)
         out.append({"version": m["version"], "op": m["op"],
-                    "parent": m["parent"], "n_segments": len(segs),
+                    "parent": m["parent"],
+                    "n_segments": len(_manifest_segments(m)),
                     "timestamp": _dt.datetime.fromtimestamp(
                         mt, _dt.timezone.utc).isoformat()})
     return out
@@ -2293,9 +2198,11 @@ def vacuum(path: str, keep_last: int = 1,
 #     tables (_manifest_segments understands both shapes).
 # At 100 TB: the manifest holds n_buckets entries (a few MB at 65536
 # buckets — still metadata-sized), a 1M-row update batch rewrites at most
-# min(n_buckets, distinct keys) buckets, and append_bucketed ingests with
-# ZERO rewrite by appending per-bucket segments (compact_bucketed folds
-# them back down, bucket-at-a-time, as its own committed version).
+# min(n_buckets, distinct keys) buckets, and append ingests with ZERO
+# rewrite by appending per-bucket segments (compact folds them back down,
+# bucket-at-a-time, as its own committed version). The layout is chosen
+# once — create_bucketed, or convert_to_bucketed later — and every other
+# verb reads it from the manifest and dispatches itself.
 
 
 def _bucket_ids(df_b: DataFrame) -> list[int]:
@@ -2311,7 +2218,7 @@ def _stage_bucketed_batch(batch: DataFrame, key: str,
                           n_buckets: int) -> DataFrame:
     """Route a batch to its buckets and persist() it so its plan runs
     ONCE. Used ONLY by the conditional-DML image path
-    (_delete_and_append_bucketed), where the batch plan embeds joins
+    (delete_and_append), where the batch plan embeds joins
     against the table itself: its two consumers — the touched-bucket-ids
     collect and the per-bucket segment write — would otherwise each
     re-run those joins, re-scanning the target per consumer (measured:
@@ -2367,67 +2274,10 @@ def _cleanup_segments(path: str, segs) -> None:
         shutil.rmtree(os.path.join(path, s), ignore_errors=True)
 
 
-def _carry_stats_bucketed(spark: SparkSession, path: str,
-                          parent: dict, new_segs,
-                          new_bmap: dict) -> dict:
-    """_carry_stats' bucketed twin: parent's zone-map entries for every
-    segment still referenced by ``new_bmap`` plus fresh entries for the
-    just-written segments (computed from the WRITTEN files — the same
-    no-false-prune guarantee). Empty when the table tracks no stats.
-    Cost: one partial-agg pass per NEW segment, i.e. bounded by the
-    touched buckets, never the table."""
-    cols = parent.get("stat_cols")
-    if not cols:
-        return {}
-    old = parent.get("seg_stats", {})
-    live = {s for ss in new_bmap.values() for s in ss}
-    seg_stats = {s: old[s] for s in live if s in old}
-    if new_segs:
-        # ONE grouped aggregate over all new segments (derive the
-        # segment from input_file_name) — a full-rewrite commit
-        # (zorder/overwrite/convert) would otherwise issue n_buckets
-        # sequential read+agg jobs
-        import pyspark.sql.functions as F
-
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, s) for s in new_segs])
-        # a batch legally omits columns (they read as NULL); a stat
-        # column absent from every new segment must aggregate as
-        # all-NULL, not fail resolution
-        types = parent.get("col_types", {})
-        for c in cols:
-            if c not in df.columns:
-                df = df.withColumn(
-                    c, F.lit(None).cast(types.get(c, "string")))
-        aggs = []
-        for c in cols:
-            aggs += [
-                F.min(c).alias(f"__mn_{c}"),
-                F.max(c).alias(f"__mx_{c}"),
-                F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}"),
-            ]
-        rows = (df.withColumn(
-            "__seg", F.element_at(F.split(F.input_file_name(), "/"),
-                                  -2))
-            .groupBy("__seg").agg(*aggs).collect())
-        by_seg = {r["__seg"]: r for r in rows}
-        for seg in new_segs:
-            r = by_seg.get(seg)
-            if r is None:
-                continue  # zero-row segment: no stats, kept by reads
-            seg_stats[seg] = {
-                c: {"min": _json_stat(r[f"__mn_{c}"]),
-                    "max": _json_stat(r[f"__mx_{c}"]),
-                    "nulls": int(r[f"__nl_{c}"] or 0)}
-                for c in cols
-            }
-    return {"stat_cols": cols, "seg_stats": seg_stats}
-
-
 def _bucketed_meta(m: dict) -> tuple[str, int, dict]:
     if "buckets" not in m:
         raise ValueError("not a bucketed versioned table (no 'buckets' in "
-                         "manifest) — use the flat read/upsert/append")
+                         "manifest) — convert_to_bucketed migrates it")
     return m["bucket_key"], int(m["n_buckets"]), m["buckets"]
 
 
@@ -2441,27 +2291,21 @@ def create_bucketed(
     segments; the manifest records the bucket map.
 
     ``stat_cols`` declares zone-map columns, same contract as the flat
-    create(): every later bucketed commit records per-segment
-    min/max/null-count for them and ``read_bucketed_pruned`` skips
-    whole segments at manifest resolution — the second pruning layer
-    on top of bucket subsetting (bucket hash answers key-equi
-    questions; zone maps answer RANGE questions, e.g. a time window
-    over a user-bucketed table)."""
+    create(): every later commit records per-segment min/max/null-count
+    for them and ``read_pruned`` skips whole segments at manifest
+    resolution — the second pruning layer on top of bucket subsetting
+    (bucket hash answers key-equi questions; zone maps answer RANGE
+    questions, e.g. a time window over a user-bucketed table)."""
     from .writer import _bucket_expr, _BUCKET_COL
 
     os.makedirs(os.path.join(path, _SNAP_DIR), exist_ok=False)
     df_b = df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    touched = _bucket_ids(df_b)
-    segs = _write_bucket_segments(df_b, path, touched)
-    buckets = {str(b): [segs[b]] for b in segs}
-    extra = {"bucket_key": key, "n_buckets": int(n_buckets),
-             "buckets": buckets, "col_types": _col_types(df)}
-    if stat_cols:
-        extra |= _carry_stats_bucketed(
-            spark, path, {"stat_cols": list(stat_cols)},
-            list(segs.values()), buckets)
-    _commit(path, 1, None, "create-bucketed", extra=extra)
-    return 1
+    segs = _write_bucket_segments(df_b, path, _bucket_ids(df_b))
+    return _publish(spark, path, 0, {}, "create-bucketed", None,
+                    {"bucket_key": key, "n_buckets": int(n_buckets),
+                     "buckets": {str(b): [s] for b, s in segs.items()},
+                     "col_types": _col_types(df)},
+                    staged=segs.values(), stat_cols=stat_cols)
 
 
 def convert_to_bucketed(spark: SparkSession, path: str, key: str,
@@ -2470,12 +2314,15 @@ def convert_to_bucketed(spark: SparkSession, path: str, key: str,
     committed version: read the head snapshot (pending delete vectors
     AND logical column drops are materialized by the rewrite), route
     rows by ``pmod(xxhash64(key), n_buckets)``, write one segment per
-    bucket, commit a bucketed manifest. Readers of older versions
-    stay flat (read dispatches per-manifest); RESTORE below this
-    version returns to the flat layout. The migration path for a
-    table whose join/upsert traffic has grown into wanting
+    bucket, commit a bucketed manifest — the table's declared zone-map
+    columns survive with fresh per-bucket-segment stats. Readers of
+    older versions stay flat (read dispatches per-manifest); RESTORE
+    below this version returns to the flat layout. The migration path
+    for a table whose join/upsert traffic has grown into wanting
     co-location — one rewrite buys every later key-equi join/upsert
     the touched-buckets cost model."""
+    import pyspark.sql.functions as F
+
     from .writer import _BUCKET_COL, _bucket_expr
 
     v = current_version(path)
@@ -2487,7 +2334,6 @@ def convert_to_bucketed(spark: SparkSession, path: str, key: str,
     if key not in df.columns:
         raise ValueError(f"no column {key!r} on {path} "
                          f"(columns: {df.columns})")
-    df_b = df.withColumn(_BUCKET_COL, _bucket_expr(key, int(n_buckets)))
     # cluster each bucket into one task before the partitioned write:
     # without this, partitionBy fans every task across every bucket it
     # holds rows for — ~parallelism FILES PER BUCKET, the small-files
@@ -2495,67 +2341,15 @@ def convert_to_bucketed(spark: SparkSession, path: str, key: str,
     # 100 TB. One shuffle at conversion time (the rewrite already
     # reads everything); incremental per-bucket APPENDS stay
     # shuffle-free (their batches are delta-sized, few files by
-    # construction, folded by compact_bucketed)
-    import pyspark.sql.functions as F
-
-    df_b = df_b.repartition(int(n_buckets), F.col(_BUCKET_COL))
-    touched = _bucket_ids(df_b)
-    segs = _write_bucket_segments(df_b, path, touched)
-    buckets = {str(b): [segs[b]] for b in segs}
-    try:
-        _commit(path, v + 1, None, "convert-bucketed",
-                extra={"bucket_key": key, "n_buckets": int(n_buckets),
-                       "buckets": buckets,
-                       "col_types": _col_types(df)}
-                # a flat table's declared zone-map columns survive the
-                # migration: fresh per-bucket-segment stats
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), buckets))
-    except ConcurrentWriteError:
-        for s in segs.values():
-            shutil.rmtree(os.path.join(path, s), ignore_errors=True)
-        raise
-    return v + 1
-
-
-def read_bucketed(
-    spark: SparkSession, path: str, version: int | None = None,
-    buckets: list[int] | None = None, pin_schema: bool = False,
-) -> DataFrame:
-    """Read a bucketed versioned table AT a version (default head),
-    optionally restricted to a bucket subset — restriction is directory
-    pruning at MANIFEST-resolution time: non-listed buckets' segments are
-    never even named in the plan (the at-rest analog of a planning-time
-    partition filter). ``pin_schema`` additionally reads with the
-    manifest's committed schema instead of mergeSchema footer
-    inference — ZERO Spark jobs at plan time (serving paths)."""
-    v = current_version(path) if version is None else int(version)
-    m = _manifest(path, v)
-    _, _, bmap = _bucketed_meta(m)
-    ids = sorted(bmap) if buckets is None else [str(b) for b in buckets]
-    segs = [s for b in ids for s in bmap.get(b, [])]
-    if not segs:
-        # an EMPTY bucketed table (declared schema, no rows yet) and a
-        # sparse bucket subset (nothing hashed there) are both
-        # legitimate zero-row reads — reconstruct the schema from the
-        # manifest's committed col_types instead of failing the scan.
-        # _pinned_schema does the reconstruction (same quoting as the
-        # non-empty pinned read — a column name needing backticks must
-        # parse identically on both paths) and drops logically-hidden
-        # columns, matching the non-empty read's _apply_hidden shape.
-        schema = _pinned_schema(m)
-        if schema:
-            return spark.createDataFrame([], schema)
-        raise FileNotFoundError(
-            f"version {v} holds no segments for buckets {buckets}"
-        )
-    # pending delete vectors apply with their SCOPES, same choke point
-    # as the flat read: a vector scoped to other buckets' segments
-    # groups this read's segments into the no-vector bucket — zero
-    # anti-join cost for buckets the delete never touched
-    return _reconcile_declared(
-        _read_with_deletes(spark, path, m, segs,
-                           pin_schema=pin_schema), m)
+    # construction, folded by compact)
+    df_b = df.withColumn(_BUCKET_COL, _bucket_expr(key, int(n_buckets))) \
+        .repartition(int(n_buckets), F.col(_BUCKET_COL))
+    segs = _write_bucket_segments(df_b, path, _bucket_ids(df_b))
+    return _publish(spark, path, v, m, "convert-bucketed", None,
+                    {"bucket_key": key, "n_buckets": int(n_buckets),
+                     "buckets": {str(b): [s] for b, s in segs.items()},
+                     "col_types": _col_types(df)},
+                    staged=segs.values())
 
 
 def read_probed(
@@ -2575,45 +2369,13 @@ def read_probed(
     schema-pinned. Changes to this serving contract land here once,
     not per index kind."""
     m = _manifest(path, version)
-    if "buckets" not in m:
-        return read(spark, path, version, pin_schema=True)
     phys = None
     if probe_values is not None and m.get("bucket_key") == bucket_key:
         from ..functions.xxh import buckets_of
 
         phys = buckets_of(probe_values, int(m["n_buckets"]))
-    return read_bucketed(spark, path, version, buckets=phys,
-                         pin_schema=True)
-
-
-def read_bucketed_pruned(
-    spark: SparkSession, path: str, ranges: dict,
-    version: int | None = None, buckets: list[int] | None = None,
-) -> DataFrame:
-    """Range read of a BUCKETED table with BOTH pruning layers:
-    optional bucket subsetting (key-equi questions) and manifest-level
-    zone-map segment skipping (range questions — a segment whose
-    recorded [min, max] cannot overlap every range never enters the
-    plan; stats-less segments are kept conservatively). Residual row
-    predicates apply inside the survivors, and parquet row-group stats
-    prune further below — after cluster_zorder_bucketed the row groups
-    inside each bucket are range-disjoint on the z key, so all three
-    layers compose. ``ranges``: {"col": (lo_or_None, hi_or_None)},
-    the read_pruned contract."""
-    import pyspark.sql.functions as F
-
-    v = current_version(path) if version is None else int(version)
-    m = _manifest(path, v)
-    _, _, bmap = _bucketed_meta(m)
-    ids = sorted(bmap) if buckets is None else [str(b) for b in buckets]
-    stats = m.get("seg_stats", {})
-    keep = [s for b in ids for s in bmap.get(b, [])
-            if zone_survives(stats.get(s, {}), ranges)]
-    if not keep:
-        return read_bucketed(spark, path, v).limit(0)
-    out = _reconcile_declared(
-        _read_with_deletes(spark, path, m, keep), m)
-    return _apply_ranges(out, ranges)
+    return _read_segments(spark, path, m, _layout_segments(m, phys),
+                          pin_schema=True)
 
 
 def point_lookup_bucketed(
@@ -2643,9 +2405,8 @@ def point_lookup_bucketed(
                    F.lit(n_buckets))
             .cast("int").alias("b")
         ).first()["b"]
-    return read_bucketed(spark, path, version=v, buckets=[int(b)]).where(
-        F.col(key) == value
-    )
+    return _read_segments(spark, path, m, _layout_segments(m, [int(b)])
+                          ).where(F.col(key) == value)
 
 
 def upsert_bucketed(
@@ -2659,7 +2420,8 @@ def upsert_bucketed(
     one new segment per touched bucket, commit a manifest that swaps
     exactly those bucket entries. Readers of any resolved version are
     untouched; a concurrent commit raises ConcurrentWriteError (orphan
-    segments cleaned) so the caller re-merges against the new head.
+    segments cleaned) so the caller re-merges against the new head
+    (``with_retry``).
 
     ``validate(nn, nk)``, when given, receives the batch's non-null and
     distinct key-value counts and may raise to abort before anything is
@@ -2719,83 +2481,26 @@ def upsert_bucketed(
     for b in touched:
         new_bmap[str(b)] = [segs[b]] if b in segs else []
     live = {s for ss in new_bmap.values() for s in ss}
-    try:
-        _commit(path, v + 1, None, "upsert-bucketed",
-                extra={"bucket_key": key, "n_buckets": n_buckets,
-                       "buckets": new_bmap}
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), new_bmap)
-                | compat | _carry_hidden(m) | _prune_vectors(m, live))
-    except ConcurrentWriteError:
-        _cleanup_segments(path, segs.values())
-        raise
-    return v + 1
+    return _publish(spark, path, v, m, "upsert-bucketed", None,
+                    _layout_meta(m) | {"buckets": new_bmap} | compat
+                    | _carry_hidden(m) | _prune_vectors(m, live),
+                    staged=segs.values())
 
 
-def append_bucketed(
-    spark: SparkSession, path: str, batch: DataFrame,
-    extra: dict | None = None, parent_version: int | None = None,
-) -> int:
-    """O(batch) ingest commit: write the batch's per-bucket segments and
-    APPEND them to the touched buckets' segment lists — existing data is
-    never read or rewritten (the versioned twin of the streaming bucketed
-    sink's accretion; compact_bucketed folds the lists back down).
-    Pending delete vectors carry forward untouched — the new segments
-    are outside every vector's scope, so re-inserts of a deleted key
-    are visible (same delete-then-insert semantics as the flat append).
-    ``extra``/``parent_version``: same contracts as append()."""
+def _compact_buckets(spark: SparkSession, path: str, v: int, m: dict,
+                     min_segments: int) -> int:
+    """compact's bucketed body: fold multi-segment buckets (append
+    accretion) back to one segment each. A bucket is rewritten when it
+    accreted segments (>= min_segments) OR any pending delete vector
+    scopes into it — so OPTIMIZE both folds the layout AND materializes
+    pending deletes, still paying only for the buckets that actually
+    changed. A pending COLUMN DROP (hidden_cols) forces the full pass:
+    every non-empty bucket rewrites without the column, and the hidden
+    list clears — the one O(table) case (user-invoked maintenance, not
+    a DML tax)."""
     from .writer import _bucket_expr, _BUCKET_COL
 
-    v = current_version(path) if parent_version is None \
-        else int(parent_version)
-    m = _manifest(path, v)
     key, n_buckets, bmap = _bucketed_meta(m)
-    compat = _check_schema_compat(m, batch, "append-bucketed")
-    batch = _apply_constraints(batch, m, "append-bucketed")
-    bb = batch.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    touched = _bucket_ids(bb)
-    if not touched:
-        return v
-    segs = _write_bucket_segments(bb, path, touched)
-    new_bmap = dict(bmap)
-    for b, s in segs.items():
-        new_bmap[str(b)] = new_bmap.get(str(b), []) + [s]
-    try:
-        _commit(path, v + 1, None, "append-bucketed",
-                extra=dict(extra or {})
-                | {"bucket_key": key, "n_buckets": n_buckets,
-                   "buckets": new_bmap}
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), new_bmap)
-                | _carry_deletes(m) | _carry_hidden(m) | compat)
-    except ConcurrentWriteError:
-        _cleanup_segments(path, segs.values())
-        raise
-    return v + 1
-
-
-def compact_bucketed(
-    spark: SparkSession, path: str, min_segments: int = 2
-) -> int:
-    """Fold multi-segment buckets (append_bucketed accretion) back to one
-    segment each, as a normal committed version: only buckets holding >=
-    ``min_segments`` segments are read and rewritten, the rest keep their
-    names — maintenance cost tracks ingest churn, not table size, and
-    readers stay isolated because old segments live until vacuum. Returns
-    the new version (or the current one when nothing needed compaction)."""
-    from .writer import _bucket_expr, _BUCKET_COL
-
-    v = current_version(path)
-    m = _manifest(path, v)
-    key, n_buckets, bmap = _bucketed_meta(m)
-    # rewrite a bucket when it accreted segments (>= min_segments) OR
-    # any pending delete vector scopes into it — so OPTIMIZE both
-    # folds the layout AND materializes pending deletes, still paying
-    # only for the buckets that actually changed. A pending COLUMN
-    # DROP (hidden_cols) forces the full pass: every non-empty bucket
-    # rewrites without the column, and the hidden list clears — the
-    # bucketed twin of the flat compact()'s materialization, and the
-    # one O(table) case (user-invoked maintenance, not a DML tax).
     hidden = m.get("hidden_cols") or []
     scoped: set[str] = set()
     for dseg in m.get("delete_segs") or []:
@@ -2807,6 +2512,7 @@ def compact_bucketed(
                              # foreign (clone) refs: OPTIMIZE on a
                              # clone localizes its buckets
                              or any(os.path.isabs(s) for s in ss)))
+    layout = _layout_meta(m) | {"col_types": m.get("col_types", {})}
     if not todo:
         if hidden:
             # an ALL-EMPTY table still holding a pending drop: no
@@ -2814,16 +2520,8 @@ def compact_bucketed(
             # is already materialized — commit the metadata that says
             # so (otherwise OPTIMIZE is a no-op forever and the name
             # can never return)
-            _commit(path, v + 1, None, "compact-bucketed",
-                    extra={"bucket_key": key, "n_buckets": n_buckets,
-                           "buckets": bmap,
-                           "col_types": m.get("col_types", {})}
-                    # stat_cols survive the metadata-only commit: an
-                    # all-empty table keeps its zone-map declaration,
-                    # or every later commit's _carry_stats_bucketed
-                    # silently stops maintaining stats
-                    | _carry_stats_bucketed(spark, path, m, [], bmap))
-            return v + 1
+            return _publish(spark, path, v, m, "compact-bucketed", None,
+                            layout)
         return v
     todo_segs = [s for b in todo for s in bmap[str(b)]]
     # vector-aware rewrite: compacted buckets materialize their pending
@@ -2844,18 +2542,9 @@ def compact_bucketed(
     for b in todo:
         new_bmap[str(b)] = [segs[b]] if b in segs else []
     live = {s for ss in new_bmap.values() for s in ss}
-    try:
-        _commit(path, v + 1, None, "compact-bucketed",
-                extra={"bucket_key": key, "n_buckets": n_buckets,
-                       "buckets": new_bmap,
-                       "col_types": m.get("col_types", {})}
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), new_bmap)
-                | _prune_vectors(m, live))
-    except ConcurrentWriteError:
-        _cleanup_segments(path, segs.values())
-        raise
-    return v + 1
+    return _publish(spark, path, v, m, "compact-bucketed", None,
+                    layout | {"buckets": new_bmap}
+                    | _prune_vectors(m, live), staged=segs.values())
 
 
 def maybe_compact(spark: SparkSession, path: str,
@@ -2876,6 +2565,7 @@ def maybe_compact(spark: SparkSession, path: str,
     when a compaction committed)."""
     v = current_version(path)
     m = _manifest(path, v)
+    min_segments = 2
     if "buckets" in m:
         worst = max((len(s) for s in m["buckets"].values()), default=0)
         # TWO accretion shapes trigger (r12 endurance-proof finding):
@@ -2901,51 +2591,41 @@ def maybe_compact(spark: SparkSession, path: str,
         if worst < max_segments and not diffuse \
                 and len(m.get("delete_segs") or []) < max_segments:
             return v
-        try:
-            # the diffuse trigger folds EVERY multi-segment bucket
-            # (min_segments=2): under shape (b) the accretion is
-            # spread across buckets, so folding only at/over-bound
-            # buckets (none exist) would be a no-op and the file
-            # count would keep growing
-            return compact_bucketed(
-                spark, path,
-                min_segments=2 if diffuse else max_segments)
-        except ConcurrentWriteError:
-            return current_version(path)
-    n = len(m.get("segments") or []) + len(m.get("delete_segs") or [])
-    if n < max_segments:
+        # the diffuse trigger folds EVERY multi-segment bucket
+        # (min_segments=2): under shape (b) the accretion is spread
+        # across buckets, so folding only at/over-bound buckets (none
+        # exist) would be a no-op and the file count would keep growing
+        if not diffuse:
+            min_segments = max_segments
+    elif len(m["segments"]) + len(m.get("delete_segs") or []) \
+            < max_segments:
         return v
     try:
-        return compact(spark, path)
+        return compact(spark, path, min_segments=min_segments)
     except ConcurrentWriteError:
         return current_version(path)
 
 
-def cluster_zorder_bucketed(
-    spark: SparkSession, path: str, x_col: str, y_col: str,
-    bits: int = 16,
-) -> int:
-    """OPTIMIZE ZORDER for the BUCKETED layout: rewrite every
-    non-empty bucket into one segment whose rows are sorted by the
-    Morton key of ``(x_col, y_col)`` — WITHIN-bucket clustering. The
-    bucket hash stays the join/upsert co-location story; the z-sort
-    makes parquet row-group min/max stats selective INSIDE each
-    bucket, so a range predicate on either column skips most row
-    groups of every bucket it must visit (the at-rest layering Delta
-    calls partition + ZORDER). Pending delete vectors and hidden
-    columns are materialized by the rewrite; one committed version,
-    readers of older versions stay isolated.
+def _zorder_buckets(spark: SparkSession, path: str, v: int, m: dict,
+                    x_col: str, y_col: str, bits: int) -> int:
+    """cluster_zorder's bucketed body: rewrite every non-empty bucket
+    into one segment whose rows are sorted by the Morton key of
+    ``(x_col, y_col)`` — WITHIN-bucket clustering. The bucket hash stays
+    the join/upsert co-location story; the z-sort makes parquet
+    row-group min/max stats selective INSIDE each bucket, so a range
+    predicate on either column skips most row groups of every bucket it
+    must visit (the at-rest layering Delta calls partition + ZORDER).
+    Pending delete vectors and hidden columns are materialized by the
+    rewrite.
 
     Plan shape: one hash repartition on the bucket id with a
-    within-partition sort on (bucket, z) — never a global sort; cost
-    is one pass over the table, the same as compact_bucketed's full
-    pass, which this subsumes (every bucket folds to one segment)."""
+    within-partition sort on (bucket, z) — never a global sort; cost is
+    one pass over the table, the same as compact's full pass, which
+    this subsumes (every bucket folds to one segment)."""
     import pyspark.sql.functions as F
 
     from .writer import _BUCKET_COL, _bucket_expr, zorder_value
 
-    v = current_version(path)
-    m = _manifest(path, v)
     key, n_buckets, bmap = _bucketed_meta(m)
     types = m.get("col_types", {})
     by_lower = {c.lower(): c for c in types}
@@ -2961,12 +2641,11 @@ def cluster_zorder_bucketed(
     todo = sorted(int(b) for b, ss in bmap.items() if ss)
     if not todo:
         return v
-    todo_segs = [s for b in todo for s in bmap[str(b)]]
     # reconcile declared-but-unwritten columns (metadata-only
     # add_column) so z-ordering by such a column sorts its NULLs
     # instead of failing resolution
-    df = _reconcile_declared(
-        _read_with_deletes(spark, path, m, todo_segs), m)
+    df = _read_segments(spark, path, m,
+                        [s for b in todo for s in bmap[str(b)]])
     df_b = (df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
             .withColumn("__z", zorder_value(
                 F.col(x_col), F.col(y_col), int(bits)))
@@ -2974,74 +2653,12 @@ def cluster_zorder_bucketed(
             .sortWithinPartitions(_BUCKET_COL, "__z")
             .drop("__z"))
     segs = _write_bucket_segments(df_b, path, todo)
-    new_bmap = {str(b): ([segs[b]] if b in segs else [])
-                for b in map(int, bmap)}
-    try:
-        _commit(path, v + 1, None, "zorder-bucketed",
-                extra={"bucket_key": key, "n_buckets": n_buckets,
-                       "buckets": new_bmap,
-                       "col_types": types}
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), new_bmap))
-    except ConcurrentWriteError:
-        _cleanup_segments(path, segs.values())
-        raise
-    return v + 1
-
-
-def upsert_bucketed_with_retry(
-    spark: SparkSession, path: str, updates: DataFrame, max_retries: int = 3,
-    validate=None,
-) -> int:
-    """Bucketed MERGE under the standard optimistic-concurrency rebase loop
-    (same contract as upsert_with_retry: every attempt re-reads the new
-    head, so the loser's update is re-based, never lost)."""
-    for attempt in range(max_retries + 1):
-        try:
-            return upsert_bucketed(spark, path, updates,
-                                   validate=validate)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-    raise AssertionError("unreachable")
-
-
-def append_bucketed_exactly_once(
-    spark: SparkSession, path: str, batch: DataFrame, batch_id: int
-) -> int | None:
-    """EXACTLY-ONCE streaming append into the BUCKETED versioned table:
-    same transactional-record contract as append_exactly_once (the batch
-    id lives in the commit manifest; replays are detected and skipped),
-    same zero-rewrite cost as append_bucketed (per-bucket segment
-    accretion, existing data never read). Returns the committed version,
-    or None when the batch was already committed (replay)."""
-    if int(batch_id) in committed_batch_ids(path):
-        return None
-    from .writer import _bucket_expr, _BUCKET_COL
-
-    v = current_version(path)
-    m = _manifest(path, v)
-    key, n_buckets, bmap = _bucketed_meta(m)
-    compat = _check_schema_compat(m, batch, "stream-append-bucketed")
-    batch = _apply_constraints(batch, m, "stream-append-bucketed")
-    bb = batch.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    touched = _bucket_ids(bb)
-    segs = _write_bucket_segments(bb, path, touched) if touched else {}
-    new_bmap = dict(bmap)
-    for b, s in segs.items():
-        new_bmap[str(b)] = new_bmap.get(str(b), []) + [s]
-    try:
-        _commit(path, v + 1, None, "stream-append-bucketed",
-                batch_id=int(batch_id),
-                extra={"bucket_key": key, "n_buckets": n_buckets,
-                       "buckets": new_bmap}
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), new_bmap)
-                | _carry_deletes(m) | _carry_hidden(m) | compat)
-    except ConcurrentWriteError:
-        _cleanup_segments(path, segs.values())
-        raise
-    return v + 1
+    return _publish(spark, path, v, m, "zorder-bucketed", None,
+                    _layout_meta(m)
+                    | {"buckets": {str(b): ([segs[b]] if b in segs else [])
+                                   for b in map(int, bmap)},
+                       "col_types": types},
+                    staged=segs.values())
 
 
 def _changes_fast_path(
@@ -3071,10 +2688,8 @@ def _changes_fast_path(
     if not all(op in APPEND_OPS for op in ops):
         return None, from_v, to_v, ops
     if not new_segs:
-        m_to = _manifest(path, to_v)
-        base = read(spark, path, to_v) if m_to.get("segments") is not None \
-            else read_bucketed(spark, path, to_v)
-        return (base.limit(0).withColumn("_change_type", F.lit("insert")),
+        return (read(spark, path, to_v).limit(0)
+                .withColumn("_change_type", F.lit("insert")),
                 from_v, to_v, ops)
     dirs = [os.path.join(path, s) for s in new_segs]
     # reconcile DECLARED-but-unwritten columns as typed NULLs, same as
@@ -3124,12 +2739,7 @@ def _aligned_snapshots(
     lacks it. Returns (old, new, cols)."""
     import pyspark.sql.functions as F
 
-    def _snap(v):
-        m = _manifest(path, v)
-        return read_bucketed(spark, path, v) if "buckets" in m \
-            else read(spark, path, v)
-
-    old, new = _snap(from_v), _snap(to_v)
+    old, new = read(spark, path, from_v), read(spark, path, to_v)
     old_t = {f.name: f.dataType for f in old.schema.fields}
     new_t = {f.name: f.dataType for f in new.schema.fields}
     cols = list(new.columns) + [c for c in old.columns if c not in new_t]
@@ -3435,9 +3045,7 @@ def analyze(spark: SparkSession, path: str,
     from pyspark.sql import functions as F
 
     v = current_version(path)
-    m = _manifest(path, v)
-    df = read_bucketed(spark, path, v) if "buckets" in m \
-        else read(spark, path, v)
+    df = read(spark, path, v)
     types = dict(df.dtypes)
     if columns is not None:
         # resolve case-insensitively, like every other schema verb
@@ -3516,7 +3124,7 @@ def register_sql_view(spark: SparkSession, name: str, path: str,
     registration, so every query against the view reads a consistent
     snapshot regardless of concurrent commits (re-register to advance).
     Works for flat and bucketed layouts and applies pending delete
-    vectors, because it is just read()/read_bucketed() under a name.
+    vectors, because it is just read() under a name.
 
     Retention contract: the view names the registered version's segment
     paths, so a later rewrite + ``vacuum`` that reaps them breaks the
@@ -3524,8 +3132,4 @@ def register_sql_view(spark: SparkSession, name: str, path: str,
     matview cursors and streaming checkpoints. Keep ``keep_last`` /
     ``retain_seconds`` covering the lifetime of registered views, or
     re-register after table maintenance."""
-    v = current_version(path) if version is None else int(version)
-    m = _manifest(path, v)
-    df = read_bucketed(spark, path, v) if "buckets" in m \
-        else read(spark, path, v)
-    df.createOrReplaceTempView(name)
+    read(spark, path, version).createOrReplaceTempView(name)

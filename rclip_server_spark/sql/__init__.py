@@ -79,10 +79,11 @@ the Spark engine the equivalent entry point for its storage layer:
   view's refresh cursor (matview.vacuum_source_safely with the whole
   catalog as the dependent-view list).
 * ``OPTIMIZE t [ZORDER BY (x, y) | BUCKET BY (key, n)]`` — fold
-  accreted segments into one committed version (versioned.compact /
-  compact_bucketed), recluster by Morton key with zone maps on both
-  columns (cluster_zorder), or migrate a flat table to the
-  hash-bucketed co-located layout (convert_to_bucketed).
+  accreted segments into one committed version (versioned.compact),
+  recluster by Morton key with zone maps on both columns
+  (cluster_zorder; within each bucket on the bucketed layout), or
+  migrate a flat table to the hash-bucketed co-located layout
+  (convert_to_bucketed).
 * ``TRUNCATE TABLE t`` — reversible empty-the-table commit (zero-row
   overwrite; RESTORE undoes it; a bucketed table keeps its layout)
 * ``ANALYZE TABLE t [COLUMNS (a, b)] [EXACT]`` / ``DESCRIBE STATS t``
@@ -559,7 +560,7 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
         def _mk_empty() -> dict:
             if buckets:
                 # empty bucketed declaration: the manifest records the
-                # layout + col_types; read_bucketed serves the
+                # layout + col_types; versioned.read serves the
                 # schema-accurate zero-row frame until the first INSERT
                 ver = V.create_bucketed(spark, path, empty, key=key,
                                         n_buckets=buckets)
@@ -719,7 +720,7 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
             # bucketed twin: metadata-only manifest evolution (there
             # is no natural bucket for a zero-row segment); reads
             # reconcile the declared-but-unwritten column as typed
-            # NULLs (versioned.add_column / read_bucketed)
+            # NULLs (versioned.add_column / versioned.read)
             try:
                 ver = V.add_column(spark, e["path"], col, type_text)
             except ValueError as ex:
@@ -1135,16 +1136,7 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
             if not cur.done():
                 raise SqlError("trailing tokens after ZORDER BY (...)")
             try:
-                if _is_bucketed_entry(e):
-                    # WITHIN-bucket reclustering: the bucket hash
-                    # stays the co-location story; the z-sort makes
-                    # parquet row-group stats selective inside each
-                    # bucket (partition + ZORDER layering)
-                    ver = V.cluster_zorder_bucketed(
-                        spark, e["path"], cols[0], cols[1])
-                else:
-                    ver = V.cluster_zorder(spark, e["path"], cols[0],
-                                           cols[1])
+                ver = V.cluster_zorder(spark, e["path"], cols[0], cols[1])
             except ValueError as ex:
                 raise SqlError(str(ex)) from ex
             return {"status": "optimized", "name": name,
@@ -1216,10 +1208,7 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
         if not cur.done():
             raise SqlError("OPTIMIZE t [ZORDER BY (x, y) | "
                            "BUCKET BY (key, n)]")
-        if _is_bucketed_entry(e):
-            ver = V.compact_bucketed(spark, e["path"])
-        else:
-            ver = V.compact(spark, e["path"])
+        ver = V.compact(spark, e["path"])
         return {"status": "optimized", "name": name, "version": ver}
 
     if head == "truncate":

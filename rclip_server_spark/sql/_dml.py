@@ -36,9 +36,10 @@ def _writable_table(catalog: Catalog, name: str, verb: str) -> dict:
 
 
 def _is_bucketed(e: dict, version: int | None = None) -> bool:
-    """Layout test: one driver-side manifest-JSON read (pass the
-    version a statement already resolved to skip re-resolving the
-    head)."""
+    """Layout test for the algorithms no versioned verb owns (the
+    star-MERGE fast path, ALTER TABLE ADD COLUMN): one driver-side
+    manifest-JSON read (pass the version a statement already resolved
+    to skip re-resolving the head)."""
     v = V.current_version(e["path"]) if version is None else version
     return "buckets" in V._manifest(e["path"], v)
 
@@ -61,9 +62,6 @@ def _insert(spark: SparkSession, catalog: Catalog, name: str,
     df = df.select(*[
         F.col(c).cast(f.dataType).alias(f.name)
         for c, f in zip(df.columns, target.fields)])
-    if _is_bucketed(e) and not overwrite:
-        ver = V.append_bucketed(spark, e["path"], df)
-        return {"status": "inserted", "name": name, "version": ver}
     if overwrite:
         ver = V.overwrite(spark, e["path"], df)
         return {"status": "overwritten", "name": name, "version": ver}
@@ -421,7 +419,6 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
         and [c[:2] for c in matched] in ([], [(None, "update_star")])
         and [c[:2] for c in not_matched] in ([], [(None,
                                                    "insert_star")]))
-    bucketed = _is_bucketed(e, ver0)
     if not star_upsert:
         # conditional clauses work on BOTH layouts: the engine commits
         # through versioned.delete_rows / delete_and_append / append,
@@ -445,15 +442,15 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
         for c in target.columns]).persist()
     try:
         if matched and not_matched:
-            if bucketed:
+            if _is_bucketed(e, ver0):
                 # bucketed full upsert: only the touched buckets are
                 # read and rewritten, committed atomically across
                 # them (OCC rebase loop). The dup-key guard's two
                 # counts ride upsert_bucketed's own touched-bucket
                 # aggregation — zero extra validation jobs
-                ver = V.upsert_bucketed_with_retry(
+                ver = V.with_retry(lambda: V.upsert_bucketed(
                     spark, e["path"], src,
-                    validate=_dup_key_validator(key))
+                    validate=_dup_key_validator(key)))
                 return {"status": "merged", "name": name,
                         "version": ver}
             # flat full upsert: no target read needed — and no

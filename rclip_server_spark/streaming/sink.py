@@ -102,7 +102,6 @@ def start_stream_append_versioned(
     spark: SparkSession,
     path: str,
     checkpoint_dir: str | None = None,
-    bucketed: bool = False,
 ):
     """Append-only ingest into a ``sources.versioned`` table with EXACT
     exactly-once delivery: each micro-batch commits one immutable segment
@@ -111,19 +110,15 @@ def start_stream_append_versioned(
     rather than re-applied. This upgrades the upsert sinks' "idempotent,
     therefore effectively-once" contract to a transactional record — the
     plain-parquet equivalent of Delta's txnAppId/txnVersion sink protocol,
-    and the log doubles as time travel over the ingest history.
-
-    ``bucketed=True`` targets a ``versioned.create_bucketed`` table: the
-    same exactly-once contract with per-bucket segment accretion (zero
-    rewrite of existing data; ``versioned.compact_bucketed`` folds the
-    accreted segments down as its own committed version)."""
+    and the log doubles as time travel over the ingest history. A
+    bucketed target (the manifest records the layout) gets the same
+    contract with per-bucket segment accretion — zero rewrite of
+    existing data; ``versioned.compact`` folds the accreted segments
+    down as its own committed version."""
     from ..sources import versioned
 
     def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if bucketed:
-            versioned.append_bucketed_exactly_once(spark, path, batch_df, batch_id)
-        else:
-            versioned.append_exactly_once(spark, path, batch_df, batch_id)
+        versioned.append_exactly_once(spark, path, batch_df, batch_id)
 
     out = stream_df.writeStream.foreachBatch(_append_batch).outputMode("append")
     if checkpoint_dir is not None:
@@ -150,7 +145,8 @@ def start_file_ingest_stream(
     contract as COPY FROM: no inference job, a malformed value fails
     the batch, schema drift is refused by the append guard), and a
     bucketed target hash-routes per bucket automatically
-    (append_bucketed_exactly_once). ``max_files_per_trigger`` bounds a
+    (versioned.append_exactly_once reads the layout from the manifest).
+    ``max_files_per_trigger`` bounds a
     batch for steady latency under a backlog.
 
     Exactly-once identity lives in (checkpoint, table): RESUME a
@@ -165,10 +161,7 @@ def start_file_ingest_stream(
     if fmt not in ("parquet", "csv", "ndjson"):
         raise ValueError(f"format must be parquet, csv, or ndjson, "
                          f"got {fmt!r}")
-    m = V._manifest(table_path, V.current_version(table_path))
-    bucketed = "buckets" in m
-    snap = (V.read_bucketed(spark, table_path) if bucketed
-            else V.read(spark, table_path)).limit(0)
+    snap = V.read(spark, table_path).limit(0)
     # FAILFAST: "a malformed value fails the batch" must be literal —
     # the default PERMISSIVE mode would silently commit NULLs for
     # unparseable values (which even pass CHECK constraints under the
@@ -184,7 +177,7 @@ def start_file_ingest_stream(
     else:
         stream = rd.parquet(src_dir)
     return start_stream_append_versioned(
-        stream, spark, table_path, checkpoint_dir, bucketed=bucketed)
+        stream, spark, table_path, checkpoint_dir)
 
 
 def _start_view_refresh_stream(

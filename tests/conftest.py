@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -125,6 +127,28 @@ def pytest_collection_modifyitems(config, items):
                 or (cls is not None and cls.__name__ in _SLOW_CLASSES)
                 or getattr(item, "originalname", item.name) in _SLOW_TESTS):
             item.add_marker(slow)
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Census of the Spark jobs this thread runs inside the block: yields
+    a list that holds their job ids once the block exits. The listener
+    bus is drained first, so every job the block ran is counted.
+
+        with spark_jobs(spark) as jobs:
+            build_plan()
+        assert jobs == []
+    """
+    sc = spark.sparkContext
+    group = f"census-{uuid.uuid4().hex}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, "job census")
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 @pytest.fixture(scope="session")

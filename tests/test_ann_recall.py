@@ -21,6 +21,7 @@ import pytest
 from rclip_server_spark.operators import ann, similarity, stats
 from rclip_server_spark.plans.embedder import DeterministicEmbedder
 from rclip_server_spark.sources import load_table
+from conftest import spark_jobs
 
 SF01 = "/root/testdata/sf0.01"
 TERMS = ["zebra", "spots", "stripes", "giraffe", "ocean"]
@@ -315,15 +316,9 @@ def test_lsh_knn_join_lazy_guard_runs_no_jobs(spark, emb01):
     from pyspark.sql import functions as F
 
     left = emb01.where(F.col("vec_id") < 200)
-    sc = spark.sparkContext
-    group = "lsh-knn-lazy-guard-test"
-    sc.setJobGroup(group, "plan-construction-only")
-    try:
+    with spark_jobs(spark) as jobs:
         df = ann.lsh_knn_join(left, emb01, k=3, n_planes=10, n_probe_bits=1,
                               dim=64, n_left=200, n_right=32000)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"guard ran Spark jobs at plan time: {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"guard ran Spark jobs at plan time: {jobs}"
     # the lazily-built plan still executes correctly afterwards
     assert df.limit(5).count() >= 0

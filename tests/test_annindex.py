@@ -10,6 +10,7 @@ from rclip_server_spark import sql as S
 from rclip_server_spark.functions.xxh import buckets_of
 from rclip_server_spark.operators import ann
 from rclip_server_spark.sources import annindex as AI
+from conftest import spark_jobs
 
 QV = [0.125] * 32 + [-0.125] * 32
 
@@ -212,17 +213,10 @@ def test_bucketed_query_plans_with_zero_spark_jobs(spark, vecs, cat):
     S.execute(spark, "OPTIMIZE zj_ann BUCKET BY (bucket, 16)", cat)
     S.execute(spark, "DELETE FROM zj WHERE vec_id % 8 = 0", cat)
     S.execute(spark, "REFRESH MATERIALIZED VIEW zj_ann", cat)
-    sc = spark.sparkContext
-    group = "ann-serving-zero-jobs"
-    sc.setJobGroup(group, "plan-time")
-    try:
+    with spark_jobs(spark) as jobs:
         got_df = AI.query_ann_index(spark, vp, QV, k=10,
                                     n_probe_bits=1)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"serving path ran Spark jobs at plan " \
-                           f"time: {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"serving path ran Spark jobs at plan time: {jobs}"
     # the lazily-built plan still answers exactly (ad-hoc parity)
     current = S.execute(spark, "SELECT vec_id, embedding FROM zj", cat)
     want = ann.lsh_topk_multiprobe(current, QV, k=10, n_planes=4,

@@ -7,11 +7,11 @@ the deleted keys' own hash buckets (plus per-bucket appends for the new
 row images) — zero bucket rewrites — and every reader/rewriter applies
 or materializes the vectors correctly:
 
-* read_bucketed / point_lookup_bucketed apply scoped vectors;
+* read / point_lookup_bucketed apply scoped vectors;
 * re-inserting a deleted key is visible again (delete-then-insert
   semantics: the vector's scope is the segments that existed at delete
   time);
-* upsert_bucketed / compact_bucketed materialize pending vectors for
+* upsert_bucketed / compact materialize pending vectors for
   the buckets they rewrite and prune fully-materialized vectors from
   the manifest;
 * time travel, RESTORE, and vacuum treat the vectors like any other
@@ -40,7 +40,7 @@ def _mk(spark, path, n=24, n_buckets=8):
 
 def _ids(spark, t, version=None):
     return sorted(r.id for r in
-                  V.read_bucketed(spark, t, version=version).collect())
+                  V.read(spark, t, version=version).collect())
 
 
 def test_delete_rows_bucketed_zero_rewrite(spark, tmp_path):
@@ -83,7 +83,7 @@ def test_reinsert_after_delete_is_visible(spark, tmp_path):
     m3 = V._manifest(t, v3)
     assert m3["op"] == "append-bucketed"  # layout dispatch in append()
     assert m3.get("delete_segs")  # the vector still carries
-    rows = {r.id: r.val for r in V.read_bucketed(spark, t).collect()}
+    rows = {r.id: r.val for r in V.read(spark, t).collect()}
     assert rows[3] == 333
 
 
@@ -94,7 +94,7 @@ def test_delete_and_append_bucketed_one_commit(spark, tmp_path):
                                 "id INT, name STRING, val INT")
     v2 = V.delete_and_append(spark, t, upd.select("id"), "id", upd)
     assert v2 == v1 + 1  # ONE commit for retraction + replacement
-    rows = {r.id: r.val for r in V.read_bucketed(spark, t).collect()}
+    rows = {r.id: r.val for r in V.read(spark, t).collect()}
     assert rows[5] == 555 and len(rows) == 24
     # the appended segment is outside the vector's scope
     m = V._manifest(t, v2)
@@ -141,13 +141,13 @@ def test_partial_upsert_keeps_other_buckets_vector(spark, tmp_path):
 
 
 def test_compact_materializes_vector_scoped_buckets(spark, tmp_path):
-    """compact_bucketed rewrites vector-scoped buckets even below
+    """compact rewrites vector-scoped buckets even below
     min_segments, so OPTIMIZE clears pending vectors bucket-at-a-time
     — never an O(table) pass for untouched buckets."""
     t = _mk(spark, tmp_path / "t")
     m1 = V._manifest(t, 1)
     V.delete_rows(spark, t, [9], "id")
-    v = V.compact_bucketed(spark, t, min_segments=2)
+    v = V.compact(spark, t, min_segments=2)
     m = V._manifest(t, v)
     assert not m.get("delete_segs")
     assert 9 not in _ids(spark, t)
@@ -208,7 +208,7 @@ def test_non_bucket_key_vector_scopes_everything(spark, tmp_path):
     m2 = V._manifest(t, v2)
     scope = set(m2["delete_scopes"][m2["delete_segs"][0]])
     assert scope == V._manifest_segments(m1)
-    got = sorted(r.name for r in V.read_bucketed(spark, t).collect())
+    got = sorted(r.name for r in V.read(spark, t).collect())
     assert "n3" not in got and "n17" not in got and len(got) == 22
 
 
@@ -218,7 +218,7 @@ def test_row_count_is_predelete_bound(spark, tmp_path):
     assert V.table_row_count(t) == 24  # documented pre-delete bound
     d = V.describe(t)
     assert d["pending_delete_vectors"] == 1
-    V.compact_bucketed(spark, t, min_segments=2)
+    V.compact(spark, t, min_segments=2)
     assert V.table_row_count(t) == 22  # exact after materialization
 
 
@@ -285,7 +285,7 @@ def test_agg_view_refresh_over_bucketed_dml(spark, tmp_path):
     """Integration: an incremental agg view whose SOURCE is a bucketed
     table must refresh exactly across the new bucketed delete-vector
     commits (delete / delete-append are rewriting intervals — the
-    snapshot diff dispatches read_bucketed, which now applies
+    snapshot diff reads through versioned.read, which applies
     vectors)."""
     from rclip_server_spark.sources import matview as MV
 
@@ -302,7 +302,7 @@ def test_agg_view_refresh_over_bucketed_dml(spark, tmp_path):
         got = sorted(tuple(r) for r in V.read(spark, view)
                      .select("grp", "cnt", "sum_val").collect())
         want = sorted(tuple(r) for r in
-                      V.read_bucketed(spark, src)
+                      V.read(spark, src)
                       .groupBy("grp")
                       .agg(F.count(F.lit(1)).alias("cnt"),
                            F.sum("val").alias("sum_val"))
@@ -367,7 +367,7 @@ def test_maybe_compact_triggers_on_diffuse_accretion(spark, tmp_path):
         m = V._manifest(t, V.current_version(t))
         if sum(len(ss) for ss in m["buckets"].values()) >= 12:
             break
-        V.append_bucketed(spark, t, mk([(100 + 4 * j + b, j)
+        V.append(spark, t, mk([(100 + 4 * j + b, j)
                                         for b in range(4)]))
         j += 1
     m = V._manifest(t, V.current_version(t))
@@ -380,12 +380,12 @@ def test_maybe_compact_triggers_on_diffuse_accretion(spark, tmp_path):
     assert v1 > v0
     m1 = V._manifest(t, v1)
     assert max(len(ss) for ss in m1["buckets"].values()) == 1
-    assert {r.id for r in V.read_bucketed(spark, t).collect()} == \
+    assert {r.id for r in V.read(spark, t).collect()} == \
         set(range(32)) | {100 + k for k in range(n_app)}
     # and the folded state is a no-op thereafter (amortization: the
     # next broad refresh must NOT immediately re-trigger)
     assert V.maybe_compact(spark, t, max_segments=6) == v1
-    V.append_bucketed(spark, t, mk([(900 + b, 0) for b in range(4)]))
+    V.append(spark, t, mk([(900 + b, 0) for b in range(4)]))
     v2 = V.current_version(t)
     assert V.maybe_compact(spark, t, max_segments=6) == v2
 

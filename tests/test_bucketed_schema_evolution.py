@@ -2,10 +2,10 @@
 
 ALTER ADD = a metadata-only ``add-column`` commit (no segment has a
 natural bucket for zero rows, so the declaration lives in col_types
-and ``read_bucketed`` reconciles the unwritten column as typed
+and ``read`` reconciles the unwritten column as typed
 NULLs). ALTER DROP = the same ``hidden_cols`` read projection flat
 tables use, carried by every bucketed commit and MATERIALIZED by the
-next full compact_bucketed pass (which then clears the list, letting
+next full ``compact`` pass (which then clears the list, letting
 the name return). RESTORE is data-AND-schema time travel on both
 layouts.
 """
@@ -30,14 +30,14 @@ def test_add_column_is_metadata_only(spark, tmp_path):
     m2 = V._manifest(t, v2)
     assert m2["buckets"] == m1["buckets"]  # zero segments written
     assert m2["col_types"]["bonus"] == "bigint"
-    df = V.read_bucketed(spark, t)
+    df = V.read(spark, t)
     assert df.columns == ["id", "name", "val", "bonus"]
     assert df.where("bonus IS NOT NULL").count() == 0
     assert dict(df.dtypes)["bonus"] == "bigint"
     # writes WITH the column land; old rows still read NULL
     V.append(spark, t, spark.createDataFrame(
         [(50, "x", 1, 500)], "id INT, name STRING, val INT, bonus BIGINT"))
-    got = {r.id: r.bonus for r in V.read_bucketed(spark, t).collect()}
+    got = {r.id: r.bonus for r in V.read(spark, t).collect()}
     assert got[50] == 500 and got[0] is None
     # drift guard: the declared type is enforced on later batches
     with pytest.raises(V.SchemaDriftError):
@@ -64,22 +64,22 @@ def test_drop_column_hidden_then_materialized(spark, tmp_path):
     m2 = V._manifest(t, v2)
     assert m2["hidden_cols"] == ["name"]
     assert m2["buckets"] == V._manifest(t, 1)["buckets"]  # no rewrite
-    assert V.read_bucketed(spark, t).columns == ["id", "val"]
+    assert V.read(spark, t).columns == ["id", "val"]
     # time travel below the drop still shows the column
-    assert "name" in V.read_bucketed(spark, t, version=1).columns
+    assert "name" in V.read(spark, t, version=1).columns
     # appends carry the hidden list; re-adding the name is refused
     V.append(spark, t, spark.createDataFrame([(50, 1)],
                                              "id INT, val INT"))
     with pytest.raises(ValueError, match="dropped"):
         V.add_column(spark, t, "name", "string")
     # the full compact pass materializes the drop and clears hidden
-    v = V.compact_bucketed(spark, t)
+    v = V.compact(spark, t)
     m = V._manifest(t, v)
     assert not m.get("hidden_cols")
-    assert V.read_bucketed(spark, t).columns == ["id", "val"]
+    assert V.read(spark, t).columns == ["id", "val"]
     # the name can return after materialization
     V.add_column(spark, t, "name", "string")
-    assert "name" in V.read_bucketed(spark, t).columns
+    assert "name" in V.read(spark, t).columns
 
 
 def test_drop_bucket_key_refused(spark, tmp_path):
@@ -100,14 +100,14 @@ def test_evolution_composes_with_delete_vectors(spark, tmp_path):
     V.delete_and_append(spark, t, upd.select("id"), "id", upd)
     V.delete_rows(spark, t, [7], "id")
     V.drop_column(spark, t, "name")
-    df = V.read_bucketed(spark, t)
+    df = V.read(spark, t)
     assert df.columns == ["id", "val", "bonus"]
     got = {r.id: r.bonus for r in df.collect()}
     assert got[3] == 333 and 7 not in got and got[0] is None
-    v = V.compact_bucketed(spark, t)
+    v = V.compact(spark, t)
     m = V._manifest(t, v)
     assert not m.get("hidden_cols") and not m.get("delete_segs")
-    df2 = V.read_bucketed(spark, t)
+    df2 = V.read(spark, t)
     assert sorted(tuple(r) for r in df2.collect()) == \
            sorted(tuple(r) for r in df.collect())
 
@@ -117,12 +117,12 @@ def test_restore_across_evolution(spark, tmp_path):
     V.add_column(spark, t, "bonus", "bigint")
     v_pre_drop = V.current_version(t)
     V.drop_column(spark, t, "name")
-    assert V.read_bucketed(spark, t).columns == ["id", "val", "bonus"]
+    assert V.read(spark, t).columns == ["id", "val", "bonus"]
     V.restore(spark, t, v_pre_drop)
-    assert V.read_bucketed(spark, t).columns == \
+    assert V.read(spark, t).columns == \
            ["id", "name", "val", "bonus"]
     V.restore(spark, t, 1)
-    assert V.read_bucketed(spark, t).columns == ["id", "name", "val"]
+    assert V.read(spark, t).columns == ["id", "name", "val"]
 
 
 def test_reserved_bucket_column_refused(spark, tmp_path):
@@ -139,10 +139,10 @@ def test_optimize_clears_drop_on_all_empty_table(spark, tmp_path):
     V.overwrite(spark, t, spark.createDataFrame(
         [], "id INT, name STRING, val INT"))  # buckets = {}
     V.drop_column(spark, t, "name")
-    v = V.compact_bucketed(spark, t)
+    v = V.compact(spark, t)
     assert not V._manifest(t, v).get("hidden_cols")
     V.add_column(spark, t, "name", "string")
-    assert "name" in V.read_bucketed(spark, t).columns
+    assert "name" in V.read(spark, t).columns
 
 
 def test_overwrite_bucketed_single_pass(spark, tmp_path):
@@ -160,7 +160,7 @@ def test_overwrite_bucketed_single_pass(spark, tmp_path):
            .repartition(1).rdd.mapPartitions(_tick).toDF(
                "id INT, name STRING, val INT"))
     V.overwrite(spark, t, src)
-    assert sorted(r.id for r in V.read_bucketed(spark, t).collect()) \
+    assert sorted(r.id for r in V.read(spark, t).collect()) \
         == list(range(8))
     assert acc.value == 1, f"source plan executed {acc.value} times"
 
@@ -201,13 +201,13 @@ def test_zorder_bucketed_within_bucket_clustering(spark, tmp_path):
     V.append(spark, t, spark.createDataFrame(
         [(1000, 3, 4)], "id INT, x INT, y INT"))  # accreted segment
     V.delete_rows(spark, t, [7], "id")
-    before = sorted(tuple(r) for r in V.read_bucketed(spark, t)
+    before = sorted(tuple(r) for r in V.read(spark, t)
                     .collect())
-    v = V.cluster_zorder_bucketed(spark, t, "x", "y")
+    v = V.cluster_zorder(spark, t, "x", "y")
     m = V._manifest(t, v)
     assert all(len(ss) == 1 for ss in m["buckets"].values() if ss)
     assert not m.get("delete_segs")
-    after = sorted(tuple(r) for r in V.read_bucketed(spark, t)
+    after = sorted(tuple(r) for r in V.read(spark, t)
                    .collect())
     assert after == before
     # physical ordering: each bucket segment's rows are z-nondecreasing
@@ -219,4 +219,4 @@ def test_zorder_bucketed_within_bucket_clustering(spark, tmp_path):
             assert zs == sorted(zs), "bucket segment not z-sorted"
     # unknown column named
     with pytest.raises(ValueError, match="no column"):
-        V.cluster_zorder_bucketed(spark, t, "x", "nope")
+        V.cluster_zorder(spark, t, "x", "nope")

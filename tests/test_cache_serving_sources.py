@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from conftest import SF_DIR
+from conftest import SF_DIR, spark_jobs
 
 from rclip_server_spark.operators import similarity, text_analysis
 from rclip_server_spark.plans import serving
@@ -312,11 +312,7 @@ def test_table_row_count_metadata_only(spark, tmp_path):
 
     d = str(tmp_path / "t")
     spark.range(1234).repartition(4).write.parquet(d)
-    sc = spark.sparkContext
-    sc.setJobGroup("rowcount-meta-test", "footers only")
-    try:
+    with spark_jobs(spark) as jobs:
         assert table_row_count(d) == 1234
-        assert sc.statusTracker().getJobIdsForGroup("rowcount-meta-test") == []
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == []
     assert table_row_count("/root/testdata/sf0.01/lineitem.parquet") == 60000

@@ -83,6 +83,43 @@ def test_funnel_repeated_step_type(spark):
     assert out == {0: 2, 1: 1}
 
 
+def test_funnel_null_ts_matches_duckdb_twin(spark):
+    """NULL timestamps follow the registered DuckDB twin of
+    ``ev_funnel_counts``: a NULL-time step-0 event still counts its user
+    at step 0, step 0's time is the min NON-NULL one, and a NULL time
+    never satisfies ``ts > t`` — so nothing follows a NULL-time step."""
+    import duckdb
+    import pandas as pd
+
+    from rclip_server_spark.contract import oracle_sql
+
+    def t(s):
+        return None if s is None else dt.datetime(2024, 1, 1, 0, 0, s)
+
+    rows = [
+        (1, "view", None), (1, "click", 5),                   # view only
+        (2, "view", 1), (2, "click", 2), (2, "purchase", None),
+        (3, "view", None), (3, "view", 3), (3, "click", 2),
+        (3, "click", 6),                                      # view, click
+        (4, "view", 1), (4, "click", None), (4, "click", 4),
+        (4, "purchase", 5),                                   # all three
+        (5, "view", None), (5, "purchase", 9),                # view only
+        (6, "click", None), (6, "purchase", None),            # nothing
+    ]
+    ev = [(i, t(s), u, e) for i, (u, e, s) in enumerate(rows)]
+    sdf = spark.createDataFrame(
+        ev, "event_id INT, ts TIMESTAMP, user_id INT, event_type STRING")
+    got = {r.step: r.n_users for r in EV.funnel(
+        sdf, ["view", "click", "purchase"]).collect()}
+    con = duckdb.connect()
+    con.register("events", pd.DataFrame(
+        ev, columns=["event_id", "ts", "user_id", "event_type"]))
+    want = {step: n for _, step, n in con.execute(
+        oracle_sql()["ev_funnel_counts"]).fetchall()}
+    assert want == {"view": 5, "click": 3, "purchase": 1}
+    assert got == want
+
+
 def test_funnel_too_many_steps_raises(spark):
     with pytest.raises(ValueError, match="63"):
         EV.funnel(_ev(spark, [(1, 0, 1, "view")]), [f"s{i}" for i in range(64)])

@@ -13,6 +13,7 @@ from rclip_server_spark import sql as S
 from rclip_server_spark.sources import annindex as AI
 from rclip_server_spark.sources import ivfindex as II
 from rclip_server_spark.sources import textindex as TI
+from conftest import spark_jobs
 
 QVS = [
     [0.125] * 32 + [-0.125] * 32,
@@ -128,12 +129,11 @@ def test_ann_batch_plan_has_no_broadcast_join(spark, built):
     assert "Join" not in plan
     assert "Generate" in plan
     # count the DAGScheduler jobs one execution costs (r14: 5)
-    sc = spark.sparkContext
-    j0 = sc._jsc.sc().dagScheduler().nextJobId()
-    AI.query_ann_index_batch(
-        spark, tmp + "/idx", [(i, qv) for i, qv in enumerate(QVS)],
-        k=5).count()
-    assert sc._jsc.sc().dagScheduler().nextJobId() - j0 <= 4
+    with spark_jobs(spark) as jobs:
+        AI.query_ann_index_batch(
+            spark, tmp + "/idx", [(i, qv) for i, qv in enumerate(QVS)],
+            k=5).count()
+    assert len(jobs) <= 4
 
 
 def test_batch_plan_builds_with_zero_spark_jobs(spark, built):
@@ -141,16 +141,10 @@ def test_batch_plan_builds_with_zero_spark_jobs(spark, built):
     ZERO Spark jobs (driver-side probe resolution + manifest-pinned
     scan schema + constant-folded literal query maps)."""
     vp = built.get("bai")["path"]
-    sc = spark.sparkContext
-    group = "batch-serving-zero-jobs"
-    sc.setJobGroup(group, "plan-time")
-    try:
+    with spark_jobs(spark) as jobs:
         AI.query_ann_index_batch(
             spark, vp, [(i, qv) for i, qv in enumerate(QVS)], k=5)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"batch plan ran Spark jobs: {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"batch plan ran Spark jobs: {jobs}"
 
 
 def test_batch_guards(spark, built):

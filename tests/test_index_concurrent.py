@@ -1,7 +1,7 @@
 """Concurrent-writer index maintenance (r13, verdict task 5): a
 running REFRESH STREAM maintains an index while a second WRITER
 ingests into the source at the same time. The stream's refreshes ride
-the OCC rebase loop (matview._refresh_with_retry) and the manifest-log
+the OCC rebase loop (versioned.with_retry) and the manifest-log
 tail wakes it per source commit, so the proof obligation is
 convergence: after the writer finishes and the stream drains, the
 index state must equal a from-scratch rebuild over the source head —

@@ -11,6 +11,7 @@ from rclip_server_spark import sql as S
 from rclip_server_spark.sources import annindex as AI
 from rclip_server_spark.sources import ivfindex as II
 from rclip_server_spark.sources import textindex as TI
+from conftest import spark_jobs
 
 QV = [0.125] * 32 + [-0.125] * 32
 
@@ -179,16 +180,10 @@ def test_knn_join_rewrite_runs_zero_spark_jobs_for_catalog_left(
                      "SELECT * FROM zl_seed", cat)
     from rclip_server_spark.sql._reads import _rewrite_index_searches
 
-    sc = spark.sparkContext
-    group = "knn-rewrite-zero-jobs"
-    sc.setJobGroup(group, "rewrite-time")
-    try:
+    with spark_jobs(spark) as jobs:
         text = _rewrite_index_searches(
             spark, "SELECT * FROM KNN_JOIN('ai', zlt, 3)", cat)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"rewrite ran Spark jobs: {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"rewrite ran Spark jobs: {jobs}"
     assert "__knn_join_" in text
     # the rewritten statement still answers
     assert S.execute(spark, "SELECT count(*) AS n FROM "
@@ -240,17 +235,11 @@ def test_describe_index_all_kinds_zero_jobs(spark, both, embeddings):
     S.execute(spark, "CREATE MATERIALIZED VIEW ii USING ivf_index "
                      "OPTIONS (source='iv', key='vec_id', n_cells=4, "
                      "iters=1, buckets=4)", cat)
-    sc = spark.sparkContext
-    group = "describe-index-zero-jobs"
-    sc.setJobGroup(group, "manifest-only")
-    try:
+    with spark_jobs(spark) as jobs:
         dt = S.execute(spark, "DESCRIBE INDEX ti", cat)
         da = S.execute(spark, "DESCRIBE INDEX ai", cat)
         di = S.execute(spark, "DESCRIBE INDEX ii", cat)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"DESCRIBE INDEX ran Spark jobs: {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"DESCRIBE INDEX ran Spark jobs: {jobs}"
     assert dt["index_kind"] == "text_index" and dt["key"] == "doc_id"
     assert dt["fresh"] is True and dt["params"]["ti_ndocs"] == 400
     assert da["index_kind"] == "ann_index"

@@ -12,6 +12,7 @@ from rclip_server_spark import sql as S
 from rclip_server_spark.operators import ann
 from rclip_server_spark.sources import indexkind as IK
 from rclip_server_spark.sources import ivfindex as II
+from conftest import spark_jobs
 
 QV = [0.125] * 32 + [-0.125] * 32
 
@@ -111,16 +112,9 @@ def test_bucketed_layout_prunes_files_zero_plan_jobs(spark, vecs,
     # churn so a pending delete vector sits on the read path
     S.execute(spark, "DELETE FROM bk WHERE vec_id % 8 = 0", cat)
     S.execute(spark, "REFRESH MATERIALIZED VIEW bk_ivf", cat)
-    sc = spark.sparkContext
-    group = "ivf-serving-zero-jobs"
-    sc.setJobGroup(group, "plan-time")
-    try:
+    with spark_jobs(spark) as jobs:
         got_df = II.query_ivf_index(spark, vp, QV, k=10, n_probe=2)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"serving ran Spark jobs at plan time: " \
-                           f"{jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"serving ran Spark jobs at plan time: {jobs}"
     current = S.execute(spark, "SELECT vec_id, embedding FROM bk", cat)
     spec = IK.spec_of("ivf_index", vp)
     want = ann.ivf_topk(current, QV, II._centroids(spec), k=10,

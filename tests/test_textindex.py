@@ -11,6 +11,7 @@ from rclip_server_spark import sql as S
 from rclip_server_spark.operators import retrieval
 from rclip_server_spark.sources import indexkind as IK
 from rclip_server_spark.sources import textindex as TI
+from conftest import spark_jobs
 
 
 def _rows(df):
@@ -290,19 +291,13 @@ def test_bucketed_phrase_plans_with_zero_spark_jobs(spark, corpus,
     # churn so a pending delete vector sits on the read path
     S.execute(spark, "DELETE FROM zb WHERE doc_id % 2 = 0", cat)
     S.execute(spark, "REFRESH MATERIALIZED VIEW zb_idx", cat)
-    sc = spark.sparkContext
-    group = "ti-serving-zero-jobs"
-    sc.setJobGroup(group, "plan-time")
-    try:
+    with spark_jobs(spark) as jobs:
         got_df = TI.query_phrase_index(spark, vp, "value table", k=8)
         # r13: the BM25 path is fully lazy too (the per-term df
         # aggregation broadcast-joins in-plan instead of collecting)
         bm_df = TI.query_text_index(spark, vp, "value table", k=5)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert jobs == [], f"text-index serving ran Spark jobs at " \
-                           f"plan time: {jobs}"
-    finally:
-        sc.setJobGroup("", "")
+    assert jobs == [], f"text-index serving ran Spark jobs at " \
+                       f"plan time: {jobs}"
     assert bm_df.count() == 5
     current = S.execute(spark, "SELECT doc_id, text FROM zb", cat)
     got = [(r["doc_id"], r["phrase_tf"]) for r in got_df.collect()]

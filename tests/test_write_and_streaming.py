@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from rclip_server_spark.sources import writer
 from rclip_server_spark.streaming import windows as SW
 
-from conftest import SF_DIR
+from conftest import SF_DIR, spark_jobs
 
 
 @pytest.fixture()
@@ -1110,7 +1110,7 @@ class TestVersionedTable:
                           n_buckets=4)
         V.upsert_bucketed(spark, tb, self._df(spark, [(1, "X")]))
         V.restore(spark, tb, 1)
-        assert [tuple(r) for r in V.read_bucketed(spark, tb).collect()] == [
+        assert [tuple(r) for r in V.read(spark, tb).collect()] == [
             (1, "a")]
         # restoring past a vacuum fails loudly
         V.overwrite(spark, t, self._df(spark, [(9, "z")]))
@@ -1148,7 +1148,7 @@ class TestVersionedTable:
         V.create_bucketed(spark, tb, self._df(spark, [(1, "a")]), "id",
                           n_buckets=4)
         with pytest.raises(V.SchemaDriftError):
-            V.append_bucketed(spark, tb, bad)
+            V.append(spark, tb, bad)
 
     def test_delete_vectors_zero_rewrite(self, spark, tmp_path):
         """delete_rows commits a KB-sized key segment and touches NO data
@@ -1858,7 +1858,7 @@ class TestVersionedTable:
         V.create_bucketed(spark, t, mk([(i, i) for i in range(8)]),
                           key="id", n_buckets=4)
         for j in range(3):
-            V.append_bucketed(spark, t, mk([(100 + j, j)]))
+            V.append(spark, t, mk([(100 + j, j)]))
         m = V._manifest(t, V.current_version(t))
         worst = max(len(s) for s in m["buckets"].values())
         assert worst >= 2
@@ -1870,7 +1870,7 @@ class TestVersionedTable:
         assert v2 == v + 1
         m2 = V._manifest(t, v2)
         assert max(len(s) for s in m2["buckets"].values()) == 1
-        assert {r.id for r in V.read_bucketed(spark, t).collect()} == \
+        assert {r.id for r in V.read(spark, t).collect()} == \
             set(range(8)) | {100, 101, 102}
 
     def test_bloom_index_point_lookup_prunes_segments(
@@ -2427,12 +2427,12 @@ class TestVersionedTable:
             got = sorted((r.grp, r.cnt, r.sum_v) for r in
                          MV.read_agg_view(spark, vw).collect())
             want = sorted((r.grp, r.cnt, r.sum_v) for r in
-                          V.read_bucketed(spark, t).groupBy("grp").agg(
+                          V.read(spark, t).groupBy("grp").agg(
                               F.count(F.lit(1)).alias("cnt"),
                               F.sum("v").alias("sum_v")).collect())
             assert got == want, (got, want)
 
-        V.append_bucketed(spark, t, mk([(100, "c", 9), (101, "a", 1)]))
+        V.append(spark, t, mk([(100, "c", 9), (101, "a", 1)]))
         MV.refresh_agg_view(spark, vw, recompute_fraction=None)
         check()
         V.upsert_bucketed(spark, t, mk([(100, "c", 90), (5, "a", -5)]))
@@ -2473,7 +2473,7 @@ class TestVersionedTable:
                     "max_amount").collect())
             want = sorted(
                 (r.seg, r.cnt, r.sum_amount, r.min_amount, r.max_amount)
-                for r in V.read_bucketed(spark, lt)
+                for r in V.read(spark, lt)
                 .join(V.read(spark, rt), "ckey")
                 .groupBy("seg").agg(
                     F.count(F.lit(1)).alias("cnt"),
@@ -2483,7 +2483,7 @@ class TestVersionedTable:
             assert got == want, (got, want)
 
         check()
-        V.append_bucketed(spark, lt, mko([(100, 10, 99)]))
+        V.append(spark, lt, mko([(100, 10, 99)]))
         MV.refresh_join_view(spark, vw, recompute_fraction=None)
         check()
         # bucketed upsert retracts the max of group A (99 -> 2)
@@ -3221,10 +3221,10 @@ class TestVersionedBucketed:
         t = str(tmp_path / "vb")
         assert V.create_bucketed(spark, t, self._base(spark), "id",
                                  n_buckets=8) == 1
-        got = sorted(map(tuple, V.read_bucketed(spark, t).collect()))
+        got = sorted(map(tuple, V.read(spark, t).collect()))
         assert got == sorted(map(tuple, self._base(spark).collect()))
         # no layout column leaks into the read
-        assert V.read_bucketed(spark, t).columns == ["id", "val"]
+        assert V.read(spark, t).columns == ["id", "val"]
 
     def test_upsert_bounded_rewrite_and_atomic_commit(self, spark, tmp_path):
         import os
@@ -3248,7 +3248,7 @@ class TestVersionedBucketed:
         assert len(changed) == n_new_segs <= 3  # <= one bucket per update key
         # row semantics match the flat upsert
         got = dict(
-            (r.id, r.val) for r in V.read_bucketed(spark, t).collect()
+            (r.id, r.val) for r in V.read(spark, t).collect()
         )
         assert got[3] == "X" and got[4] == "Y" and got[999] == "new"
         assert got[5] == "v5" and len(got) == 201
@@ -3262,16 +3262,16 @@ class TestVersionedBucketed:
 
         t = str(tmp_path / "vb")
         V.create_bucketed(spark, t, self._base(spark), "id", n_buckets=8)
-        snapshot = V.read_bucketed(spark, t)  # resolves v1's segments
+        snapshot = V.read(spark, t)  # resolves v1's segments
         V.upsert_bucketed(spark, t, self._df(spark, [(3, "X")]))
         got = dict((r.id, r.val) for r in snapshot.collect())
         assert got[3] == "v3"  # pre-upsert value: v1 segments are immutable
         # head reader sees the new state; v1 stays reachable by time travel
         assert dict(
-            (r.id, r.val) for r in V.read_bucketed(spark, t).collect()
+            (r.id, r.val) for r in V.read(spark, t).collect()
         )[3] == "X"
         assert dict(
-            (r.id, r.val) for r in V.read_bucketed(spark, t, version=1).collect()
+            (r.id, r.val) for r in V.read(spark, t, version=1).collect()
         )[3] == "v3"
 
     def test_append_bucketed_is_zero_rewrite(self, spark, tmp_path):
@@ -3280,20 +3280,20 @@ class TestVersionedBucketed:
         t = str(tmp_path / "vb")
         V.create_bucketed(spark, t, self._base(spark), "id", n_buckets=8)
         m1 = V._manifest(t, 1)
-        V.append_bucketed(spark, t, self._df(spark, [(1000, "a"), (1001, "b")]))
+        V.append(spark, t, self._df(spark, [(1000, "a"), (1001, "b")]))
         m2 = V._manifest(t, 2)
         # every v1 segment is still referenced — nothing was rewritten,
         # the touched buckets just grew an extra segment
         for b, segs in m1["buckets"].items():
             assert set(segs) <= set(m2["buckets"][b])
-        assert V.read_bucketed(spark, t).count() == 202
+        assert V.read(spark, t).count() == 202
         # compaction folds multi-segment buckets back to one, as a commit
-        v = V.compact_bucketed(spark, t)
+        v = V.compact(spark, t)
         assert v == 3
         assert all(len(s) == 1 for s in V._manifest(t, 3)["buckets"].values())
-        assert V.read_bucketed(spark, t).count() == 202
+        assert V.read(spark, t).count() == 202
         # old versions still reachable until vacuum
-        assert V.read_bucketed(spark, t, version=1).count() == 200
+        assert V.read(spark, t, version=1).count() == 200
 
     def test_point_lookup_prunes_to_one_bucket(self, spark, tmp_path):
         from rclip_server_spark.sources import versioned as V
@@ -3326,16 +3326,16 @@ class TestVersionedBucketed:
             segs = orig(df_b, path, touched)
             if not fired["done"]:
                 fired["done"] = True
-                V.append_bucketed(spark, t, self._df(spark, [(500, "zzz")]))
+                V.append(spark, t, self._df(spark, [(500, "zzz")]))
             return segs
 
         monkeypatch.setattr(V, "_write_bucket_segments", racing)
-        v = V.upsert_bucketed_with_retry(
-            spark, t, self._df(spark, [(3, "X")])
+        v = V.upsert_with_retry(
+            spark, t, self._df(spark, [(3, "X")]), "id"
         )
         monkeypatch.undo()
         assert v == 3  # create=1, competitor append=2, rebased upsert=3
-        got = dict((r.id, r.val) for r in V.read_bucketed(spark, t).collect())
+        got = dict((r.id, r.val) for r in V.read(spark, t).collect())
         assert got[3] == "X" and got[500] == "zzz"  # BOTH writers' changes
 
     def test_append_bucketed_exactly_once_replay(self, spark, tmp_path):
@@ -3347,9 +3347,9 @@ class TestVersionedBucketed:
         t = str(tmp_path / "vb")
         V.create_bucketed(spark, t, self._base(spark), "id", n_buckets=8)
         b = self._df(spark, [(900, "s0"), (901, "s1")])
-        assert V.append_bucketed_exactly_once(spark, t, b, batch_id=5) == 2
-        assert V.append_bucketed_exactly_once(spark, t, b, batch_id=5) is None
-        assert V.read_bucketed(spark, t).where("id >= 900").count() == 2
+        assert V.append_exactly_once(spark, t, b, batch_id=5) == 2
+        assert V.append_exactly_once(spark, t, b, batch_id=5) is None
+        assert V.read(spark, t).where("id >= 900").count() == 2
 
     def test_table_changes_append_only_is_delta_read(self, spark, tmp_path):
         """CDC fast path: an append-only interval's change set is exactly
@@ -3373,7 +3373,7 @@ class TestVersionedBucketed:
         # bucketed append-only interval takes the same fast path
         tb = str(tmp_path / "vb")
         V.create_bucketed(spark, tb, self._base(spark), "id", n_buckets=8)
-        V.append_bucketed(spark, tb, self._df(spark, [(1000, "x")]))
+        V.append(spark, tb, self._df(spark, [(1000, "x")]))
         chb = V.table_changes(spark, tb, from_version=1)
         assert [(r.id, r.val, r._change_type) for r in chb.collect()] == [
             (1000, "x", "insert")]
@@ -3440,16 +3440,11 @@ class TestVersionedBucketed:
         V.create(spark, t, self._df(spark, [(i, "x") for i in range(50)]))
         V.append(spark, t, self._df(spark, [(i, "y") for i in range(50, 80)]))
         V.upsert(spark, t, self._df(spark, [(0, "Z"), (999, "n")]), "id")
-        sc = spark.sparkContext
-        sc.setJobGroup("manifest-rowcount-test", "metadata only")
-        try:
+        with spark_jobs(spark) as jobs:
             assert V.table_row_count(t, 1) == 50
             assert V.table_row_count(t, 2) == 80
             assert V.table_row_count(t) == 81  # post-upsert head
-            assert sc.statusTracker().getJobIdsForGroup(
-                "manifest-rowcount-test") == []
-        finally:
-            sc.setJobGroup("", "")
+        assert jobs == []
 
     def test_table_changes_snapshot_diff_on_upsert(self, spark, tmp_path):
         """CDC general path: an interval containing an upsert falls back to
@@ -3480,9 +3475,9 @@ class TestVersionedBucketed:
         # exactly the replaced buckets' v1 segments are reaped; shared
         # (untouched) segments survive because v2 still references them
         assert len(deleted) >= 1
-        assert V.read_bucketed(spark, t).count() == 200
+        assert V.read(spark, t).count() == 200
         with pytest.raises(FileNotFoundError):
-            V.read_bucketed(spark, t, version=1)
+            V.read(spark, t, version=1)
 
 
 def test_stream_versioned_append_exactly_once_under_crash_replay(

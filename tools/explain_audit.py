@@ -872,7 +872,7 @@ def main() -> int:
     assert _touched and _clean
     audits.append((
         "Bucketed delete vector: touched-bucket read",
-        V.read_bucketed(spark, _bt, buckets=_touched[:1]),
+        V.read(spark, _bt, buckets=_touched[:1]),
         {"LeftAnti": True, "BroadcastHashJoin": True},
         "A DELETE against a bucketed table commits a KB-sized vector "
         "scoped to the deleted keys' own hash buckets. Reading a "
@@ -888,7 +888,7 @@ def main() -> int:
         spark.createDataFrame([(i, i * 10) for i in range(64)],
                               "id INT, val INT"),
         key="id", n_buckets=4, stat_cols=["val"])
-    V.append_bucketed(spark, _zt, spark.createDataFrame(
+    V.append(spark, _zt, spark.createDataFrame(
         [(100 + i, 100000 + i) for i in range(64)], "id INT, val INT"))
     _zm = V._manifest(_zt, V.current_version(_zt))
     _lo_segs = {s for s, st in _zm["seg_stats"].items()
@@ -897,7 +897,7 @@ def main() -> int:
     _hi_segs = {s for ss in _zm["buckets"].values()
                 for s in ss} - _lo_segs
     assert _lo_segs and _hi_segs
-    _pruned_df = V.read_bucketed_pruned(spark, _zt, {"val": (0, 500)})
+    _pruned_df = V.read_pruned(spark, _zt, ranges={"val": (0, 500)})
     # BOTH directions asserted via the resolved input files — the plan
     # TEXT truncates its Location path list (maxMetadataStringLength),
     # so a substring check against it is vacuous for absence too; the
@@ -925,7 +925,7 @@ def main() -> int:
 
     audits.append((
         "Bucketed delete vector: untouched-bucket read (vector scoped away)",
-        V.read_bucketed(spark, _bt, buckets=_clean[:1]),
+        V.read(spark, _bt, buckets=_clean[:1]),
         {"Join": False, "LeftAnti": False},
         "The same table, a bucket the delete cannot touch (the key "
         "hashes elsewhere): the scope check groups it with NO vector, "
