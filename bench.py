@@ -120,7 +120,6 @@ FLOOR_SEC = {
     # dot-scoring projection), i.e. the metadata filter is free
     "ann_filtered_topk": 0.136,
 }
-R3_FLOOR_SEC = FLOOR_SEC  # legacy alias
 
 # Idle-machine cost of the calibration row (see stage_floor_calib
 # below): a FIXED trivial job — data-independent, no IO — whose wall

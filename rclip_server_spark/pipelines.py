@@ -479,7 +479,7 @@ def curate_keep_first_via_pairs_view(
     from .sources import matview, neardup_view, versioned
 
     view_v = matview.refresh_view(spark, pairs_view_path)
-    spec = neardup_view._spec_nd(pairs_view_path, view_v)
+    spec = matview._spec(pairs_view_path, view_v, "near_dup")
     dup_keys = (
         neardup_view.read_near_dup_pairs_view(spark, pairs_view_path,
                                               view_v)

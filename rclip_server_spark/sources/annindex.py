@@ -109,15 +109,6 @@ def refresh_ann_index(
     return IK.refresh(spark, "ann_index", view_path, recompute_fraction)
 
 
-def refresh_ann_index_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop (the standard view-refresh retry contract)."""
-    return IK.refresh_with_retry(spark, "ann_index", view_path,
-                                 max_retries, recompute_fraction)
-
-
 def query_ann_index(
     spark: SparkSession, view_path: str, query_vec, k: int = 10,
     n_probe_bits: int = 1, version: int | None = None,

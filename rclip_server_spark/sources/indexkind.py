@@ -3,12 +3,13 @@ textindex.py), ANN (hyperplane-LSH buckets, annindex.py) and IVF
 (nearest-centroid cells, ivfindex.py) are each ONE descriptor in the
 table ``kinds()``, and everything they share runs once over it — the
 kind-checked spec read, the probed state read, the canonical read,
-the at-rest bucketed conversion, the cursor-advancing refresh with its
-OCC retry, the payload filter, and the batch guards. The kind modules
-keep only their own logic (bucketing and the probe rule, cell
-assignment and drift, tokenization and BM25); matview's REFRESH /
-DESCRIBE INDEX dispatch and SQL's OPTIMIZE ... BUCKET BY /
-``OPTIONS (buckets=N)`` are one lookup in the table.
+the at-rest bucketed conversion, the cursor-advancing refresh (whose
+OCC retry is matview.refresh_view's), the payload filter, and the
+batch guards. The kind modules keep only their own logic (bucketing
+and the probe rule, cell assignment and drift, tokenization and
+BM25); matview's REFRESH / DESCRIBE INDEX dispatch and SQL's
+OPTIMIZE ... BUCKET BY / ``OPTIONS (buckets=N)`` are one lookup in
+the table.
 
 On-disk contract: a kind's spec lives in the view manifest's ``app``
 namespace under ``<prefix>_*`` fields, and ``<prefix>_source`` marks
@@ -123,13 +124,7 @@ def spec_of(name: str, path: str, version: int | None = None) -> dict:
     """The spec of index view ``path`` at ``version`` (default head),
     checked to be of kind ``name`` — another kind's view, or any other
     table, raises ValueError naming the path."""
-    v = V.current_version(path) if version is None else int(version)
-    spec = V._manifest(path, v).get("app") or {}
-    marker = f"{kinds()[name].prefix}_source"
-    if marker not in spec:
-        raise ValueError(f"{path} is not a maintained {name} view (no "
-                         f"{marker} in its manifest app namespace)")
-    return spec
+    return M._spec(path, version, name)
 
 
 def spec_at(name: str, path: str, version: int | None) -> tuple[int, dict]:
@@ -251,17 +246,6 @@ def refresh(spark: SparkSession, name: str, view_path: str,
             extra={"app": app}, parent_version=view_v)
     finally:
         ch.unpersist()
-
-
-def refresh_with_retry(
-    spark: SparkSession, name: str, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop (the standard view-refresh retry contract)."""
-    return V.with_retry(
-        lambda: refresh(spark, name, view_path,
-                        recompute_fraction=recompute_fraction),
-        max_retries)
 
 
 # ---------------------------------------------------------------------------

@@ -460,15 +460,6 @@ def retrain_ivf_index(
                        parent_version=view_v)
 
 
-def refresh_ivf_index_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop (the standard view-refresh retry contract)."""
-    return IK.refresh_with_retry(spark, "ivf_index", view_path,
-                                 max_retries, recompute_fraction)
-
-
 def query_ivf_index(
     spark: SparkSession, view_path: str, query_vec, k: int = 10,
     n_probe: int = 2, version: int | None = None,

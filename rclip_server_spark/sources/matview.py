@@ -42,6 +42,9 @@ checks hash-exact against DuckDB.
 
 from __future__ import annotations
 
+import importlib
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,21 +54,27 @@ _INSERTING = ("insert", "update_postimage")
 _RETRACTING = ("delete", "update_preimage")
 
 
-def _spec(path: str, version: int | None = None) -> dict:
+def _spec(path: str, version: int | None = None,
+          kind: str | None = None) -> dict:
     """The view spec + cursor, stored in the manifest's carried-forward
     ``app`` namespace — so appends, delete-vector commits, and
-    compactions on the view table preserve it automatically. Pass
-    ``version`` for the ONE-CONSISTENT-READ rule the refreshers depend
-    on: cursor, state, and OCC parent must all come from the same view
-    version, or a concurrent refresher committing in between yields a
-    stale cursor paired with a fresh parent and the interval
-    double-applies without any ConcurrentWriteError."""
+    compactions on the view table preserve it automatically. ``kind``
+    names the expected _VIEW_KINDS entry (None accepts any view kind);
+    a table without that kind's marker raises ValueError naming the
+    path and the kind. Pass ``version`` for the ONE-CONSISTENT-READ
+    rule the refreshers depend on: cursor, state, and OCC parent must
+    all come from the same view version, or a concurrent refresher
+    committing in between yields a stale cursor paired with a fresh
+    parent and the interval double-applies without any
+    ConcurrentWriteError."""
     v = V.current_version(path) if version is None else int(version)
-    m = V._manifest(path, v)
-    spec = m.get("app") or {}
-    if "mv_source" not in spec:
-        raise ValueError(f"{path} is not a materialized view "
-                         f"(no mv_source in its manifest app namespace)")
+    spec = V._manifest(path, v).get("app") or {}
+    markers = [k.marker for k in _VIEW_KINDS.values()] if kind is None \
+        else [_VIEW_KINDS[kind].marker]
+    if not any(m in spec for m in markers):
+        raise ValueError(f"{path} is not a {kind or 'maintained'} view "
+                         f"(no {' / '.join(markers)} in its manifest app "
+                         f"namespace)")
     return spec
 
 
@@ -354,19 +363,17 @@ def refresh_agg_view(spark: SparkSession, view_path: str,
     zero source rescan. An append-only refresh therefore never scans
     pre-existing data regardless of spec.
 
-    ``recompute_fraction`` enables cost-based dispatch (default None =
-    always incremental, the historical behavior): when the manifest
-    change bound exceeds fraction × head rows — i.e. the CDC read would
-    touch more rows than a from-scratch groupBy — the refresh
-    recomputes the aggregate at the new cursor instead. Identical
-    result either way; pass _RECOMPUTE_BOUND_FRACTION (1.0) for the
-    row-scan cost model (rewriting intervals recompute, append-only
-    intervals never do — their delta is a subset of the head)."""
+    ``recompute_fraction`` is the cost-based dispatch (default
+    _RECOMPUTE_BOUND_FRACTION = 0.5): when the manifest change bound
+    exceeds fraction × head rows — i.e. the CDC read would touch more
+    rows than a from-scratch groupBy — the refresh recomputes the
+    aggregate at the new cursor instead. Identical result either way;
+    None forces the incremental path."""
     # ONE consistent read: OCC parent first, then cursor + state AT that
     # version — spec and parent from different versions would let a
     # concurrent refresher's interval double-apply silently
     view_v = V.current_version(view_path)
-    m = _spec(view_path, view_v)
+    m = _spec(view_path, view_v, "agg")
     src = m["mv_source"]
     group_cols = list(m["mv_group_cols"])
     sum_cols = list(m["mv_sum_cols"])
@@ -466,22 +473,6 @@ def _refresh_minmax(spark, view_path, view_v, ch, src, v_from, v_to,
                        parent_version=view_v)
 
 
-def refresh_agg_view_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """Refresh under the standard optimistic-concurrency rebase loop
-    (same contract as versioned.upsert_with_retry): a concurrent
-    refresher's commit raises ConcurrentWriteError; the retry re-reads
-    the (now advanced) cursor, so the loser applies only the remaining
-    interval — never a double-application, because the interval is
-    derived from the committed cursor each attempt."""
-    return V.with_retry(
-        lambda: refresh_agg_view(spark, view_path,
-                                 recompute_fraction=recompute_fraction),
-        max_retries)
-
-
 def read_agg_view(spark: SparkSession, view_path: str,
                   version: int | None = None) -> DataFrame:
     """The view state at a version (default head) — a plain versioned
@@ -525,7 +516,6 @@ def create_transform_view(
 
 def refresh_transform_view(
     spark: SparkSession, view_path: str, transform, name: str,
-    auto_compact: bool = False, compact_threshold: int = 32,
     recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """Advance a transform view to the source head by the change feed, as
@@ -539,21 +529,17 @@ def refresh_transform_view(
 
     Concurrency: the commit is pinned to the view version read at entry
     (OCC parent), so two racing refreshers serialize — the loser gets
-    ConcurrentWriteError and its retry (refresh_transform_view_with_retry)
+    ConcurrentWriteError and its retry (refresh_view's OCC loop)
     re-reads the ADVANCED cursor, applying only the remaining interval;
     inserts can never double-apply. A crash leaves the cursor behind and
     the re-run re-applies the whole interval idempotently (nothing
     partial was published). Many refreshes accrete segments + vectors —
     versioned.compact() folds the view back down without touching the
-    spec (the app namespace carries through every commit);
-    ``auto_compact=True`` runs that fold inline whenever the post-refresh
-    manifest holds ``compact_threshold`` or more segments + vectors
-    (versioned.maybe_compact — one manifest read in the no-op case,
-    best-effort under OCC races), so an unattended streaming refresher
-    keeps the view's segment count bounded by the threshold."""
+    spec (the app namespace carries through every commit), and
+    refresh_view(auto_compact=True) runs that fold inline."""
     # ONE consistent read: OCC parent first, spec (cursor) AT it
     view_v = V.current_version(view_path)
-    spec = _spec_tv(view_path, view_v)
+    spec = _spec(view_path, view_v, "transform")
     if spec["tv_name"] != name:
         raise ValueError(
             f"refresh with transform {name!r} but the view was created "
@@ -597,48 +583,17 @@ def refresh_transform_view(
         if n_ret:
             # one commit: vector + transformed segment (the segment may
             # be empty — cheap, and the cursor must advance regardless)
-            out_v = V.delete_and_append(
+            return V.delete_and_append(
                 spark, view_path, retract_keys, key, new_state,
                 extra={"app": new_app}, parent_version=view_v)
-        else:
-            # insert-only interval (the common ingest case): one append —
-            # empty when the inserts transform to zero view rows (the
-            # cursor still advances; a never-advancing cursor would make
-            # every later refresh re-diff a growing interval)
-            out_v = V.append(spark, view_path, new_state,
-                             extra={"app": new_app}, parent_version=view_v)
+        # insert-only interval (the common ingest case): one append —
+        # empty when the inserts transform to zero view rows (the
+        # cursor still advances; a never-advancing cursor would make
+        # every later refresh re-diff a growing interval)
+        return V.append(spark, view_path, new_state,
+                        extra={"app": new_app}, parent_version=view_v)
     finally:
         ch.unpersist()
-    if auto_compact:
-        out_v = V.maybe_compact(spark, view_path, compact_threshold)
-    return out_v
-
-
-def refresh_transform_view_with_retry(
-    spark: SparkSession, view_path: str, transform, name: str,
-    max_retries: int = 3,
-    auto_compact: bool = False, compact_threshold: int = 32,
-    recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop for concurrent transform-view refreshers (same
-    contract as refresh_agg_view_with_retry): the loser re-reads the
-    advanced cursor, so intervals are never double-applied."""
-    return V.with_retry(
-        lambda: refresh_transform_view(
-            spark, view_path, transform, name,
-            auto_compact=auto_compact, compact_threshold=compact_threshold,
-            recompute_fraction=recompute_fraction),
-        max_retries)
-
-
-def _spec_tv(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    m = V._manifest(path, v)
-    spec = m.get("app") or {}
-    if "tv_source" not in spec:
-        raise ValueError(f"{path} is not a transform view "
-                         f"(no tv_source in its manifest app namespace)")
-    return spec
 
 
 # ---------------------------------------------------------------------------
@@ -706,11 +661,7 @@ def refresh_topk_view(spark: SparkSession, view_path: str,
     fraction × head rows, rerank from the head snapshot instead —
     identical result (the initial materialization IS that ranking)."""
     view_v = V.current_version(view_path)
-    m = V._manifest(view_path, view_v)
-    spec = m.get("app") or {}
-    if "kv_source" not in spec:
-        raise ValueError(f"{view_path} is not a top-k view "
-                         f"(no kv_source in its manifest app namespace)")
+    spec = _spec(view_path, view_v, "topk")
     src = spec["kv_source"]
     key = spec["kv_key"]
     group_cols = list(spec["kv_group_cols"])
@@ -775,18 +726,6 @@ def refresh_topk_view(spark: SparkSession, view_path: str,
                            extra={"app": new_app}, parent_version=view_v)
     finally:
         ch.unpersist()
-
-
-def refresh_topk_view_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop for concurrent top-k refreshers (the standard
-    contract: the loser re-reads the advanced cursor)."""
-    return V.with_retry(
-        lambda: refresh_topk_view(spark, view_path,
-                                  recompute_fraction=recompute_fraction),
-        max_retries)
 
 
 # ---------------------------------------------------------------------------
@@ -1065,16 +1004,6 @@ def create_join_view(
     }})
 
 
-def _spec_jv(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    m = V._manifest(path, v)
-    spec = m.get("app") or {}
-    if "jv_left" not in spec:
-        raise ValueError(f"{path} is not a join view "
-                         f"(no jv_left in its manifest app namespace)")
-    return spec
-
-
 def _head_rows(src: str, v_to: int) -> int:
     return V._manifest_row_count(src, V._manifest(src, v_to))
 
@@ -1185,17 +1114,17 @@ def refresh_join_view(spark: SparkSession, view_path: str,
     rows stay aggregated null-extended through appends, deletes, and
     match-flips on either side.
 
-    ``recompute_fraction`` enables cost-based dispatch (default None =
-    always incremental): when the manifest change bound says the CDC
-    read would touch more than fraction × head rows — i.e. more than a
+    ``recompute_fraction`` is the cost-based dispatch (default
+    _RECOMPUTE_BOUND_FRACTION = 0.5; None forces the incremental
+    path): when the manifest change bound says the CDC read would
+    touch more than fraction × head rows — i.e. more than a
     from-scratch recompute of the join aggregate would scan — the
     refresh recomputes at the new cursors instead: identical result,
-    one scan instead of two-plus (_RECOMPUTE_BOUND_FRACTION = 1.0 is
-    the row-scan cost model).
+    one scan instead of two-plus.
 
     One-consistent-read + OCC parent pinning, as refresh_agg_view."""
     view_v = V.current_version(view_path)
-    spec = _spec_jv(view_path, view_v)
+    spec = _spec(view_path, view_v, "join")
     lsrc, rsrc = spec["jv_left"], spec["jv_right"]
     on = _on_cols(spec["jv_on"])
     how = spec.get("jv_how", "inner")
@@ -1326,64 +1255,23 @@ def _spec_pair_cols(df: DataFrame, group_cols, sum_cols,
     return df.select(*cols)
 
 
-def refresh_join_view_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop for concurrent join-view refreshers (the standard
-    contract: the loser re-reads BOTH advanced cursors)."""
-    return V.with_retry(
-        lambda: refresh_join_view(spark, view_path,
-                                  recompute_fraction=recompute_fraction),
-        max_retries)
-
-
 # ---------------------------------------------------------------------------
 # Operational surface: view inspection / freshness
 # ---------------------------------------------------------------------------
 
-# marker-column-in-spec -> (kind, [(source_key, cursor_key), ...]);
-# the SINGLE registry every view kind must appear in — describe_view
-# iterates it directly, so adding a kind here is the whole wiring
-_VIEW_KINDS = {
-    "mv_source": ("agg", [("mv_source", "mv_source_version")]),
-    "tv_source": ("transform", [("tv_source", "tv_source_version")]),
-    "kv_source": ("topk", [("kv_source", "kv_source_version")]),
-    "jv_left": ("join", [("jv_left", "jv_left_version"),
-                         ("jv_right", "jv_right_version")]),
-    "jt_left": ("join_table", [("jt_left", "jt_left_version"),
-                               ("jt_right", "jt_right_version")]),
-    # maintained near-dup pair tables (sources/neardup_view.py) join
-    # the graph through the same marker registry: cascade, describe
-    # and cursor-safe vacuum all see them with no extra wiring. The
-    # two internal index views are ordinary transform views refreshed
-    # BY the pairs refresh; their cursors never trail the pairs
-    # cursor, so clamping vacuum to nd_source_version is sufficient.
-    "nd_source": ("near_dup", [("nd_source", "nd_source_version")]),
-    "ed_source": ("embed_near_dup", [("ed_source",
-                                      "ed_source_version")]),
-    # maintained full-text (BM25) postings index (sources/textindex.py)
-    "ti_source": ("text_index", [("ti_source", "ti_source_version")]),
-    # maintained ANN (hyperplane-LSH) index (sources/annindex.py)
-    "ai_source": ("ann_index", [("ai_source", "ai_source_version")]),
-    # maintained IVF (inverted-file) index (sources/ivfindex.py)
-    "ii_source": ("ivf_index", [("ii_source", "ii_source_version")]),
-}
-
-
 def _view_node(path: str):
     """ONE manifest read resolving a table's place in the view graph:
     (kind, spec, source_paths) for a maintained view, None for a base
-    table — the single walker primitive refresh_cascade and
-    view_base_tables share (a view kind added to _VIEW_KINDS is
+    table — the single walker primitive refresh_view and
+    _walk_views_post_order share (a view kind added to _VIEW_KINDS is
     automatically visible to both)."""
     try:
         spec = V._manifest(path, V.current_version(path)).get("app") or {}
     except FileNotFoundError:
         return None
-    for marker, (kind, src_pairs) in _VIEW_KINDS.items():
-        if marker in spec:
-            return kind, spec, [spec[sk] for sk, _ in src_pairs]
+    for kind, k in _VIEW_KINDS.items():
+        if k.marker in spec:
+            return kind, spec, [spec[sk] for sk, _ in k.sources]
     return None
 
 
@@ -1400,79 +1288,38 @@ def refresh_view(spark: SparkSession, view_path: str,
                  max_retries: int = 3,
                  auto_compact: bool = False,
                  compact_threshold: int = 32) -> int:
-    """Kind-dispatching refresh: advance ANY maintained view to its
-    sources' heads (agg / top-k / join / join-table directly; transform
-    views need their function — pass ``transforms`` mapping view path →
-    (transform_fn, name), the same pair refresh_transform_view takes).
-    The entry point schedulers use when the view kind is data, not
-    code. Runs under the standard OCC rebase loop (``max_retries``) so
-    a concurrent manual refresher's commit re-reads the advanced
-    cursor instead of surfacing ConcurrentWriteError;
-    ``auto_compact``/``compact_threshold`` forward to every
-    segment-accreting kind (transform, join-table, and the
-    delete_and_append family: pair views, text_index, ann_index) for
-    unattended streaming use."""
+    """THE refresh entry for every maintained view kind: advance the
+    view to its sources' heads through its _VIEW_KINDS refresher.
+    Transform views need their function — pass ``transforms`` mapping
+    view path → (transform_fn, name), the pair refresh_transform_view
+    takes. Each attempt runs under the OCC rebase loop
+    (versioned.with_retry, ``max_retries``): a concurrent refresher's
+    commit makes the loser re-read the advanced cursor instead of
+    surfacing ConcurrentWriteError. ``auto_compact`` then runs
+    versioned.maybe_compact(``compact_threshold``) once, for any kind —
+    the segment-accreting ones (transform, join-table, the pair views
+    and the text / ANN / IVF indexes) gain a segment plus a delete
+    vector per refresh, and an unattended refresher must keep query
+    latency and manifest size bounded; the no-op case is one manifest
+    read. Returns the view's version."""
     kind = _view_kind(view_path)
-    if kind == "agg":
-        return refresh_agg_view_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction)
-    if kind == "topk":
-        return refresh_topk_view_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction)
-    if kind == "join":
-        return refresh_join_view_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction)
-    if kind == "join_table":
-        return refresh_join_table_view_with_retry(
-            spark, view_path, max_retries=max_retries,
-            auto_compact=auto_compact,
-            compact_threshold=compact_threshold,
-            recompute_fraction=recompute_fraction)
-    def _fold(out_v: int) -> int:
-        # the delete_and_append-accreting kinds (pair views, postings
-        # index, ANN index) gain a segment + a delete vector per
-        # refresh: under unattended streaming maintenance fold them
-        # back down past the threshold (one manifest read when below
-        # it) — the endurance guarantee that query latency and
-        # manifest size stay bounded over thousands of churn cycles
-        if auto_compact:
-            return V.maybe_compact(spark, view_path, compact_threshold)
-        return out_v
-
-    if kind == "near_dup":
-        from . import neardup_view as ND  # local: ND imports this module
-
-        return _fold(ND.refresh_near_dup_pairs_view_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction))
-    if kind == "embed_near_dup":
-        from . import neardup_view as ND
-
-        return _fold(ND.refresh_embed_near_dup_pairs_view_with_retry(
-            spark, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction))
-    from . import indexkind as IK  # local: IK imports this module
-
-    if kind in IK.kinds():
-        return _fold(IK.refresh_with_retry(
-            spark, kind, view_path, max_retries=max_retries,
-            recompute_fraction=recompute_fraction))
+    if kind is None:
+        raise ValueError(f"{view_path} is not a maintained view")
+    fn_and_name = ()
     if kind == "transform":
-        entry = (transforms or {}).get(view_path)
-        if entry is None:
+        fn_and_name = (transforms or {}).get(view_path)
+        if fn_and_name is None:
             raise ValueError(
                 f"{view_path} is a transform view — its function is "
                 f"application code; pass transforms={{path: (fn, name)}}")
-        fn, name = entry
-        return refresh_transform_view_with_retry(
-            spark, view_path, fn, name, max_retries=max_retries,
-            auto_compact=auto_compact,
-            compact_threshold=compact_threshold,
-            recompute_fraction=recompute_fraction)
-    raise ValueError(f"{view_path} is not a maintained view")
+    refresh = _VIEW_KINDS[kind].refresh
+    out_v = V.with_retry(
+        lambda: refresh(spark, view_path, *fn_and_name,
+                        recompute_fraction=recompute_fraction),
+        max_retries)
+    if auto_compact:
+        out_v = V.maybe_compact(spark, view_path, compact_threshold)
+    return out_v
 
 
 def _walk_views_post_order(view_path: str):
@@ -1568,10 +1415,8 @@ def _cursors_into(path: str, views) -> list[int]:
     cursors: list[int] = []
     for vw in views:
         nodes, _leaves = _walk_views_post_order(vw)
-        for _p, (_kind, spec, _srcs) in nodes:
-            marker = next(m for m, (k, _) in _VIEW_KINDS.items()
-                          if m in spec)
-            for src_key, cur_key in _VIEW_KINDS[marker][1]:
+        for _p, (kind, spec, _srcs) in nodes:
+            for src_key, cur_key in _VIEW_KINDS[kind].sources:
                 if _os.path.abspath(spec[src_key]) == ap:
                     cursors.append(int(spec[cur_key]))
     return cursors
@@ -1595,22 +1440,7 @@ def view_base_tables(view_path: str) -> list[str]:
     stream tails: waking on base commits (and only base commits) means
     the cascade's own intermediate-view commits never wake the stream
     that issued them. Sorted, deduplicated."""
-    leaves: set[str] = set()
-    seen: set[str] = set()
-
-    def _walk(path: str) -> None:
-        if path in seen:
-            return
-        seen.add(path)
-        node = _view_node(path)
-        if node is None:
-            leaves.add(path)
-            return
-        for src in node[2]:
-            _walk(src)
-
-    _walk(view_path)
-    return sorted(leaves)
+    return _walk_views_post_order(view_path)[1]
 
 
 def describe_view(view_path: str) -> dict:
@@ -1629,10 +1459,10 @@ def describe_view(view_path: str) -> dict:
         return {"path": src, "cursor_version": int(cursor),
                 "head_version": head, "lag": head - int(cursor)}
 
-    for marker, (kind, src_pairs) in _VIEW_KINDS.items():
-        if marker in spec:
+    for kind, k in _VIEW_KINDS.items():
+        if k.marker in spec:
             sources = [_src_entry(spec[sk], spec[vk])
-                       for sk, vk in src_pairs]
+                       for sk, vk in k.sources]
             return base | {
                 "view_kind": kind,
                 "sources": sources,
@@ -1749,16 +1579,6 @@ def _with_pair_key(pairs: DataFrame, left_key: str,
         F.concat(_k(left_key), F.lit(_PAIR_SEP), _k(right_key)))
 
 
-def _spec_jt(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    m = V._manifest(path, v)
-    spec = m.get("app") or {}
-    if "jt_left" not in spec:
-        raise ValueError(f"{path} is not a join table view "
-                         f"(no jt_left in its manifest app namespace)")
-    return spec
-
-
 def _jt_assemble_delta(spark, lsrc, rsrc, on, how, bounds, interval,
                        persisted):
     """Stage 1 of the join-table refresh — the interval's RAW signed
@@ -1849,7 +1669,6 @@ def _jt_commit(spark, view_path, ret_keys, ins_rows, new_app, view_v
 
 def refresh_join_table_view(
     spark: SparkSession, view_path: str,
-    auto_compact: bool = False, compact_threshold: int = 32,
     recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """Advance a join TABLE view to both sources' heads: the same signed
@@ -1878,11 +1697,9 @@ def refresh_join_table_view(
     matched pair rows through the same net-then-vector+append commit.
 
     Like transform views, each refresh accretes a segment (plus a
-    vector on rewrites): ``auto_compact=True`` runs
-    versioned.maybe_compact after the commit, bounding segment growth
-    at ``compact_threshold`` for unattended streaming refreshers."""
+    vector on rewrites); refresh_view(auto_compact=True) folds them."""
     view_v = V.current_version(view_path)
-    spec = _spec_jt(view_path, view_v)
+    spec = _spec(view_path, view_v, "join_table")
     lsrc, rsrc = spec["jt_left"], spec["jt_right"]
     on = _on_cols(spec["jt_on"])
     how = spec.get("jt_how", "inner")
@@ -1914,33 +1731,75 @@ def refresh_join_table_view(
                            how, ch_r_absent):
             ins_rows = _with_pair_key(
                 pairs.drop("_change_type"), lk, rk)
-            out_v = V.append(spark, view_path, ins_rows,
-                             extra={"app": new_app}, parent_version=view_v)
-        else:
-            ret_keys, ins_rows = _jt_net_and_split(
-                pairs, lk, rk, persisted)
-            out_v = _jt_commit(spark, view_path, ret_keys, ins_rows,
-                               new_app, view_v)
+            return V.append(spark, view_path, ins_rows,
+                            extra={"app": new_app}, parent_version=view_v)
+        ret_keys, ins_rows = _jt_net_and_split(pairs, lk, rk, persisted)
+        return _jt_commit(spark, view_path, ret_keys, ins_rows, new_app,
+                          view_v)
     finally:
         for df in persisted:
             df.unpersist()
-    # ONE compaction policy for both branches, after the delta frames
-    # are unpersisted (a triggered compact rewrites the whole view —
-    # it must not run with the CDC pairs still pinned in memory)
-    if auto_compact:
-        out_v = V.maybe_compact(spark, view_path, compact_threshold)
-    return out_v
 
 
-def refresh_join_table_view_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    auto_compact: bool = False, compact_threshold: int = 32,
-    recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop for concurrent join-table refreshers."""
-    return V.with_retry(
-        lambda: refresh_join_table_view(
-            spark, view_path,
-            auto_compact=auto_compact, compact_threshold=compact_threshold,
-            recompute_fraction=recompute_fraction),
-        max_retries)
+# ---------------------------------------------------------------------------
+# The view-kind registry
+# ---------------------------------------------------------------------------
+
+
+class _ViewKind(NamedTuple):
+    """One maintained view kind: the ``app`` field whose presence marks
+    a view of this kind, its (source field, cursor field) pairs, and its
+    single-attempt refresher ``(spark, path, [transform, name,]
+    recompute_fraction=) -> version`` — refresh_view wraps it in the
+    OCC loop and the compaction fold."""
+    marker: str
+    sources: list
+    refresh: Callable
+
+
+def _lazy(module: str, name: str) -> Callable:
+    """A refresher defined in a kind module that imports this one."""
+    def refresh(*args, **kwargs):
+        return getattr(importlib.import_module(module, __package__),
+                       name)(*args, **kwargs)
+
+    return refresh
+
+
+# kind -> _ViewKind: the SINGLE registry every view kind must appear in
+# — refresh_view, describe_view, the graph walker and cursor-safe
+# vacuum all read it, so adding a kind here is the whole wiring
+_VIEW_KINDS = {
+    "agg": _ViewKind("mv_source", [("mv_source", "mv_source_version")],
+                     refresh_agg_view),
+    "transform": _ViewKind("tv_source",
+                           [("tv_source", "tv_source_version")],
+                           refresh_transform_view),
+    "topk": _ViewKind("kv_source", [("kv_source", "kv_source_version")],
+                      refresh_topk_view),
+    "join": _ViewKind("jv_left", [("jv_left", "jv_left_version"),
+                                  ("jv_right", "jv_right_version")],
+                      refresh_join_view),
+    "join_table": _ViewKind("jt_left", [("jt_left", "jt_left_version"),
+                                        ("jt_right", "jt_right_version")],
+                            refresh_join_table_view),
+    # maintained near-dup pair tables (sources/neardup_view.py). The
+    # two internal index views of each are ordinary transform views
+    # refreshed BY the pairs refresh; their cursors never trail the
+    # pairs cursor, so clamping vacuum to the pairs cursor is sufficient.
+    "near_dup": _ViewKind("nd_source", [("nd_source", "nd_source_version")],
+                          _lazy(".neardup_view",
+                                "refresh_near_dup_pairs_view")),
+    "embed_near_dup": _ViewKind("ed_source",
+                                [("ed_source", "ed_source_version")],
+                                _lazy(".neardup_view",
+                                      "refresh_embed_near_dup_pairs_view")),
+    # maintained indexes (sources/indexkind.py): full-text BM25
+    # postings, hyperplane-LSH ANN buckets, IVF cells
+    "text_index": _ViewKind("ti_source", [("ti_source", "ti_source_version")],
+                            _lazy(".textindex", "refresh_text_index")),
+    "ann_index": _ViewKind("ai_source", [("ai_source", "ai_source_version")],
+                           _lazy(".annindex", "refresh_ann_index")),
+    "ivf_index": _ViewKind("ii_source", [("ii_source", "ii_source_version")],
+                           _lazy(".ivfindex", "refresh_ivf_index")),
+}

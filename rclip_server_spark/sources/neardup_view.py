@@ -33,7 +33,7 @@ view with DELETE retraction:
 
 Refresh cost is bounded by Δ docs × band collisions — flat in corpus
 size (tools/neardup_scale_proof.py; BASELINE.md). The view registers
-in matview's graph (_VIEW_KINDS "nd_source"), so refresh_view /
+in matview's graph (_VIEW_KINDS "near_dup"), so refresh_view /
 refresh_cascade / describe_view / vacuum_source_safely all dispatch
 to it; a pure insert-only interval needs no function handle at all.
 
@@ -257,15 +257,6 @@ def create_near_dup_pairs_view(
                     extra={"app": spec | {"nd_source_version": src_v}})
 
 
-def _spec_nd(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    spec = V._manifest(path, v).get("app") or {}
-    if "nd_source" not in spec:
-        raise ValueError(f"{path} is not a near-dup pairs view "
-                         f"(no nd_source in its manifest app namespace)")
-    return spec
-
-
 def read_near_dup_pairs_view(spark: SparkSession, view_path: str,
                              version: int | None = None) -> DataFrame:
     """The pair table at a version (default head), maintenance key
@@ -286,11 +277,10 @@ def _converge_indexes(spark: SparkSession, view_path: str,
     (duplicate) those pairs. ``indexes`` is [(path, fn, name), ...]."""
     for _ in range(5):
         for path, fn, name in indexes:
-            M.refresh_transform_view_with_retry(
-                spark, path, fn, name,
-                recompute_fraction=recompute_fraction)
+            M.refresh_view(spark, path, transforms={path: (fn, name)},
+                           recompute_fraction=recompute_fraction)
         views = [V.current_version(p) for p, _f, _n in indexes]
-        cursors = [int(M._spec_tv(p, v)["tv_source_version"])
+        cursors = [int(M._spec(p, v, "transform")["tv_source_version"])
                    for (p, _f, _n), v in zip(indexes, views)]
         if len(set(cursors)) == 1:
             return cursors[0], views
@@ -396,7 +386,7 @@ def refresh_near_dup_pairs_view(
     a concurrent refresher advancing the shared indexes must not leak
     future docs into this interval's probe (duplicate-pair hazard)."""
     view_v = V.current_version(view_path)
-    spec = _spec_nd(view_path, view_v)
+    spec = M._spec(view_path, view_v, "near_dup")
     v_to, gv, bv = _refresh_indexes(spark, view_path, spec,
                                     recompute_fraction=recompute_fraction)
     if v_to == int(spec["nd_source_version"]):
@@ -408,17 +398,6 @@ def refresh_near_dup_pairs_view(
         full_state_fn=lambda: _full_pairs(band_df, gram_df, spec),
         probe_fn=lambda ins: _probe_pairs(band_df, gram_df, ins, spec),
         recompute_fraction=recompute_fraction)
-
-
-def refresh_near_dup_pairs_view_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop (the standard view-refresh retry contract)."""
-    return V.with_retry(
-        lambda: refresh_near_dup_pairs_view(
-            spark, view_path, recompute_fraction=recompute_fraction),
-        max_retries)
 
 
 # ===========================================================================
@@ -571,15 +550,6 @@ def create_embed_near_dup_pairs_view(
                     extra={"app": spec | {"ed_source_version": src_v}})
 
 
-def _spec_ed(path: str, version: int | None = None) -> dict:
-    v = V.current_version(path) if version is None else int(version)
-    spec = V._manifest(path, v).get("app") or {}
-    if "ed_source" not in spec:
-        raise ValueError(f"{path} is not an embedding near-dup pairs "
-                         f"view (no ed_source in its manifest)")
-    return spec
-
-
 def read_embed_near_dup_pairs_view(spark: SparkSession, view_path: str,
                                    version: int | None = None
                                    ) -> DataFrame:
@@ -607,7 +577,7 @@ def refresh_embed_near_dup_pairs_view(
     """Advance the embedding pair table to the source head — the same
     pinned-index + shared-skeleton contract as the MinHash flavor."""
     view_v = V.current_version(view_path)
-    spec = _spec_ed(view_path, view_v)
+    spec = M._spec(view_path, view_v, "embed_near_dup")
     v_to, vv, bv = _ed_refresh_indexes(
         spark, view_path, spec, recompute_fraction=recompute_fraction)
     if v_to == int(spec["ed_source_version"]):
@@ -619,13 +589,3 @@ def refresh_embed_near_dup_pairs_view(
         full_state_fn=lambda: _ed_full_pairs(bkt_df, vec_df, spec),
         probe_fn=lambda ins: _ed_probe_pairs(bkt_df, vec_df, ins, spec),
         recompute_fraction=recompute_fraction)
-
-
-def refresh_embed_near_dup_pairs_view_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    return V.with_retry(
-        lambda: refresh_embed_near_dup_pairs_view(
-            spark, view_path, recompute_fraction=recompute_fraction),
-        max_retries)

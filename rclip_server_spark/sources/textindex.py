@@ -183,15 +183,6 @@ def refresh_text_index(
     return IK.refresh(spark, "text_index", view_path, recompute_fraction)
 
 
-def refresh_text_index_with_retry(
-    spark: SparkSession, view_path: str, max_retries: int = 3,
-    recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-) -> int:
-    """OCC rebase loop (the standard view-refresh retry contract)."""
-    return IK.refresh_with_retry(spark, "text_index", view_path,
-                                 max_retries, recompute_fraction)
-
-
 def query_text_index(
     spark: SparkSession, view_path: str, terms: list[str] | str,
     k: int = 10, version: int | None = None,

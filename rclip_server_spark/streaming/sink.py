@@ -205,12 +205,12 @@ def _start_view_refresh_stream(
     versioned_cdc wiring are NOT resumable by this file source — start
     upgraded streams with a fresh checkpoint_dir.
 
-    ``source_path`` may be a list of table paths (join views): the
-    manifest tails UNION into ONE streaming query, so a commit on any
-    source wakes the same refresh WITHOUT a second always-concurrent
-    refresher racing the first one's OCC commit on every wake — two
-    separate queries against one view could exhaust a retry budget
-    under sustained two-source ingest and die."""
+    ``source_path`` may be a list of table paths (a view over several
+    base tables): the manifest tails UNION into ONE streaming query, so
+    a commit on any source wakes the same refresh WITHOUT a second
+    always-concurrent refresher racing the first one's OCC commit on
+    every wake — two separate queries against one view could exhaust a
+    retry budget under sustained two-source ingest and die."""
     paths = source_path if isinstance(source_path, (list, tuple)) \
         else [source_path]
 
@@ -223,8 +223,7 @@ def _start_view_refresh_stream(
     # not O(stream lifetime)), release on stop_view_refresh_stream /
     # the SQL layer's STOP. A crashed holder's floor is dead-pid-
     # reaped by the next vacuum. Living at THIS choke point covers
-    # every refresh-stream flavor (agg/transform/join/join-table/
-    # cascade) with one implementation.
+    # every stream that names a view with one implementation.
     from ..sources import versioned as V
 
     floors: dict = {}
@@ -290,86 +289,6 @@ def _start_view_refresh_stream(
     return q
 
 
-def start_agg_view_refresh_stream(
-    spark: SparkSession, view_path: str, checkpoint_dir: str | None = None,
-):
-    """CONTINUOUS materialized-view maintenance: every commit on the
-    view's source table (any op — append, upsert, delete-vector,
-    compaction) wakes ``matview.refresh_agg_view_with_retry``; replayed
-    or late batches rebase to no-ops because the refresh interval is
-    cursor-derived, never batch-derived (see _start_view_refresh_stream
-    for the exactly-once composition)."""
-    from ..sources import matview
-
-    src = matview._spec(view_path)["mv_source"]
-
-    def _go():
-        # retry wrapper: a concurrent manual refresher's commit must not
-        # kill the streaming query — the loser's rebase is a cheap no-op
-        matview.refresh_agg_view_with_retry(spark, view_path)
-
-    return _start_view_refresh_stream(spark, src, _go, checkpoint_dir,
-                                      view_path=view_path)
-
-
-def start_transform_view_refresh_stream(
-    spark: SparkSession, view_path: str, transform, name: str,
-    checkpoint_dir: str | None = None,
-    auto_compact: bool = False, compact_threshold: int = 32,
-):
-    """Continuous maintenance for a ROW-TRANSFORM view (the signature-
-    index twin of start_agg_view_refresh_stream): same commit-type-
-    agnostic manifest-tail wake-up + cursor-derived exactly-once
-    composition. ``transform``/``name`` are the application code + tag
-    recorded at create_transform_view time; a mismatched name fails
-    HERE, synchronously, not as an asynchronous stream crash.
-
-    ``auto_compact=True`` bounds the view's segment growth: each
-    refreshed micro-batch ends with versioned.maybe_compact, so an
-    unattended stream holds the view at <= compact_threshold segments
-    instead of accreting one segment (+ one delete vector on rewrites)
-    per source commit forever."""
-    from ..sources import matview
-
-    spec = matview._spec_tv(view_path)
-    if spec["tv_name"] != name:
-        raise ValueError(
-            f"stream started with transform {name!r} but the view was "
-            f"created with {spec['tv_name']!r}")
-
-    def _go():
-        matview.refresh_transform_view_with_retry(
-            spark, view_path, transform, name,
-            auto_compact=auto_compact, compact_threshold=compact_threshold)
-
-    return _start_view_refresh_stream(spark, spec["tv_source"], _go,
-                                      checkpoint_dir,
-                                      view_path=view_path)
-
-
-def start_join_view_refresh_stream(
-    spark: SparkSession, view_path: str,
-    checkpoint_dir: str | None = None,
-):
-    """Continuous maintenance for a JOIN view: ONE streaming query over
-    the UNION of both sources' manifest tails — a commit on either side
-    wakes the same cursor-derived refresh, and because there is a single
-    refresher there is no second always-on writer racing the OCC commit
-    (the retry wrapper still protects against MANUAL refreshers). The
-    at-least-once batches compose into exactly-once view state like the
-    single-source streams. Returns the StreamingQuery."""
-    from ..sources import matview
-
-    spec = matview._spec_jv(view_path)
-
-    def _go():
-        matview.refresh_join_view_with_retry(spark, view_path)
-
-    return _start_view_refresh_stream(
-        spark, [spec["jv_left"], spec["jv_right"]], _go, checkpoint_dir,
-        view_path=view_path)
-
-
 def start_bloom_index_stream(
     spark: SparkSession, table_path: str, col: str,
     checkpoint_dir: str | None = None,
@@ -419,19 +338,22 @@ def start_view_cascade_refresh_stream(
     recompute_fraction: float | None = _MV_DEFAULT_FRACTION,
     auto_compact: bool = False, compact_threshold: int = 32,
 ):
-    """Continuous maintenance for a whole VIEW COMPOSITION CHAIN: one
-    streaming query tailing the BASE tables' manifest logs (the
-    non-view leaves, discovered from the view graph — matview.
-    view_base_tables) and running matview.refresh_cascade per
-    micro-batch, so a base commit ripples bottom-up through every
+    """THE continuous maintenance stream, for every view kind and for
+    whole VIEW COMPOSITION CHAINS (a view over base tables is a
+    one-node chain): one streaming query tailing the BASE tables'
+    manifest logs (the non-view leaves, discovered from the view graph
+    — matview.view_base_tables) and running matview.refresh_cascade
+    per micro-batch, so a base commit ripples bottom-up through every
     intermediate view to the target in order. Tailing only the leaves
     is what keeps the stream from waking on its OWN intermediate
     commits (a cascade writes each view it advances). Each node
-    refreshes OCC-retried (a concurrent manual refresher must not kill
-    the stream), and ``auto_compact``/``compact_threshold`` bound the
-    segment growth of transform / join-table nodes across unattended
-    refresh cycles. Transform views in the chain need their functions
-    via ``transforms`` — validated HERE, synchronously, not as a
+    refreshes through matview.refresh_view — OCC-retried (a concurrent
+    manual refresher must not kill the stream), and
+    ``auto_compact``/``compact_threshold`` bound the segment growth of
+    the segment-accreting nodes across unattended refresh cycles.
+    Transform views in the chain need their functions via
+    ``transforms`` — validated HERE, synchronously (a missing or
+    wrongly named function raises ValueError), not as a
     first-micro-batch crash."""
     from ..sources import matview
 
@@ -470,27 +392,3 @@ def stop_view_refresh_stream(q) -> None:
     q.stop()
     for b, fid in (getattr(q, "_rclip_floors", None) or {}).items():
         V.release_version_floor(b, fid)
-
-
-def start_join_table_view_refresh_stream(
-    spark: SparkSession, view_path: str,
-    checkpoint_dir: str | None = None,
-    auto_compact: bool = False, compact_threshold: int = 32,
-):
-    """Continuous maintenance for a row-level JOIN TABLE view: one
-    streaming query over the union of both sources' manifest tails
-    driving the cursor-derived refresh (the start_join_view_refresh_stream
-    contract, for the denormalization flavor). Returns the
-    StreamingQuery."""
-    from ..sources import matview
-
-    spec = matview._spec_jt(view_path)
-
-    def _go():
-        matview.refresh_join_table_view_with_retry(
-            spark, view_path,
-            auto_compact=auto_compact, compact_threshold=compact_threshold)
-
-    return _start_view_refresh_stream(
-        spark, [spec["jt_left"], spec["jt_right"]], _go, checkpoint_dir,
-        view_path=view_path)

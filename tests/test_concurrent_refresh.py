@@ -59,7 +59,7 @@ def _refresher(src: str, view: str, worker_id: int, n_rounds: int,
                     continue
             else:
                 raise RuntimeError("append rebase loop exhausted")
-            MV.refresh_agg_view_with_retry(spark, view, max_retries=20)
+            MV.refresh_view(spark, view, max_retries=20)
         spark.stop()
         q.put(("ok", worker_id))
     except Exception as e:  # pragma: no cover - failure reporting
@@ -95,7 +95,7 @@ def test_cross_process_refresh_is_exact(spark, tmp_path):
     # driver-side catch-up: the last refresher to commit may not have
     # seen the other's final append (append-then-refresh is not one
     # atomic step); ONE more refresh must land on the head exactly
-    MV.refresh_agg_view_with_retry(spark, view, max_retries=20)
+    MV.refresh_view(spark, view, max_retries=20)
 
     got = {(r["g"], r["cnt"], r["sum_v"]) for r in
            MV.read_agg_view(spark, view)

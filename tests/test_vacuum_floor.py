@@ -141,13 +141,13 @@ def test_advance_after_release_does_not_resurrect(spark, tmp_path):
 
 
 def test_agg_view_stream_gets_floors_too(spark, tmp_path):
-    """Review fix (r11): floors live at the shared starter, so EVERY
-    refresh-stream flavor is guarded, not just the cascade."""
+    """Review fix (r11): floors live at the shared starter, so a single
+    agg view's refresh stream is guarded, not just a composition chain."""
     base = _mk_flat(spark, tmp_path / "base")
     view = str(tmp_path / "view")
     MV.create_agg_view(spark, base, view, key="id",
                        group_cols=["id"], sum_cols=["val"])
-    q = sink.start_agg_view_refresh_stream(
+    q = sink.start_view_cascade_refresh_stream(
         spark, view, checkpoint_dir=str(tmp_path / "ckpt"))
     try:
         floors = getattr(q, "_rclip_floors")

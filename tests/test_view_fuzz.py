@@ -153,8 +153,8 @@ def test_view_layer_random_sequences(spark, tmp_path, seed):
     elif kind == 1:
         MV.create_transform_view(spark, a.path, tv, key="id",
                                  transform=_tf, name="tf-v1")
-        refresh = lambda: MV.refresh_transform_view(
-            spark, tv, _tf, "tf-v1",
+        refresh = lambda: MV.refresh_view(
+            spark, tv, transforms={tv: (_tf, "tf-v1")},
             auto_compact=rng.random() < 0.3,
             recompute_fraction=frac)
 
@@ -221,7 +221,7 @@ def test_view_layer_random_sequences(spark, tmp_path, seed):
             MV.create_join_table_view(spark, a.path, b.path, vw, on="k",
                                       left_key="id", right_key="bid",
                                       how=jt_how)
-            refresh = lambda: MV.refresh_join_table_view(
+            refresh = lambda: MV.refresh_view(
                 spark, vw, auto_compact=rng.random() < 0.3)
 
             def check():

@@ -1582,8 +1582,8 @@ class TestVersionedTable:
                               F.sum("v").alias("sum_v")).collect())
             assert got == want, (got, want)
 
-        q = sink.start_agg_view_refresh_stream(spark, vw,
-                                               checkpoint_dir=ckpt)
+        q = sink.start_view_cascade_refresh_stream(spark, vw,
+                                                   checkpoint_dir=ckpt)
         try:
             V.append(spark, t, mk([(3, "a", 7), (4, "c", 2)]))
             q.processAllAvailable()
@@ -1689,7 +1689,7 @@ class TestVersionedTable:
 
         def refresher():
             try:
-                MV.refresh_agg_view_with_retry(spark, vw, max_retries=20, recompute_fraction=None)
+                MV.refresh_view(spark, vw, max_retries=20, recompute_fraction=None)
             except Exception as e:  # surfaced in the main thread
                 errors.append(e)
 
@@ -1699,7 +1699,7 @@ class TestVersionedTable:
         for th in threads:
             th.join()
         assert not errors, errors
-        MV.refresh_agg_view_with_retry(spark, vw, recompute_fraction=None)  # ensure fully caught up
+        MV.refresh_view(spark, vw, recompute_fraction=None)  # ensure fully caught up
         got = sorted((r.grp, r.cnt, r.sum_v) for r in
                      MV.read_agg_view(spark, vw).collect())
         want = sorted((r.grp, r.cnt, r.sum_v) for r in
@@ -1788,7 +1788,7 @@ class TestVersionedTable:
                                  transform=keep, name="keep-v1")
         V.append(spark, t, mk([(2, "skip")]))  # transforms to nothing
         MV.refresh_transform_view(spark, vw, keep, "keep-v1", recompute_fraction=None)
-        assert MV._spec_tv(vw)["tv_source_version"] == V.current_version(t)
+        assert MV._spec(vw, kind="transform")["tv_source_version"] == V.current_version(t)
         assert {r.doc_id for r in V.read(spark, vw).collect()} == {1}
         V.append(spark, t, mk([(3, "b")]))
         MV.refresh_transform_view(spark, vw, keep, "keep-v1", recompute_fraction=None)
@@ -1825,9 +1825,10 @@ class TestVersionedTable:
                 V.upsert(spark, t, mk([(i - 1, f"u{i} v{i}")]), "doc_id")
             else:
                 V.append(spark, t, mk([(i, f"w{i} x{i}")]))
-            MV.refresh_transform_view(spark, vw, postings, "postings-v1",
-                                      auto_compact=True,
-                                      compact_threshold=threshold, recompute_fraction=None)
+            MV.refresh_view(spark, vw,
+                            transforms={vw: (postings, "postings-v1")},
+                            auto_compact=True,
+                            compact_threshold=threshold, recompute_fraction=None)
             m = V._manifest(vw, V.current_version(vw))
             seg_counts.append(len(m["segments"]) +
                               len(m.get("delete_segs") or []))
@@ -1842,7 +1843,7 @@ class TestVersionedTable:
         # compaction actually fired (without it 12 cycles accrete ~15)
         assert min(seg_counts) == 1, seg_counts
         # spec + cursor intact after inline compactions
-        assert MV._spec_tv(vw)["tv_source_version"] == V.current_version(t)
+        assert MV._spec(vw, kind="transform")["tv_source_version"] == V.current_version(t)
         # below-threshold call is a pure no-op (no version advance)
         v = V.current_version(vw)
         assert V.maybe_compact(spark, vw, max_segments=64) == v
@@ -2089,7 +2090,7 @@ class TestVersionedTable:
         # idempotent when fresh; both cursors track their heads
         v = V.current_version(vw)
         assert MV.refresh_join_view(spark, vw, recompute_fraction=None) == v
-        spec = MV._spec_jv(vw)
+        spec = MV._spec(vw, kind="join")
         assert spec["jv_left_version"] == V.current_version(lt)
         assert spec["jv_right_version"] == V.current_version(rt)
 
@@ -2351,7 +2352,7 @@ class TestVersionedTable:
         MV.create_join_view(spark, lt, rt, vw, on="ckey",
                             left_key="o_id", right_key="c_id",
                             group_cols=["seg"], sum_cols=["amount"])
-        q = sink.start_join_view_refresh_stream(
+        q = sink.start_view_cascade_refresh_stream(
             spark, vw, checkpoint_dir=str(tmp_path / "cp"))
         try:
             V.append(spark, lt, mko([(2, 20, 7), (3, 10, 11)]))
@@ -2361,7 +2362,7 @@ class TestVersionedTable:
             deadline = _time.time() + 60
             while _time.time() < deadline:
                 q.processAllAvailable()
-                spec = MV._spec_jv(vw)
+                spec = MV._spec(vw, kind="join")
                 if (spec["jv_left_version"] == V.current_version(lt)
                         and spec["jv_right_version"]
                         == V.current_version(rt)):
@@ -2616,7 +2617,7 @@ class TestVersionedTable:
         # idempotent when fresh; cursors track heads
         v = V.current_version(vw)
         assert MV.refresh_join_table_view(spark, vw, recompute_fraction=None) == v
-        spec = MV._spec_jt(vw)
+        spec = MV._spec(vw, kind="join_table")
         assert spec["jt_left_version"] == V.current_version(lt)
         assert spec["jt_right_version"] == V.current_version(rt)
         # NULL row-identity keys are rejected at create (a null key
@@ -2657,8 +2658,8 @@ class TestVersionedTable:
                 V.upsert(spark, lt, mko([(i - 1, (i + 1) % 4, i)]), "o_id")
             else:
                 V.append(spark, lt, mko([(i, i % 4, i * 3)]))
-            MV.refresh_join_table_view(spark, vw, auto_compact=True,
-                                       compact_threshold=threshold, recompute_fraction=None)
+            MV.refresh_view(spark, vw, auto_compact=True,
+                            compact_threshold=threshold, recompute_fraction=None)
             m = V._manifest(vw, V.current_version(vw))
             seg_counts.append(len(m["segments"]) +
                               len(m.get("delete_segs") or []))
@@ -2670,7 +2671,7 @@ class TestVersionedTable:
             assert got == want, (i, got, want)
         assert max(seg_counts) <= threshold + 1, seg_counts
         assert min(seg_counts) == 1, seg_counts  # compaction fired
-        spec = MV._spec_jt(vw)
+        spec = MV._spec(vw, kind="join_table")
         assert spec["jt_left_version"] == V.current_version(lt)
 
     def test_join_table_view_streaming_refresh(self, spark, tmp_path):
@@ -2693,7 +2694,7 @@ class TestVersionedTable:
         V.create(spark, rt, mkc([(100, 10, "A"), (101, 20, "B")]))
         MV.create_join_table_view(spark, lt, rt, vw, on="ckey",
                                   left_key="o_id", right_key="c_id")
-        q = sink.start_join_table_view_refresh_stream(
+        q = sink.start_view_cascade_refresh_stream(
             spark, vw, checkpoint_dir=str(tmp_path / "cp"))
         try:
             V.append(spark, lt, mko([(2, 20, 7), (3, 10, 11)]))
@@ -2702,7 +2703,7 @@ class TestVersionedTable:
             deadline = _time.time() + 60
             while _time.time() < deadline:
                 q.processAllAvailable()
-                spec = MV._spec_jt(vw)
+                spec = MV._spec(vw, kind="join_table")
                 if (spec["jt_left_version"] == V.current_version(lt)
                         and spec["jt_right_version"]
                         == V.current_version(rt)):
@@ -2791,8 +2792,9 @@ class TestVersionedTable:
 
         def refresher():
             try:
-                MV.refresh_transform_view_with_retry(
-                    spark, vw, postings, "p1", max_retries=20, recompute_fraction=None)
+                MV.refresh_view(
+                    spark, vw, transforms={vw: (postings, "p1")},
+                    max_retries=20, recompute_fraction=None)
             except Exception as e:
                 errors.append(e)
 
@@ -2839,7 +2841,7 @@ class TestVersionedTable:
 
         def refresher():
             try:
-                MV.refresh_join_view_with_retry(spark, vw, max_retries=20, recompute_fraction=None)
+                MV.refresh_view(spark, vw, max_retries=20, recompute_fraction=None)
             except Exception as e:
                 errors.append(e)
 
@@ -2969,8 +2971,9 @@ class TestVersionedTable:
         V.create(spark, t, mk([(1, "a b")]))
         MV.create_transform_view(spark, t, vw, key="doc_id",
                                  transform=postings, name="p1")
-        q = sink.start_transform_view_refresh_stream(
-            spark, vw, postings, "p1", checkpoint_dir=ckpt)
+        q = sink.start_view_cascade_refresh_stream(
+            spark, vw, checkpoint_dir=ckpt,
+            transforms={vw: (postings, "p1")})
         try:
             V.append(spark, t, mk([(2, "c d"), (3, "e")]))
             q.processAllAvailable()
@@ -3007,10 +3010,12 @@ class TestVersionedTable:
                                  transform=postings, name="p1")
         # wrong name fails synchronously at start, not as a stream crash
         with pytest.raises(ValueError, match="p1"):
-            sink.start_transform_view_refresh_stream(
-                spark, vw, postings, "wrong", checkpoint_dir=ckpt + "x")
-        q = sink.start_transform_view_refresh_stream(
-            spark, vw, postings, "p1", checkpoint_dir=ckpt)
+            sink.start_view_cascade_refresh_stream(
+                spark, vw, checkpoint_dir=ckpt + "x",
+                transforms={vw: (postings, "wrong")})
+        q = sink.start_view_cascade_refresh_stream(
+            spark, vw, checkpoint_dir=ckpt,
+            transforms={vw: (postings, "p1")})
         try:
             V.delete_rows(spark, t, [2], "doc_id")      # rewrite commit
             V.upsert(spark, t, mk([(1, "z q")]), "doc_id")  # another
@@ -3095,7 +3100,7 @@ class TestVersionedTable:
         check()
         # idempotent when fresh; cursor at head
         v = V.current_version(vw)
-        assert MV.refresh_topk_view_with_retry(spark, vw, recompute_fraction=None) == v
+        assert MV.refresh_view(spark, vw, recompute_fraction=None) == v
         m = V._manifest(vw, v)
         assert m["app"]["kv_source_version"] == V.current_version(t)
 
@@ -4258,7 +4263,7 @@ class TestRefreshCascade:
             deadline = _time.time() + 60
             while _time.time() < deadline:
                 q.processAllAvailable()
-                if MV._spec_tv(tv)["tv_source_version"] \
+                if MV._spec(tv, kind="transform")["tv_source_version"] \
                         == V.current_version(base) \
                         and MV._spec(jv)["mv_source_version"] \
                         == V.current_version(jt):

@@ -707,7 +707,7 @@ def main() -> int:
     V.create(spark, _ndsrc, docs.select("doc_id", "text")
              .where(F.col("doc_id") % 2 == 0))
     NDV.create_near_dup_pairs_view(spark, _ndsrc, _ndvw, key="doc_id")
-    _ndspec = NDV._spec_nd(_ndvw)
+    _ndspec = MVIEW._spec(_ndvw, kind="near_dup")
     _ndband = MVIEW._read_source(spark, _ndvw + NDV.BANDS_SUFFIX)
     _ndgram = MVIEW._read_source(spark, _ndvw + NDV.GRAMS_SUFFIX)
     _ndins = docs.select("doc_id").where(F.col("doc_id") % 20 == 0)
@@ -735,7 +735,7 @@ def main() -> int:
     NDV.create_embed_near_dup_pairs_view(spark, _edsrc, _edvw,
                                          key="vec_id", threshold=0.4,
                                          dim=64)
-    _edspec = NDV._spec_ed(_edvw)
+    _edspec = MVIEW._spec(_edvw, kind="embed_near_dup")
     _edbkt = MVIEW._read_source(spark, _edvw + NDV.EBKTS_SUFFIX)
     _edvec = MVIEW._read_source(spark, _edvw + NDV.EVECS_SUFFIX)
     _edins = emb.select("vec_id").where(F.col("vec_id") % 20 == 0)
