@@ -67,9 +67,9 @@ _PRIORITY = [
     # centroids+codebooks; the oracle recomputes codes, ADC scores,
     # the shortlist, and the exact re-rank from shared literals);
     # (c) the 12 index rows whose machinery r14 touched (the unified
-    # refresh skeleton, now indexkind.refresh, drives every
-    # text/ANN/IVF refresh; these rows' fixtures all refresh through
-    # it) stay; (d) the 4 delete-vector read rows stay — r14 re-keyed
+    # refresh skeleton, now matview._refresh_once over indexkind's
+    # state/delta, drives every text/ANN/IVF refresh; these rows'
+    # fixtures all refresh through it) stay; (d) the 4 delete-vector read rows stay — r14 re-keyed
     # the pinned vector read on the new delete_typed manifest marker
     # (ADVICE fix), so every DV-read row runs over changed machinery;
     # (e) sql_bucketed_zorder_roundtrip gets the driver cell it was
@@ -94,7 +94,7 @@ _PRIORITY = [
     # no-oracle retrieval row; verdict task 1) ---
     "ii_ivfadc_topk",
     # --- index rows whose machinery r14 touched: every refresh now
-    # dispatches through indexkind.refresh (text/ANN/IVF), and
+    # dispatches through matview._refresh_once (text/ANN/IVF), and
     # every serving read sits over the delete_typed-keyed vector read
     "ii_ivf_indexed_topk", "sql_knn_join_indexed",
     "sql_hybrid_search_rrf",

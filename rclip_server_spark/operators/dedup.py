@@ -24,15 +24,11 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions.hashing import (
-    hash32_from_md5,
     hash32_from_md5_sql,
-    hash60_from_md5,
     hash60_from_md5_sql,
     minhash_params,
-    minhash_signature_over_hashed,
     minhash_signature_over_hashed_sql,
     portable_hash32,
-    simhash32,
     simhash32_sql,
 )
 from ..functions.vector import sql_ref
@@ -84,6 +80,44 @@ def _first_band_only(a_sig, b_sig, band, rows_per_band: int):
             lambda j: F.slice(a_sig, j * rows_per_band + 1, rows_per_band)
             != F.slice(b_sig, j * rows_per_band + 1, rows_per_band),
         )
+    )
+
+
+def _min_matches(num_hashes: int, threshold: float) -> int:
+    """The signature-agreement prefilter cut: est-jaccard = matching
+    signature components / num_hashes, kept when est >= threshold - 4*sd
+    (the binomial sd at the threshold; miss probability < 1e-4 per true
+    pair)."""
+    sd = (threshold * (1.0 - threshold) / num_hashes) ** 0.5
+    return max(0, int(num_hashes * (threshold - 4.0 * sd)))
+
+
+def _sig_agreement(num_hashes: int, threshold: float):
+    """The prefilter predicate over a band join's ``a``/``b`` sides: the
+    count of matching signature components reaches _min_matches."""
+    matches = F.size(
+        F.filter(
+            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
+            lambda m: m,
+        )
+    )
+    return matches >= F.lit(_min_matches(num_hashes, threshold))
+
+
+def _jaccard_verified(cands: DataFrame, grams_a: DataFrame, grams_b: DataFrame,
+                      threshold: float, a: str = "id_a", b: str = "id_b") -> DataFrame:
+    """Exact Jaccard verification of candidate (a, b) pairs: join each
+    side's (id, gs) 60-bit shingle set, keep jaccard >= threshold."""
+    joined = (
+        cands.join(grams_a.withColumnRenamed("id", a).withColumnRenamed("gs", "gs_a"), a)
+        .join(grams_b.withColumnRenamed("id", b).withColumnRenamed("gs", "gs_b"), b)
+    )
+    inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
+    union = (F.size("gs_a") + F.size("gs_b")).cast("double") - inter
+    return (
+        joined.withColumn("jaccard", inter / union)
+        .where(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
     )
 
 
@@ -248,25 +282,10 @@ def minhash_near_dup(
     string hashing. The DuckDB oracle mirrors the same hash, so parity is
     exact."""
     rows_per_band = num_hashes // bands
-    params = minhash_params(num_hashes, seed)
-    # ONE md5 pass feeds both hash widths: the 32-bit minhash base (folded
-    # straight into the signature) and the 60-bit verification sets. The
-    # pass materializes ONCE as (id, sig, gs) — the only per-row state every
-    # downstream consumer needs. _spread keeps the CPU-dense hash pass
-    # parallel when the source arrives as a single small file split. The two
-    # transforms share the m5 alias of the inner projection, so the md5
-    # digest itself still runs once per shingle.
-    vs = _spread(df).selectExpr(
-        f"{sql_ref(id_col)} AS id",
-        f"transform({TXT.char_shingles_spark_sql(sql_ref(text_col), shingle_n)}, "
-        "s -> md5(s)) AS m5",
-    ).selectExpr(
-        "id",
-        f"transform(m5, m -> {hash32_from_md5_sql('m')}) AS hs",
-        f"array_distinct(transform(m5, m -> {hash60_from_md5_sql('m')})) AS gs",
-    ).selectExpr(
-        "id", f"{minhash_signature_over_hashed_sql('hs', params)} AS sig", "gs"
-    ).persist()
+    # ONE md5 pass feeds both hash widths and materializes ONCE as
+    # (id, sig, gs) — the only per-row state every downstream consumer
+    # needs (_minhash_banded_sigs).
+    #
     # The full 32-int signature rides through the band join: it pays for
     # itself twice, deduping multi-band collisions via the first-matching-
     # band predicate (no distinct() exchange) and feeding the agreement
@@ -278,12 +297,11 @@ def minhash_near_dup(
     # signature's ride by 2x measured (505 vs 255 MB app shuffle with
     # broadcast disabled). Keeping the predicates inline keeps the
     # collision stream row-local until it has been cut to verified
-    # candidates. The banded frame itself is NOT persisted — it re-derives
-    # per join side from the one cached (id, sig, gs) table with a cheap
-    # slice/explode, saving the second cache materialization r14 paid.
-    banded = vs.selectExpr(
-        "id", "sig", _banded_explode_sql("sig", bands, rows_per_band)
-    ).select("id", "sig", "bk.band", "bk.bh")
+    # candidates.
+    grams, banded = _minhash_banded_sigs(
+        df, id_col, text_col, shingle_n, minhash_params(num_hashes, seed),
+        bands, rows_per_band
+    )
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(
@@ -295,31 +313,9 @@ def minhash_near_dup(
         .where(_first_band_only(F.col("a.sig"), F.col("b.sig"), F.col("a.band"), rows_per_band))
     )
     if sig_prefilter:
-        # est-jaccard = matching signature components / num_hashes; keep pairs
-        # with est >= threshold - 4*sd (binomial sd at the threshold)
-        sd = (threshold * (1.0 - threshold) / num_hashes) ** 0.5
-        min_matches = max(0, int(num_hashes * (threshold - 4.0 * sd)))
-        matches = F.size(
-            F.filter(
-                F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        cands = cands.where(matches >= F.lit(min_matches))
+        cands = cands.where(_sig_agreement(num_hashes, threshold))
     cands = cands.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    grams = vs.select("id", "gs")  # reads the one persisted table
-    joined = (
-        cands.join(grams.withColumnRenamed("id", "id_a").withColumnRenamed("gs", "gs_a"), "id_a")
-        .join(grams.withColumnRenamed("id", "id_b").withColumnRenamed("gs", "gs_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
-    union = (F.size("gs_a") + F.size("gs_b")).cast("double") - inter
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verified(cands, grams, grams, threshold)
 
 
 def containment_pairs(
@@ -775,27 +771,6 @@ def minhash_near_dup_incremental(
         b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
     ).where(_first_band_only(F.col("a.sig"), F.col("b.sig"), F.col("a.band"), rows_per_band))
     if sig_prefilter:
-        sd = (threshold * (1.0 - threshold) / num_hashes) ** 0.5
-        min_matches = max(0, int(num_hashes * (threshold - 4.0 * sd)))
-        matches = F.size(
-            F.filter(
-                F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        cands = cands.where(matches >= F.lit(min_matches))
+        cands = cands.where(_sig_agreement(num_hashes, threshold))
     cands = cands.select(F.col("a.id").alias("corpus_id"), F.col("b.id").alias("batch_id"))
-    joined = cands.join(
-        gc_.withColumnRenamed("id", "corpus_id").withColumnRenamed("gs", "gs_a"),
-        "corpus_id",
-    ).join(
-        gb_.withColumnRenamed("id", "batch_id").withColumnRenamed("gs", "gs_b"),
-        "batch_id",
-    )
-    inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
-    union = (F.size("gs_a") + F.size("gs_b")).cast("double") - inter
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("corpus_id", "batch_id", "jaccard")
-    )
+    return _jaccard_verified(cands, gc_, gb_, threshold, "corpus_id", "batch_id")

@@ -59,25 +59,22 @@ def create_ann_index(
     evaluates inside the probed scan (parquet-pushed), so filtered
     vector search never joins back to the source — the vector-DB
     "metadata filter" feature at lakehouse scale."""
-    src_v = V.current_version(source_path)
-    df = M._read_source(spark, source_path, src_v)
-    if dim is None:
-        probe = df.select(F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError("cannot infer embedding dim from an "
-                             "empty source; pass dim=")
-        dim = int(probe[0])
-    inc = IK.check_include_cols(df, key, vec_col, include_cols,
-                                reserved=("bucket",))
-    spec = {
+    def prepare(df):
+        d = dim
+        if d is None:
+            probe = df.select(F.size(vec_col)).first()
+            if probe is None or probe[0] is None:
+                raise ValueError("cannot infer embedding dim from an "
+                                 "empty source; pass dim=")
+            d = int(probe[0])
+        return {"ai_dim": int(d), "ai_include_cols": IK.check_include_cols(
+            df, key, vec_col, include_cols, reserved=("bucket",))}
+
+    return M._create(spark, "ann_index", view_path, {
         "ai_source": source_path, "ai_key": key,
         "ai_vec_col": vec_col, "ai_n_planes": int(n_planes),
-        "ai_seed": int(seed), "ai_dim": int(dim),
-        "ai_source_version": src_v,
-        "ai_include_cols": inc,
-    }
-    return V.create(spark, view_path, _rows_of(spec, df),
-                    extra={"app": spec})
+        "ai_seed": int(seed),
+    }, prepare=prepare)
 
 
 def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
@@ -104,9 +101,11 @@ def refresh_ann_index(
     rows (key delete vector), append the new rows WITH their buckets —
     ONE delete_and_append commit, O(changed rows). Rollback/vacuumed-
     past-cursor heals by full recompute. All structure lives in the
-    shared lifecycle (indexkind.refresh); this kind contributes only
-    the bucket derivation under the spec's frozen planes."""
-    return IK.refresh(spark, "ann_index", view_path, recompute_fraction)
+    shared lifecycle (matview._refresh_once over indexkind's
+    state/delta); this kind contributes only the bucket derivation
+    under the spec's frozen planes."""
+    return M._refresh_once(spark, "ann_index", view_path,
+                           recompute_fraction)
 
 
 def query_ann_index(

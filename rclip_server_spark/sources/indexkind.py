@@ -3,9 +3,10 @@ textindex.py), ANN (hyperplane-LSH buckets, annindex.py) and IVF
 (nearest-centroid cells, ivfindex.py) are each ONE descriptor in the
 table ``kinds()``, and everything they share runs once over it — the
 kind-checked spec read, the probed state read, the canonical read,
-the at-rest bucketed conversion, the cursor-advancing refresh (whose
-OCC retry is matview.refresh_view's), the payload filter, and the
-batch guards. The kind modules keep only their own logic (bucketing
+the at-rest bucketed conversion, the registry's ``state`` and
+``delta`` (matview._create and matview._refresh_once run the create,
+refresh, heal and OCC skeleton around them), the payload filter, and
+the batch guards. The kind modules keep only their own logic (bucketing
 and the probe rule, cell assignment and drift, tokenization and
 BM25); matview's REFRESH / DESCRIBE INDEX dispatch and SQL's
 OPTIMIZE ... BUCKET BY / ``OPTIONS (buckets=N)`` are one lookup in
@@ -42,9 +43,9 @@ class IndexKind:
     (between (probe, key) and the payload), the row derivation under
     the spec's frozen parameters, the DESCRIBE INDEX section, the
     default physical bucket count, and the optional manifest-stat
-    hooks a refresh runs (``app_on_delta`` rolls stats forward from
-    the interval, ``app_on_recompute`` re-derives them from the
-    head)."""
+    hooks, each returning the app fields it sets (``app_on_delta``
+    rolls stats forward from the interval, ``app_on_recompute``
+    derives them from the head — at create and on a heal)."""
     name: str
     prefix: str
     col_field: str
@@ -184,68 +185,41 @@ def convert_index_to_bucketed(spark: SparkSession, view_path: str,
                                  int(n_buckets))
 
 
-def refresh(spark: SparkSession, name: str, view_path: str,
-            recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
-            ) -> int:
-    """Advance an index view to its source head: check the cursor,
-    prefer the O(changed rows) path (key delete-vector retraction +
-    derived-rows append, ONE delete_and_append commit), heal
-    rollback/vacuumed-past-cursor by full recompute (one overwrite,
-    identical rows). The kinds diverge only in ``rows_of`` and the
-    manifest-stat hooks.
-
-    Cost-model stance (inherited from the pair views): the row-model is
-    disabled (_dispatch_recompute(None, ...)) — derived rows scatter
-    across the index layout, so per-row DML would trip full
-    re-derivation on every delete; recompute keeps HEAL semantics
-    only."""
+def state(name: str, spark: SparkSession, spec: dict, frames: list):
+    """The kind's registry ``state``: every source row's derived index
+    rows, plus the manifest stats re-derived from the head."""
     kind = kinds()[name]
-    cursor_field = f"{kind.prefix}_source_version"
-    view_v = V.current_version(view_path)
-    spec = spec_of(name, view_path, view_v)
-    src, key = spec[f"{kind.prefix}_source"], spec[f"{kind.prefix}_key"]
-    v_from = int(spec[cursor_field])
-    v_to = V.current_version(src)
-    if v_to == v_from:
-        return view_v
-    new_app = dict(spec) | {cursor_field: v_to}
+    head, = frames
+    app = {} if kind.app_on_recompute is None else \
+        kind.app_on_recompute(spark, spec, head)
+    return kind.rows_of(spec, head), app
 
-    def _recompute() -> int:
-        head = M._read_source(spark, src, v_to)
-        app = new_app if kind.app_on_recompute is None else \
-            kind.app_on_recompute(spark, spec, head, dict(new_app))
-        return V.overwrite(spark, view_path, kind.rows_of(spec, head),
-                           extra={"app": app}, parent_version=view_v)
 
-    try:
-        recompute, _bounds = M._dispatch_recompute(
-            None, [(src, v_from, v_to)])
-    except RuntimeError:
-        if recompute_fraction is None:
-            raise
-        recompute = True
-    if recompute:
-        return _recompute()
-    try:
-        ch = M._changes_since_cursor(spark, src, v_from, v_to, key)
-    except RuntimeError:
-        return _recompute()  # vacuumed past the cursor: heal
+def delta(name: str, r) -> int:
+    """The kind's registry ``delta``: the O(changed rows) interval —
+    key delete-vector retraction + derived-rows append, with the
+    manifest stats rolled forward, as ONE delete_and_append commit.
+
+    Cost-model stance (the pair views' too): the kinds register without
+    the row model — derived rows scatter across the index layout, so
+    per-row DML would trip full re-derivation on every delete;
+    recompute only heals a rolled-back or vacuumed-past-cursor source.
+    The kinds diverge only in ``rows_of`` and the manifest-stat
+    hooks."""
+    kind = kinds()[name]
+    key = r.spec[f"{kind.prefix}_key"]
+    (src, v_from, v_to), = r.intervals
     # persist: the frame is consumed twice inside delete_and_append
     # (delete-vector write + segment write), and a rewriting interval's
     # CDC is a snapshot-diff join — don't run it per consumer
-    ch = ch.persist()
-    try:
-        del_keys = (ch.where(F.col("_change_type").isin(
-            *(M._RETRACTING + M._INSERTING))).select(key).distinct())
-        ins = ch.where(F.col("_change_type").isin(*M._INSERTING))
-        new_rows = kind.rows_of(spec, ins)
-        app = new_app if kind.app_on_delta is None else \
-            kind.app_on_delta(spark, spec, ch, new_rows, dict(new_app))
-        return V.delete_and_append(
-            spark, view_path, del_keys, key, new_rows,
-            extra={"app": app}, parent_version=view_v)
-    finally:
-        ch.unpersist()
+    ch = r.persist(M._changes_since_cursor(r.spark, src, v_from, v_to, key))
+    del_keys = (ch.where(F.col("_change_type").isin(
+        *(M._RETRACTING + M._INSERTING))).select(key).distinct())
+    ins = ch.where(F.col("_change_type").isin(*M._INSERTING))
+    new_rows = kind.rows_of(r.spec, ins)
+    app = {} if kind.app_on_delta is None else \
+        kind.app_on_delta(r.spark, r.spec, ch, new_rows)
+    return r.commit(V.delete_and_append, del_keys, key, new_rows, app=app)
 
 
 # ---------------------------------------------------------------------------

@@ -115,63 +115,55 @@ def create_ivf_index(
     rows as FILTERABLE PAYLOAD (query_ivf_index ``where=``): the
     predicate evaluates inside the probed-cell scan, parquet-pushed,
     so filtered vector search never joins back to the source."""
-    src_v = V.current_version(source_path)
-    df = M._read_source(spark, source_path, src_v)
-    inc = IK.check_include_cols(df, key, vec_col, include_cols,
-                                reserved=("ivf_cell", "pq_codes"))
-    if centroids is None:
-        centroids = ivf_train_kmeans(df, k=int(n_cells), iters=int(iters),
+    def prepare(df):
+        inc = IK.check_include_cols(df, key, vec_col, include_cols,
+                                    reserved=("ivf_cell", "pq_codes"))
+        if centroids is None:
+            cents = ivf_train_kmeans(df, k=int(n_cells), iters=int(iters),
                                      id_col=key, vec_col=vec_col,
                                      init=init)
-        trained = f"kmeans:{init}:{int(iters)}"
-    else:
-        centroids = _unit_rows(centroids)
-        trained = "explicit"
-    if centroids.ndim != 2:
-        raise ValueError(f"centroids must be a (n_cells, dim) matrix, "
-                         f"got shape {centroids.shape}")
-    if dim is None:
-        dim = int(centroids.shape[1])
-    if centroids.shape[1] != dim:
-        raise ValueError(f"centroids must be (n_cells, {dim}), got "
-                         f"{centroids.shape}")
-    spec = {
-        "ii_source": source_path, "ii_key": key,
-        "ii_vec_col": vec_col, "ii_n_cells": int(centroids.shape[0]),
-        "ii_dim": int(dim), "ii_trained": trained,
-        "ii_source_version": src_v,
-        "ii_centroids": _json_floats(centroids),
-        "ii_include_cols": inc,
-    }
-    if codebooks is not None:
+            trained = f"kmeans:{init}:{int(iters)}"
+        else:
+            cents = _unit_rows(centroids)
+            trained = "explicit"
+        if cents.ndim != 2:
+            raise ValueError(f"centroids must be a (n_cells, dim) matrix, "
+                             f"got shape {cents.shape}")
+        d = int(cents.shape[1]) if dim is None else dim
+        if cents.shape[1] != d:
+            raise ValueError(f"centroids must be (n_cells, {d}), got "
+                             f"{cents.shape}")
+        spec = {
+            "ii_n_cells": int(cents.shape[0]),
+            "ii_dim": int(d), "ii_trained": trained,
+            "ii_centroids": _json_floats(cents),
+            "ii_include_cols": inc,
+        }
+        if codebooks is not None:
+            if pq_m is not None:
+                raise ValueError("pass pq_m (train residual codebooks) OR "
+                                 "codebooks (explicit), not both")
+            spec["ii_codebooks"] = _json_floats(_explicit_books(codebooks,
+                                                                d))
         if pq_m is not None:
-            raise ValueError("pass pq_m (train residual codebooks) OR "
-                             "codebooks (explicit), not both")
-        spec["ii_codebooks"] = _json_floats(_explicit_books(codebooks,
-                                                            dim))
-    if pq_m is not None:
-        if dim % int(pq_m):
-            raise ValueError(f"pq_m={pq_m} must divide dim {dim}")
-        # training recipe recorded so retrain_ivf_index (the drift
-        # heal) can rebuild the books against the NEW centroids with
-        # the same parameters
-        spec["ii_pq_params"] = {
-            "m": int(pq_m), "k": int(pq_k), "iters": int(pq_iters),
-            "sample": int(pq_sample), "seed": int(pq_seed)}
-        spec["ii_codebooks"] = _json_floats(_train_books(
-            df, key, vec_col, centroids, spec["ii_pq_params"]))
-    state = _rows_of(spec, df)
-    # drift governance baseline: per-cell counts + summed quantization
-    # error of the create-time corpus, frozen alongside the centroids.
-    # One extra assignment pass at create (rare, already O(corpus));
-    # refreshes roll the CURRENT twin forward O(delta).
-    counts, sum_qe = _cell_stats(spark, state, vec_col, centroids)
-    spec |= {
-        "ii_base_cell_counts": counts, "ii_base_sum_qe": sum_qe,
-        "ii_cur_cell_counts": list(counts), "ii_cur_sum_qe": sum_qe,
+            if d % int(pq_m):
+                raise ValueError(f"pq_m={pq_m} must divide dim {d}")
+            # training recipe recorded so retrain_ivf_index (the drift
+            # heal) can rebuild the books against the NEW centroids with
+            # the same parameters
+            spec["ii_pq_params"] = {
+                "m": int(pq_m), "k": int(pq_k), "iters": int(pq_iters),
+                "sample": int(pq_sample), "seed": int(pq_seed)}
+            spec["ii_codebooks"] = _json_floats(_train_books(
+                df, key, vec_col, cents, spec["ii_pq_params"]))
+        return spec
+
+    # the drift thresholds mark an index with drift governance: its
+    # state derives the create-time baseline (_app_on_recompute)
+    return M._create(spark, "ivf_index", view_path, {
+        "ii_source": source_path, "ii_key": key, "ii_vec_col": vec_col,
         "ii_drift_tv_threshold": 0.25, "ii_drift_mqe_threshold": 1.5,
-    }
-    return V.create(spark, view_path, state, extra={"app": spec})
+    }, prepare=prepare)
 
 
 def _unit_rows(centroids) -> np.ndarray:
@@ -269,22 +261,30 @@ def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
         include_cols=tuple(spec.get("ii_include_cols", [])))
 
 
-def _app_on_recompute(spark, spec, head, app):
-    # heal path re-derives the CURRENT drift stats from the head (the
-    # heal already rescans the corpus); the baseline stays frozen — a
-    # heal is layout repair, never a drift absolution
-    if "ii_base_cell_counts" not in spec:
-        return app  # pre-drift index (older manifest): stay quiet
+def _app_on_recompute(spark, spec, head):
+    """The CURRENT drift stats derived from the head: per-cell counts +
+    summed quantization error. At create (no baseline in the spec yet)
+    they are also the frozen baseline — one assignment pass, already
+    O(corpus); a heal re-derives only the current twin (it already
+    rescans the corpus) and keeps the baseline — a heal is layout
+    repair, never a drift absolution."""
+    if "ii_base_cell_counts" not in spec \
+            and "ii_drift_tv_threshold" not in spec:
+        return {}  # pre-drift index (older manifest): stay quiet
     cents = _centroids(spec)
     rows = _assigned_rows(head, spec["ii_key"], spec["ii_vec_col"],
                           cents, codebooks=_codebooks(spec))
     counts, sum_qe = _cell_stats(spark, rows, spec["ii_vec_col"], cents)
-    return app | {"ii_cur_cell_counts": counts, "ii_cur_sum_qe": sum_qe}
+    cur = {"ii_cur_cell_counts": counts, "ii_cur_sum_qe": sum_qe}
+    if "ii_base_cell_counts" in spec:
+        return cur
+    return {"ii_base_cell_counts": list(counts),
+            "ii_base_sum_qe": sum_qe} | cur
 
 
-def _app_on_delta(spark, spec, ch, new_rows, app):
+def _app_on_delta(spark, spec, ch, new_rows):
     if "ii_base_cell_counts" not in spec:
-        return app
+        return {}
     cents = _centroids(spec)
     key, vec_col = spec["ii_key"], spec["ii_vec_col"]
     # ONE signed aggregation over the (already persisted) change
@@ -304,7 +304,7 @@ def _app_on_delta(spark, spec, ch, new_rows, app):
     counts, sum_qe = _cell_stats(spark, assigned, vec_col, cents,
                                  sign_col="_sgn")
     cur = [int(c) + d for c, d in zip(spec["ii_cur_cell_counts"], counts)]
-    return app | {
+    return {
         "ii_cur_cell_counts": cur,
         "ii_cur_sum_qe": float(spec["ii_cur_sum_qe"]) + sum_qe,
     }
@@ -327,7 +327,8 @@ def refresh_ivf_index(
     O(changed rows). Rollback/vacuumed-past-cursor heals by full
     recompute (same assignments — the centroids don't move, so heal
     is layout repair, never a semantic change). All structure lives
-    in the shared lifecycle (indexkind.refresh); this kind
+    in the shared lifecycle (matview._refresh_once over indexkind's
+    state/delta); this kind
     contributes assignment under the frozen quantizers plus the
     DRIFT-counter hooks: the frozen-centroid contract means recall
     decays SILENTLY under distribution drift, so every refresh rolls
@@ -337,7 +338,8 @@ def refresh_ivf_index(
     create-time baseline frozen in the spec. ivf_drift_report /
     DESCRIBE INDEX read the alarm from the manifest, zero Spark
     jobs; the documented heal is an explicit re-create."""
-    return IK.refresh(spark, "ivf_index", view_path, recompute_fraction)
+    return M._refresh_once(spark, "ivf_index", view_path,
+                           recompute_fraction)
 
 
 def ivf_drift_report(view_path: str,
@@ -408,56 +410,51 @@ def retrain_ivf_index(
     view_v = V.current_version(view_path)
     spec = IK.spec_of("ivf_index", view_path, view_v)
     key, vec_col = spec["ii_key"], spec["ii_vec_col"]
-    src = spec["ii_source"]
-    src_v = V.current_version(src)
-    df = M._read_source(spark, src, src_v)
     trained = str(spec.get("ii_trained", "explicit"))
-    if centroids is None:
-        if not trained.startswith("kmeans:"):
+
+    def prepare(df):
+        if centroids is None:
+            if not trained.startswith("kmeans:"):
+                raise ValueError(
+                    "this index was created with EXPLICIT centroids — "
+                    "pass centroids= (and codebooks= if it carries "
+                    "explicit books) to retrain_ivf_index")
+            _, c_init, c_iters = trained.split(":")
+            it = int(iters if iters is not None else c_iters)
+            cents = ivf_train_kmeans(
+                df, k=int(spec["ii_n_cells"]), iters=it, id_col=key,
+                vec_col=vec_col,
+                init=str(init if init is not None else c_init))
+            new_trained = f"kmeans:{init or c_init}:{it}"
+        else:
+            cents = _unit_rows(centroids)
+            new_trained = "explicit"
+        if cents.shape != (int(spec["ii_n_cells"]), int(spec["ii_dim"])):
             raise ValueError(
-                "this index was created with EXPLICIT centroids — "
-                "pass centroids= (and codebooks= if it carries "
-                "explicit books) to retrain_ivf_index")
-        _, c_init, c_iters = trained.split(":")
-        cents = ivf_train_kmeans(
-            df, k=int(spec["ii_n_cells"]),
-            iters=int(iters if iters is not None else c_iters),
-            id_col=key, vec_col=vec_col,
-            init=str(init if init is not None else c_init))
-        new_trained = (f"kmeans:{init or c_init}:"
-                       f"{int(iters if iters is not None else c_iters)}")
-    else:
-        cents = _unit_rows(centroids)
-        new_trained = "explicit"
-    if cents.shape != (int(spec["ii_n_cells"]), int(spec["ii_dim"])):
-        raise ValueError(
-            f"retrained centroids shape {cents.shape} != the index's "
-            f"({spec['ii_n_cells']}, {spec['ii_dim']})")
-    app = dict(spec) | {
-        "ii_centroids": _json_floats(cents),
-        "ii_trained": new_trained,
-        "ii_source_version": src_v,
-    }
-    if codebooks is not None:
-        app["ii_codebooks"] = _json_floats(_explicit_books(
-            codebooks, int(spec["ii_dim"])))
-    elif spec.get("ii_codebooks") is not None:
-        pq = spec.get("ii_pq_params")
-        if pq is None:
-            raise ValueError(
-                "this index carries EXPLICIT PQ codebooks — pass "
-                "codebooks= to retrain_ivf_index (residual books are "
-                "centroid-relative and cannot survive a retrain)")
-        app["ii_codebooks"] = _json_floats(_train_books(
-            df, key, vec_col, cents, pq))
-    state = _rows_of(app, df)
-    counts, sum_qe = _cell_stats(spark, state, vec_col, cents)
-    app |= {
-        "ii_base_cell_counts": counts, "ii_base_sum_qe": sum_qe,
-        "ii_cur_cell_counts": list(counts), "ii_cur_sum_qe": sum_qe,
-    }
-    return V.overwrite(spark, view_path, state, extra={"app": app},
-                       parent_version=view_v)
+                f"retrained centroids shape {cents.shape} != the index's "
+                f"({spec['ii_n_cells']}, {spec['ii_dim']})")
+        app = {"ii_centroids": _json_floats(cents),
+               "ii_trained": new_trained}
+        if codebooks is not None:
+            app["ii_codebooks"] = _json_floats(_explicit_books(
+                codebooks, int(spec["ii_dim"])))
+        elif spec.get("ii_codebooks") is not None:
+            pq = spec.get("ii_pq_params")
+            if pq is None:
+                raise ValueError(
+                    "this index carries EXPLICIT PQ codebooks — pass "
+                    "codebooks= to retrain_ivf_index (residual books are "
+                    "centroid-relative and cannot survive a retrain)")
+            app["ii_codebooks"] = _json_floats(_train_books(
+                df, key, vec_col, cents, pq))
+        return app
+
+    # without the baseline, the state derives a new one (the reset)
+    kept = {k: v for k, v in spec.items()
+            if not k.startswith(("ii_base_", "ii_cur_"))}
+    return M._create(spark, "ivf_index", view_path, {
+        "ii_drift_tv_threshold": 0.25, "ii_drift_mqe_threshold": 1.5,
+    } | kept, prepare=prepare, parent_version=view_v)
 
 
 def query_ivf_index(

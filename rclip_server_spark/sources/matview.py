@@ -38,6 +38,16 @@ cents-style integers for money, the repo-wide oracle rule); a group whose
 count reaches zero is dropped, so the view equals the direct groupBy of
 the source head — the invariant the oracle row `vt_agg_view_refresh`
 checks hash-exact against DuckDB.
+
+Every maintained view kind — the agg, transform, top-k, join and
+join-table views here, the near-dup pair views (neardup_view.py) and the
+text / ANN / IVF indexes (indexkind.py) — is one ``_VIEW_KINDS`` entry
+that supplies only its full ``state`` and its ``delta``. One skeleton
+runs them: ``_create`` materializes ``state`` at the source heads and
+stamps the cursors; ``_refresh_once`` does the consistent read, the
+fresh check, the heal + cost dispatch, and either the recompute (the
+same ``state``, as one overwrite) or the kind's ``delta``;
+``refresh_view`` wraps it in the OCC retry and the compaction fold.
 """
 
 from __future__ import annotations
@@ -290,7 +300,10 @@ def _changes_since_cursor(spark, src, v_from, v_to, key, multiset=False):
     would pair old×new rows per key and over-count). The transform view
     itself keeps the keyed diff: its delete-vector-by-key + reinsert
     maintenance needs per-key pairing, and its own source contract
-    already requires a unique key."""
+    already requires a unique key.
+
+    The vacuum error is a _CursorVacuumed (a RuntimeError):
+    _refresh_once heals it by recompute when a fraction is set."""
     import os as _os
 
     try:
@@ -303,7 +316,7 @@ def _changes_since_cursor(spark, src, v_from, v_to, key, multiset=False):
     except FileNotFoundError as e:
         if _os.path.exists(V._snap_path(src, v_from)):
             raise  # a different missing file — don't blame vacuum
-        raise RuntimeError(
+        raise _CursorVacuumed(
             f"view refresh needs source {src!r} manifests back to its "
             f"cursor v{v_from}, but vacuum already removed them ({e}); "
             f"either vacuum the source with keep_last/retain_seconds "
@@ -330,21 +343,56 @@ def create_agg_view(
     with least/greatest, no rescan)."""
     sum_cols = list(sum_cols or [])
     minmax_cols = list(minmax_cols or [])
-    src_v = V.current_version(source_path)
-    src_df = _read_source(spark, source_path, src_v)
-    types = {f.name: f.dataType.simpleString() for f in src_df.schema.fields}
-    _check_sum_cols_integral(sum_cols, types)
-    missing = [c for c in [key] + list(group_cols) + sum_cols + minmax_cols
-               if c not in types]
-    if missing:
-        raise ValueError(f"columns not in source schema: {missing}")
-    state = _aggregate(src_df, list(group_cols), sum_cols, minmax_cols)
-    return V.create(spark, view_path, state, extra={"app": {
+
+    def check(src_df):
+        types = {f.name: f.dataType.simpleString()
+                 for f in src_df.schema.fields}
+        _check_sum_cols_integral(sum_cols, types)
+        missing = [c for c in [key] + list(group_cols) + sum_cols
+                   + minmax_cols if c not in types]
+        if missing:
+            raise ValueError(f"columns not in source schema: {missing}")
+
+    return _create(spark, "agg", view_path, {
         "mv_source": source_path, "mv_key": key,
         "mv_group_cols": list(group_cols), "mv_sum_cols": sum_cols,
         "mv_minmax_cols": minmax_cols,
-        "mv_source_version": src_v,
-    }})
+    }, prepare=check)
+
+
+def _agg_cols(spec: dict, prefix: str) -> tuple[list, list, list]:
+    """(group_cols, sum_cols, minmax_cols) of an agg or join view spec."""
+    return (list(spec[f"{prefix}_group_cols"]),
+            list(spec[f"{prefix}_sum_cols"]),
+            list(spec.get(f"{prefix}_minmax_cols", [])))
+
+
+def _agg_state(spark, spec, frames):
+    return _aggregate(frames[0], *_agg_cols(spec, "mv")), {}
+
+
+def _agg_delta(r: "_Refresh") -> int:
+    group_cols, sum_cols, minmax_cols = _agg_cols(r.spec, "mv")
+    (src, v_from, v_to), = r.intervals
+    ch = _changes_since_cursor(r.spark, src, v_from, v_to, r.spec["mv_key"],
+                               multiset=True)
+    cur = V.read(r.spark, r.path, r.view_v, pin_schema=True)
+    if not minmax_cols:
+        # additive path consumes ch exactly ONCE (the single overwrite
+        # write) — no persist needed; change rows union straight into
+        # the stored state for ONE group-key exchange (_merge_states)
+        return r.commit(V.overwrite, _merge_states(
+            [cur, _state_rows(ch, group_cols, sum_cols,
+                              sign=_signed_change())],
+            group_cols, sum_cols).where(F.col("cnt") > 0))
+    # minmax path feeds four plan subtrees from ch; the single-source
+    # retraction set is bounded by the interval's CDC rows, so the
+    # manifest-derived bound is a sound broadcast decision
+    return r.commit(V.overwrite, _two_tier_minmax_state(
+        r.persist(ch), _read_source(r.spark, src, v_to), group_cols,
+        sum_cols, minmax_cols, cur,
+        broadcast_ok=_retraction_bound(src, v_from, v_to)
+        <= _broadcast_bound_rows(len(group_cols))))
 
 
 def refresh_agg_view(spark: SparkSession, view_path: str,
@@ -369,51 +417,7 @@ def refresh_agg_view(spark: SparkSession, view_path: str,
     rows than a from-scratch groupBy — the refresh recomputes the
     aggregate at the new cursor instead. Identical result either way;
     None forces the incremental path."""
-    # ONE consistent read: OCC parent first, then cursor + state AT that
-    # version — spec and parent from different versions would let a
-    # concurrent refresher's interval double-apply silently
-    view_v = V.current_version(view_path)
-    m = _spec(view_path, view_v, "agg")
-    src = m["mv_source"]
-    group_cols = list(m["mv_group_cols"])
-    sum_cols = list(m["mv_sum_cols"])
-    minmax_cols = list(m.get("mv_minmax_cols", []))
-    v_from = int(m["mv_source_version"])
-    v_to = V.current_version(src)
-    if v_to == v_from:
-        return view_v
-    new_extra = {"app": {
-        "mv_source": src, "mv_key": m["mv_key"],
-        "mv_group_cols": group_cols, "mv_sum_cols": sum_cols,
-        "mv_minmax_cols": minmax_cols,
-        "mv_source_version": v_to,
-    }}
-    if _dispatch_recompute(recompute_fraction,
-                           [(src, v_from, v_to)])[0]:
-        state = _aggregate(_read_source(spark, src, v_to), group_cols,
-                           sum_cols, minmax_cols)
-        return V.overwrite(spark, view_path, state, extra=new_extra,
-                           parent_version=view_v)
-    ch = _changes_since_cursor(spark, src, v_from, v_to, m["mv_key"],
-                               multiset=True)
-    cur = V.read(spark, view_path, view_v, pin_schema=True)
-    if not minmax_cols:
-        # additive path consumes ch exactly ONCE (the single overwrite
-        # write) — no persist needed; change rows union straight into
-        # the stored state for ONE group-key exchange (_merge_states)
-        merged = _merge_states(
-            [cur, _state_rows(ch, group_cols, sum_cols,
-                              sign=_signed_change())],
-            group_cols, sum_cols).where(F.col("cnt") > 0)
-        return V.overwrite(spark, view_path, merged, extra=new_extra,
-                           parent_version=view_v)
-    ch = ch.persist()  # minmax path feeds four plan subtrees from ch
-    try:
-        return _refresh_minmax(spark, view_path, view_v, ch, src,
-                               v_from, v_to, group_cols, sum_cols,
-                               minmax_cols, cur, new_extra)
-    finally:
-        ch.unpersist()
+    return _refresh_once(spark, "agg", view_path, recompute_fraction)
 
 
 def _two_tier_minmax_state(ch, recomp_src, group_cols, sum_cols,
@@ -459,20 +463,6 @@ def _two_tier_minmax_state(ch, recomp_src, group_cols, sum_cols,
     )
 
 
-def _refresh_minmax(spark, view_path, view_v, ch, src, v_from, v_to,
-                    group_cols, sum_cols, minmax_cols, cur, new_extra):
-    """Single-source minmax tier: the retraction set is bounded by the
-    interval's CDC rows, so the manifest-derived bound is a sound
-    broadcast decision."""
-    merged = _two_tier_minmax_state(
-        ch, _read_source(spark, src, v_to), group_cols, sum_cols,
-        minmax_cols, cur,
-        broadcast_ok=_retraction_bound(src, v_from, v_to)
-        <= _broadcast_bound_rows(len(group_cols)))
-    return V.overwrite(spark, view_path, merged, extra=new_extra,
-                       parent_version=view_v)
-
-
 def read_agg_view(spark: SparkSession, view_path: str,
                   version: int | None = None) -> DataFrame:
     """The view state at a version (default head) — a plain versioned
@@ -503,15 +493,42 @@ def create_transform_view(
     (transform of inserts + a delete vector for retracted keys), and the
     banded near-dup join consumes the index without recomputing
     signatures for the corpus (dedup.minhash_near_dup_incremental)."""
-    src_v = V.current_version(source_path)
-    state = transform(_read_source(spark, source_path, src_v))
-    if key not in state.columns:
-        raise ValueError(f"transform must preserve key column {key!r}; "
-                         f"got {state.columns}")
-    return V.create(spark, view_path, state, extra={"app": {
+    return _create(spark, "transform", view_path, {
         "tv_source": source_path, "tv_key": key, "tv_name": name,
-        "tv_source_version": src_v,
-    }})
+    }, transform)
+
+
+def _transform_state(spark, spec, frames, transform):
+    state = transform(frames[0])
+    if spec["tv_key"] not in state.columns:
+        raise ValueError(f"transform must preserve key column "
+                         f"{spec['tv_key']!r}; got {state.columns}")
+    return state, {}
+
+
+def _transform_delta(r: "_Refresh", transform) -> int:
+    key = r.spec["tv_key"]
+    (src, v_from, v_to), = r.intervals
+    ch = r.persist(_changes_since_cursor(r.spark, src, v_from, v_to, key))
+    retract_keys = (
+        ch.where(F.col("_change_type").isin(*_RETRACTING))
+        .select(key).distinct()
+    )
+    ins_rows = (
+        ch.where(F.col("_change_type").isin(*_INSERTING))
+        .drop("_change_type")
+    )
+    n_ret = retract_keys.limit(1).count()
+    new_state = transform(ins_rows)
+    if n_ret:
+        # one commit: vector + transformed segment (the segment may
+        # be empty — cheap, and the cursor must advance regardless)
+        return r.commit(V.delete_and_append, retract_keys, key, new_state)
+    # insert-only interval (the common ingest case): one append —
+    # empty when the inserts transform to zero view rows (the cursor
+    # still advances; a never-advancing cursor would make every later
+    # refresh re-diff a growing interval)
+    return r.commit(V.append, new_state)
 
 
 def refresh_transform_view(
@@ -536,64 +553,14 @@ def refresh_transform_view(
     partial was published). Many refreshes accrete segments + vectors —
     versioned.compact() folds the view back down without touching the
     spec (the app namespace carries through every commit), and
-    refresh_view(auto_compact=True) runs that fold inline."""
-    # ONE consistent read: OCC parent first, spec (cursor) AT it
-    view_v = V.current_version(view_path)
-    spec = _spec(view_path, view_v, "transform")
-    if spec["tv_name"] != name:
-        raise ValueError(
-            f"refresh with transform {name!r} but the view was created "
-            f"with {spec['tv_name']!r} — mixing transforms would corrupt "
-            f"the view")
-    src = spec["tv_source"]
-    key = spec["tv_key"]
-    v_from = int(spec["tv_source_version"])
-    v_to = V.current_version(src)
-    if v_to == v_from:
-        return view_v
-    # cost-based dispatch (the refresh_agg_view contract): a rewriting
-    # interval whose CDC scan bound exceeds fraction × head rows
-    # re-transforms the head as ONE overwrite — identical rows, one
-    # scan, and the overwrite resets the view's segment accretion for
-    # free (no vector, no compaction debt)
-    if _dispatch_recompute(recompute_fraction,
-                           [(src, v_from, v_to)])[0]:
-        state = transform(_read_source(spark, src, v_to))
-        if key not in state.columns:
-            raise ValueError(
-                f"transform must preserve key column {key!r}; "
-                f"got {state.columns}")
-        return V.overwrite(spark, view_path, state,
-                           extra={"app": dict(spec)
-                                  | {"tv_source_version": v_to}},
-                           parent_version=view_v)
-    ch = _changes_since_cursor(spark, src, v_from, v_to, key).persist()
-    try:
-        retract_keys = (
-            ch.where(F.col("_change_type").isin(*_RETRACTING))
-            .select(key).distinct()
-        )
-        ins_rows = (
-            ch.where(F.col("_change_type").isin(*_INSERTING))
-            .drop("_change_type")
-        )
-        new_app = dict(spec) | {"tv_source_version": v_to}
-        n_ret = retract_keys.limit(1).count()
-        new_state = transform(ins_rows)
-        if n_ret:
-            # one commit: vector + transformed segment (the segment may
-            # be empty — cheap, and the cursor must advance regardless)
-            return V.delete_and_append(
-                spark, view_path, retract_keys, key, new_state,
-                extra={"app": new_app}, parent_version=view_v)
-        # insert-only interval (the common ingest case): one append —
-        # empty when the inserts transform to zero view rows (the
-        # cursor still advances; a never-advancing cursor would make
-        # every later refresh re-diff a growing interval)
-        return V.append(spark, view_path, new_state,
-                        extra={"app": new_app}, parent_version=view_v)
-    finally:
-        ch.unpersist()
+    refresh_view(auto_compact=True) runs that fold inline.
+
+    ``recompute_fraction`` is the refresh_agg_view cost dispatch: an
+    interval whose CDC scan bound exceeds fraction × head rows
+    re-transforms the head as ONE overwrite — identical rows, one scan,
+    and the overwrite resets the view's segment accretion for free."""
+    return _refresh_once(spark, "transform", view_path, recompute_fraction,
+                         transform, name)
 
 
 # ---------------------------------------------------------------------------
@@ -624,19 +591,18 @@ def create_topk_view(
     on key ASC, so the ranking is total and oracle-exact."""
     if int(k) < 1:
         raise ValueError(f"k must be >= 1; got {k}")
-    src_v = V.current_version(source_path)
-    src_df = _read_source(spark, source_path, src_v)
-    cols = {f.name for f in src_df.schema.fields}
-    missing = [c for c in list(group_cols) + [key, score_col]
-               if c not in cols]
-    if missing:
-        raise ValueError(f"columns not in source schema: {missing}")
-    state = _topk_of(src_df, list(group_cols), key, score_col, int(k))
-    return V.create(spark, view_path, state, extra={"app": {
+
+    def check(src_df):
+        missing = [c for c in list(group_cols) + [key, score_col]
+                   if c not in src_df.columns]
+        if missing:
+            raise ValueError(f"columns not in source schema: {missing}")
+
+    return _create(spark, "topk", view_path, {
         "kv_source": source_path, "kv_key": key,
         "kv_group_cols": list(group_cols), "kv_score_col": score_col,
-        "kv_k": int(k), "kv_source_version": src_v,
-    }})
+        "kv_k": int(k),
+    }, prepare=check)
 
 
 def _topk_of(df: DataFrame, group_cols: list[str], key: str,
@@ -652,6 +618,54 @@ def _topk_of(df: DataFrame, group_cols: list[str], key: str,
     )
 
 
+def _spec_topk(df: DataFrame, spec: dict) -> DataFrame:
+    return _topk_of(df, list(spec["kv_group_cols"]), spec["kv_key"],
+                    spec["kv_score_col"], int(spec["kv_k"]))
+
+
+def _topk_state(spark, spec, frames):
+    return _spec_topk(frames[0], spec), {}
+
+
+def _topk_delta(r: "_Refresh") -> int:
+    key, score_col = r.spec["kv_key"], r.spec["kv_score_col"]
+    group_cols = list(r.spec["kv_group_cols"])
+    (src, v_from, v_to), = r.intervals
+    ch = r.persist(_changes_since_cursor(r.spark, src, v_from, v_to, key,
+                                         multiset=True))
+    ret_groups = _hint_ret_groups(
+        ch.where(F.col("_change_type").isin(*_RETRACTING))
+        .select(*group_cols).distinct(),
+        src, v_from, v_to)
+    ins = (
+        ch.where(F.col("_change_type").isin(*_INSERTING))
+        .select(*group_cols, key, score_col)
+    )
+    cur = V.read(r.spark, r.path, r.view_v, pin_schema=True)
+    # DETERMINISTIC skip of the retraction tier (not AQE empty-relation
+    # pruning): the common insert-only ingest refresh must never plan a
+    # source-snapshot scan
+    if not ret_groups.limit(1).count():
+        return r.commit(V.overwrite, _spec_topk(
+            cur.select(*group_cols, key, score_col).unionByName(ins),
+            r.spec))
+
+    def _minus_affected(df: DataFrame) -> DataFrame:
+        return _minus_groups(df, ret_groups, group_cols)
+
+    # insert-only groups: k-bounded re-rank of (current top-k ∪ new)
+    survivors = _minus_affected(cur).select(*group_cols, key, score_col)
+    regrown = _spec_topk(survivors.unionByName(_minus_affected(ins)),
+                         r.spec)
+    # affected groups: recompute from the pinned snapshot
+    src_at = _read_source(r.spark, src, v_to).alias("s")
+    recomp = _spec_topk(
+        src_at.join(ret_groups.alias("g"),
+                    _nullsafe_cond("s", "g", group_cols), "left_semi"),
+        r.spec)
+    return r.commit(V.overwrite, regrown.unionByName(recomp))
+
+
 def refresh_topk_view(spark: SparkSession, view_path: str,
                       recompute_fraction: float | None = _RECOMPUTE_BOUND_FRACTION) -> int:
     """Advance a top-k view to the source head (one-consistent-read +
@@ -660,72 +674,7 @@ def refresh_topk_view(spark: SparkSession, view_path: str,
     refresh_agg_view: when the CDC read would scan more than
     fraction × head rows, rerank from the head snapshot instead —
     identical result (the initial materialization IS that ranking)."""
-    view_v = V.current_version(view_path)
-    spec = _spec(view_path, view_v, "topk")
-    src = spec["kv_source"]
-    key = spec["kv_key"]
-    group_cols = list(spec["kv_group_cols"])
-    score_col = spec["kv_score_col"]
-    k = int(spec["kv_k"])
-    v_from = int(spec["kv_source_version"])
-    v_to = V.current_version(src)
-    if v_to == v_from:
-        return view_v
-    if _dispatch_recompute(recompute_fraction,
-                           [(src, v_from, v_to)])[0]:
-        state = _topk_of(_read_source(spark, src, v_to), group_cols,
-                         key, score_col, k)
-        return V.overwrite(spark, view_path, state,
-                           extra={"app": dict(spec)
-                                  | {"kv_source_version": v_to}},
-                           parent_version=view_v)
-    ch = _changes_since_cursor(spark, src, v_from, v_to, key,
-                               multiset=True).persist()
-    try:
-        new_app = dict(spec) | {"kv_source_version": v_to}
-        ret_groups = _hint_ret_groups(
-            ch.where(F.col("_change_type").isin(*_RETRACTING))
-            .select(*group_cols).distinct(),
-            src, v_from, v_to)
-        ins = (
-            ch.where(F.col("_change_type").isin(*_INSERTING))
-            .select(*group_cols, key, score_col)
-        )
-        cur = V.read(spark, view_path, view_v, pin_schema=True)
-        # DETERMINISTIC skip of the retraction tier (not AQE empty-
-        # relation pruning): the common insert-only ingest refresh must
-        # never plan a source-snapshot scan
-        n_ret = ret_groups.limit(1).count()
-        if not n_ret:
-            merged = _topk_of(
-                cur.select(*group_cols, key, score_col).unionByName(ins),
-                group_cols, key, score_col, k)
-            return V.overwrite(spark, view_path, merged,
-                               extra={"app": new_app},
-                               parent_version=view_v)
-
-        def _minus_affected(df: DataFrame) -> DataFrame:
-            return _minus_groups(df, ret_groups, group_cols)
-
-        # insert-only groups: k-bounded re-rank of (current top-k ∪ new)
-        survivors = _minus_affected(cur).select(*group_cols, key, score_col)
-        newcomers = _minus_affected(ins)
-        regrown = _topk_of(survivors.unionByName(newcomers),
-                           group_cols, key, score_col, k)
-        # affected groups: recompute from the pinned snapshot
-        src_at = _read_source(spark, src, v_to).alias("s")
-        recomp = _topk_of(
-            src_at.join(ret_groups.alias("g"),
-                        _nullsafe_cond("s", "g", group_cols), "left_semi"),
-            group_cols, key, score_col, k)
-        merged = regrown.unionByName(recomp)
-        # the spec MUST live under the "app" namespace: a top-level extra
-        # would leave the parent's app (stale cursor) to carry forward,
-        # and the next refresh would re-apply an overlapping interval
-        return V.overwrite(spark, view_path, merged,
-                           extra={"app": new_app}, parent_version=view_v)
-    finally:
-        ch.unpersist()
+    return _refresh_once(spark, "topk", view_path, recompute_fraction)
 
 
 # ---------------------------------------------------------------------------
@@ -814,31 +763,13 @@ def _interval_append_only(src: str, v_from: int, v_to: int) -> bool:
                for v in range(v_from + 1, v_to + 1))
 
 
-def _delta_change_frames(spark, lsrc, rsrc,
-                         l_from, l_to, r_from, r_to, persisted):
-    """The two sides' multiset CDC frames for a join-view refresh
-    interval, persisted (each feeds at least two plan subtrees) and
-    appended to ``persisted`` for the caller's finally-block. A side
-    whose cursor is already at head returns None."""
-    ch_l = ch_r = None
-    if l_to > l_from:
-        ch_l = _changes_since_cursor(
-            spark, lsrc, l_from, l_to, None, multiset=True).persist()
-        persisted.append(ch_l)
-    if r_to > r_from:
-        ch_r = _changes_since_cursor(
-            spark, rsrc, r_from, r_to, None, multiset=True).persist()
-        persisted.append(ch_r)
-    return ch_l, ch_r
-
-
 def _delta_pair_frames(spark, lsrc, rsrc, on, ch_l, ch_r,
                        l_bound, r_bound, l_to, r_from):
     """The signed delta rule's two pair terms, shared by BOTH join-view
     flavors: ΔL ⋈ key-pruned R@r_from, and L@l_to key-pruned ⋈ ΔR.
     ``on`` is the normalized join-column list (composite keys join on
     the full tuple); ``ch_l``/``ch_r`` are the persisted CDC frames
-    from _delta_change_frames (None = side unchanged);
+    from _join_delta_frames (None = side unchanged);
     ``l_bound``/``r_bound`` are each side's _change_bound, computed
     ONCE by the refresher and passed to every consumer (the bound can
     open parquet footers on legacy manifests — real I/O)."""
@@ -981,27 +912,83 @@ def create_join_view(
     on = _on_cols(on)
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    l_v = V.current_version(left_path)
-    r_v = V.current_version(right_path)
-    l_df = _read_source(spark, left_path, l_v)
-    r_df = _read_source(spark, right_path, r_v)
-    _validate_join_sources(l_df, r_df, on)
-    types = {f.name: f.dataType.simpleString()
-             for f in l_df.schema.fields + r_df.schema.fields}
-    _check_sum_cols_integral(sum_cols, types)
-    missing = [c for c in group_cols + sum_cols + minmax_cols
-               if c not in types]
-    if missing:
-        raise ValueError(f"columns not in either source schema: {missing}")
-    state = _aggregate(l_df.join(r_df, on, how), group_cols, sum_cols,
-                       minmax_cols)
-    return V.create(spark, view_path, state, extra={"app": {
+
+    def check(l_df, r_df):
+        _validate_join_sources(l_df, r_df, on)
+        types = {f.name: f.dataType.simpleString()
+                 for f in l_df.schema.fields + r_df.schema.fields}
+        _check_sum_cols_integral(sum_cols, types)
+        missing = [c for c in group_cols + sum_cols + minmax_cols
+                   if c not in types]
+        if missing:
+            raise ValueError(
+                f"columns not in either source schema: {missing}")
+
+    return _create(spark, "join", view_path, {
         "jv_left": left_path, "jv_right": right_path, "jv_on": on,
         "jv_left_key": left_key, "jv_right_key": right_key,
         "jv_group_cols": group_cols, "jv_sum_cols": sum_cols,
         "jv_minmax_cols": minmax_cols, "jv_how": how,
-        "jv_left_version": l_v, "jv_right_version": r_v,
-    }})
+    }, prepare=check)
+
+
+def _join_of(spec: dict, prefix: str, left: DataFrame,
+             right: DataFrame) -> DataFrame:
+    """The view's equi-join of its two sources (join and join-table
+    specs)."""
+    return left.join(right, _on_cols(spec[f"{prefix}_on"]),
+                     spec.get(f"{prefix}_how", "inner"))
+
+
+def _join_delta_frames(r: "_Refresh", prefix: str) -> tuple[list, bool]:
+    """The signed delta frames of a join-kind refresh interval, shared
+    by BOTH join-view flavors: each side's multiset CDC frame
+    (persisted — each feeds at least two plan subtrees; None for a side
+    whose cursor is at head), the two pair terms, and for the LEFT
+    flavor the null-extension terms. Each side's change bound is
+    computed at most ONCE per refresh (it can open parquet footers on
+    legacy manifests — real I/O): the dispatch's bounds when it
+    computed them, else here. Returns (frames, whether the right change
+    frame was absent)."""
+    on = _on_cols(r.spec[f"{prefix}_on"])
+    (lsrc, l_from, l_to), (rsrc, r_from, r_to) = r.intervals
+    l_bound, r_bound = r.bounds if r.bounds is not None else [
+        _change_bound_safe(s, a, b) if b > a else 0
+        for s, a, b in r.intervals]
+    ch_l, ch_r = [
+        r.persist(_changes_since_cursor(r.spark, s, a, b, None,
+                                        multiset=True)) if b > a else None
+        for s, a, b in r.intervals]
+    frames = _delta_pair_frames(r.spark, lsrc, rsrc, on, ch_l, ch_r,
+                                l_bound, r_bound, l_to, r_from)
+    if r.spec.get(f"{prefix}_how", "inner") == "left":
+        r_fields = _read_source(r.spark, rsrc, r_to).schema.fields
+        frames = frames + _delta_nullext_frames(
+            r.spark, lsrc, rsrc, on, r_fields, ch_l, ch_r,
+            l_bound, r_bound, l_to, r_from)
+    return frames, ch_r is None
+
+
+def _jv_state(spark, spec, frames):
+    return _aggregate(_join_of(spec, "jv", *frames),
+                      *_agg_cols(spec, "jv")), {}
+
+
+def _jv_delta(r: "_Refresh") -> int:
+    group_cols, sum_cols, minmax_cols = _agg_cols(r.spec, "jv")
+    pair_frames, _ = _join_delta_frames(r, "jv")
+    cur = V.read(r.spark, r.path, r.view_v, pin_schema=True)
+    if not minmax_cols:
+        # ALL pair terms + the stored state merge in ONE union + ONE
+        # group-key exchange (the old per-term aggregate+full-outer fold
+        # paid 3 exchanges per term)
+        return r.commit(V.overwrite, _merge_states(
+            [cur] + [_state_rows(p, group_cols, sum_cols,
+                                 sign=_signed_change())
+                     for p in pair_frames],
+            group_cols, sum_cols).where(F.col("cnt") > 0))
+    return _refresh_join_minmax(r, pair_frames, cur, group_cols, sum_cols,
+                                minmax_cols)
 
 
 def _head_rows(src: str, v_to: int) -> int:
@@ -1014,9 +1001,9 @@ def _change_bound_safe(src: str, v_from: int, v_to: int) -> float:
     CDC read is IMPOSSIBLE — its cost is infinite, so dispatch picks
     recompute, which needs no history and SELF-HEALS the view from the
     head (a refresh scheduler keeps running through an over-eager
-    vacuum). The default no-dispatch path still raises the named
-    vacuum-contract error — self-healing is something the operator
-    opts into together with the cost model."""
+    vacuum). With fraction None the delta's CDC read raises the named
+    vacuum-contract error instead — self-healing is something the
+    operator opts into together with the cost model."""
     try:
         return _change_bound(src, v_from, v_to)
     except FileNotFoundError:
@@ -1045,10 +1032,10 @@ def _source_rolled_back(srcs_cursors_heads, fraction) -> bool:
         f"head) or recreate the view")
 
 
-def _dispatch_recompute(fraction, intervals):
-    """The ONE heal + cost decision every refresher shares.
-    ``intervals`` is [(src, cursor, head), ...]. Returns
-    ``(recompute, bounds)``:
+def _dispatch_recompute(fraction, intervals, cost_model: bool = True):
+    """The ONE heal + cost decision every refresh takes (in
+    _refresh_once). ``intervals`` is [(src, cursor, head), ...].
+    Returns ``(recompute, bounds)``:
 
     * recompute=True, bounds=None — a source rolled back below its
       cursor and ``fraction`` is set: self-heal from the heads (with
@@ -1057,11 +1044,12 @@ def _dispatch_recompute(fraction, intervals):
     * recompute per the row-scan cost model, bounds = the per-interval
       change bounds (computed once here — callers that also key-prune
       reuse them instead of re-walking manifests/footers).
-    * fraction None (and no rollback): (False, None) — pure
-      incremental, zero bound I/O."""
+    * fraction None, or a kind whose recompute only heals
+      (``cost_model`` False), and no rollback: (False, None) — the
+      incremental path, zero bound I/O."""
     if _source_rolled_back(intervals, fraction):
         return True, None
-    if fraction is None:
+    if fraction is None or not cost_model:
         return False, None
     bounds = [_change_bound_safe(s, a, b) if b > a else 0
               for s, a, b in intervals]
@@ -1123,75 +1111,11 @@ def refresh_join_view(spark: SparkSession, view_path: str,
     one scan instead of two-plus.
 
     One-consistent-read + OCC parent pinning, as refresh_agg_view."""
-    view_v = V.current_version(view_path)
-    spec = _spec(view_path, view_v, "join")
-    lsrc, rsrc = spec["jv_left"], spec["jv_right"]
-    on = _on_cols(spec["jv_on"])
-    how = spec.get("jv_how", "inner")
-    group_cols = list(spec["jv_group_cols"])
-    sum_cols = list(spec["jv_sum_cols"])
-    minmax_cols = list(spec.get("jv_minmax_cols", []))
-    l_from, r_from = int(spec["jv_left_version"]), int(spec["jv_right_version"])
-    l_to, r_to = V.current_version(lsrc), V.current_version(rsrc)
-    if l_to == l_from and r_to == r_from:
-        return view_v
-    new_extra = {"app": dict(spec) | {"jv_left_version": l_to,
-                                      "jv_right_version": r_to}}
-    # each side's change bound is computed at most ONCE per refresh
-    # (it can open parquet footers on legacy manifests — real I/O):
-    # _dispatch_recompute computes it for the cost decision and hands
-    # it back for the incremental path's key-pruning and flip guard
-    recompute, bounds = _dispatch_recompute(
-        recompute_fraction, [(lsrc, l_from, l_to), (rsrc, r_from, r_to)])
-    if recompute:
-        state = _aggregate(
-            _read_source(spark, lsrc, l_to)
-            .join(_read_source(spark, rsrc, r_to), on, how),
-            group_cols, sum_cols, minmax_cols)
-        return V.overwrite(spark, view_path, state, extra=new_extra,
-                           parent_version=view_v)
-    if bounds is None:
-        bounds = [_change_bound_safe(lsrc, l_from, l_to)
-                  if l_to > l_from else 0,
-                  _change_bound_safe(rsrc, r_from, r_to)
-                  if r_to > r_from else 0]
-    l_bound, r_bound = bounds
-    persisted = []
-    try:
-        ch_l, ch_r = _delta_change_frames(
-            spark, lsrc, rsrc, l_from, l_to, r_from, r_to, persisted)
-        pair_frames = _delta_pair_frames(
-            spark, lsrc, rsrc, on, ch_l, ch_r,
-            l_bound, r_bound, l_to, r_from)
-        if how == "left":
-            r_fields = _read_source(spark, rsrc, r_to).schema.fields
-            pair_frames = pair_frames + _delta_nullext_frames(
-                spark, lsrc, rsrc, on, r_fields, ch_l, ch_r,
-                l_bound, r_bound, l_to, r_from)
-        cur = V.read(spark, view_path, view_v, pin_schema=True)
-        if not minmax_cols:
-            # ALL pair terms + the stored state merge in ONE union +
-            # ONE group-key exchange (the old per-term
-            # aggregate+full-outer fold paid 3 exchanges per term)
-            merged = _merge_states(
-                [cur] + [_state_rows(p, group_cols, sum_cols,
-                                     sign=_signed_change())
-                         for p in pair_frames],
-                group_cols, sum_cols).where(F.col("cnt") > 0)
-            return V.overwrite(spark, view_path, merged, extra=new_extra,
-                               parent_version=view_v)
-        return _refresh_join_minmax(
-            spark, view_path, view_v, pair_frames, persisted, cur,
-            lsrc, rsrc, on, l_to, r_to, group_cols, sum_cols,
-            minmax_cols, new_extra, how)
-    finally:
-        for df in persisted:
-            df.unpersist()
+    return _refresh_once(spark, "join", view_path, recompute_fraction)
 
 
-def _refresh_join_minmax(spark, view_path, view_v, pair_frames, persisted,
-                         cur, lsrc, rsrc, on, l_to, r_to, group_cols,
-                         sum_cols, minmax_cols, new_extra, how="inner"):
+def _refresh_join_minmax(r: "_Refresh", pair_frames, cur, group_cols,
+                         sum_cols, minmax_cols) -> int:
     """The join view's non-retractable tier — the shared two-tier
     skeleton (_two_tier_minmax_state) applied at PAIR level: any
     retracting delta pair marks its group affected (this is exhaustive —
@@ -1221,8 +1145,7 @@ def _refresh_join_minmax(spark, view_path, view_v, pair_frames, persisted,
     pairs = frames[0]
     for p in frames[1:]:
         pairs = pairs.unionByName(p)
-    pairs = pairs.persist()  # feeds ret_groups, ins, and two anti-joins
-    persisted.append(pairs)
+    pairs = r.persist(pairs)  # feeds ret_groups, ins, and two anti-joins
     ret_cap = _broadcast_bound_rows(len(group_cols))
     n_ret_capped = (
         pairs.where(F.col("_change_type").isin(*_RETRACTING))
@@ -1230,19 +1153,16 @@ def _refresh_join_minmax(spark, view_path, view_v, pair_frames, persisted,
     )
     if not n_ret_capped:
         ins = pairs.where(F.col("_change_type").isin(*_INSERTING))
-        merged = _merge_states(
+        return r.commit(V.overwrite, _merge_states(
             [cur, _state_rows(ins, group_cols, sum_cols, minmax_cols)],
             group_cols, sum_cols, minmax_cols
-        ).where(F.col("cnt") > 0)
-        return V.overwrite(spark, view_path, merged, extra=new_extra,
-                           parent_version=view_v)
-    joined_at = _read_source(spark, lsrc, l_to).join(
-        _read_source(spark, rsrc, r_to), on, how)
-    merged = _two_tier_minmax_state(
+        ).where(F.col("cnt") > 0))
+    (lsrc, _, l_to), (rsrc, _, r_to) = r.intervals
+    joined_at = _join_of(r.spec, "jv", _read_source(r.spark, lsrc, l_to),
+                         _read_source(r.spark, rsrc, r_to))
+    return r.commit(V.overwrite, _two_tier_minmax_state(
         pairs, joined_at, group_cols, sum_cols, minmax_cols, cur,
-        broadcast_ok=n_ret_capped <= ret_cap)
-    return V.overwrite(spark, view_path, merged, extra=new_extra,
-                       parent_version=view_v)
+        broadcast_ok=n_ret_capped <= ret_cap))
 
 
 def _spec_pair_cols(df: DataFrame, group_cols, sum_cols,
@@ -1289,7 +1209,7 @@ def refresh_view(spark: SparkSession, view_path: str,
                  auto_compact: bool = False,
                  compact_threshold: int = 32) -> int:
     """THE refresh entry for every maintained view kind: advance the
-    view to its sources' heads through its _VIEW_KINDS refresher.
+    view to its sources' heads through _refresh_once.
     Transform views need their function — pass ``transforms`` mapping
     view path → (transform_fn, name), the pair refresh_transform_view
     takes. Each attempt runs under the OCC rebase loop
@@ -1312,10 +1232,9 @@ def refresh_view(spark: SparkSession, view_path: str,
             raise ValueError(
                 f"{view_path} is a transform view — its function is "
                 f"application code; pass transforms={{path: (fn, name)}}")
-    refresh = _VIEW_KINDS[kind].refresh
     out_v = V.with_retry(
-        lambda: refresh(spark, view_path, *fn_and_name,
-                        recompute_fraction=recompute_fraction),
+        lambda: _refresh_once(spark, kind, view_path, recompute_fraction,
+                              *fn_and_name),
         max_retries)
     if auto_compact:
         out_v = V.maybe_compact(spark, view_path, compact_threshold)
@@ -1532,36 +1451,33 @@ def create_join_table_view(
     on = _on_cols(on)
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    l_v = V.current_version(left_path)
-    r_v = V.current_version(right_path)
-    l_df = _read_source(spark, left_path, l_v)
-    r_df = _read_source(spark, right_path, r_v)
-    _validate_join_sources(l_df, r_df, on)
-    # enforce the documented key contract at create time: a NULL row
-    # identity would make pair keys collide (and the delete vector
-    # delete the wrong row); refresh-time NULLs hit the sentinel below.
-    # ONE job for both sides (union of limit-1 probes), not two.
-    bad = (
-        l_df.where(F.col(left_key).isNull())
-        .select(F.lit("left").alias("side")).limit(1)
-        .unionByName(
-            r_df.where(F.col(right_key).isNull())
-            .select(F.lit("right").alias("side")).limit(1))
-        .collect()
-    )
-    if bad:
-        side = bad[0]["side"]
-        key = left_key if side == "left" else right_key
-        raise ValueError(
-            f"{side} key {key!r} has NULL values — join table views "
-            f"need non-null unique row identities on both sources")
-    state = _with_pair_key(l_df.join(r_df, on, how), left_key, right_key)
-    return V.create(spark, view_path, state, extra={"app": {
+
+    def check(l_df, r_df):
+        _validate_join_sources(l_df, r_df, on)
+        # enforce the documented key contract at create time: a NULL row
+        # identity would make pair keys collide (and the delete vector
+        # delete the wrong row); refresh-time NULLs hit the sentinel
+        # below. ONE job for both sides (union of limit-1 probes).
+        bad = (
+            l_df.where(F.col(left_key).isNull())
+            .select(F.lit("left").alias("side")).limit(1)
+            .unionByName(
+                r_df.where(F.col(right_key).isNull())
+                .select(F.lit("right").alias("side")).limit(1))
+            .collect()
+        )
+        if bad:
+            side = bad[0]["side"]
+            key = left_key if side == "left" else right_key
+            raise ValueError(
+                f"{side} key {key!r} has NULL values — join table views "
+                f"need non-null unique row identities on both sources")
+
+    return _create(spark, "join_table", view_path, {
         "jt_left": left_path, "jt_right": right_path, "jt_on": on,
         "jt_left_key": left_key, "jt_right_key": right_key,
         "jt_how": how,
-        "jt_left_version": l_v, "jt_right_version": r_v,
-    }})
+    }, prepare=check)
 
 
 def _with_pair_key(pairs: DataFrame, left_key: str,
@@ -1579,56 +1495,8 @@ def _with_pair_key(pairs: DataFrame, left_key: str,
         F.concat(_k(left_key), F.lit(_PAIR_SEP), _k(right_key)))
 
 
-def _jt_assemble_delta(spark, lsrc, rsrc, on, how, bounds, interval,
-                       persisted):
-    """Stage 1 of the join-table refresh — the interval's RAW signed
-    delta pairs: the aggregate join view's two pair terms (ΔL⋈R_old +
-    L_new⋈ΔR, multiset feeds), plus the null-extension terms for the
-    LEFT flavor, unioned with allowMissingColumns (source schema
-    evolution between the cursors widens one term's delta columns —
-    mergeSchema semantics, the absent side reads NULL). Returns
-    (pairs, ch_r_absent): whether the right change frame was empty is
-    an input to the append-only fast-path decision."""
-    l_from, l_to, r_from, r_to = interval
-    ch_l, ch_r = _delta_change_frames(
-        spark, lsrc, rsrc, l_from, l_to, r_from, r_to, persisted)
-    if bounds is None:
-        bounds = [_change_bound_safe(lsrc, l_from, l_to)
-                  if ch_l is not None else 0,
-                  _change_bound_safe(rsrc, r_from, r_to)
-                  if ch_r is not None else 0]
-    l_bound, r_bound = bounds
-    pair_frames = _delta_pair_frames(
-        spark, lsrc, rsrc, on, ch_l, ch_r, l_bound, r_bound,
-        l_to, r_from)
-    if how == "left":
-        r_fields = _read_source(spark, rsrc, r_to).schema.fields
-        pair_frames = pair_frames + _delta_nullext_frames(
-            spark, lsrc, rsrc, on, r_fields, ch_l, ch_r,
-            l_bound, r_bound, l_to, r_from)
-    pairs = pair_frames[0]
-    for p in pair_frames[1:]:
-        pairs = pairs.unionByName(p, allowMissingColumns=True)
-    return pairs, ch_r is None
-
-
-def _jt_append_only(lsrc, rsrc, interval, how, ch_r_absent) -> bool:
-    """Fast-path gate — a provably append-only interval on BOTH sides
-    (manifest-only check): every CDC row is +1 and no cross-term
-    duplicate pair can exist (term 1 pairs use R_old, term 2 a NEW
-    right row), so the netting shuffle is skipped and the raw pairs
-    commit directly. The LEFT flavor additionally needs the right
-    cursor UNCHANGED: a right append gives keys their first match,
-    which RETRACTS pre-existing null-extension rows (term B emits
-    deletes even though both sources only appended)."""
-    l_from, l_to, r_from, r_to = interval
-    return (_interval_append_only(lsrc, l_from, l_to)
-            and _interval_append_only(rsrc, r_from, r_to)
-            and (how == "inner" or ch_r_absent))
-
-
-def _jt_net_and_split(pairs, lk, rk, persisted):
-    """Stage 2 — NET the raw delta by full row (sum of ±1 per distinct
+def _jt_net_and_split(pairs, lk, rk, r: "_Refresh"):
+    """NET the raw delta by full row (sum of ±1 per distinct
     pair content). Load-bearing, not an optimization: in a both-sides-
     advanced interval a left-insert ⋈ right-deleted-row pair appears
     as +1 in term 1 and −1 in term 2 with IDENTICAL content, and
@@ -1638,13 +1506,10 @@ def _jt_net_and_split(pairs, lk, rk, persisted):
     at most one −1 row (the old content) and one +1 row (the new)
     remain. Returns (ret_keys, ins_rows)."""
     row_cols = [c for c in pairs.columns if c != "_change_type"]
-    netted = (
+    netted = r.persist(
         pairs.groupBy(*row_cols)
         .agg(F.sum(_signed_change()).alias("_net"))
-        .where(F.col("_net") != 0)
-        .persist()
-    )
-    persisted.append(netted)
+        .where(F.col("_net") != 0))
     ret_keys = _with_pair_key(
         netted.where(F.col("_net") < 0), lk, rk).select(_PAIR_KEY)
     ins_rows = _with_pair_key(
@@ -1652,19 +1517,41 @@ def _jt_net_and_split(pairs, lk, rk, persisted):
     return ret_keys, ins_rows
 
 
-def _jt_commit(spark, view_path, ret_keys, ins_rows, new_app, view_v
-               ) -> int:
-    """Stage 3 — ONE commit: −1 rows become the delete vector and +1
-    rows the appended segment (delete_and_append), so updates are
-    replaces and a reader never sees half. Deterministic branch: a
-    rewrite interval whose retractions all netted away still commits
-    a plain append (no vector)."""
+def _jt_state(spark, spec, frames):
+    return _with_pair_key(_join_of(spec, "jt", *frames), spec["jt_left_key"],
+                          spec["jt_right_key"]), {}
+
+
+def _jt_delta(r: "_Refresh") -> int:
+    lk, rk = r.spec["jt_left_key"], r.spec["jt_right_key"]
+    # the interval's RAW signed delta pairs, unioned with
+    # allowMissingColumns (source schema evolution between the cursors
+    # widens one term's delta columns — mergeSchema semantics, the
+    # absent side reads NULL)
+    frames, ch_r_absent = _join_delta_frames(r, "jt")
+    pairs = frames[0]
+    for p in frames[1:]:
+        pairs = pairs.unionByName(p, allowMissingColumns=True)
+    # fast path — a provably append-only interval on BOTH sides
+    # (manifest-only check): every CDC row is +1 and no cross-term
+    # duplicate pair can exist (term 1 pairs use R_old, term 2 a NEW
+    # right row), so the netting shuffle is skipped and the raw pairs
+    # commit directly. The LEFT flavor additionally needs the right
+    # cursor UNCHANGED: a right append gives keys their first match,
+    # which RETRACTS pre-existing null-extension rows (term B emits
+    # deletes even though both sources only appended).
+    if (all(_interval_append_only(*iv) for iv in r.intervals)
+            and (r.spec.get("jt_how", "inner") == "inner" or ch_r_absent)):
+        return r.commit(V.append,
+                        _with_pair_key(pairs.drop("_change_type"), lk, rk))
+    ret_keys, ins_rows = _jt_net_and_split(pairs, lk, rk, r)
+    # ONE commit: −1 rows become the delete vector and +1 rows the
+    # appended segment, so updates are replaces and a reader never sees
+    # half. Deterministic branch: a rewrite interval whose retractions
+    # all netted away still commits a plain append (no vector).
     if ret_keys.limit(1).count():
-        return V.delete_and_append(
-            spark, view_path, ret_keys, _PAIR_KEY, ins_rows,
-            extra={"app": new_app}, parent_version=view_v)
-    return V.append(spark, view_path, ins_rows,
-                    extra={"app": new_app}, parent_version=view_v)
+        return r.commit(V.delete_and_append, ret_keys, _PAIR_KEY, ins_rows)
+    return r.commit(V.append, ins_rows)
 
 
 def refresh_join_table_view(
@@ -1698,47 +1585,7 @@ def refresh_join_table_view(
 
     Like transform views, each refresh accretes a segment (plus a
     vector on rewrites); refresh_view(auto_compact=True) folds them."""
-    view_v = V.current_version(view_path)
-    spec = _spec(view_path, view_v, "join_table")
-    lsrc, rsrc = spec["jt_left"], spec["jt_right"]
-    on = _on_cols(spec["jt_on"])
-    how = spec.get("jt_how", "inner")
-    lk, rk = spec["jt_left_key"], spec["jt_right_key"]
-    l_from, r_from = int(spec["jt_left_version"]), int(spec["jt_right_version"])
-    l_to, r_to = V.current_version(lsrc), V.current_version(rsrc)
-    if l_to == l_from and r_to == r_from:
-        return view_v
-    new_app = dict(spec) | {"jt_left_version": l_to,
-                            "jt_right_version": r_to}
-    # same heal + cost dispatch as every other refresher: a rolled-back
-    # source self-heals under a set fraction (named error otherwise),
-    # and an interval whose CDC scan exceeds the heads re-joins from
-    # scratch as ONE overwrite (which also resets segment accretion)
-    recompute, bounds = _dispatch_recompute(
-        recompute_fraction, [(lsrc, l_from, l_to), (rsrc, r_from, r_to)])
-    if recompute:
-        state = _with_pair_key(
-            _read_source(spark, lsrc, l_to)
-            .join(_read_source(spark, rsrc, r_to), on, how), lk, rk)
-        return V.overwrite(spark, view_path, state,
-                           extra={"app": new_app}, parent_version=view_v)
-    persisted = []
-    try:
-        pairs, ch_r_absent = _jt_assemble_delta(
-            spark, lsrc, rsrc, on, how, bounds,
-            (l_from, l_to, r_from, r_to), persisted)
-        if _jt_append_only(lsrc, rsrc, (l_from, l_to, r_from, r_to),
-                           how, ch_r_absent):
-            ins_rows = _with_pair_key(
-                pairs.drop("_change_type"), lk, rk)
-            return V.append(spark, view_path, ins_rows,
-                            extra={"app": new_app}, parent_version=view_v)
-        ret_keys, ins_rows = _jt_net_and_split(pairs, lk, rk, persisted)
-        return _jt_commit(spark, view_path, ret_keys, ins_rows, new_app,
-                          view_v)
-    finally:
-        for df in persisted:
-            df.unpersist()
+    return _refresh_once(spark, "join_table", view_path, recompute_fraction)
 
 
 # ---------------------------------------------------------------------------
@@ -1746,60 +1593,198 @@ def refresh_join_table_view(
 # ---------------------------------------------------------------------------
 
 
+class _Refresh(NamedTuple):
+    """One refresh attempt's consistent read, handed to a kind's delta:
+    the view at ``path`` / ``view_v`` with its ``spec``, the
+    ``intervals`` [(source, cursor, head), ...], the (path, version)
+    ``reads`` the kind's state materializes from, the advanced ``app``
+    (spec + the heads as cursors), the dispatch's per-interval change
+    ``bounds`` (None when it computed none), and the frames the delta
+    persisted (_refresh_once unpersists them)."""
+    spark: SparkSession
+    path: str
+    view_v: int
+    spec: dict
+    intervals: list
+    reads: list
+    app: dict
+    bounds: list | None
+    persisted: list
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self.persisted.append(df.persist())
+        return df
+
+    def commit(self, verb, *args, app: dict | None = None) -> int:
+        """Commit through versioned ``verb`` pinned to the view version
+        read (OCC parent), with the advanced cursors (plus ``app``)
+        under the carried-forward ``app`` namespace — a top-level extra
+        would let the parent's stale cursor carry forward, and the next
+        refresh would re-apply an overlapping interval."""
+        return verb(self.spark, self.path, *args,
+                    extra={"app": self.app | (app or {})},
+                    parent_version=self.view_v)
+
+
 class _ViewKind(NamedTuple):
-    """One maintained view kind: the ``app`` field whose presence marks
-    a view of this kind, its (source field, cursor field) pairs, and its
-    single-attempt refresher ``(spark, path, [transform, name,]
-    recompute_fraction=) -> version`` — refresh_view wraps it in the
-    OCC loop and the compaction fold."""
+    """One maintained view kind, as data and two functions:
+
+    * ``marker`` — the ``app`` field whose presence marks the kind;
+    * ``sources`` — its (source field, cursor field) pairs;
+    * ``state(spark, spec, frames[, transform]) -> (DataFrame, app)`` —
+      the full materialization from the frames read at the heads, plus
+      the app fields it derives: ``_create`` writes it, and so does the
+      recompute path of ``_refresh_once``;
+    * ``delta(refresh[, transform]) -> version`` — the incremental body
+      over a _Refresh, which commits through ``refresh.commit``;
+    * ``cost_model`` — whether the row-scan cost model may choose
+      recompute; when False, recompute only heals;
+    * ``heads(spark, path, spec, fraction) -> (heads, reads)`` —
+      optional: how the kind reads its source heads and the pinned
+      (path, version) reads its state takes (default: each source at
+      its current version)."""
     marker: str
     sources: list
-    refresh: Callable
+    state: Callable
+    delta: Callable
+    cost_model: bool
+    heads: Callable | None = None
 
 
-def _lazy(module: str, name: str) -> Callable:
-    """A refresher defined in a kind module that imports this one."""
-    def refresh(*args, **kwargs):
+class _CursorVacuumed(RuntimeError):
+    """The named error of a source vacuumed past a view cursor."""
+
+
+def _heads(spark: SparkSession, k: _ViewKind, view_path: str, spec: dict,
+           fraction) -> tuple[list, list]:
+    if k.heads is not None:
+        return k.heads(spark, view_path, spec, fraction)
+    reads = [(spec[s], V.current_version(spec[s])) for s, _ in k.sources]
+    return [v for _p, v in reads], reads
+
+
+def _cursors(k: _ViewKind, heads: list) -> dict:
+    return {c: h for (_s, c), h in zip(k.sources, heads)}
+
+
+def _create(spark: SparkSession, kind: str, view_path: str, spec: dict,
+            *fn, prepare: Callable | None = None,
+            parent_version: int | None = None) -> int:
+    """Create a ``kind`` view from its spec: read the heads, let
+    ``prepare`` check the frames read at them (it may return spec
+    fields derived from them), write the kind's state and stamp the
+    heads as the cursors. ``fn`` is the transform view's function.
+    With ``parent_version`` the state instead overwrites the existing
+    view at that version (OCC-checked) — a re-create in place."""
+    k = _VIEW_KINDS[kind]
+    heads, reads = _heads(spark, k, view_path, spec, None)
+    frames = [_read_source(spark, p, v) for p, v in reads]
+    spec = spec | ((prepare(*frames) if prepare else None) or {})
+    state, app = k.state(spark, spec, frames, *fn)
+    extra = {"app": spec | app | _cursors(k, heads)}
+    if parent_version is None:
+        return V.create(spark, view_path, state, extra=extra)
+    return V.overwrite(spark, view_path, state, extra=extra,
+                       parent_version=parent_version)
+
+
+def _refresh_once(spark: SparkSession, kind: str, view_path: str,
+                  recompute_fraction: float | None, transform=None,
+                  name: str | None = None) -> int:
+    """ONE refresh attempt of any view kind — refresh_view wraps it in
+    the OCC loop. In order: one consistent read (the view version, then
+    the spec AT it: cursor, state and OCC parent from different versions
+    would let a concurrent refresher's interval double-apply silently);
+    the heads; the fresh early return; the heal + cost dispatch; then
+    the recompute as one overwrite, or the kind's delta. The one heal
+    rule: a source rolled back below, or vacuumed past, its cursor heals
+    by recompute when ``recompute_fraction`` is set and raises the named
+    RuntimeError when it is None. Returns the view's version."""
+    k = _VIEW_KINDS[kind]
+    view_v = V.current_version(view_path)
+    spec = _spec(view_path, view_v, kind)
+    fn = () if transform is None else (transform,)
+    if kind == "transform" and spec["tv_name"] != name:
+        raise ValueError(
+            f"refresh with transform {name!r} but the view was created "
+            f"with {spec['tv_name']!r} — mixing transforms would corrupt "
+            f"the view")
+    heads, reads = _heads(spark, k, view_path, spec, recompute_fraction)
+    intervals = [(spec[s], int(spec[c]), h)
+                 for (s, c), h in zip(k.sources, heads)]
+    if all(c == h for _s, c, h in intervals):
+        return view_v
+    app = spec | _cursors(k, heads)
+    recompute, bounds = _dispatch_recompute(recompute_fraction, intervals,
+                                            k.cost_model)
+    r = _Refresh(spark, view_path, view_v, spec, intervals, reads, app,
+                 bounds, [])
+    try:
+        if not recompute:
+            try:
+                return k.delta(r, *fn)
+            except _CursorVacuumed:
+                if recompute_fraction is None:
+                    raise
+        state, derived = k.state(
+            spark, spec, [_read_source(spark, p, v) for p, v in reads], *fn)
+        return V.overwrite(spark, view_path, state,
+                           extra={"app": app | derived},
+                           parent_version=view_v)
+    finally:
+        for df in r.persisted:
+            df.unpersist()
+
+
+def _lazy(module: str, name: str, kind: str) -> Callable:
+    """``module.name`` with the kind name bound first — a kind function
+    defined in a module that imports this one."""
+    def call(*args):
         return getattr(importlib.import_module(module, __package__),
-                       name)(*args, **kwargs)
+                       name)(kind, *args)
 
-    return refresh
+    return call
+
+
+def _kind_in(module: str, kind: str, prefix: str,
+             heads: bool = False) -> _ViewKind:
+    """A single-source kind whose ``state`` / ``delta`` (and ``heads``)
+    live in ``module``; its recompute only heals."""
+    src = f"{prefix}_source"
+    return _ViewKind(src, [(src, f"{prefix}_source_version")],
+                     _lazy(module, "state", kind), _lazy(module, "delta", kind),
+                     False, _lazy(module, "heads", kind) if heads else None)
 
 
 # kind -> _ViewKind: the SINGLE registry every view kind must appear in
-# — refresh_view, describe_view, the graph walker and cursor-safe
-# vacuum all read it, so adding a kind here is the whole wiring
+# — _create, _refresh_once, refresh_view, describe_view, the graph
+# walker and cursor-safe vacuum all read it, so adding a kind here is
+# the whole wiring
 _VIEW_KINDS = {
     "agg": _ViewKind("mv_source", [("mv_source", "mv_source_version")],
-                     refresh_agg_view),
+                     _agg_state, _agg_delta, True),
     "transform": _ViewKind("tv_source",
                            [("tv_source", "tv_source_version")],
-                           refresh_transform_view),
+                           _transform_state, _transform_delta, True),
     "topk": _ViewKind("kv_source", [("kv_source", "kv_source_version")],
-                      refresh_topk_view),
+                      _topk_state, _topk_delta, True),
     "join": _ViewKind("jv_left", [("jv_left", "jv_left_version"),
                                   ("jv_right", "jv_right_version")],
-                      refresh_join_view),
+                      _jv_state, _jv_delta, True),
     "join_table": _ViewKind("jt_left", [("jt_left", "jt_left_version"),
                                         ("jt_right", "jt_right_version")],
-                            refresh_join_table_view),
-    # maintained near-dup pair tables (sources/neardup_view.py). The
-    # two internal index views of each are ordinary transform views
-    # refreshed BY the pairs refresh; their cursors never trail the
-    # pairs cursor, so clamping vacuum to the pairs cursor is sufficient.
-    "near_dup": _ViewKind("nd_source", [("nd_source", "nd_source_version")],
-                          _lazy(".neardup_view",
-                                "refresh_near_dup_pairs_view")),
-    "embed_near_dup": _ViewKind("ed_source",
-                                [("ed_source", "ed_source_version")],
-                                _lazy(".neardup_view",
-                                      "refresh_embed_near_dup_pairs_view")),
+                            _jt_state, _jt_delta, True),
+    # maintained near-dup pair tables (sources/neardup_view.py): their
+    # heads entry converges the two internal index views (ordinary
+    # transform views, whose cursors never trail the pairs cursor, so
+    # clamping vacuum to the pairs cursor is sufficient) and reads them
+    # pinned
+    "near_dup": _kind_in(".neardup_view", "near_dup", "nd", heads=True),
+    "embed_near_dup": _kind_in(".neardup_view", "embed_near_dup", "ed",
+                               heads=True),
     # maintained indexes (sources/indexkind.py): full-text BM25
     # postings, hyperplane-LSH ANN buckets, IVF cells
-    "text_index": _ViewKind("ti_source", [("ti_source", "ti_source_version")],
-                            _lazy(".textindex", "refresh_text_index")),
-    "ann_index": _ViewKind("ai_source", [("ai_source", "ai_source_version")],
-                           _lazy(".annindex", "refresh_ann_index")),
-    "ivf_index": _ViewKind("ii_source", [("ii_source", "ii_source_version")],
-                           _lazy(".ivfindex", "refresh_ivf_index")),
+    "text_index": _kind_in(".indexkind", "text_index", "ti"),
+    "ann_index": _kind_in(".indexkind", "ann_index", "ai"),
+    "ivf_index": _kind_in(".indexkind", "ivf_index", "ii"),
 }

@@ -44,6 +44,8 @@ LLM-ingest pipeline needs.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,7 +56,8 @@ from ..functions.hashing import (
     minhash_params,
     minhash_signature_over_hashed,
 )
-from ..operators.dedup import _first_band_only
+from ..operators.dedup import (_first_band_only, _jaccard_verified,
+                               _sig_agreement)
 from . import matview as M
 from . import versioned as V
 
@@ -105,48 +108,23 @@ def _bands_transform(key: str, text_col: str, shingle_n: int,
     return fn
 
 
-def _transform_names(spec: dict) -> tuple[str, str]:
+def _index_fns(spec: dict) -> list:
+    """The (transform, name) of the grams and bands index views."""
     tag = (f"{spec['nd_shingle_n']}:{spec['nd_num_hashes']}:"
            f"{spec['nd_bands']}:{spec['nd_seed']}")
-    return f"nd_grams:{tag}", f"nd_bands:{tag}"
-
-
-def _index_fns(spec: dict):
-    g = _grams_transform(spec["nd_key"], spec["nd_text_col"],
-                         spec["nd_shingle_n"])
-    b = _bands_transform(spec["nd_key"], spec["nd_text_col"],
-                         spec["nd_shingle_n"], spec["nd_num_hashes"],
-                         spec["nd_bands"], spec["nd_seed"])
-    return g, b
-
-
-def _min_matches(num_hashes: int, threshold: float) -> int:
-    # signature-agreement prefilter cut, 4 binomial sd below the
-    # threshold — the same constant minhash_near_dup uses, so the
-    # maintained pair set is row-identical to the one-shot pipeline
-    sd = (threshold * (1.0 - threshold) / num_hashes) ** 0.5
-    return max(0, int(num_hashes * (threshold - 4.0 * sd)))
+    key, col, n = spec["nd_key"], spec["nd_text_col"], spec["nd_shingle_n"]
+    return [(_grams_transform(key, col, n), f"nd_grams:{tag}"),
+            (_bands_transform(key, col, n, spec["nd_num_hashes"],
+                              spec["nd_bands"], spec["nd_seed"]),
+             f"nd_bands:{tag}")]
 
 
 def _verified_pairs(cands: DataFrame, grams: DataFrame, key: str,
                     threshold: float) -> DataFrame:
     """Exact Jaccard verification over candidate (id_a, id_b) pairs —
-    join the 60-bit shingle sets on both sides, keep >= threshold."""
-    g = grams.select(F.col(key).alias("_gid"), "gs")
-    joined = (
-        cands
-        .join(g.withColumnRenamed("_gid", "id_a")
-               .withColumnRenamed("gs", "gs_a"), "id_a")
-        .join(g.withColumnRenamed("_gid", "id_b")
-               .withColumnRenamed("gs", "gs_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
-    union = (F.size("gs_a") + F.size("gs_b")).cast("double") - inter
-    return (
-        joined.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    the one-shot pipeline's verifier over the grams index."""
+    g = grams.select(F.col(key).alias("id"), "gs")
+    return _jaccard_verified(cands, g, g, threshold)
 
 
 def _with_pair_col(pairs: DataFrame) -> DataFrame:
@@ -170,17 +148,10 @@ def _full_pairs(band_df: DataFrame, gram_df: DataFrame, spec: dict
                & (F.col("a.bh") == F.col("b.bh")) & (ka < kb))
         .where(_first_band_only(F.col("a.sig"), F.col("b.sig"),
                                 F.col("a.band"), rpb))
-        .where(_sig_agree() >= _min_matches(spec["nd_num_hashes"],
-                                            spec["nd_threshold"]))
+        .where(_sig_agreement(spec["nd_num_hashes"], spec["nd_threshold"]))
         .select(ka.alias("id_a"), kb.alias("id_b"))
     )
     return _verified_pairs(cands, gram_df, key, spec["nd_threshold"])
-
-
-def _sig_agree():
-    return F.size(F.filter(
-        F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-        lambda m: m))
 
 
 def _probe_pairs(band_df: DataFrame, gram_df: DataFrame,
@@ -212,8 +183,7 @@ def _probe_pairs(band_df: DataFrame, gram_df: DataFrame,
         .where(~F.col("a._is_new") | (ka < kb))
         .where(_first_band_only(F.col("a.sig"), F.col("b.sig"),
                                 F.col("a.band"), rpb))
-        .where(_sig_agree() >= _min_matches(spec["nd_num_hashes"],
-                                            spec["nd_threshold"]))
+        .where(_sig_agreement(spec["nd_num_hashes"], spec["nd_threshold"]))
         .select(F.least(ka, kb).alias("id_a"),
                 F.greatest(ka, kb).alias("id_b"))
     )
@@ -232,29 +202,12 @@ def create_near_dup_pairs_view(
     if num_hashes % bands:
         raise ValueError(f"bands {bands} must divide num_hashes "
                          f"{num_hashes}")
-    spec = {
+    return _create_pairs_view(spark, "near_dup", source_path, view_path, {
         "nd_source": source_path, "nd_key": key,
         "nd_text_col": text_col, "nd_shingle_n": int(shingle_n),
         "nd_num_hashes": int(num_hashes), "nd_bands": int(bands),
         "nd_threshold": float(threshold), "nd_seed": int(seed),
-    }
-    gname, bname = _transform_names(spec)
-    gfn, bfn = _index_fns(spec)
-    M.create_transform_view(spark, source_path, view_path + GRAMS_SUFFIX,
-                            key=key, transform=gfn, name=gname)
-    M.create_transform_view(spark, source_path, view_path + BANDS_SUFFIX,
-                            key=key, transform=bfn, name=bname)
-    # converge the two index views on ONE source version (a source
-    # commit can race between the two creates) and PIN the reads at
-    # the index versions whose cursors were verified — reading the
-    # index heads here would materialize pairs past the recorded
-    # cursor, which the first refresh would then re-append
-    src_v, gv, bv = _refresh_indexes(spark, view_path, spec)
-    band_df = M._read_source(spark, view_path + BANDS_SUFFIX, bv)
-    gram_df = M._read_source(spark, view_path + GRAMS_SUFFIX, gv)
-    state = _with_pair_col(_full_pairs(band_df, gram_df, spec))
-    return V.create(spark, view_path, state,
-                    extra={"app": spec | {"nd_source_version": src_v}})
+    })
 
 
 def read_near_dup_pairs_view(spark: SparkSession, view_path: str,
@@ -264,140 +217,16 @@ def read_near_dup_pairs_view(spark: SparkSession, view_path: str,
     return V.read(spark, view_path, version).drop(PAIR_COL)
 
 
-def _converge_indexes(spark: SparkSession, view_path: str,
-                      indexes, recompute_fraction: float | None = None
-                      ) -> tuple[int, list[int]]:
-    """Advance a pair view's index transform views to a COMMON source
-    version (re-run on the rare race where the source commits between
-    the refreshes) and return ``(src_v, [index view versions])`` — the
-    versions whose cursors equal src_v, so callers read the indexes
-    PINNED (one consistent read): reading the index heads instead
-    would let a concurrent refresher's later commit leak future docs
-    into this interval's probe, and the next refresh would re-discover
-    (duplicate) those pairs. ``indexes`` is [(path, fn, name), ...]."""
-    for _ in range(5):
-        for path, fn, name in indexes:
-            M.refresh_view(spark, path, transforms={path: (fn, name)},
-                           recompute_fraction=recompute_fraction)
-        views = [V.current_version(p) for p, _f, _n in indexes]
-        cursors = [int(M._spec(p, v, "transform")["tv_source_version"])
-                   for (p, _f, _n), v in zip(indexes, views)]
-        if len(set(cursors)) == 1:
-            return cursors[0], views
-    raise RuntimeError(
-        f"index views for {view_path} could not converge on one source "
-        f"version after 5 rounds (source committing continuously?)")
-
-
-def _refresh_indexes(spark: SparkSession, view_path: str, spec: dict,
-                     recompute_fraction: float | None = None
-                     ) -> tuple[int, int, int]:
-    """_converge_indexes over the MinHash flavor's gram/band views."""
-    gname, bname = _transform_names(spec)
-    gfn, bfn = _index_fns(spec)
-    src_v, (gvv, bvv) = _converge_indexes(
-        spark, view_path,
-        [(view_path + GRAMS_SUFFIX, gfn, gname),
-         (view_path + BANDS_SUFFIX, bfn, bname)],
-        recompute_fraction=recompute_fraction)
-    return src_v, gvv, bvv
-
-
-def _refresh_pairs_table(spark: SparkSession, view_path: str,
-                         view_v: int, spec: dict, prefix: str,
-                         v_to: int, full_state_fn, probe_fn,
-                         recompute_fraction) -> int:
-    """The SHARED maintenance skeleton both pair-view flavors
-    (MinHash-shingle and hyperplane-embedding) run per interval:
-    retract pairs touching retracted keys (delete vector, found by a
-    broadcast semi-join on the Δ keys), probe the pinned index with
-    the inserted keys, publish both as ONE delete_and_append commit. A
-    rewriting interval that trips the shared cost model — or a
-    vacuumed/rolled-back source — heals by full recompute from the
-    refreshed indexes (one overwrite, identical rows)."""
-    src = spec[f"{prefix}_source"]
-    v_from = int(spec[f"{prefix}_source_version"])
-    key = spec[f"{prefix}_key"]
-    if v_to == v_from:
-        return view_v
-    new_app = dict(spec) | {f"{prefix}_source_version": v_to}
-
-    def _recompute() -> int:
-        state = _with_pair_col(full_state_fn())
-        return V.overwrite(spark, view_path, state,
-                           extra={"app": new_app},
-                           parent_version=view_v)
-
-    # Pair-view cost model: "recompute" here is the full banded
-    # SELF-JOIN over the whole corpus, not one pass over the head —
-    # the shared row-scan model (bound > fraction x head) undercosts
-    # it by the pairing factor, and any interval containing a
-    # retraction has bound ~= 2 x head, which would trip full corpus
-    # re-pairing on EVERY delete under the 0.5 default. So the cost
-    # trip is DISABLED for the pairs table itself (the O(delta)
-    # retract+probe path is always preferred, per the module's
-    # "never re-pair the corpus" contract); recompute_fraction keeps
-    # exactly its heal semantics — a rolled-back source self-heals
-    # when it is set, raises the named error when it is None. The
-    # index transform views above still dispatch under the row model,
-    # where recompute really is one head pass.
-    try:
-        recompute, _bounds = M._dispatch_recompute(
-            None, [(src, v_from, v_to)])
-    except RuntimeError:
-        if recompute_fraction is None:
-            raise
-        recompute = True  # rollback self-heal, as with the row model
-    if recompute:
-        return _recompute()
-    try:
-        ch = M._changes_since_cursor(spark, src, v_from, v_to, key)
-    except RuntimeError:
-        return _recompute()  # vacuumed past the cursor: heal
-    ch = ch.persist()
-    try:
-        del_keys = (ch.where(F.col("_change_type").isin(*_RETRACTING))
-                    .select(key).distinct())
-        ins_keys = (ch.where(F.col("_change_type").isin(*_INSERTING))
-                    .select(key).distinct())
-        cur = V.read(spark, view_path, view_v)
-        dk = F.broadcast(del_keys.withColumnRenamed(key, "_dk"))
-        del_pairs = (
-            cur.join(dk, cur["id_a"] == F.col("_dk"), "leftsemi")
-            .unionByName(
-                cur.join(dk, cur["id_b"] == F.col("_dk"), "leftsemi"))
-            .select(PAIR_COL).distinct()
-        )
-        new_pairs = _with_pair_col(probe_fn(ins_keys))
-        return V.delete_and_append(
-            spark, view_path, del_pairs, PAIR_COL, new_pairs,
-            extra={"app": new_app}, parent_version=view_v)
-    finally:
-        ch.unpersist()
-
-
 def refresh_near_dup_pairs_view(
         spark: SparkSession, view_path: str,
         recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """Advance the pair table to the source head: refresh the index
-    views (O(changed docs)), then run the shared retract+probe+commit
-    skeleton (_refresh_pairs_table) against the PINNED index reads —
-    a concurrent refresher advancing the shared indexes must not leak
-    future docs into this interval's probe (duplicate-pair hazard)."""
-    view_v = V.current_version(view_path)
-    spec = M._spec(view_path, view_v, "near_dup")
-    v_to, gv, bv = _refresh_indexes(spark, view_path, spec,
-                                    recompute_fraction=recompute_fraction)
-    if v_to == int(spec["nd_source_version"]):
-        return view_v  # fresh: no manifest/parquet reads on the poll path
-    band_df = M._read_source(spark, view_path + BANDS_SUFFIX, bv)
-    gram_df = M._read_source(spark, view_path + GRAMS_SUFFIX, gv)
-    return _refresh_pairs_table(
-        spark, view_path, view_v, spec, "nd", v_to,
-        full_state_fn=lambda: _full_pairs(band_df, gram_df, spec),
-        probe_fn=lambda ins: _probe_pairs(band_df, gram_df, ins, spec),
-        recompute_fraction=recompute_fraction)
+    views (O(changed docs)), then retract + probe against the PINNED
+    index reads (``heads`` / ``delta`` below) — a concurrent refresher
+    advancing the shared indexes must not leak future docs into this
+    interval's probe (duplicate-pair hazard)."""
+    return M._refresh_once(spark, "near_dup", view_path, recompute_fraction)
 
 
 # ===========================================================================
@@ -445,18 +274,15 @@ def _ebkts_transform(key: str, vec_col: str, n_planes: int, n_sets: int,
     return fn
 
 
-def _ed_transform_names(spec: dict) -> tuple[str, str]:
+def _ed_index_fns(spec: dict) -> list:
+    """The (transform, name) of the vector and bucket index views."""
     tag = (f"{spec['ed_n_planes']}:{spec['ed_n_sets']}:"
            f"{spec['ed_seed']}:{spec['ed_dim']}")
-    return f"ed_vecs:{spec['ed_vec_col']}", f"ed_buckets:{tag}"
-
-
-def _ed_index_fns(spec: dict):
-    v = _evecs_transform(spec["ed_key"], spec["ed_vec_col"])
-    b = _ebkts_transform(spec["ed_key"], spec["ed_vec_col"],
-                         spec["ed_n_planes"], spec["ed_n_sets"],
-                         spec["ed_seed"], spec["ed_dim"])
-    return v, b
+    key, col = spec["ed_key"], spec["ed_vec_col"]
+    return [(_evecs_transform(key, col), f"ed_vecs:{col}"),
+            (_ebkts_transform(key, col, spec["ed_n_planes"],
+                              spec["ed_n_sets"], spec["ed_seed"],
+                              spec["ed_dim"]), f"ed_buckets:{tag}")]
 
 
 def _ed_verified(cands: DataFrame, vec_df: DataFrame, key: str,
@@ -530,24 +356,13 @@ def create_embed_near_dup_pairs_view(
             raise ValueError(f"cannot infer {vec_col} dim from an "
                              f"empty source; pass dim=")
         dim = int(probe[0])
-    spec = {
-        "ed_source": source_path, "ed_key": key, "ed_vec_col": vec_col,
-        "ed_threshold": float(threshold), "ed_n_planes": int(n_planes),
-        "ed_n_sets": int(n_sets), "ed_seed": int(seed),
-        "ed_dim": int(dim),
-    }
-    vname, bname = _ed_transform_names(spec)
-    vfn, bfn = _ed_index_fns(spec)
-    M.create_transform_view(spark, source_path, view_path + EVECS_SUFFIX,
-                            key=key, transform=vfn, name=vname)
-    M.create_transform_view(spark, source_path, view_path + EBKTS_SUFFIX,
-                            key=key, transform=bfn, name=bname)
-    src_v, vv, bv = _ed_refresh_indexes(spark, view_path, spec)
-    bkt_df = M._read_source(spark, view_path + EBKTS_SUFFIX, bv)
-    vec_df = M._read_source(spark, view_path + EVECS_SUFFIX, vv)
-    state = _with_pair_col(_ed_full_pairs(bkt_df, vec_df, spec))
-    return V.create(spark, view_path, state,
-                    extra={"app": spec | {"ed_source_version": src_v}})
+    return _create_pairs_view(
+        spark, "embed_near_dup", source_path, view_path, {
+            "ed_source": source_path, "ed_key": key, "ed_vec_col": vec_col,
+            "ed_threshold": float(threshold), "ed_n_planes": int(n_planes),
+            "ed_n_sets": int(n_sets), "ed_seed": int(seed),
+            "ed_dim": int(dim),
+        })
 
 
 def read_embed_near_dup_pairs_view(spark: SparkSession, view_path: str,
@@ -556,36 +371,128 @@ def read_embed_near_dup_pairs_view(spark: SparkSession, view_path: str,
     return V.read(spark, view_path, version).drop(PAIR_COL)
 
 
-def _ed_refresh_indexes(spark: SparkSession, view_path: str, spec: dict,
-                        recompute_fraction: float | None = None
-                        ) -> tuple[int, int, int]:
-    """_converge_indexes over the embedding flavor's vec/bucket views."""
-    vname, bname = _ed_transform_names(spec)
-    vfn, bfn = _ed_index_fns(spec)
-    src_v, (vvv, bvv) = _converge_indexes(
-        spark, view_path,
-        [(view_path + EVECS_SUFFIX, vfn, vname),
-         (view_path + EBKTS_SUFFIX, bfn, bname)],
-        recompute_fraction=recompute_fraction)
-    return src_v, vvv, bvv
-
-
 def refresh_embed_near_dup_pairs_view(
         spark: SparkSession, view_path: str,
         recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
 ) -> int:
     """Advance the embedding pair table to the source head — the same
-    pinned-index + shared-skeleton contract as the MinHash flavor."""
-    view_v = V.current_version(view_path)
-    spec = M._spec(view_path, view_v, "embed_near_dup")
-    v_to, vv, bv = _ed_refresh_indexes(
-        spark, view_path, spec, recompute_fraction=recompute_fraction)
-    if v_to == int(spec["ed_source_version"]):
-        return view_v  # fresh: no manifest/parquet reads on the poll path
-    bkt_df = M._read_source(spark, view_path + EBKTS_SUFFIX, bv)
-    vec_df = M._read_source(spark, view_path + EVECS_SUFFIX, vv)
-    return _refresh_pairs_table(
-        spark, view_path, view_v, spec, "ed", v_to,
-        full_state_fn=lambda: _ed_full_pairs(bkt_df, vec_df, spec),
-        probe_fn=lambda ins: _ed_probe_pairs(bkt_df, vec_df, ins, spec),
-        recompute_fraction=recompute_fraction)
+    pinned-index contract as the MinHash flavor."""
+    return M._refresh_once(spark, "embed_near_dup", view_path,
+                           recompute_fraction)
+
+
+# ===========================================================================
+# The two flavors' view-kind entries (matview._VIEW_KINDS): ``heads``,
+# ``state`` and ``delta`` take the kind name first
+# ===========================================================================
+
+
+class _Flavor(NamedTuple):
+    """A pair-view flavor: its spec prefix, the suffixes of its payload
+    and band index views, their (transform, name) pairs from the spec,
+    and the complete and Δ-probed pair sets over (bands, payload)."""
+    prefix: str
+    suffixes: tuple
+    index_fns: Callable
+    full_pairs: Callable
+    probe_pairs: Callable
+
+
+_FLAVORS = {
+    "near_dup": _Flavor("nd", (GRAMS_SUFFIX, BANDS_SUFFIX), _index_fns,
+                        _full_pairs, _probe_pairs),
+    "embed_near_dup": _Flavor("ed", (EVECS_SUFFIX, EBKTS_SUFFIX),
+                              _ed_index_fns, _ed_full_pairs,
+                              _ed_probe_pairs),
+}
+
+
+def _indexes(kind: str, view_path: str, spec: dict) -> list:
+    """[(path, transform, name), ...] of a pair view's index views."""
+    f = _FLAVORS[kind]
+    return [(view_path + sfx, fn, name)
+            for sfx, (fn, name) in zip(f.suffixes, f.index_fns(spec))]
+
+
+def _create_pairs_view(spark: SparkSession, kind: str, source_path: str,
+                       view_path: str, spec: dict) -> int:
+    """Create the index transform views, then the pair table over their
+    reads converged on ONE source version (a source commit can race
+    between the two creates) and pinned at the index versions whose
+    cursors were verified — reading the index heads would materialize
+    pairs past the recorded cursor, which the first refresh would then
+    re-append. ``key`` must be a unique non-null row identity (the
+    transform-view contract)."""
+    for path, fn, name in _indexes(kind, view_path, spec):
+        M.create_transform_view(spark, source_path, path,
+                                key=spec[f"{_FLAVORS[kind].prefix}_key"],
+                                transform=fn, name=name)
+    return M._create(spark, kind, view_path, spec)
+
+
+def heads(kind: str, spark: SparkSession, view_path: str, spec: dict,
+          recompute_fraction: float | None) -> tuple[list, list]:
+    """Advance the index views to a COMMON source version (re-run on the
+    rare race where the source commits between the refreshes) and
+    return ([src_v], the index views' (path, version) reads) — the
+    versions whose cursors equal src_v, so state and delta read the
+    indexes PINNED (one consistent read): reading the index heads
+    instead would let a concurrent refresher's later commit leak future
+    docs into this interval's probe, and the next refresh would
+    re-discover (duplicate) those pairs."""
+    indexes = _indexes(kind, view_path, spec)
+    for _ in range(5):
+        for path, fn, name in indexes:
+            M.refresh_view(spark, path, transforms={path: (fn, name)},
+                           recompute_fraction=recompute_fraction)
+        reads = [(p, V.current_version(p)) for p, _f, _n in indexes]
+        cursors = {int(M._spec(p, v, "transform")["tv_source_version"])
+                   for p, v in reads}
+        if len(cursors) == 1:
+            return list(cursors), reads
+    raise RuntimeError(
+        f"index views for {view_path} could not converge on one source "
+        f"version after 5 rounds (source committing continuously?)")
+
+
+def state(kind: str, spark: SparkSession, spec: dict, frames: list):
+    """The complete pair set from the pinned index views."""
+    payload, bands = frames
+    return _with_pair_col(_FLAVORS[kind].full_pairs(bands, payload, spec)), {}
+
+
+def delta(kind: str, r) -> int:
+    """One interval as ONE delete_and_append commit: pairs touching a
+    retracted key become the delete vector (found by a broadcast
+    semi-join of the Δ keys against the current pair rows), and the
+    inserted keys probe the pinned index.
+
+    Cost model: "recompute" here is the full banded SELF-JOIN over the
+    whole corpus, not one pass over the head — the row-scan model
+    (bound > fraction x head) undercosts it by the pairing factor, and
+    any interval containing a retraction has bound ~= 2 x head, which
+    would trip full corpus re-pairing on EVERY delete under the 0.5
+    default. So the kind registers without the cost model (the O(delta)
+    retract+probe path is always preferred, per the module's "never
+    re-pair the corpus" contract); recompute only heals. The index
+    transform views still dispatch under the row model, where
+    recompute really is one head pass."""
+    f = _FLAVORS[kind]
+    key = r.spec[f"{f.prefix}_key"]
+    (src, v_from, v_to), = r.intervals
+    ch = r.persist(M._changes_since_cursor(r.spark, src, v_from, v_to, key))
+    del_keys = (ch.where(F.col("_change_type").isin(*_RETRACTING))
+                .select(key).distinct())
+    ins_keys = (ch.where(F.col("_change_type").isin(*_INSERTING))
+                .select(key).distinct())
+    cur = V.read(r.spark, r.path, r.view_v)
+    dk = F.broadcast(del_keys.withColumnRenamed(key, "_dk"))
+    del_pairs = (
+        cur.join(dk, cur["id_a"] == F.col("_dk"), "leftsemi")
+        .unionByName(cur.join(dk, cur["id_b"] == F.col("_dk"), "leftsemi"))
+        .select(PAIR_COL).distinct()
+    )
+    payload, bands = (M._read_source(r.spark, p, v) for p, v in r.reads)
+    new_pairs = _with_pair_col(f.probe_pairs(bands, payload, ins_keys,
+                                             r.spec))
+    return r.commit(V.delete_and_append, del_pairs, PAIR_COL, new_pairs)

@@ -45,7 +45,6 @@ from ..functions import text as TXT
 from ..functions.localrel import values_df
 from . import indexkind as IK
 from . import matview as M
-from . import versioned as V
 from .indexkind import convert_index_to_bucketed  # noqa: F401  (public)
 from .matview import _INSERTING, _RETRACTING  # canonical CDC classes
 
@@ -109,22 +108,13 @@ def create_text_index(
     FILTERABLE PAYLOAD (query ``where=``): filtered lexical search
     without a join back to the source, at the standard doc-values
     cost of one payload copy per (doc, distinct term)."""
-    src_v = V.current_version(source_path)
-    df = M._read_source(spark, source_path, src_v)
-    inc = IK.check_include_cols(
-        df, key, text_col, include_cols,
-        reserved=("term", "tf", "dl", "positions"))
-    n_docs, total_len = _corpus_stats(df, text_col)
-    spec = {
+    return M._create(spark, "text_index", view_path, {
         "ti_source": source_path, "ti_key": key,
         "ti_text_col": text_col, "ti_k1": float(k1), "ti_b": float(b),
-        "ti_source_version": src_v,
-        "ti_ndocs": n_docs, "ti_total_len": total_len,
         "ti_positions": bool(positions),
-        "ti_include_cols": inc,
-    }
-    return V.create(spark, view_path, _rows_of(spec, df),
-                    extra={"app": spec})
+    }, prepare=lambda df: {"ti_include_cols": IK.check_include_cols(
+        df, key, text_col, include_cols,
+        reserved=("term", "tf", "dl", "positions"))})
 
 
 def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
@@ -134,12 +124,12 @@ def _rows_of(spec: dict, df: DataFrame) -> DataFrame:
         include_cols=tuple(spec.get("ti_include_cols", [])))
 
 
-def _app_on_recompute(spark, spec, head, app):
+def _app_on_recompute(spark, spec, head):
     n_docs, total_len = _corpus_stats(head, spec["ti_text_col"])
-    return app | {"ti_ndocs": n_docs, "ti_total_len": total_len}
+    return {"ti_ndocs": n_docs, "ti_total_len": total_len}
 
 
-def _app_on_delta(spark, spec, ch, new_rows, app):
+def _app_on_delta(spark, spec, ch, new_rows):
     # exact integer stats delta from the interval's pre/post images —
     # one tiny aggregation over the (persisted) change frame, O(delta)
     dl_expr = F.size(TXT.tokens(F.col(spec["ti_text_col"]))).cast("long")
@@ -153,7 +143,7 @@ def _app_on_delta(spark, spec, ch, new_rows, app):
         F.sum(F.when(F.col("_change_type").isin(*_RETRACTING),
                      dl_expr).otherwise(F.lit(0))).alias("l_del"),
     ).collect()[0]
-    return app | {
+    return {
         "ti_ndocs": int(spec["ti_ndocs"])
         + int(agg["n_ins"] or 0) - int(agg["n_del"] or 0),
         "ti_total_len": int(spec["ti_total_len"])
@@ -178,9 +168,11 @@ def refresh_text_index(
     and roll the exact integer corpus stats forward from the interval
     — ONE delete_and_append commit. A vacuumed/rolled-back source
     heals by full recompute (one overwrite, identical rows). All
-    structure lives in the shared lifecycle (indexkind.refresh); this
-    kind contributes tokenization and the corpus-stat hooks."""
-    return IK.refresh(spark, "text_index", view_path, recompute_fraction)
+    structure lives in the shared lifecycle (matview._refresh_once over
+    indexkind's state/delta); this kind contributes tokenization and
+    the corpus-stat hooks."""
+    return M._refresh_once(spark, "text_index", view_path,
+                           recompute_fraction)
 
 
 def query_text_index(

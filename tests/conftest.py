@@ -116,6 +116,15 @@ _SLOW_TESTS = {
 }
 
 
+# default-tier exceptions inside _SLOW_FILES: the view fuzz's first six
+# seeds cover every fuzzed view kind (seed i fuzzes kind i % 6), so the
+# refresh skeleton they exercise is checked on every default run
+_DEFAULT_TIER_TESTS = {
+    ("test_view_fuzz.py", f"test_view_layer_random_sequences[seq{i}]")
+    for i in range(6)
+}
+
+
 def pytest_collection_modifyitems(config, items):
     slow = pytest.mark.slow
     for item in items:
@@ -123,6 +132,8 @@ def pytest_collection_modifyitems(config, items):
         # non-Function items (doctests, plugin items) carry no
         # cls/originalname
         cls = getattr(item, "cls", None)
+        if (fname, item.name) in _DEFAULT_TIER_TESTS:
+            continue
         if (fname in _SLOW_FILES
                 or (cls is not None and cls.__name__ in _SLOW_CLASSES)
                 or getattr(item, "originalname", item.name) in _SLOW_TESTS):

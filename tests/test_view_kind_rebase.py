@@ -8,7 +8,12 @@ competing ``refresh_view`` of the same view, which commits between the
 loser's read and its commit. The loser's commit must raise
 ConcurrentWriteError exactly once, the OCC loop must re-read the
 advanced cursor, and the view must end fresh and row-identical to the
-same view created from scratch over the source head."""
+same view created from scratch over the source head.
+
+The heal matrix pins the one heal rule over the same ten kinds: a
+source vacuumed past the view cursor, or rolled back below it, fails
+a ``recompute_fraction=None`` refresh with the named error and heals
+under the default fraction."""
 
 import os
 
@@ -147,6 +152,61 @@ def test_refresh_view_rebases_lost_race(spark, tmp_path, monkeypatch,
     assert V.current_version(vp) == view_v + 1  # the competitor's commit
     d = MV.describe_view(vp)
     assert d["view_kind"] == kind
+    assert d["fresh"] and all(s["lag"] == 0 for s in d["sources"]), d
+    _create(kind, spark, src, dim, fresh)
+    assert _rows(spark, vp) == _rows(spark, fresh)
+
+
+def _vacuum_past_cursor(spark, src):
+    """Advance the source past the view cursor by an append and a
+    rewrite, then vacuum every manifest but the head's."""
+    V.append(spark, src, spark.createDataFrame(_NEW, _SCHEMA))
+    V.upsert(spark, src, spark.createDataFrame(
+        [(1, "b", 6, _FOX + " once more", _vec(1, 0.1))], _SCHEMA), "id")
+    V.vacuum(src, keep_last=1)
+
+
+def _roll_back_below_cursor(spark, src):
+    """Leave the source head BELOW the view cursor: drop the manifest
+    the cursor names out of band (restore() commits forward, so only an
+    operator removing head manifests gets here)."""
+    v = V.current_version(src)
+    os.remove(V._snap_path(src, v))
+    V._write_checkpoint(src, v - 1)
+
+
+@pytest.mark.parametrize("case", ["vacuum", "rollback"])
+@pytest.mark.parametrize("kind", sorted(MV._VIEW_KINDS))
+def test_refresh_view_heal_rule(spark, tmp_path, kind, case):
+    """The one heal rule: a source vacuumed past the cursor or rolled
+    back below it makes ``recompute_fraction=None`` raise the named
+    error, and the default fraction heals by recompute — the view ends
+    fresh and row-identical to the view created over the source head."""
+    src, dim = str(tmp_path / "src"), str(tmp_path / "dim")
+    vp, fresh = str(tmp_path / "view"), str(tmp_path / "fresh")
+    V.create(spark, src, spark.createDataFrame(_ROWS[:3], _SCHEMA))
+    V.create(spark, dim, spark.createDataFrame(
+        [(100, "a", "X"), (101, "b", "Y")],
+        "rid long, grp string, seg string"))
+    if case == "rollback":
+        V.append(spark, src, spark.createDataFrame(_ROWS[3:], _SCHEMA))
+    _create(kind, spark, src, dim, vp)
+    transforms = {vp: (_double, "double-v1")}
+    if case == "vacuum":
+        _vacuum_past_cursor(spark, src)
+        named = "vacuum|retain"
+    else:
+        _roll_back_below_cursor(spark, src)
+        named = "BEHIND the view cursor"
+    view_v = V.current_version(vp)
+
+    with pytest.raises(RuntimeError, match=named):
+        MV.refresh_view(spark, vp, transforms=transforms,
+                        recompute_fraction=None)
+    assert V.current_version(vp) == view_v
+
+    MV.refresh_view(spark, vp, transforms=transforms)
+    d = MV.describe_view(vp)
     assert d["fresh"] and all(s["lag"] == 0 for s in d["sources"]), d
     _create(kind, spark, src, dim, fresh)
     assert _rows(spark, vp) == _rows(spark, fresh)
