@@ -26,11 +26,6 @@ def portable_hash32(c: Column) -> Column:
     return hash32_from_md5(F.md5(c))
 
 
-def portable_hash60(c: Column) -> Column:
-    """First 15 hex chars of md5 as a non-negative int64 in [0, 2^60)."""
-    return hash60_from_md5(F.md5(c))
-
-
 def hash32_from_md5(md5_hex: Column) -> Column:
     """32-bit int from an ALREADY-COMPUTED md5 hex string — lets pipelines
     that need both hash widths (minhash sig + verification sets) pay for the

@@ -155,10 +155,6 @@ def scale(a: ColumnOrName, s) -> Column:
     return F.transform(_col(a), lambda x: x.cast("double") * s)
 
 
-def vadd(a: ColumnOrName, b: ColumnOrName) -> Column:
-    return F.zip_with(_col(a), _col(b), lambda x, y: x.cast("double") + y.cast("double"))
-
-
 def vsub(a: ColumnOrName, b: ColumnOrName) -> Column:
     return F.zip_with(_col(a), _col(b), lambda x, y: x.cast("double") - y.cast("double"))
 

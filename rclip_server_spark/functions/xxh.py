@@ -3,7 +3,7 @@ seed 42) — so bucket resolution for the hash-bucketed at-rest layouts
 needs ZERO Spark jobs on the serving path.
 
 Why it exists: the bucketed index layouts route rows by
-``pmod(xxhash64(cast(key as string)), n_buckets)`` (writer._bucket_expr).
+``pmod(xxhash64(cast(key as string)), n_buckets)`` (versioned._bucket_expr).
 A query that wants file-level pruning must map its probe VALUES (LSH
 bucket ids for the ANN index, query terms for the text index) to
 physical buckets BEFORE the scan plan is built. Doing that with a

@@ -506,105 +506,6 @@ def ivf_train_kmeans(
     return centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
 
-def write_bucketed_by_lsh(
-    df: DataFrame,
-    path: str,
-    n_planes: int = 4,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> None:
-    """Materialize the table PARTITIONED BY the hyperplane bucket — the
-    at-rest layout that turns every LSH probe into a partition-pruned scan
-    (only bucket=… directories are even listed, 1/2^n_planes of the data).
-    Pay the bucketing shuffle once at write time; every query after that is
-    a pruned read."""
-    if dim is None:
-        probe = df.select(F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError("cannot infer dim from empty DataFrame; pass dim=")
-        dim = int(probe[0])
-    planes = hyperplanes(n_planes, dim, seed)
-    bucketed = df.withColumn("bucket", hyperplane_bucket_col(vec_col, planes))
-    bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def write_partitioned_by_ivf(
-    df: DataFrame,
-    path: str,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the table PARTITIONED BY the IVF cell — the at-rest
-    layout that makes every IVF probe a partition-pruned scan (only the
-    n_probe nearest cells' directories are listed, ~n_probe/k of the
-    data). Same pay-once-at-write contract as write_bucketed_by_lsh; at
-    cluster scale add .repartition("ivf_cell") first so each cell writes
-    one file run instead of one file per task."""
-    assigned = ivf_assign(df, centroids, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-
-
-def ivf_topk_pruned(
-    spark,
-    path: str,
-    query_vec,
-    centroids,
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k over a table written by write_partitioned_by_ivf: the cell
-    predicate is a PARTITION filter (PartitionFilters in the scan node) —
-    non-probed cells are never read, not even their footers. Scores and
-    ordering are identical to the in-memory ivf_topk at the same probes."""
-    import numpy as np
-
-    qv = np.asarray(query_vec, dtype=np.float64)
-    cents = np.asarray(centroids, dtype=np.float64)
-    order = np.argsort(-(cents @ qv))[:n_probe]
-    df = spark.read.parquet(path)
-    cand = df.where(F.col("ivf_cell").isin([int(i) for i in order]))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def lsh_topk_pruned(
-    spark,
-    path: str,
-    query_vec,
-    k: int = 10,
-    n_planes: int = 4,
-    n_probe_bits: int = 0,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """LSH top-k over a table written by write_bucketed_by_lsh: the bucket
-    predicate is a PARTITION filter (visible as PartitionFilters in the scan
-    node), so non-matching directories are never read."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    planes = hyperplanes(n_planes, len(qv), seed)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
-    probes = {qbucket}
-    if n_probe_bits >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
-    df = spark.read.parquet(path)
-    cand = df.where(F.col("bucket").isin(sorted(probes)))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: np.ndarray,
@@ -613,8 +514,7 @@ def ivf_assign(
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """IVF coarse assignment: nearest centroid (max dot on unit vectors) per
-    row, as a greatest-of-structs over literal centroids. Writing the table
-    partitioned by `ivf_cell` makes probe queries partition-pruned scans.
+    row, as a greatest-of-structs over literal centroids.
     ``keep_cols`` ride along unchanged (payload columns)."""
     cells = ", ".join(
         f"named_struct('s', {V.dot_sql(vec_col, V.vec_lit_sql(c))}, 'c', {i})"
@@ -937,8 +837,8 @@ def pq_adc_topk(
 # IVF-PQ: coarse cells + residual product quantization (the faiss workhorse)
 # ---------------------------------------------------------------------------
 # Composition of the two index tiers above: IVF prunes the SCAN (probe only
-# the cells nearest the query — partition pruning when the table is written
-# by write_partitioned_by_ivf), PQ shrinks the BYTES per scanned row (codes
+# the cells nearest the query; sources/ivfindex.py stores the cell per row
+# so the probe prunes segments), PQ shrinks the BYTES per scanned row (codes
 # of the residual x - centroid, which has far less variance than x, so the
 # same codebook budget quantizes it finer). Score ≈ q·centroid (per-cell
 # constant) + ADC over the residual codes — then the ladder's standard exact

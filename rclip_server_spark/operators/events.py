@@ -215,10 +215,10 @@ def dedup_within_window(
     ``minutes``-wide time bucket (the retry/double-fire suppressor). Bucket
     assignment is row-local integer math, so the only shuffle is the keyed
     window — the same exchange a keyed event log already pays. The
-    streaming twin is dropDuplicatesWithinWatermark (streaming/windows
-    .dedup_events); this batch form is its oracle-checkable cousin with
-    hard bucket edges (two fires straddling a bucket boundary both
-    survive — deterministic, unlike a sliding horizon)."""
+    streaming twin is streaming/windows.dedup_first_in_bucket; unlike
+    Spark's dropDuplicatesWithinWatermark this form has hard bucket
+    edges (two fires straddling a bucket boundary both survive —
+    deterministic, unlike a sliding horizon)."""
     from pyspark.sql import Window
 
     us = F.unix_micros(F.col(ts_col))

@@ -1,4 +1,4 @@
-"""Distributed multimodal column operators (reference D1/D2/D3, B16/B17).
+"""Distributed multimodal column operators (reference D1/D2/D3, B16).
 
 The reference embeds text/images one call at a time in a single process
 (rclip_server.py:176-188, index_wikimedia.py:136-150). The Spark-native shape
@@ -6,8 +6,8 @@ is a scalar-iterator ``pandas_udf``: the model (or here, the deterministic
 test embedder) is constructed ONCE per executor python worker (lazy
 singleton, reference D3 / rclip_server.py:50-57), then each Arrow batch is
 embedded as one vectorized call. Binary media (images/audio/video) are opaque
-``binary`` columns with typed metadata structs; the decode step is STUBBED
-(the image libraries are not in this container) behind deterministic fakes so
+``binary`` columns; the fetch and pixel steps are STUBBED (the network and
+image libraries are not in this container) behind deterministic fakes so
 the Spark-side plumbing — schema, batching, partitioning — is real and
 testable.
 
@@ -115,44 +115,8 @@ def embed_text_udf_from_factory(make_embedder):
 
 
 # ---------------------------------------------------------------------------
-# D2/B16/B17: binary media columns
+# D2/B16: binary media columns
 # ---------------------------------------------------------------------------
-
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
-
-def decode_image_metadata(df: DataFrame, bin_col: str = "content",
-                          out_col: str = "image_meta") -> DataFrame:
-    """Decode image metadata from a binary column (reference B17 shape:
-    PIL open → size/format, rclip_server.py:464-479).
-
-    STUB: real decoding requires Pillow, absent from this container. The
-    deterministic fake (hash of the bytes → width/height/format) keeps
-    schema/batching real; swap the inner body for
-    ``PIL.Image.open(io.BytesIO(data))`` in production."""
-
-    @F.pandas_udf(IMAGE_META_SCHEMA)
-    def _meta(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for s in batches:
-            rows = []
-            for data in s:
-                b = bytes(data) if data is not None else b""
-                h = hashlib.md5(b).digest()
-                rows.append(
-                    (64 + h[0] % 192, 64 + h[1] % 192, ("jpeg", "png", "gif")[h[2] % 3], len(b))
-                )
-            yield pd.DataFrame(rows, columns=["width", "height", "format", "n_bytes"])
-
-    return df.withColumn(out_col, _meta(F.col(bin_col)))
 
 
 def embed_binary_column(
@@ -197,24 +161,6 @@ def fetch_url_stub(df: DataFrame, url_col: str = "url",
             )
 
     return df.withColumn(out_col, _fetch(F.col(url_col)))
-
-
-def thumbnail_stub(df: DataFrame, bin_col: str = "content", size: int = 600,
-                   out_col: str = "thumbnail") -> DataFrame:
-    """B17 image transform pipeline (EXIF transpose → thumbnail → RGB → JPEG,
-    rclip_server.py:464-479) as a map-only binary→binary op.
-
-    STUB at the pixel boundary (deterministic truncation of the bytes); the
-    production body is four Pillow calls inside the same iterator."""
-
-    @F.pandas_udf(T.BinaryType())
-    def _thumb(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield pd.Series(
-                [bytes(x)[: max(16, size // 4)] if x is not None else None for x in s]
-            )
-
-    return df.withColumn(out_col, _thumb(F.col(bin_col)))
 
 
 def embed_documents(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",

@@ -230,7 +230,7 @@ def bloom_prune_anti_join(
     one per branch — persist upstream if the source is not a cheap
     re-scan); the surviving anti-join input is |matches| + fpp*|big| rows
     instead of |big|. Worth it exactly when ``keys`` outgrows the broadcast
-    threshold — below it, writer.anti_join_new_ids' BroadcastHashJoin is
+    threshold — below it, writer.anti_join_skip's BroadcastHashJoin is
     already optimal."""
     kk = keys_key or big_key
     key_set = keys.select(F.col(kk).alias(kk)).distinct()

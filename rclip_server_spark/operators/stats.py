@@ -327,13 +327,3 @@ def train_logistic(df: DataFrame, feature_cols: list[str], label_col: str,
     finally:
         proj.unpersist()
     return w, b, losses
-
-
-def predict_logistic(df: DataFrame, feature_cols: list[str],
-                     weights, bias: float, out_col: str = "p") -> DataFrame:
-    """Map-only scoring of the trained model: the logit is a literal-weight
-    column expression (JVM codegen, no Python on the scoring path)."""
-    z = F.lit(float(bias))
-    for c, wv in zip(feature_cols, np.asarray(weights, dtype=np.float64)):
-        z = z + F.col(c) * F.lit(float(wv))
-    return df.withColumn(out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))

@@ -28,37 +28,6 @@ from .sources import external, writer
 ALLOWED_EXT_RE = r"\.(jpg|jpeg|png|gif)$"
 
 
-def _index_batch(
-    spark: SparkSession, meta: DataFrame, table_path: str, url_col: str, dim: int
-) -> int:
-    """Shared indexing stages (anti-join skip → filter → rewrite → fetch →
-    embed → upsert); called by both the batch and the streaming entry."""
-    writer.create_images_table(spark, table_path)
-    done = spark.read.parquet(table_path).select(F.col("filepath").alias(url_col))
-    todo = writer.anti_join_skip(meta, done, url_col)
-
-    todo = todo.where(F.regexp_extract(F.col(url_col), ALLOWED_EXT_RE, 1) != "")
-    todo = todo.withColumn(
-        "thumb_url",
-        F.regexp_replace(F.col(url_col), "/commons/", "/commons/thumb/"),
-    )
-
-    fetched = multimodal.fetch_url_stub(todo, url_col=url_col, out_col="content")
-    embedded = multimodal.embed_binary_column(fetched, bin_col="content", dim=dim)
-
-    rows = embedded.select(
-        F.abs(F.xxhash64(url_col)).alias("id"),
-        F.lit(None).cast("boolean").alias("deleted"),
-        F.col(url_col).alias("filepath"),
-        F.current_timestamp().alias("modified_at"),
-        F.length("content").cast("long").alias("size"),
-        F.col("embedding").cast("array<float>").alias("vector"),
-        F.col("thumb_url").alias("wikimedia_thumb_url"),
-        F.lit(None).cast("string").alias("wikimedia_descr_url"),
-    )
-    return _count_and_upsert(spark, rows, table_path)
-
-
 def _count_and_upsert(spark: SparkSession, rows: DataFrame,
                       table_path: str) -> int:
     """Count + conditional upsert of an indexed-rows frame, persisted
@@ -89,7 +58,30 @@ def index_images(
     Incremental: a second run over the same metadata upserts the same keys
     (count stable), and new metadata only processes the delta."""
     meta = external.read_ndjson(spark, metadata_ndjson, shuffle_seed=shuffle_seed)
-    return _index_batch(spark, meta, table_path, url_col, dim)
+    writer.create_images_table(spark, table_path)
+    done = spark.read.parquet(table_path).select(F.col("filepath").alias(url_col))
+    todo = writer.anti_join_skip(meta, done, url_col)
+
+    todo = todo.where(F.regexp_extract(F.col(url_col), ALLOWED_EXT_RE, 1) != "")
+    todo = todo.withColumn(
+        "thumb_url",
+        F.regexp_replace(F.col(url_col), "/commons/", "/commons/thumb/"),
+    )
+
+    fetched = multimodal.fetch_url_stub(todo, url_col=url_col, out_col="content")
+    embedded = multimodal.embed_binary_column(fetched, bin_col="content", dim=dim)
+
+    rows = embedded.select(
+        F.abs(F.xxhash64(url_col)).alias("id"),
+        F.lit(None).cast("boolean").alias("deleted"),
+        F.col(url_col).alias("filepath"),
+        F.current_timestamp().alias("modified_at"),
+        F.length("content").cast("long").alias("size"),
+        F.col("embedding").cast("array<float>").alias("vector"),
+        F.col("thumb_url").alias("wikimedia_thumb_url"),
+        F.lit(None).cast("string").alias("wikimedia_descr_url"),
+    )
+    return _count_and_upsert(spark, rows, table_path)
 
 
 def index_local_images(
@@ -137,36 +129,6 @@ def index_local_images(
         F.lit(None).cast("string").alias("wikimedia_thumb_url"),
     )
     return _count_and_upsert(spark, rows, table_path)
-
-
-def index_images_stream(
-    spark: SparkSession,
-    metadata_dir: str,
-    table_path: str,
-    url_col: str = "url",
-    dim: int = 64,
-) -> None:
-    """Continuous indexer: watch a directory for new ndjson metadata files
-    and run the SAME stages per micro-batch via foreachBatch (which executes
-    driver-side, so the batch write path — anti-join + upsert — is reused
-    verbatim). availableNow trigger: drain what's there, then stop; drop the
-    trigger for a long-running watcher."""
-    stream = (
-        spark.readStream.schema(f"{url_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .json(metadata_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _index_batch(spark, batch_df, table_path, url_col, dim)
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", table_path + "_ckpt")
-        .start()
-    )
-    q.awaitTermination()
 
 
 def resolve_live(live: DataFrame, q: str, embedder):
@@ -334,159 +296,3 @@ def curate_corpus(
         "n_tokens",
         "split",
     )
-
-
-def incremental_corpus_refresh(
-    spark: SparkSession,
-    raw_path: str,
-    curated_path: str,
-    last_raw_version: int,
-    min_tokens: int = 5,
-    min_quality: float = 0.3,
-    dedup_threshold: float = 0.7,
-) -> tuple[int | None, int]:
-    """One cycle of the CONTINUOUS curation loop — the shape a 100 TB
-    corpus actually runs day after day, composed from the engine's
-    incremental primitives so each cycle costs O(new data), never
-    O(corpus):
-
-        CDC read of the raw versioned table since the last processed
-        version (``versioned.table_changes`` fast path: only the appended
-        segments are opened)
-          → C4-style clean (map-only row-local gates)
-          → near-dup check of the BATCH against the EXISTING curated
-            corpus (``minhash_near_dup_incremental``: banded-LSH
-            corpus×batch join — cost scales with the batch; the corpus
-            side is its precomputable signature index)
-          → exactly-once append into the curated versioned table with
-            the processed RAW VERSION as the batch id — a crash-replayed
-            cycle finds the id in the curated table's manifest log and
-            skips, so reruns are safe end-to-end.
-
-    Returns (new_curated_version | None if this raw interval was already
-    committed, rows appended). Idempotence is carried by the manifest
-    log, not the caller."""
-    from .operators import dedup, text_analysis
-    from .sources import versioned
-
-    raw_head = versioned.current_version(raw_path)
-    if raw_head <= last_raw_version:
-        return None, 0
-    if last_raw_version < 1:
-        # initial backfill: the whole snapshot is the first "delta"
-        fresh = versioned.read(spark, raw_path, raw_head)
-    else:
-        fresh = versioned.table_changes(
-            spark, raw_path, from_version=last_raw_version, to_version=raw_head
-        ).drop("_change_type")
-    cleaned = text_analysis.clean_corpus(
-        fresh, min_tokens=min_tokens, min_quality=min_quality
-    ).select("doc_id", "text")
-    corpus = versioned.read(spark, curated_path).select("doc_id", "text")
-    dup_hits = dedup.minhash_near_dup_incremental(
-        corpus, cleaned, threshold=dedup_threshold
-    ).select(F.col("batch_id").alias("doc_id")).distinct()
-    survivors = cleaned.join(dup_hits, "doc_id", "left_anti")
-    v = versioned.append_exactly_once(
-        spark, curated_path, survivors, batch_id=raw_head
-    )
-    if v is None:  # crash-replayed interval: already committed, no-op
-        return None, 0
-    return v, survivors.count()
-
-
-def start_streaming_corpus_refresh(
-    spark: SparkSession,
-    raw_path: str,
-    curated_path: str,
-    checkpoint_dir: str,
-    min_tokens: int = 5,
-    min_quality: float = 0.3,
-    dedup_threshold: float = 0.7,
-):
-    """The continuous-curation loop as a LIVE STREAM — the round-5 table
-    machinery composed end-to-end: the versioned_cdc source tails the raw
-    table's manifest log (each micro-batch = exactly the newly appended
-    segments, O(delta)), and every batch runs the same clean →
-    batch-vs-corpus near-dup → exactly-once-append cycle as the batch
-    pipeline, keyed by the STREAM's batch id in the curated table's
-    manifest log — so a crash anywhere replays into a manifest-detected
-    no-op and the curated corpus is exactly-once end to end.
-
-    Ingest writers keep appending to ``raw_path`` (batch append, or the
-    exactly-once streaming sink); this query keeps the curated corpus
-    current. Returns the StreamingQuery."""
-    from .operators import dedup, text_analysis
-    from .sources import cdc_stream, versioned
-
-    cdc_stream.register(spark)
-    stream = (
-        spark.readStream.format("versioned_cdc")
-        .option("path", raw_path)
-        .option("from_version", 1)
-        .load()
-    )
-
-    def _cycle(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = text_analysis.clean_corpus(
-            batch_df, min_tokens=min_tokens, min_quality=min_quality
-        ).select("doc_id", "text")
-        corpus = versioned.read(spark, curated_path).select("doc_id", "text")
-        dup_hits = dedup.minhash_near_dup_incremental(
-            corpus, cleaned, threshold=dedup_threshold
-        ).select(F.col("batch_id").alias("doc_id")).distinct()
-        survivors = cleaned.join(dup_hits, "doc_id", "left_anti")
-        versioned.append_exactly_once(
-            spark, curated_path, survivors, batch_id=batch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_cycle)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def curate_keep_first_via_pairs_view(
-    spark: SparkSession,
-    pairs_view_path: str,
-) -> DataFrame:
-    """Keep-first dedup served FROM the maintained pair table: advance
-    the near-dup pairs view to its source's head (O(changed docs) —
-    sources/neardup_view.py), then anti-join that source snapshot
-    against the GREATER side of every pair (pairs are stored (lesser
-    id, greater id), so dropping id_b keeps each near-dup group's
-    first-by-id doc, the same keep-min policy as dedup.exact_dedup_mark).
-
-    PINNED end to end: the pairs view is read at the exact version the
-    refresh returned, its spec names the source AND the source version
-    that pair set covers, and the anti-join reads the source AT that
-    cursor — a concurrent ingest commit between the refresh and the
-    reads can neither leak unpaired docs into the "curated" output nor
-    mix versions (the caller passes only the view; the source is the
-    manifest's, never a parameter that could silently point elsewhere).
-
-    This is what the r9 pair view exists for operationally: the
-    incremental_corpus_refresh pipeline re-derives batch-vs-corpus
-    pairs per cycle, while a standing pairs view amortizes signatures
-    AND pairs across every consumer — curation here, audit/cluster
-    jobs elsewhere — all reading one incrementally-maintained table.
-    Note the policy difference: anti-joining id_b drops the later doc
-    of EVERY near-dup pair (transitive groups collapse to their
-    minimum id), whereas batch-vs-corpus curation keeps a batch doc
-    unless it matches the already-curated corpus."""
-    from .sources import matview, neardup_view, versioned
-
-    view_v = matview.refresh_view(spark, pairs_view_path)
-    spec = matview._spec(pairs_view_path, view_v, "near_dup")
-    dup_keys = (
-        neardup_view.read_near_dup_pairs_view(spark, pairs_view_path,
-                                              view_v)
-        .select("id_b").distinct()
-    )
-    raw = versioned.read(spark, spec["nd_source"],
-                         int(spec["nd_source_version"]))
-    return raw.join(
-        F.broadcast(dup_keys.withColumnRenamed("id_b", spec["nd_key"])),
-        spec["nd_key"], "left_anti")

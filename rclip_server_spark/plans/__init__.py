@@ -1,10 +1,9 @@
-from . import cache, serving
+from . import serving
 from .combinator import resolve_query
 from .embedder import DeterministicEmbedder, Embedder, get_default_embedder
 from .parser import Term, parse_query
 
 __all__ = [
-    "cache",
     "serving",
     "Term",
     "parse_query",

@@ -145,9 +145,3 @@ def accelerate(df: DataFrame) -> DataFrame:
             _, name, (vec_name, qvec) = item
             cols.append(score_col_gemv(F.col(vec_name), qvec).alias(name))
     return child_df.select(*cols)
-
-
-def accelerate_sql(spark, sql: str) -> DataFrame:
-    """Run a SQL text through the rewrite: ``spark.sql`` then
-    ``accelerate`` — pure SQL in, BLAS execution out where it matches."""
-    return accelerate(spark.sql(sql))

@@ -1,38 +1,16 @@
-"""External enumeration + ndjson sources (reference B11/B12).
+"""ndjson metadata source (reference B11).
 
-B12: the reference enumerates MediaWiki category members over HTTP
-(index_wikimedia.py:105-109). The Spark-native shape: a driver-side fetch
-callback yields the (small) enumeration, which becomes a DataFrame that the
-distributed pipeline (anti-join skip → fetch → embed → MERGE) consumes. At
-real scale this graduates to a custom Python DataSource; the enumeration
-lists are thousands of rows, so createDataFrame is the right altitude here.
-
-B11: ndjson metadata scan (index_wikimedia.py:180-185) is spark.read.json —
+The ndjson metadata scan (index_wikimedia.py:180-185) is spark.read.json —
 schema inference, predicate pushdown, and parallelism for free — plus a
 SEEDED shuffle standing in for the reference's random.shuffle work-order
-randomization.
+randomization. The B12 external enumeration is the ``external_enum``
+Python DataSource in ``sources/pydatasource.py``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def enumerate_external(
-    spark: SparkSession,
-    fetch: Callable[[], Iterable[dict]],
-    schema: str = "title string, url string",
-) -> DataFrame:
-    """B12: materialize an external enumeration (e.g. category members) as a
-    DataFrame. ``fetch`` runs ONCE on the driver; no fetch stub is hidden
-    here — callers supply the HTTP client (this container has no network)."""
-    rows = list(fetch())
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(rows, schema=schema)
 
 
 def read_ndjson(spark: SparkSession, path: str, shuffle_seed: int | None = None) -> DataFrame:

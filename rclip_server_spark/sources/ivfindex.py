@@ -1,8 +1,8 @@
 """Maintained IVF (inverted-file) index view: the source's embedding
 rows stored WITH their nearest-centroid cell, kept in sync through the
 CDC log — the coarse-quantizer twin of the LSH ann_index, completing
-the ad-hoc ladder's IVF tier (operators/ann.py ivf_topk /
-write_partitioned_by_ivf) with O(changed rows) maintenance.
+the ad-hoc ladder's IVF tier (operators/ann.py ivf_assign /
+ivf_topk) with O(changed rows) maintenance.
 
 Reference parity: the reference scores every row per query
 (rclip_server.py:150-166); the ad-hoc IVF tier prunes that scan but

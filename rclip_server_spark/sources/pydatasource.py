@@ -1,6 +1,5 @@
 """Custom Python DataSource (Spark 4 datasource API) for external
-enumerations — the at-scale form of B12 (SURVEY.md §2: driver-side
-createDataFrame is right for thousands of rows; a partitioned DataSource is
+enumerations — reference B12 (SURVEY.md §2: a partitioned DataSource is
 right when the enumeration itself is large or paginated).
 
 The reference walks MediaWiki category members over HTTP
@@ -80,9 +79,9 @@ class ExternalEnumStreamReader(SimpleDataSourceStreamReader):
     """Streaming form of the same enumeration: each micro-batch reads the
     next ``page_size`` indices (the offset is the cursor a paginated API
     hands back — here a plain integer). This is the continuous-ingestion
-    front half of the streaming indexer: external_enum stream ->
-    sink.start_stream_upsert, with exactly-once delivery coming from
-    Spark's checkpointed offsets plus the idempotent merge.
+    front half of a streaming indexer: an external_enum stream feeds a
+    foreachBatch upsert, with exactly-once delivery coming from Spark's
+    checkpointed offsets plus the idempotent merge.
 
     `read(start)` is called on the DRIVER (Simple API: no partition
     planning; right for cursor-paginated APIs that cannot be split);

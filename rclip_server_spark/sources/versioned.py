@@ -38,13 +38,12 @@ Scale notes: manifests hold segment names, not row data — KB-sized at any
 table size. ``append`` commits are O(batch) (new segment + manifest listing
 parent segments + it). ``upsert``/overwrite commits rewrite the merged state
 into one new segment — the honest plain-parquet cost. The BUCKETED
-composition below (``create_bucketed``/``upsert_bucketed``/…) bounds that
-cost the way writer.py's bucketed layout does, while keeping every manifest
-guarantee: the manifest maps bucket id → immutable segment list, an upsert
-rewrites only the touched buckets' segments and commits ONE new manifest
-atomically across all of them — so bucketed tables get snapshot isolation
-during a rewrite, time travel, and OCC, which the raw per-bucket-directory
-swap in writer.py cannot give (its commit boundary is per bucket).
+layout below (``create_bucketed``/``convert_to_bucketed``) bounds that
+cost while keeping every manifest guarantee: the manifest maps bucket id
+→ immutable segment list, an upsert rewrites only the touched buckets'
+segments and commits ONE new manifest atomically across all of them — so
+bucketed tables keep snapshot isolation during a rewrite, time travel,
+and OCC.
 A real multi-writer object-store deployment would put the manifest-create
 behind a conditional-put; single-filesystem ``os.link`` is the atomic,
 exclusive arbiter here.
@@ -78,6 +77,24 @@ APPEND_OPS = ("append", "append-bucketed", "stream-append",
               # its new segments (none), instead of a wasteful
               # snapshot-diff recompute of an unchanged table
               "add-column")
+
+
+# the bucketed layout's hash column (hive-style ``__bucket=<b>`` segment
+# dirs); user tables may not declare a column of this name
+_BUCKET_COL = "__bucket"
+
+
+def _bucket_expr(key, n_buckets: int):
+    """The bucket of a key: ``pmod(xxhash64(cast(key as string)), n)``.
+    ``key`` is a column name or a Column (a literal ``F.lit(value)``
+    too). xxhash64 is seed-fixed in Spark, so a key lands in the same
+    bucket across runs, sessions and cluster sizes; functions/xxh.py
+    computes the same value driver-side."""
+    import pyspark.sql.functions as F
+
+    col = F.col(key) if isinstance(key, str) else key
+    return F.pmod(F.xxhash64(col.cast("string")),
+                  F.lit(n_buckets)).cast("int")
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -908,12 +925,10 @@ def _vector_scope(m: dict, kdf: DataFrame, key_col: str,
     Cost: ZERO Spark jobs when ``path``/``dseg`` name the written
     vector segment — the keys are read back driver-side (pyarrow over
     the KB-sized files) and routed through functions.xxh.bucket_of,
-    the parity-pinned twin of the writer's layout expression; vectors
+    the parity-pinned twin of ``_bucket_expr``; vectors
     too large, NULL-keyed, or typed outside the pinned string/integral
     set fall back to one distinct-bucket-ids Spark job over the (tiny,
     already materialized) key segment — bounded by n_buckets."""
-    from .writer import _BUCKET_COL, _bucket_expr
-
     if "buckets" not in m:
         return m["segments"]
     bkey, n_buckets, bmap = _bucketed_meta(m)
@@ -1015,8 +1030,6 @@ def _append(spark: SparkSession, path: str, v: int, batch: DataFrame,
     """The one append body behind append and append_exactly_once
     (``batch_id`` recorded in the manifest; an exactly-once commit
     lands even when the batch is empty, so its id enters the log)."""
-    from .writer import _BUCKET_COL, _bucket_expr
-
     m = _manifest(path, v)
     if "buckets" in m:
         op += "-bucketed"
@@ -1056,7 +1069,7 @@ def delete_rows(spark: SparkSession, path: str, keys, key_col: str,
     bucket stay anti-join-free (_vector_scope).
 
     This is the versioned-layer completion of B5: the flat writer's
-    soft_delete rewrites the table, the bucketed writer's rewrites the
+    soft_delete rewrites the table, a bucketed upsert rewrites the
     touched buckets, this rewrites NOTHING — at 100 TB a compliance
     delete (GDPR erasure, takedown) costs the key list, not a scan.
     Note: table_row_count reports pre-delete counts while vectors are
@@ -1115,6 +1128,8 @@ def delete_and_append(
     layout it receives ``(dseg or None, {bucket: segment})``."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     m = _manifest(path, v)
@@ -1129,7 +1144,9 @@ def delete_and_append(
     # segments) are INDEPENDENT jobs over the same (usually persisted)
     # batch — submit them from two driver threads so one chain's tasks
     # back-fill the other's task tail (guide-§2.6 overlap) instead of
-    # paying two sequential per-job floors
+    # paying two sequential per-job floors; both threads inherit this
+    # one's local properties (job group included), so job censuses
+    # keyed on the caller's group count their jobs
     def _chain_vector():
         dseg, kset = _write_delete_vector(
             spark, path, keys, key_col, key_type=ktype)
@@ -1148,8 +1165,8 @@ def delete_and_append(
             bb.unpersist()
 
     with ThreadPoolExecutor(max_workers=2) as _ex:
-        _fv = _ex.submit(_chain_vector)
-        _fb = _ex.submit(_chain_batch)
+        _fv = _ex.submit(inheritable_thread_target(spark)(_chain_vector))
+        _fb = _ex.submit(inheritable_thread_target(spark)(_chain_batch))
         _errs, dseg, scope, segs = [], None, [], {}
         try:
             dseg, scope = _fv.result()
@@ -1191,8 +1208,6 @@ def overwrite(spark: SparkSession, path: str, df: DataFrame,
     pins the OCC parent (same read-modify-write contract as append).
     ``op`` labels the commit in DESCRIBE HISTORY (truncate() reuses this
     path)."""
-    from .writer import _BUCKET_COL, _bucket_expr
-
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     parent = _manifest(path, v)
@@ -1263,30 +1278,10 @@ def _register_clone_ref(owner_path: str, clone_path: str) -> str:
     return p
 
 
-def live_clone_refs(path: str) -> list[str]:
-    """Paths of still-existing clones registered against this table
-    (dead refs are skipped, not reaped — vacuum owns reaping)."""
-    croot = os.path.join(path, _CLONE_DIR)
-    if not os.path.isdir(croot):
-        return []
-    out = []
-    for f in sorted(os.listdir(croot)):
-        if not f.endswith(".json"):
-            continue
-        try:
-            with open(os.path.join(croot, f)) as fh:
-                clone = json.load(fh)["clone"]
-        except (OSError, ValueError, KeyError):
-            continue
-        if os.path.isdir(os.path.join(clone, _SNAP_DIR)):
-            out.append(clone)
-    return sorted(set(out))
-
-
 def clones_still_referencing(path: str) -> list[str]:
     """Live clones whose RETAINED MANIFESTS still name this table's
     segments — the manifest-walking liveness check DROP TABLE blocks
-    on (ADVICE r11: the existence-only ``live_clone_refs`` guard
+    on (ADVICE r11: a guard on the mere existence of registered clones
     permanently blocked dropping a source even after every clone had
     been localized by OPTIMIZE + VACUUM). Consistent with vacuum's
     ``_clone_pinned_segments``: a clone whose history no longer
@@ -1530,7 +1525,6 @@ def add_column(spark: SparkSession, path: str, col: str, dtype: str,
     if "buckets" not in m:
         raise ValueError("flat tables add columns via a zero-row "
                          "evolved-schema append (the SQL ALTER path)")
-    from .writer import _BUCKET_COL
 
     if col.lower() == _BUCKET_COL:
         # the internal routing column: a bucketed append overwrites it
@@ -2183,11 +2177,10 @@ def vacuum(path: str, keep_last: int = 1,
 # ===========================================================================
 # Bucketed composition: bounded-rewrite upserts UNDER the manifest log
 # ===========================================================================
-# writer.py's bucketed layout bounds a MERGE's rewrite volume to the touched
-# buckets, but its commit is a per-bucket-directory swap — no atomicity
-# across buckets, no reader isolation during a rewrite, no time travel.
-# Versioning the buckets in the manifest fixes all three at once: the
-# manifest maps bucket id -> list of immutable segment dirs, so
+# Hash-bucketing bounds a MERGE's rewrite volume to the touched buckets;
+# versioning the buckets in the manifest keeps that bound atomic across
+# buckets, isolated from readers and time-travelable: the manifest maps
+# bucket id -> list of immutable segment dirs, so
 #   * an upsert writes NEW segments for the touched buckets only and
 #     commits one manifest that swaps exactly those entries — atomic across
 #     every touched bucket (the os.link commit point), while untouched
@@ -2208,8 +2201,6 @@ def vacuum(path: str, keep_last: int = 1,
 def _bucket_ids(df_b: DataFrame) -> list[int]:
     """Distinct bucket ids of a bucketed batch — bounded by n_buckets, a
     few KB collected, never data-sized."""
-    from .writer import _BUCKET_COL
-
     return sorted(int(r[_BUCKET_COL])
                   for r in df_b.select(_BUCKET_COL).distinct().collect())
 
@@ -2236,8 +2227,6 @@ def _stage_bucketed_batch(batch: DataFrame, key: str,
     written. The staged rows are the commit's own O(batch) output, so
     the materialization is bounded by what is being written anyway
     (guide §1.2: don't compute things twice; §5: unpersist when done)."""
-    from .writer import _BUCKET_COL, _bucket_expr
-
     return batch.withColumn(
         _BUCKET_COL, _bucket_expr(key, n_buckets)
     ).persist()
@@ -2251,8 +2240,6 @@ def _write_bucket_segments(
     own seg-* name (the partition-directory layer is stripped, so segment
     files carry no layout column — same on-disk shape as flat segments).
     Returns {bucket_id: segment_name} for buckets that produced rows."""
-    from .writer import _BUCKET_COL
-
     tmp = os.path.join(path, f".stage-{uuid.uuid4().hex[:12]}")
     df_b.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
     out: dict[int, str] = {}
@@ -2286,7 +2273,7 @@ def create_bucketed(
     n_buckets: int = 64, stat_cols: list[str] | None = None,
 ) -> int:
     """Create a BUCKETED versioned table as version 1: rows are hash-routed
-    by ``pmod(xxhash64(key), n_buckets)`` (writer.py's deterministic
+    by ``pmod(xxhash64(key), n_buckets)`` (``_bucket_expr``'s deterministic
     bucketing — same key, same bucket, forever) into per-bucket immutable
     segments; the manifest records the bucket map.
 
@@ -2296,8 +2283,6 @@ def create_bucketed(
     resolution — the second pruning layer on top of bucket subsetting
     (bucket hash answers key-equi questions; zone maps answer RANGE
     questions, e.g. a time window over a user-bucketed table)."""
-    from .writer import _bucket_expr, _BUCKET_COL
-
     os.makedirs(os.path.join(path, _SNAP_DIR), exist_ok=False)
     df_b = df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
     segs = _write_bucket_segments(df_b, path, _bucket_ids(df_b))
@@ -2322,8 +2307,6 @@ def convert_to_bucketed(spark: SparkSession, path: str, key: str,
     co-location — one rewrite buys every later key-equi join/upsert
     the touched-buckets cost model."""
     import pyspark.sql.functions as F
-
-    from .writer import _BUCKET_COL, _bucket_expr
 
     v = current_version(path)
     m = _manifest(path, v)
@@ -2360,7 +2343,7 @@ def read_probed(
     kinds share (indexkind.probed): a flat table reads all
     segments; one converted to the hash-bucketed at-rest layout on
     ``bucket_key`` resolves the caller's probe VALUES to physical
-    buckets DRIVER-SIDE (functions/xxh.py — the writer's
+    buckets DRIVER-SIDE (functions/xxh.py — ``_bucket_expr``'s
     pmod(xxhash64(cast string), n) in pure Python, parity-pinned by
     tests/test_xxh.py) and names only those buckets' segment files in
     the plan, reading with the manifest-pinned schema — ZERO Spark
@@ -2382,7 +2365,7 @@ def point_lookup_bucketed(
     spark: SparkSession, path: str, value, version: int | None = None
 ) -> DataFrame:
     """Key point-lookup with BOTH layers of pruning: the key's bucket is
-    computed with the same zero-scan JVM expression writer.py uses, only
+    computed with the layout's own expression (``_bucket_expr``), only
     that bucket's segments enter the plan, and the key predicate prunes
     row groups inside them — a snapshot-isolated point read."""
     import pyspark.sql.functions as F
@@ -2394,17 +2377,14 @@ def point_lookup_bucketed(
     # pinned against the live Spark expression by tests/test_xxh.py)
     # — a point lookup plans with zero Spark jobs; value types outside
     # the pinned string/integral set fall back to the one-row JVM
-    # evaluation of the exact writer expression
+    # evaluation of the exact layout expression
     from ..functions.xxh import bucket_of
 
     try:
         b = bucket_of(value, n_buckets)
     except TypeError:
         b = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(value).cast("string")),
-                   F.lit(n_buckets))
-            .cast("int").alias("b")
-        ).first()["b"]
+            _bucket_expr(F.lit(value), n_buckets).alias("b")).first()["b"]
     return _read_segments(spark, path, m, _layout_segments(m, [int(b)])
                           ).where(F.col(key) == value)
 
@@ -2428,8 +2408,6 @@ def upsert_bucketed(
     written. The counts ride the SAME single aggregation job that
     collects the touched bucket ids, so a caller-side duplicate-key
     guard (the SQL MERGE contract) costs zero extra jobs here."""
-    from .writer import _bucket_expr, _BUCKET_COL
-
     v = current_version(path)
     m = _manifest(path, v)
     key, n_buckets, bmap = _bucketed_meta(m)
@@ -2498,8 +2476,6 @@ def _compact_buckets(spark: SparkSession, path: str, v: int, m: dict,
     every non-empty bucket rewrites without the column, and the hidden
     list clears — the one O(table) case (user-invoked maintenance, not
     a DML tax)."""
-    from .writer import _bucket_expr, _BUCKET_COL
-
     key, n_buckets, bmap = _bucketed_meta(m)
     hidden = m.get("hidden_cols") or []
     scoped: set[str] = set()
@@ -2624,7 +2600,7 @@ def _zorder_buckets(spark: SparkSession, path: str, v: int, m: dict,
     this subsumes (every bucket folds to one segment)."""
     import pyspark.sql.functions as F
 
-    from .writer import _BUCKET_COL, _bucket_expr, zorder_value
+    from .writer import zorder_value
 
     key, n_buckets, bmap = _bucketed_meta(m)
     types = m.get("col_types", {})
@@ -3115,21 +3091,3 @@ def describe_stats(path: str) -> dict:
     stats["head_version"] = head
     stats["stale"] = best < head
     return stats
-
-
-def register_sql_view(spark: SparkSession, name: str, path: str,
-                      version: int | None = None) -> None:
-    """Expose a versioned table (or a time-travel version of it) to
-    ``spark.sql`` as a temp view — the head is resolved ONCE at
-    registration, so every query against the view reads a consistent
-    snapshot regardless of concurrent commits (re-register to advance).
-    Works for flat and bucketed layouts and applies pending delete
-    vectors, because it is just read() under a name.
-
-    Retention contract: the view names the registered version's segment
-    paths, so a later rewrite + ``vacuum`` that reaps them breaks the
-    view with a path-not-found — the same manifest-retention pairing as
-    matview cursors and streaming checkpoints. Keep ``keep_last`` /
-    ``retain_seconds`` covering the lifetime of registered views, or
-    re-register after table maintenance."""
-    read(spark, path, version).createOrReplaceTempView(name)

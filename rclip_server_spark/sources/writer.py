@@ -26,8 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.localrel import values_df
-
 
 def anti_join_skip(
     new_df: DataFrame, done_df: DataFrame, key: str | list[str],
@@ -140,31 +138,6 @@ def reload_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def compact_parquet(
-    spark: SparkSession, path: str, target_file_mb: int = 128
-) -> int:
-    """Small-file compaction: rewrite a parquet table into
-    ceil(bytes / target_file_mb) files and atomically swap. The maintenance
-    op every long-lived ingest pipeline needs — a streaming/incremental
-    writer (pipelines.index_images_stream, upsert_parquet) accretes small
-    files, and at scale each file under ~100 MB costs a task, an open, and a
-    footer read per query.
-
-    Uses coalesce (narrow, no shuffle: existing partitions are merged
-    in-place) rather than repartition — compaction must be cheaper than the
-    queries it speeds up. Returns the output file count."""
-    size_bytes = sum(
-        os.path.getsize(os.path.join(d, f))
-        for d, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-size_bytes // (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    _overwrite_atomic(df.coalesce(n_files), path)
-    return n_files
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -192,243 +165,6 @@ def write_partitioned(
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-_BUCKET_COL = "__bucket"
-_BUCKET_SPEC = "_bucket_spec.json"  # "_"-prefixed: invisible to Spark scans
-
-
-def _bucket_expr(key: str, n_buckets: int):
-    """Deterministic hash bucket for a key column: pmod(xxhash64(key), n).
-    xxhash64 is seed-fixed in Spark, so the same key lands in the same
-    bucket across runs, sessions, and cluster sizes."""
-    return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
-
-
-def create_bucketed_table(
-    spark: SparkSession, path: str, df: DataFrame, key: str, n_buckets: int = 64
-) -> None:
-    """Create the hash-bucketed layout for bounded-rewrite upserts: the
-    table is hive-partitioned by ``__bucket = pmod(xxhash64(key), n)`` so a
-    MERGE touches only the bucket directories its update keys hash into —
-    the plain-parquet answer to the 'upsert rewrites the whole table' cost
-    (Delta/Iceberg MERGE rewrites only matched files; this rewrites only
-    matched buckets). Sizing: pick n_buckets so a bucket is a few hundred
-    MB at the target scale — at 100 TB with n_buckets=65536 each bucket is
-    ~1.5 GB and a 1M-row update batch rewrites at most
-    min(n_buckets, distinct keys) of them, not the table."""
-    import json
-
-    out = df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    out.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(path)
-    with open(os.path.join(path, _BUCKET_SPEC), "w") as f:
-        json.dump({"key": key, "n_buckets": n_buckets}, f)
-
-
-def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
-    """Read a bucketed table without the layout column. ``mergeSchema``
-    reconciles per-bucket schema evolution (a bounded-rewrite soft delete
-    adds the flag column only to touched buckets; untouched buckets read
-    it as NULL — which IS the live semantics, NULL ≡ not deleted)."""
-    return spark.read.option("mergeSchema", "true").parquet(path).drop(_BUCKET_COL)
-
-
-def upsert_parquet_bucketed(
-    spark: SparkSession, path: str, updates: DataFrame
-) -> int:
-    """B6 upsert against the bucketed layout, rewriting ONLY touched
-    buckets. Plan: bucket the updates, collect the distinct bucket ids
-    (bounded by n_buckets — a few KB, never data-sized), read the target
-    WITH a partition filter on those ids (pruned at planning time: Spark
-    never lists the other directories), left-anti + union merge inside the
-    touched buckets, write them to a temp dir, and atomically swap each
-    bucket directory. Untouched buckets are never read, shuffled, or
-    written. Returns the number of buckets rewritten.
-
-    Consistency: each bucket swap is atomic (rename); the table commit is
-    per-bucket, not all-or-nothing across buckets. When you need an atomic
-    cross-bucket commit, reader snapshot isolation during the rewrite, or
-    time travel, use the manifest-log composition instead —
-    ``sources.versioned.create_bucketed`` / ``upsert_bucketed`` keep this
-    bounded-rewrite plan but commit ONE manifest across all touched
-    buckets (Delta/Iceberg remain the production superset).
-
-    Measured (600k-row / 16 MB unique-key table, 64 buckets, 8-key update):
-    rewrites 7 buckets = 11.8% of table bytes vs the flat upsert's 100%.
-    Wall-clock is parity at this toy size (both sit on the ~1.5 s local
-    job floor); the rewrite VOLUME is the metric that scales — at 100 TB
-    the flat path rewrites 100 TB per batch, this path rewrites
-    touched-buckets × bucket-size."""
-    import json
-
-    with open(os.path.join(path, _BUCKET_SPEC)) as f:
-        spec = json.load(f)
-    key, n_buckets = spec["key"], int(spec["n_buckets"])
-    ub = updates.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    touched = sorted(
-        r[_BUCKET_COL] for r in ub.select(_BUCKET_COL).distinct().collect()
-    )
-    if not touched:
-        return 0
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(path)
-            .where(F.col(_BUCKET_COL).isin(touched))
-        )
-        # allowMissingColumns: an evolved table column (e.g. the soft-delete
-        # flag) reads as NULL on update rows that don't carry it
-        merged = target.join(
-            ub.select(key).distinct(), [key], "left_anti"
-        ).unionByName(ub, allowMissingColumns=True)
-    except AnalysisException:
-        # freshly created empty table: no parquet files yet, nothing to merge
-        merged = ub
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
-    for b in touched:
-        src = os.path.join(tmp, f"{_BUCKET_COL}={b}")
-        dst = os.path.join(path, f"{_BUCKET_COL}={b}")
-        if not os.path.exists(src):
-            continue
-        if os.path.exists(dst):
-            old = f"{dst}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(dst, old)
-            os.rename(src, dst)
-            shutil.rmtree(old)
-        else:
-            os.rename(src, dst)
-    shutil.rmtree(tmp)
-    return len(touched)
-
-
-def soft_delete_bucketed(
-    spark: SparkSession, path: str, keys: list, flag_col: str = "deleted"
-) -> int:
-    """B5 soft delete on the bucketed layout: flag rows whose KEY is in
-    ``keys``, rewriting only the buckets those keys hash into (the point
-    UPDATE of rclip_server.py:230-235 with bounded rewrite instead of a
-    full-table pass). Deleting by a non-key column cannot prune — keep the
-    merge key as the entity id for point ops. Returns buckets rewritten."""
-    import json
-
-    with open(os.path.join(path, _BUCKET_SPEC)) as f:
-        spec = json.load(f)
-    key, n_buckets = spec["key"], int(spec["n_buckets"])
-    kdf = values_df(spark, [(k,) for k in keys], f"{key} string") \
-        if keys and isinstance(keys[0], str) \
-        else values_df(spark, [(k,) for k in keys], f"{key} bigint")
-    touched = sorted(
-        r["b"] for r in kdf.select(_bucket_expr(key, n_buckets).alias("b"))
-        .distinct().collect()
-    )
-    if not touched:
-        return 0
-    target = (
-        spark.read.option("mergeSchema", "true").parquet(path)
-        .where(F.col(_BUCKET_COL).isin(touched))
-    )
-    # align the key dtype with the table's (a Python int list against a
-    # string key would otherwise join through an implicit double cast)
-    kdf = kdf.withColumn(key, F.col(key).cast(target.schema[key].dataType))
-    if flag_col not in target.columns:
-        target = target.withColumn(flag_col, F.lit(None).cast("boolean"))
-    flagged = target.join(F.broadcast(kdf.withColumn("__hit", F.lit(True))),
-                          [key], "left").withColumn(
-        flag_col,
-        F.when(F.col("__hit"), F.lit(True)).otherwise(F.col(flag_col)),
-    ).drop("__hit")
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    flagged.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
-    for b in touched:
-        src = os.path.join(tmp, f"{_BUCKET_COL}={b}")
-        dst = os.path.join(path, f"{_BUCKET_COL}={b}")
-        if not os.path.exists(src):
-            continue
-        if os.path.exists(dst):
-            old = f"{dst}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(dst, old)
-            os.rename(src, dst)
-            shutil.rmtree(old)
-        else:
-            os.rename(src, dst)
-    shutil.rmtree(tmp)
-    return len(touched)
-
-
-def compact_bucketed(
-    spark: SparkSession, path: str, target_file_mb: int = 128,
-    min_files: int = 2,
-) -> int:
-    """Per-bucket small-file compaction: the streaming bucketed sink
-    accretes one file set per micro-batch per touched bucket; this rewrites
-    each bucket that holds >= ``min_files`` files into
-    ceil(bytes/target) files and atomically swaps that bucket only.
-    Buckets already compact are not read or written, so the maintenance
-    cost tracks ingest churn, not table size — and the operation can run
-    bucket-at-a-time alongside readers (same per-directory atomic swap as
-    the upsert). Returns the number of buckets compacted."""
-    compacted = 0
-    for d in sorted(os.listdir(path)):
-        if not d.startswith(f"{_BUCKET_COL}="):
-            continue
-        bdir = os.path.join(path, d)
-        files = [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(bdir)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-        if len(files) < min_files:
-            continue
-        size = sum(os.path.getsize(f) for f in files)
-        n_files = max(1, -(-size // (target_file_mb * 1024 * 1024)))
-        if n_files >= len(files):
-            continue
-        df = spark.read.parquet(bdir)
-        tmp = f"{bdir}__tmp_{uuid.uuid4().hex[:8]}"
-        df.coalesce(int(n_files)).write.mode("overwrite").parquet(tmp)
-        old = f"{bdir}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(bdir, old)
-        os.rename(tmp, bdir)
-        shutil.rmtree(old)
-        compacted += 1
-    return compacted
-
-
-def point_lookup_bucketed(spark: SparkSession, path: str, value) -> DataFrame:
-    """Key point-lookup as a partition-pruned seek: compute the key's
-    bucket (one zero-row-scan JVM evaluation), then read with BOTH the
-    partition filter (directory pruning at planning time) and the key
-    predicate (row-group skipping at read time). At 100 TB this touches one
-    bucket's files, not the table — the closest plain parquet gets to the
-    reference's O(1) SQLite point SELECT (rclip_server.py:230-235)."""
-    import json
-
-    with open(os.path.join(path, _BUCKET_SPEC)) as f:
-        spec = json.load(f)
-    key, n_buckets = spec["key"], int(spec["n_buckets"])
-    # bucket resolution runs DRIVER-SIDE (functions/xxh.py, parity
-    # pinned by tests/test_xxh.py) — zero Spark jobs at plan time;
-    # value types outside the pinned string/integral set fall back to
-    # the one-row JVM evaluation of the exact layout expression
-    from ..functions.xxh import bucket_of
-
-    try:
-        b = bucket_of(value, n_buckets)
-    except TypeError:
-        b = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(value).cast("string")),
-                   F.lit(n_buckets))
-            .cast("int")
-            .alias("b")
-        ).first()["b"]
-    return (
-        spark.read.option("mergeSchema", "true").parquet(path)
-        .where((F.col(_BUCKET_COL) == b) & (F.col(key) == value))
-        .drop(_BUCKET_COL)
-    )
 
 
 def merge_agg_delta(
@@ -485,47 +221,6 @@ def zorder_value(x, y, bits: int = 16):
     return z
 
 
-def write_sorted(
-    df: DataFrame, path: str, order_cols: list[str], n_files: int = 8
-) -> None:
-    """Range-partitioned, within-file-sorted layout: rows are range-split across
-    ``n_files`` files on ``order_cols`` and sorted within each, so the
-    file set forms one global order with disjoint per-file min/max — a
-    predicate on the sort key touches exactly the files whose range it
-    intersects, and row-group stats prune inside them. The shuffle is one
-    RangePartitioning exchange (sampled boundaries), never a global sort
-    to a single task."""
-    cols = [F.col(c) for c in order_cols]
-    (
-        df.repartitionByRange(n_files, *cols)
-        .sortWithinPartitions(*cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Two-dimensional clustering: ``write_sorted`` on the Morton key of
-    (x_col, y_col). The z column is dropped from the files — it exists
-    only to route and order rows."""
-    z = zorder_value(F.col(x_col), F.col(y_col), bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def write_spark_bucketed_table(
     spark: SparkSession,
     df: DataFrame,
@@ -543,10 +238,11 @@ def write_spark_bucketed_table(
     answer for the repeated-big-join workload: pay one write-time shuffle,
     then every subsequent join/groupBy on the key is shuffle-free.
 
-    Differs from the hive-partitioned `__bucket` layout above (which
-    optimizes bounded-REWRITE and point lookups): this one optimizes
-    repeated JOINs — a 100 TB pipeline typically buckets its fact tables
-    by join key with this writer and uses the manifest-log layout for the
+    Differs from the manifest-log bucketed layout
+    (``sources.versioned.create_bucketed``, which optimizes
+    bounded-REWRITE and point lookups): this one optimizes repeated
+    JOINs — a 100 TB pipeline typically buckets its fact tables by join
+    key with this writer and uses the manifest-log layout for the
     mutable dimension/state tables. ``path`` makes it an external table
     (files survive a catalog drop)."""
     w = (

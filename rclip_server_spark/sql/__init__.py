@@ -236,28 +236,6 @@ def _show_create(catalog: Catalog, name: str) -> str:
             f"{e['meta'].get('sql', '<unrecorded>')}")
 
 
-def execute_script(spark: SparkSession, script: str, catalog: Catalog
-                   ) -> list:
-    """Run a multi-statement script (statements separated by top-level
-    ``;`` — semicolons inside string literals / comments don't split,
-    thanks to the same mask the read path uses). Segments that are
-    empty after comment stripping (a trailing ``-- done``, a
-    ``/* note */`` between semicolons) are skipped, not errors.
-    Returns one result per statement, in order — the .sql-file entry
-    point."""
-    results = []
-    masked = _mask(script)
-    last = 0
-    for i, ch in enumerate(masked + ";"):
-        if ch != ";":
-            continue
-        stmt = script[last:i]
-        last = i + 1
-        if _strip_statement(stmt):
-            results.append(execute(spark, stmt, catalog))
-    return results
-
-
 def execute(spark: SparkSession, statement: str, catalog: Catalog):
     """Run one statement. Returns a DataFrame for SELECT, a dict (or
     list of dicts) for DDL/metadata statements."""

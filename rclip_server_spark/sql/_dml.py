@@ -695,6 +695,8 @@ def _merge_general(spark: SparkSession, e: dict, name: str,
                        f"source's columns {src.columns}")
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     src = src.persist()
     # the dup-key guard is an independent job over the persisted
     # source — run it from a driver thread so it overlaps the
@@ -702,9 +704,12 @@ def _merge_general(spark: SparkSession, e: dict, name: str,
     # of paying a serial validation pass; every commit branch JOINS
     # the check before publishing (precommit hook on the
     # delete-vector path, an explicit result() on the others), so a
-    # duplicate still aborts with nothing committed
+    # duplicate still aborts with nothing committed; the thread
+    # inherits this one's local properties (job group included), so
+    # job censuses keyed on the caller's group count the guard's job
     with ThreadPoolExecutor(max_workers=1) as _ex:
-        _chk = _ex.submit(_merge_dup_key_check, src, skey)
+        _chk = _ex.submit(inheritable_thread_target(spark)(
+            _merge_dup_key_check), src, skey)
         try:
             del_keys, batch = _merge_stage_plans(
                 target, src, key, skey, t_alias, s_alias, matched,

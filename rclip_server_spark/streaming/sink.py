@@ -1,28 +1,17 @@
-"""Streaming upsert sink: continuous ingestion into the images/corpus table
-with MERGE-on-key semantics per micro-batch (foreachBatch -> writer.upsert).
+"""Streaming sinks on the versioned log: exactly-once append ingest
+(foreachBatch -> one committed segment per micro-batch, the batch id
+recorded in the manifest), continuous file ingest, and the view-refresh
+streams that tail a source table's manifest log.
 
 This is the streaming form of the reference's batch indexer loop
 (index_wikimedia.py:86-103 upserts each downloaded batch into SQLite): a
-file/queue stream of new-or-changed rows lands in the serving table as it
-arrives, later rows for the same key replacing earlier ones.
+file/queue stream of new rows lands in a table as it arrives.
 
 Delivery contract: foreachBatch gives at-least-once batch delivery (a batch
-may be REPLAYED after a crash, identified by the same batch_id), and the
-upsert itself is idempotent on the key — replaying a batch rewrites the
-same rows to the same values. That pair (idempotent merge + checkpointed
-source offsets) is the standard exactly-once-effective recipe when the sink
-cannot transactionally record the batch id. At scale the parquet
-atomic-swap stand-in becomes Delta/Iceberg ``MERGE INTO`` and per-batch
-txn ids make the idempotence claim exact (same shape, real table format).
-
-Ordering note: rows may share a key within one micro-batch AND batches may
-arrive (or replay) out of event order. With ``latest_col`` set, the merge
-is CONDITIONAL — target and update rows for a key compete on that column
-and the max wins — so the table state is a pure function of the row set
-seen so far: arrival order, batch boundaries, and replays cannot change
-it (the Delta equivalent is ``WHEN MATCHED AND s.seq > t.seq THEN
-UPDATE``). Without ``latest_col`` the merge is plain replace-on-key and
-correctness requires in-order, effectively-once batches.
+may be REPLAYED after a crash, identified by the same batch_id); the
+versioned append records the batch id in the commit, so a replayed batch is
+detected in the log and skipped rather than re-applied — the plain-parquet
+equivalent of Delta's txnAppId/txnVersion sink protocol.
 """
 
 from __future__ import annotations
@@ -31,70 +20,7 @@ import os
 
 from ..sources.matview import _RECOMPUTE_BOUND_FRACTION as _MV_DEFAULT_FRACTION
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from ..sources import writer
-
-
-def merge_latest(
-    spark: SparkSession, path: str, updates: DataFrame, key: str, latest_col: str
-) -> None:
-    """Conditional MERGE: per key, keep the max-``latest_col`` row across
-    target ∪ updates (one keyed window over the union; at table-format
-    scale this is MERGE WHEN MATCHED AND newer). Atomic-swap write."""
-    if os.path.exists(path):
-        pool = spark.read.parquet(path).unionByName(updates)
-    else:
-        pool = updates
-    # secondary content-hash ordering makes the winner a pure function of
-    # the row SET even when two rows for a key tie on latest_col (the
-    # docstring's replay/arrival-order invariance claim needs it)
-    row_hash = F.xxhash64(*[F.col(c) for c in sorted(pool.columns)])
-    w = Window.partitionBy(key).orderBy(F.desc(latest_col), F.desc(row_hash))
-    merged = (
-        pool.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    writer._overwrite_atomic(merged, path)
-
-
-def start_stream_upsert(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    path: str,
-    key: str = "filepath",
-    latest_col: str | None = None,
-    checkpoint_dir: str | None = None,
-    bucketed: bool = False,
-):
-    """Start the stream: each micro-batch MERGE-upserts into ``path`` —
-    conditionally on ``latest_col`` when given (order/replay-proof), else
-    replace-on-key. With ``bucketed=True`` the target must have been
-    created by ``writer.create_bucketed_table`` and each micro-batch
-    rewrites ONLY the hash-buckets its keys touch — the continuous-ingest
-    shape that stays bounded at 100 TB (per-batch cost scales with the
-    batch's key spread, never the table). Bucketed mode is replace-on-key
-    (replay-idempotent: replaying a batch rewrites the same buckets to the
-    same contents); combine with ``latest_col`` only in flat mode.
-    Returns the StreamingQuery; callers stop it or processAllAvailable."""
-    if bucketed and latest_col is not None:
-        raise ValueError("bucketed streaming upsert is replace-on-key; "
-                         "latest_col is only supported in flat mode")
-
-    def _upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if bucketed:
-            writer.upsert_parquet_bucketed(spark, path, batch_df)
-        elif latest_col is not None:
-            merge_latest(spark, path, batch_df, key, latest_col)
-        else:
-            writer.upsert_parquet(spark, path, batch_df, key=key)
-
-    out = stream_df.writeStream.foreachBatch(_upsert_batch).outputMode("append")
-    if checkpoint_dir is not None:
-        out = out.option("checkpointLocation", checkpoint_dir)
-    return out.start()
+from pyspark.sql import DataFrame, SparkSession
 
 
 def start_stream_append_versioned(
@@ -107,10 +33,9 @@ def start_stream_append_versioned(
     exactly-once delivery: each micro-batch commits one immutable segment
     whose manifest records the batch id, so a crash-replayed batch
     (foreachBatch is at-least-once) is detected in the log and skipped
-    rather than re-applied. This upgrades the upsert sinks' "idempotent,
-    therefore effectively-once" contract to a transactional record — the
-    plain-parquet equivalent of Delta's txnAppId/txnVersion sink protocol,
-    and the log doubles as time travel over the ingest history. A
+    rather than re-applied — the plain-parquet equivalent of Delta's
+    txnAppId/txnVersion sink protocol, and the log doubles as time
+    travel over the ingest history. A
     bucketed target (the manifest records the layout) gets the same
     contract with per-bucket segment accretion — zero rewrite of
     existing data; ``versioned.compact`` folds the accreted segments
@@ -287,48 +212,6 @@ def _start_view_refresh_stream(
         raise
     setattr(q, "_rclip_floors", floors)
     return q
-
-
-def start_bloom_index_stream(
-    spark: SparkSession, table_path: str, col: str,
-    checkpoint_dir: str | None = None,
-    bits: int | None = None, k: int | None = None,
-):
-    """Continuous Bloom-sidecar maintenance: tail the table's manifest
-    log and run bloomindex.build_bloom_index per micro-batch — the build
-    indexes only segments MISSING sidecars, so each wake-up costs
-    O(segments added since the last one) and replayed batches are free
-    no-ops (sidecars are write-once per immutable segment; no OCC or
-    cursor needed — idempotence comes from the filesystem state itself).
-    Pair with the ingest stream so point lookups on a continuously-fed
-    table stay pruned without a manual re-index step."""
-    from ..sources import bloomindex as BX
-    from ..sources import versioned as V
-
-    # module convention: config mismatches fail HERE, synchronously, not
-    # as an asynchronous stream crash (a typo'd column would otherwise
-    # kill the query on the first unindexed batch — or no-op silently)
-    m = V._manifest(table_path, V.current_version(table_path))
-    col_types = m.get("col_types") or {}
-    if col_types and col not in col_types:
-        raise ValueError(
-            f"column {col!r} not in {table_path}'s schema "
-            f"({sorted(col_types)})")
-    # the indexability guard too: a float/boolean/binary column would
-    # otherwise kill the stream asynchronously on its first micro-batch
-    BX._check_indexable_type(col, col_types.get(col))
-
-    kwargs = {}
-    if bits is not None:
-        kwargs["bits"] = int(bits)
-    if k is not None:
-        kwargs["k"] = int(k)
-
-    def _go():
-        BX.build_bloom_index(spark, table_path, col, **kwargs)
-
-    return _start_view_refresh_stream(spark, table_path, _go,
-                                      checkpoint_dir)
 
 
 def start_view_cascade_refresh_stream(

@@ -1,43 +1,21 @@
 """Custom stateful streaming operator via applyInPandasWithState
 (SURVEY.md §F: 'applyInPandasWithState for custom stateful operators').
 
-The built-in windows/dedup cover the declarative cases; this module shows
-the escape hatch for state machines Spark has no primitive for. The example
-operator keeps a running per-user (event count, value-cents sum, last event
-id) across the whole stream — the kind of per-entity accumulator a feature
-store or abuse counter needs.
+The built-in windows/dedup cover the declarative cases; this module holds
+the escape hatch for state machines Spark has no primitive for: a
+streaming as-of join that keeps each user's recent views as state.
 
-Contract: in batch mode the same numbers come from a plain groupBy — the
-test drives the stream to completion and compares. State is one small tuple
-per user; at 100 TB the state store shards by the group key across
+Contract: in batch mode the same rows come from the shuffle+window
+``operators.joins.asof_join`` — the tests drive the stream to completion
+and compare. At 100 TB the state store shards by the group key across
 executors, exactly like any keyed agg.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value_cents bigint, last_event_id bigint"
-STATE_SCHEMA = "n bigint, s bigint, last bigint"
-
-
-def _update_user_totals(key, pdfs, state: GroupState):
-    """Fold each micro-batch's rows for one user into the running state.
-    Closure-self-contained (executor workers cannot import this repo)."""
-    n, s, last = state.get if state.exists else (0, 0, -1)
-    for pdf in pdfs:
-        n += len(pdf)
-        s += int(pdf["value_cents"].sum())
-        if len(pdf):
-            last = max(last, int(pdf["event_id"].max()))
-    state.update((n, s, last))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "sum_value_cents": [s], "last_event_id": [last]}
-    )
-
 
 ASOF_OUTPUT_SCHEMA = (
     "click_id bigint, user_id bigint, click_us bigint, "
@@ -166,29 +144,5 @@ def streaming_asof_last_view(events: DataFrame,
         outputStructType=ASOF_OUTPUT_SCHEMA,
         stateStructType=ASOF_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user running totals. Streaming: stateful update-mode operator;
-    batch: the equivalent groupBy (same one-definition-two-runtimes contract
-    as streaming/windows.py)."""
-    prepped = events.select(
-        "user_id",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-    )
-    if not events.isStreaming:
-        return prepped.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value_cents").alias("sum_value_cents"),
-            F.max("event_id").alias("last_event_id"),
-        )
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

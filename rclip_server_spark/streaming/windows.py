@@ -9,8 +9,9 @@ the correctness story — no second implementation to drift.
 
 Scale notes: windowed aggs shuffle on (window, keys); watermarks bound state
 so a 100 TB/day stream holds only the open windows. Session windows use
-Spark's native ``session_window`` (state merges adjacent sessions); dedup
-state is (keys) within the watermark horizon.
+Spark's native ``session_window`` (state merges adjacent sessions); the
+first-in-bucket dedup holds one row per (window, keys) until the watermark
+closes the window.
 """
 
 from __future__ import annotations
@@ -97,16 +98,6 @@ def session_windows(events: DataFrame, gap: str = "30 minutes",
             "first_event_id",
         )
     )
-
-
-def dedup_events(events: DataFrame, keys: list[str] | None = None,
-                 watermark: str = "1 hour") -> DataFrame:
-    """Stateful dedup: first event per key wins; state bounded by the
-    watermark in streaming mode (dropDuplicatesWithinWatermark)."""
-    keys = keys or ["user_id", "event_type"]
-    if events.isStreaming:
-        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-    return events.dropDuplicates(keys)
 
 
 def dedup_first_in_bucket(events: DataFrame, minutes: int = 10,

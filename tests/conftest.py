@@ -43,18 +43,12 @@ _SLOW_CLASSES = {
 
 _SLOW_TESTS = {
     # write_and_streaming standalone endurance/equivalence (>=10s each)
-    "test_bucketed_upsert_randomized_equivalence",
-    "test_bucketed_compaction_preserves_rows",
     "test_streaming_tumbling_equals_batch",
     "test_watermark_drops_late_data_in_append_mode",
     "test_streaming_asof_state_carries_across_batches",
     "test_stream_stream_interval_join_equals_batch",
     "test_streaming_sessions_equal_batch",
-    "test_bucketed_soft_delete_bounded",
-    "test_streaming_dedup_matches_batch_first_per_key",
-    "test_stateful_running_totals_stream_equals_batch",
     "test_streaming_sliding_equals_batch",
-    "test_streaming_upsert_sink_merges_batches",
     # annindex equivalence endurance
     "test_knn_join_via_index_matches_adhoc",
     "test_bucketed_index_refresh_stays_exact",
@@ -72,9 +66,6 @@ _SLOW_TESTS = {
     "test_analyze_never_run_and_vacuum_retention",
     "test_analyze_bucketed_and_approx",
     "test_curate_corpus_end_to_end",
-    "test_streaming_corpus_refresh_end_to_end",
-    "test_streaming_incremental_indexer",
-    "test_incremental_corpus_refresh_cycles",
     "test_stats_survive_dml_and_rewrites",
     "test_agg_view_refresh_over_bucketed_dml",
     "test_time_travel_restore_and_vacuum",
@@ -101,17 +92,13 @@ _SLOW_TESTS = {
     "test_zorder_by_declared_unwritten_column",
     "test_knn_join_matches_python_api",
     "test_embed_dispatch_describe_heal",
-    "test_curate_keep_first_via_pairs_view",
     "test_pairs_view_under_cascade_stream",
     "test_refresh_view_dispatch_and_describe",
     "test_matches_numpy_reference",
     "test_dangling_mass_redistributes",
     "test_filtered_query_and_widening",
     "test_incremental_refresh_frozen_centroids",
-    "test_streaming_bucketed_upsert_sink",
     "test_streaming_enrichment_equals_batch",
-    "test_bucketed_upsert_bounded_rewrite",
-    "test_stream_upsert_sink_crash_replay",
     "test_search_api_shape_and_default_k",
 }
 

@@ -101,7 +101,7 @@ def test_bucketed_at_rest_layout_prunes_files(spark, vecs, cat):
     filtering), while staying row-identical to the flat index and the
     ad-hoc multiprobe tier."""
     from rclip_server_spark.sources import versioned as V
-    from rclip_server_spark.sources.writer import _bucket_expr
+    from rclip_server_spark.sources.versioned import _bucket_expr
 
     vp = _mk(spark, vecs, cat, "bk")
     flat = _ids_scores(AI.query_ann_index(spark, vp, QV, k=10,

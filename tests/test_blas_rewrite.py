@@ -45,7 +45,7 @@ def test_rewrite_applies_to_pure_sql_text(spark, embeddings):
         "(x, y) -> x * y), 0.0D, (a, x) -> a + x) AS score FROM _emb_blas"
     )
     plain = spark.sql(sql)
-    fast = blas_rewrite.accelerate_sql(spark, sql)
+    fast = blas_rewrite.accelerate(spark.sql(sql))
     assert "ArrowEvalPython" in _explain(fast)
     a = sorted((r.vec_id, round(r.score, 9)) for r in plain.collect())
     b = sorted((r.vec_id, round(r.score, 9)) for r in fast.collect())

@@ -1,4 +1,4 @@
-"""Term-cache table (A5), serving layer (A15), external sources (B11/B12),
+"""Term-cache hook (A5), serving layer (A15), external sources (B11/B12),
 TF-IDF, and exact-vs-approx phrase scoring (A13)."""
 
 import json
@@ -14,7 +14,6 @@ from conftest import SF_DIR, spark_jobs
 
 from rclip_server_spark.operators import similarity, text_analysis
 from rclip_server_spark.plans import serving
-from rclip_server_spark.plans.cache import TermCacheTable
 from rclip_server_spark.plans.combinator import resolve_query
 from rclip_server_spark.plans.embedder import DeterministicEmbedder
 from rclip_server_spark.sources import external, project_dynamic
@@ -22,20 +21,8 @@ from rclip_server_spark.sources import external, project_dynamic
 E = DeterministicEmbedder(64)
 
 
-def test_term_cache_roundtrip_and_upsert(spark, tmp_path):
-    cache = TermCacheTable(spark, str(tmp_path / "terms"))
-    assert cache.get("zebra") is None
-    v = E.embed_text("zebra")
-    cache.put("zebra", v)
-    np.testing.assert_allclose(cache.get("zebra"), v, atol=1e-12)
-    cache.put("zebra", v * 0.0)  # upsert replaces
-    np.testing.assert_allclose(cache.get("zebra"), np.zeros(64), atol=1e-12)
-
-
-def test_term_cache_warms_resolve_query(spark, tmp_path):
-    cache = TermCacheTable(spark, str(tmp_path / "terms"))
-    cache.put("zebra", E.embed_text("zebra"))
-    d = cache.as_dict()
+def test_term_cache_warms_resolve_query():
+    d = {"zebra": E.embed_text("zebra")}
     got = resolve_query("zebra", E, _cache=d)
     np.testing.assert_allclose(got, E.embed_text("zebra"), atol=1e-12)
 
@@ -51,14 +38,6 @@ def test_visualize_embedding_html():
 def test_copyright_branch():
     assert "wikimedia" in serving.copyright_message("wikimedia_images.sqlite3")
     assert "wikimedia" not in serving.copyright_message("my_photos.db")
-
-
-def test_enumerate_external(spark):
-    rows = [{"title": "A", "url": "http://x/a"}, {"title": "B", "url": "http://x/b"}]
-    df = external.enumerate_external(spark, lambda: rows)
-    assert df.count() == 2
-    empty = external.enumerate_external(spark, lambda: [])
-    assert empty.count() == 0 and empty.columns == ["title", "url"]
 
 
 def test_read_ndjson_seeded_shuffle(spark, tmp_path):
@@ -277,10 +256,9 @@ def test_versioned_cdc_stream_tails_appends(spark, tmp_path):
 def test_python_streaming_datasource_to_upsert_sink(spark, tmp_path):
     """The full streaming indexer spine on the Spark 4 Python datasource
     API: external_enum readStream (cursor-paginated micro-batches) ->
-    foreachBatch conditional upsert -> serving table. 250 rows over 3+
+    foreachBatch upsert -> serving table. 250 rows over 3+
     micro-batches land exactly once, keyed by title."""
-    from rclip_server_spark.sources import pydatasource
-    from rclip_server_spark.streaming import sink
+    from rclip_server_spark.sources import pydatasource, writer
 
     pydatasource.register(spark)
     table = str(tmp_path / "indexed")
@@ -290,9 +268,11 @@ def test_python_streaming_datasource_to_upsert_sink(spark, tmp_path):
         .option("page_size", 100)
         .load()
     )
-    q = sink.start_stream_upsert(
-        stream, spark, table, key="title", latest_col="page_index",
-        checkpoint_dir=str(tmp_path / "ckpt"),
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda df, _: writer.upsert_parquet(spark, table, df, key="title"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
     )
     try:
         q.processAllAvailable()

@@ -49,20 +49,6 @@ def test_embed_binary_column_deterministic(spark, documents):
         assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-9
 
 
-def test_decode_and_thumbnail_plumbing(spark, documents):
-    urls = documents.limit(4).select(
-        F.concat(F.lit("http://x/"), F.col("doc_id")).alias("url")
-    )
-    pipe = multimodal.thumbnail_stub(
-        multimodal.decode_image_metadata(multimodal.fetch_url_stub(urls))
-    )
-    for r in pipe.collect():
-        assert r.image_meta.width >= 64 and r.image_meta.height >= 64
-        assert r.image_meta.format in ("jpeg", "png", "gif")
-        assert r.image_meta.n_bytes == 128
-        assert len(r.thumbnail) >= 16
-
-
 def test_video_frame_sampling_explodes_and_bounds(spark, documents):
     # filter, not limit: a global limit would add its own gather Exchange
     # and mask what this test pins (the operator itself is map-only)

@@ -410,58 +410,6 @@ def test_bpe_pair_counts_overlapping(spark):
     assert [(r.a, r.b, r.pair_freq) for r in rows] == [("a", "a", 4)]  # 2 positions x freq 2
 
 
-def test_bpe_encode_lossless_and_ref_parity(documents):
-    merges, _ = corpus.bpe_train(documents, n_merges=10)
-    enc = corpus.bpe_encode(documents, merges)
-    sample = enc.select("text", "bpe_tokens").limit(50).collect()
-    assert len(sample) > 0
-    for r in sample:
-        # tokens concatenate back to the pre-token stream == original text
-        assert "".join(r.bpe_tokens) == r.text
-    # every emitted token is either a trained vocab entry or a raw symbol
-    # reachable from the merge list's closure
-    vocab = {a + b for a, b in merges}
-    for r in sample[:10]:
-        for t in r.bpe_tokens:
-            assert len(t) == 1 or t in vocab
-
-
-def test_bpe_encode_ranked_equals_sequential_fold(documents):
-    """The rank-dict greedy path (taken for well-formed trained lists) must
-    emit exactly what the order-folded rules emit; the sequential fallback
-    is forced by appending a malformed rule (operand never created), which
-    does not change any match."""
-    merges, _ = corpus.bpe_train(documents, n_merges=12)
-    ranked = corpus.bpe_encode(documents, merges)
-    fallback = corpus.bpe_encode(
-        documents, merges + [("ZZnevercreatedZZ", "q")], out_col="bpe_seq"
-    )
-    joined = ranked.select("doc_id", "bpe_tokens").join(
-        fallback.select("doc_id", "bpe_seq"), "doc_id"
-    )
-    assert joined.where(F.col("bpe_tokens") != F.col("bpe_seq")).count() == 0
-
-
-def test_bpe_encode_duplicate_output_rules_fall_back(spark):
-    """A merge list whose rules are individually well-formed but contain a
-    DUPLICATE output ('cde' is created twice below) breaks the ranked-greedy
-    equivalence proof: ranked encodes 'acde' as ['acde'] while the
-    documented sequential fold gives ['a','cde']. The gate must detect the
-    duplicate and take the sequential path."""
-    merges = [("c", "d"), ("d", "e"), ("c", "de"), ("a", "cde"), ("cd", "e")]
-    df = spark.createDataFrame([(1, "acde")], ["doc_id", "text"])
-    rows = corpus.bpe_encode(df, merges).collect()
-    assert rows[0].bpe_tokens == ["a", "cde"]
-
-
-def test_bpe_vocab_freq_conserved(documents):
-    merges, wf = corpus.bpe_train(documents, n_merges=5)
-    vocab = corpus.bpe_vocab(wf)
-    total_syms = vocab.agg(F.sum("freq")).first()[0]
-    direct = wf.select(F.sum(F.size("syms") * F.col("freq"))).first()[0]
-    assert total_syms == direct
-
-
 # ---------------------------------------------------------------------------
 # classifier quality score
 # ---------------------------------------------------------------------------

@@ -243,20 +243,3 @@ def test_embed_dispatch_describe_heal(spark, ed):
     ND.refresh_embed_near_dup_pairs_view(spark, vw)
     assert _eview_pairs(spark, vw) == _epairs_of(
         emb.where(F.col("vec_id") % 5 != 0))
-
-
-def test_curate_keep_first_via_pairs_view(spark, nd):
-    """pipelines.curate_keep_first_via_pairs_view: the maintained pair
-    table drives keep-first dedup of the raw head; oracle = drop the
-    greater id of every pair from the one-shot pipeline."""
-    from rclip_server_spark import pipelines as P
-
-    docs, src, vw = nd
-    V.append(spark, src, docs.where(F.col("doc_id") % 3 == 2))
-    curated = P.curate_keep_first_via_pairs_view(spark, vw)
-    pairs = dedup.minhash_near_dup(docs, threshold=THRESH)
-    drop = {r["id_b"] for r in pairs.select("id_b").distinct().collect()}
-    want = sorted(r["doc_id"] for r in docs.collect()
-                  if r["doc_id"] not in drop)
-    got = sorted(r["doc_id"] for r in curated.select("doc_id").collect())
-    assert got == want and len(got) < docs.count()

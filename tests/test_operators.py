@@ -416,37 +416,6 @@ def test_lsh_similarity_join_two_tables(embeddings):
         assert p.id_a in lids and p.id_b in rids and p.cosine >= 0.3
 
 
-def test_lsh_bucketed_write_prunes_partitions(spark, embeddings, tmp_path):
-    path = str(tmp_path / "emb_bucketed")
-    ann.write_bucketed_by_lsh(embeddings, path, n_planes=4, dim=64)
-    pruned = ann.lsh_topk_pruned(spark, path, QV, k=10, n_planes=4)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # the bucket predicate must prune at the PARTITION level, not post-scan
-    assert "PartitionFilters: [bucket" in plan.replace("isnotnull(bucket#", "bucket#") \
-        or "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[1][:120]
-    # pruned result == in-memory LSH on the same planes/bucketing
-    mem = {r.vec_id for r in ann.lsh_topk(embeddings, QV, k=10, n_planes=4).collect()}
-    assert {r.vec_id for r in pruned.collect()} == mem
-
-
-def test_ivf_partitioned_write_prunes_partitions(spark, embeddings, tmp_path):
-    from rclip_server_spark.contract import CENTROIDS
-
-    path = str(tmp_path / "emb_ivf")
-    ann.write_partitioned_by_ivf(embeddings, path, CENTROIDS)
-    pruned = ann.ivf_topk_pruned(spark, path, QV, CENTROIDS, k=10, n_probe=2)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "ivf_cell" in plan.split("PartitionFilters")[1][:160]
-    # pruned result == in-memory IVF probe at the same centroids/probes
-    mem = [
-        (r.vec_id, round(r.score, 9))
-        for r in ann.ivf_topk(embeddings, QV, CENTROIDS, k=10, n_probe=2).collect()
-    ]
-    got = [(r.vec_id, round(r.score, 9)) for r in pruned.collect()]
-    assert got == mem
-
-
 def test_gemm_multi_query_matches_per_query(spark, embeddings):
     terms = ["cat", "dog"]
     Q = np.stack([E.embed_text(t) for t in terms])

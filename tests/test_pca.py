@@ -185,10 +185,4 @@ def test_distributed_logistic_matches_numpy(spark, documents):
         bn -= 0.3 * float(err.mean())
     np.testing.assert_allclose(w, wn, rtol=0, atol=1e-9)
     assert abs(b - bn) < 1e-9
-
-    # map-only scoring path agrees with numpy probabilities
-    scored = stats.predict_logistic(feats, cols, w, b).toPandas()
-    pref = 1.0 / (1.0 + np.exp(-(X @ w + b)))
-    np.testing.assert_allclose(np.sort(scored["p"].to_numpy()), np.sort(pref),
-                               atol=1e-9)
     feats.unpersist()

@@ -117,29 +117,6 @@ def test_words_table_and_similar_words_from_corpus(spark, documents):
     assert pipelines.similar_words_from_corpus(spark, documents, "", E).count() == 0
 
 
-def test_streaming_incremental_indexer(spark, tmp_path):
-    import json as _json
-
-    meta_dir = tmp_path / "meta_stream"
-    meta_dir.mkdir()
-    table = str(tmp_path / "images_stream")
-
-    def write_meta(name, start, n):
-        with open(meta_dir / name, "w") as f:
-            for i in range(start, start + n):
-                f.write(_json.dumps(
-                    {"url": f"http://img.example/commons/s_{i}.jpg"}) + "\n")
-
-    write_meta("batch0.ndjson", 0, 10)
-    pipelines.index_images_stream(spark, str(meta_dir), table)
-    assert spark.read.parquet(table).count() == 10
-
-    # drop a second file: only the delta is processed (checkpoint + anti-join)
-    write_meta("batch1.ndjson", 5, 10)  # 5 overlap, 5 new
-    pipelines.index_images_stream(spark, str(meta_dir), table)
-    assert spark.read.parquet(table).count() == 15
-
-
 def test_curate_corpus_end_to_end(spark, documents):
     from pyspark.sql import functions as F
 
@@ -166,91 +143,3 @@ def test_curate_corpus_end_to_end(spark, documents):
     for r in documents.limit(3).collect():
         kept = [x for x in rows if x.doc_id in (r.doc_id, r.doc_id + 70_000)]
         assert len(kept) <= 1
-
-
-def test_incremental_corpus_refresh_cycles(spark, tmp_path, documents):
-    """The continuous-curation loop end-to-end: cycle 1 curates the initial
-    raw appends; cycle 2 sees only the NEW raw commit (CDC fast path),
-    drops its near-dup of an already-curated doc, and appends the rest;
-    a crash-replay of cycle 2 is a no-op (exactly-once by manifest log);
-    an empty interval is a no-op."""
-    from pyspark.sql import functions as F
-
-    from rclip_server_spark.pipelines import incremental_corpus_refresh
-    from rclip_server_spark.sources import versioned as V
-
-    raw = str(tmp_path / "raw")
-    curated = str(tmp_path / "cur")
-    base = documents.select("doc_id", "text").where(F.col("doc_id") < 80)
-    V.create(spark, raw, base)
-    V.create(spark, curated, base.limit(0))
-
-    v1, n1 = incremental_corpus_refresh(spark, raw, curated, last_raw_version=0)
-    assert v1 == 2 and n1 > 0
-    curated_ids = {r.doc_id for r in V.read(spark, curated).collect()}
-    assert curated_ids  # the clean gate kept a nonempty subset
-
-    # cycle 2: new raw commit = 2 fresh docs + 1 verbatim dup of a curated doc
-    some_id = min(curated_ids)
-    dup = documents.where(F.col("doc_id") == some_id).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text")
-    fresh = documents.select("doc_id", "text").where(
-        (F.col("doc_id") >= 80) & (F.col("doc_id") < 92))
-    V.append(spark, raw, fresh.unionByName(dup))
-    raw_head = V.current_version(raw)
-
-    v2, n2 = incremental_corpus_refresh(spark, raw, curated, last_raw_version=1)
-    assert v2 == 3 and n2 >= 1
-    after = {r.doc_id for r in V.read(spark, curated).collect()}
-    assert some_id + 100000 not in after  # the verbatim near-dup was dropped
-    assert after > curated_ids            # fresh survivors were appended
-
-    # crash-replay of the same interval: exactly-once no-op
-    v3, n3 = incremental_corpus_refresh(spark, raw, curated, last_raw_version=1)
-    assert v3 is None and n3 == 0
-    assert {r.doc_id for r in V.read(spark, curated).collect()} == after
-    # nothing new in raw: no-op without touching the curated table
-    v4, n4 = incremental_corpus_refresh(
-        spark, raw, curated, last_raw_version=raw_head)
-    assert v4 is None and n4 == 0
-
-
-def test_streaming_corpus_refresh_end_to_end(spark, tmp_path, documents):
-    """The live continuous-curation loop: CDC source tails the raw
-    versioned table, each micro-batch cleans + dedups against the curated
-    corpus and appends exactly once. New raw appends flow through while
-    the query runs; a verbatim near-dup of curated content is dropped."""
-    from pyspark.sql import functions as F
-
-    from rclip_server_spark.pipelines import start_streaming_corpus_refresh
-    from rclip_server_spark.sources import versioned as V
-
-    raw = str(tmp_path / "raw")
-    curated = str(tmp_path / "cur")
-    base = documents.select("doc_id", "text").where(F.col("doc_id") < 60)
-    V.create(spark, raw, base)
-    V.create(spark, curated, base.limit(0))
-
-    q = start_streaming_corpus_refresh(
-        spark, raw, curated, checkpoint_dir=str(tmp_path / "ckpt"))
-    try:
-        q.processAllAvailable()
-        first = {r.doc_id for r in V.read(spark, curated).collect()}
-        assert first  # initial backfill curated a nonempty subset
-
-        # live: append fresh docs + one verbatim dup of a curated doc
-        some_id = min(first)
-        dup = documents.where(F.col("doc_id") == some_id).select(
-            (F.col("doc_id") + 50000).alias("doc_id"), "text")
-        fresh = documents.select("doc_id", "text").where(
-            (F.col("doc_id") >= 60) & (F.col("doc_id") < 70))
-        V.append(spark, raw, fresh.unionByName(dup))
-        q.processAllAvailable()
-        after = {r.doc_id for r in V.read(spark, curated).collect()}
-        assert some_id + 50000 not in after  # near-dup dropped
-        assert after > first                 # fresh survivors landed
-        # exactly-once: every curated doc id appears exactly once
-        n = V.read(spark, curated).count()
-        assert n == V.read(spark, curated).select("doc_id").distinct().count()
-    finally:
-        q.stop()

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from rclip_server_spark import sql as S
 from rclip_server_spark.sources import versioned as V
 
+from conftest import spark_jobs
+
 
 def _rows(df):
     return sorted((tuple(r) for r in df.collect()),
@@ -432,24 +434,6 @@ def test_masked_text_guards_rewrite_and_scan(spark, events, cat, base,
                          "KEEP 5", cat)
 
 
-def test_execute_script_splits_on_masked_semicolons(spark, events, cat):
-    ev = events.select("event_id", "event_type").limit(5)
-    ev.createOrReplaceTempView("seed_s")
-    out = S.execute_script(spark, """
-        CREATE TABLE st OPTIONS (key='event_id') AS
-          SELECT * FROM seed_s;  -- trailing comment; with semicolon
-        INSERT INTO st VALUES (100, 'a; b');
-        SELECT count(*) AS n FROM st
-    """, cat)
-    assert out[0]["status"] == "created"
-    assert out[1]["status"] == "inserted"
-    assert out[2].collect()[0]["n"] == 6
-    # the literal's semicolon survived intact
-    got = S.execute(spark, "SELECT event_type FROM st "
-                           "WHERE event_id = 100", cat)
-    assert got.collect()[0]["event_type"] == "a; b"
-
-
 def _cat_hammer(root, worker_id, n, q):
     # module-level: spawn pickles the target by qualified name
     try:
@@ -494,28 +478,6 @@ def test_strip_statement_comment_and_semicolon_shapes():
     # literals survive: the trailing ';' is INSIDE the string
     assert s("SELECT 'a;'") == "SELECT 'a;'"
     assert s("SELECT 'tail lit'; -- c") == "SELECT 'tail lit'"
-
-
-def test_script_trailing_and_interior_comment_segments(spark, events,
-                                                      cat):
-    ev = events.select("event_id", "event_type").limit(3)
-    ev.createOrReplaceTempView("seed_sc")
-    # a perfectly ordinary .sql-file shape: comment-only segments
-    # after the last ';' and between two ';' must be skipped, and a
-    # statement may end `...; -- note`
-    out = S.execute_script(spark, """
-        CREATE TABLE sct AS SELECT * FROM seed_sc;
-        /* interior note */ ;
-        SELECT count(*) AS n FROM sct;
-        -- cleanup done
-    """, cat)
-    assert len(out) == 2
-    assert out[0]["status"] == "created"
-    assert out[1].collect()[0]["n"] == 3
-    # single-statement execute with a trailing `; -- comment` works too
-    got = S.execute(spark, "SELECT count(*) AS n FROM sct; -- tail",
-                    cat)
-    assert got.collect()[0]["n"] == 3
 
 
 def test_register_rejects_exact_duplicate(tmp_path):
@@ -663,6 +625,49 @@ def test_merge_matched_only_and_insert_only(spark, events, cat, base):
     n7 = S.execute(spark, "SELECT count(*) AS n FROM ev WHERE "
                           "cents = 7", cat).collect()[0]["n"]
     assert n7 == n0                      # existing rows untouched
+
+
+def test_merge_job_census_counts_pool_threads(spark, cat, base,
+                                              monkeypatch):
+    """A MERGE runs its dup-key guard and its delete-vector / segment
+    writes on driver pool threads. Those threads inherit the caller's
+    local properties, so a job-group census of the statement counts
+    their jobs: the guard runs inside the census's group, and no job of
+    the statement escapes the census as an ungrouped job."""
+    from rclip_server_spark.sql import _dml
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    guard_groups = []
+    guard = _dml._merge_dup_key_check
+
+    def traced_guard(*args):
+        guard_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return guard(*args)
+
+    monkeypatch.setattr(_dml, "_merge_dup_key_check", traced_guard)
+    base.where(F.col("event_id") % 3 == 0).select(
+        "event_id", "user_id", "event_type",
+        (F.col("cents") + 1).alias("cents"),
+    ).createOrReplaceTempView("census_src")
+    on = "MERGE INTO ev USING census_src ON ev.event_id = census_src.event_id"
+    groups = []
+    # the conditional form takes the general path (guard on its own
+    # thread); the full upsert is the benchmarked delete-and-append path
+    for clauses in ("WHEN MATCHED AND census_src.cents > 0 THEN "
+                    "UPDATE SET cents = census_src.cents",
+                    "WHEN MATCHED THEN UPDATE SET * "
+                    "WHEN NOT MATCHED THEN INSERT *"):
+        bus.waitUntilEmpty()
+        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+        with spark_jobs(spark) as jobs:
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            assert S.execute(spark, f"{on} {clauses}",
+                             cat)["status"] == "merged"
+        assert len(jobs) > 0
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) \
+            <= ungrouped
+    assert guard_groups[:1] == groups[:1]
 
 
 def test_merge_error_shapes(spark, events, cat, base):

@@ -47,183 +47,6 @@ def test_soft_delete_then_live_filter(spark, tmp_table, embeddings):
     assert writer.live_rows(spark.read.parquet(tmp_table)).count() == base.count() - 3
 
 
-def test_bucketed_upsert_bounded_rewrite(spark, tmp_path, embeddings):
-    """The bucketed MERGE must (a) produce exactly the rows the flat
-    upsert produces, (b) physically touch ONLY the bucket directories the
-    update keys hash into, and (c) prune untouched partitions at planning
-    time when reading the merge input."""
-    from rclip_server_spark.sources.writer import (
-        create_bucketed_table,
-        read_bucketed,
-        upsert_parquet_bucketed,
-    )
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-    )
-    flat, bucketed = str(tmp_path / "flat"), str(tmp_path / "bucketed")
-    writer.upsert_parquet(spark, flat, base, key="filepath")
-    create_bucketed_table(spark, bucketed, base, key="filepath", n_buckets=16)
-
-    # update 20 keys + insert 5 new ones
-    upd = base.limit(20).withColumn("size", F.lit(-1)).unionByName(
-        spark.createDataFrame(
-            [(f"new{i}", -2) for i in range(5)], "filepath string, size bigint"
-        )
-    )
-    before = {
-        d: sorted(os.listdir(os.path.join(bucketed, d)))
-        for d in os.listdir(bucketed)
-        if d.startswith("__bucket=")
-    }
-    n_rewritten = upsert_parquet_bucketed(spark, bucketed, upd)
-    assert 0 < n_rewritten <= 16
-    writer.upsert_parquet(spark, flat, upd, key="filepath")
-
-    got = sorted(map(tuple, read_bucketed(spark, bucketed).collect()))
-    want = sorted(map(tuple, spark.read.parquet(flat).collect()))
-    assert got == want
-
-    # untouched bucket dirs keep their exact file sets
-    after = {
-        d: sorted(os.listdir(os.path.join(bucketed, d)))
-        for d in os.listdir(bucketed)
-        if d.startswith("__bucket=")
-    }
-    assert set(before) <= set(after)  # no pre-existing bucket disappears
-    changed = [d for d in before if before[d] != after[d]]
-    new_dirs = [d for d in after if d not in before]
-    # every rewritten bucket is either a changed pre-existing dir or a new
-    # one, and nothing outside the touched set moved
-    assert len(changed) + len(new_dirs) == n_rewritten
-
-    # planning-time pruning: the filtered read shows PartitionFilters
-    pruned = spark.read.parquet(bucketed).where(F.col("__bucket").isin([1, 2]))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__bucket" in plan
-
-
-def test_bucketed_upsert_randomized_equivalence(spark, tmp_path, embeddings):
-    """Seeded randomized cross-check (the joins.py randomized-quadratic
-    pattern): for several random update sets — overlapping keys, new keys,
-    duplicate keys IN the batch, repeated batches — the bucketed table
-    must equal the flat-upsert table row-for-row after every step."""
-    import random
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-    ).limit(80)
-    flat, bucketed = str(tmp_path / "rf"), str(tmp_path / "rb")
-    writer.upsert_parquet(spark, flat, base, key="filepath")
-    from rclip_server_spark.sources.writer import (
-        create_bucketed_table, read_bucketed, upsert_parquet_bucketed,
-    )
-
-    create_bucketed_table(spark, bucketed, base, key="filepath", n_buckets=8)
-    rng = random.Random(7)
-    for step in range(4):
-        ks = [f"f{rng.randrange(120)}" for _ in range(rng.randrange(1, 12))]
-        rows = [(k, -step) for k in ks]  # dup keys in-batch allowed
-        upd = spark.createDataFrame(rows, "filepath string, size bigint")
-        writer.upsert_parquet(spark, flat, upd, key="filepath")
-        upsert_parquet_bucketed(spark, bucketed, upd)
-        a = sorted(map(tuple, spark.read.parquet(flat).collect()))
-        b = sorted(map(tuple, read_bucketed(spark, bucketed).collect()))
-        assert a == b, f"divergence at step {step}"
-
-
-def test_bucketed_soft_delete_bounded(spark, tmp_path, embeddings):
-    """Point soft-delete on the bucketed layout: flags exactly the named
-    keys, rewrites only their buckets, and live_rows filters them out —
-    deleting again is idempotent."""
-    from rclip_server_spark.sources.writer import (
-        create_bucketed_table,
-        read_bucketed,
-        soft_delete_bucketed,
-    )
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-    ).limit(100)
-    t = str(tmp_path / "sd")
-    create_bucketed_table(spark, t, base, key="filepath", n_buckets=16)
-    before = {
-        d: sorted(os.listdir(os.path.join(t, d)))
-        for d in os.listdir(t) if d.startswith("__bucket=")
-    }
-    n = soft_delete_bucketed(spark, t, ["f1", "f2", "f3"])
-    assert 0 < n <= 3
-    after = {
-        d: sorted(os.listdir(os.path.join(t, d)))
-        for d in os.listdir(t) if d.startswith("__bucket=")
-    }
-    assert len([d for d in before if before[d] != after[d]]) == n
-    df = read_bucketed(spark, t)
-    assert df.where("deleted = true").count() == 3
-    assert writer.live_rows(df).count() == 97
-    soft_delete_bucketed(spark, t, ["f1", "f2", "f3"])  # idempotent
-    assert writer.live_rows(read_bucketed(spark, t)).count() == 97
-
-
-def test_bucketed_compaction_preserves_rows(spark, tmp_path, embeddings):
-    """Repeated small upserts fragment bucket dirs into many files;
-    compact_bucketed must shrink the file count of fragmented buckets,
-    leave already-compact buckets untouched, and preserve the row set."""
-    from rclip_server_spark.sources.writer import (
-        compact_bucketed, create_bucketed_table, read_bucketed,
-        upsert_parquet_bucketed,
-    )
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-    ).limit(60)
-    t = str(tmp_path / "cb")
-    create_bucketed_table(spark, t, base, key="filepath", n_buckets=4)
-    # fragment: several single-key upserts, repartitioned to multiply files
-    for i in range(3):
-        upd = spark.createDataFrame(
-            [(f"f{j}", -i) for j in range(10)], "filepath string, size bigint"
-        ).repartition(4)
-        upsert_parquet_bucketed(spark, t, upd)
-    before_rows = sorted(map(tuple, read_bucketed(spark, t).collect()))
-
-    def nfiles():
-        return sum(
-            1 for r, _, fs in os.walk(t) for f in fs if f.endswith(".parquet")
-        )
-
-    before_files = nfiles()
-    n = compact_bucketed(spark, t, target_file_mb=128)
-    assert n > 0
-    assert nfiles() < before_files
-    assert sorted(map(tuple, read_bucketed(spark, t).collect())) == before_rows
-    # second pass is a no-op: everything is already compact
-    assert compact_bucketed(spark, t, target_file_mb=128) == 0
-
-
-def test_bucketed_point_lookup_prunes(spark, tmp_path, embeddings):
-    from rclip_server_spark.sources.writer import (
-        create_bucketed_table,
-        point_lookup_bucketed,
-    )
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-    )
-    t = str(tmp_path / "pl")
-    create_bucketed_table(spark, t, base, key="filepath", n_buckets=16)
-    out = point_lookup_bucketed(spark, t, "f42")
-    rows = out.collect()
-    assert [(r.filepath, r.size) for r in rows] == [("f42", 42)]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__bucket" in plan
-
-
 def test_anti_join_skip(spark, embeddings):
     new = embeddings.select(F.col("vec_id").alias("k"))
     done = embeddings.where(F.col("vec_id") < 100).select(F.col("vec_id").alias("k"))
@@ -289,31 +112,6 @@ def test_session_window_gap_semantics(spark):
     assert out[0].first_event_id == 1 and out[1].first_event_id == 3
 
 
-def test_batch_dedup_events(spark, events):
-    deduped = SW.dedup_events(events)
-    keys = deduped.select("user_id", "event_type").distinct().count()
-    assert deduped.count() == keys
-
-
-def test_streaming_dedup_matches_batch_first_per_key(spark, events, events_stream_dir):
-    batch_keys = events.select("user_id", "event_type").distinct().count()
-    stream = SW.read_events_stream(spark, events_stream_dir)
-    deduped = SW.dedup_events(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("t_dedup")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.table("t_dedup")
-    assert got.count() == batch_keys
-    assert got.select("user_id", "event_type").distinct().count() == batch_keys
-
-
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """Bucketing both sides on the join key pre-partitions the data at WRITE
     time, so a later sort-merge join needs no Exchange at all — the repeated-
@@ -353,42 +151,6 @@ def test_reload_table_sees_new_data(spark, tmp_table, embeddings):
     assert writer.reload_table(spark, tmp_table).count() == base.count()
 
 
-def test_stateful_running_totals_stream_equals_batch(spark, events, events_stream_dir):
-    from rclip_server_spark.streaming import stateful
-
-    batch = {
-        r.user_id: (r.n_events, r.sum_value_cents, r.last_event_id)
-        for r in stateful.running_user_totals(events).collect()
-    }
-    stream = SW.read_events_stream(spark, events_stream_dir)
-    q = (
-        stateful.running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("t_totals")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # update mode emits one row per (user, batch); the LAST emission per user
-    # is the final state
-    import pyspark.sql.functions as _F
-    from pyspark.sql import Window as _W
-
-    t = spark.table("t_totals")
-    w = _W.partitionBy("user_id").orderBy(_F.desc("n_events"))
-    final = (
-        t.withColumn("rn", _F.row_number().over(w)).where("rn = 1").drop("rn")
-    )
-    got = {
-        r.user_id: (r.n_events, r.sum_value_cents, r.last_event_id)
-        for r in final.collect()
-    }
-    assert got == batch
-
-
 def test_streaming_sliding_equals_batch(spark, events, events_stream_dir):
     batch = {
         (r.window_start, r.event_type): r.n_events
@@ -424,24 +186,6 @@ def test_streaming_enrichment_equals_batch(spark, events, events_stream_dir):
     # unmatched keys must survive the left join (as a NULL nation bucket)
     # only if any exist in the fixture; matched keys must dominate
     assert sum(n for n, _ in got.values()) == events.count()
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path, embeddings):
-    from rclip_server_spark.sources import writer
-
-    path = str(tmp_path / "frag")
-    # fragment: 16 files for a tiny table
-    embeddings.repartition(16).write.parquet(path)
-    import glob
-
-    before = len(glob.glob(f"{path}/*.parquet"))
-    assert before >= 16
-    want = {r.vec_id for r in spark.read.parquet(path).collect()}
-    n = writer.compact_parquet(spark, path, target_file_mb=128)
-    after = glob.glob(f"{path}/*.parquet")
-    assert n == 1 and len(after) == 1
-    # lossless: same rows survive the rewrite
-    assert {r.vec_id for r in spark.read.parquet(path).collect()} == want
 
 
 def test_watermark_drops_late_data_in_append_mode(spark, tmp_path):
@@ -668,202 +412,6 @@ def test_streaming_dedup_first_in_bucket_equals_batch(spark, events, events_stre
     assert got == batch
 
 
-def test_stream_upsert_sink_crash_replay(spark, tmp_path, embeddings):
-    """The sink's exactly-once-effective claim under a REAL crash: the first
-    run's foreachBatch merges batch 1, then dies before Spark commits the
-    offset (the at-least-once window). A restarted query on the same
-    checkpoint must replay batch 1, and the conditional merge's idempotence
-    must land the exact table a crash-free run produces."""
-    from rclip_server_spark.streaming import sink
-
-    src_dir = str(tmp_path / "incoming")
-    os.makedirs(src_dir)
-    table = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-        F.col("vec_id").alias("seq"),
-    ).limit(100)
-    upd = base.limit(50).withColumn("size", F.lit(-1)).withColumn(
-        "seq", F.col("seq") + 1000
-    )
-    import time as _time
-    now = _time.time()
-    for i, df in enumerate([base, upd]):
-        sub = os.path.join(src_dir, f"b{i}.parquet")
-        df.coalesce(1).write.parquet(sub)
-        for root, _, files in os.walk(sub):
-            for f in files:
-                os.utime(os.path.join(root, f), (now + 10 * i, now + 10 * i))
-        os.utime(sub, (now + 10 * i, now + 10 * i))
-
-    stream_def = (
-        spark.readStream.schema("filepath string, size bigint, seq bigint")
-        .option("maxFilesPerTrigger", 1)
-    )
-
-    def _upsert_crashing(batch_df, batch_id):
-        sink.merge_latest(spark, table, batch_df, key="filepath", latest_col="seq")
-        if batch_id == 1:
-            raise RuntimeError("injected crash after merge, before offset commit")
-
-    q = (
-        stream_def.parquet(src_dir + "/*.parquet")
-        .writeStream.foreachBatch(_upsert_crashing)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    except Exception:
-        pass  # the injected failure surfaces here or via q.exception()
-    finally:
-        q.stop()
-    assert q.exception() is not None
-    assert "injected crash" in str(q.exception())
-
-    def _upsert_clean(batch_df, batch_id):
-        sink.merge_latest(spark, table, batch_df, key="filepath", latest_col="seq")
-
-    q2 = (
-        stream_def.parquet(src_dir + "/*.parquet")
-        .writeStream.foreachBatch(_upsert_clean)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    got = spark.read.parquet(table)
-    assert got.count() == 100
-    assert got.where("size = -1").count() == 50
-
-
-def test_merge_latest_equal_seq_tie_is_order_invariant(spark, tmp_path):
-    """Two rows for one key tie on latest_col: the winner must be a pure
-    function of the row set — merging a-then-b and b-then-a must land the
-    same table (the content-hash tiebreaker in the merge window)."""
-    from rclip_server_spark.streaming import sink
-
-    sch = "filepath string, seq bigint, body string"
-    a = spark.createDataFrame([("k1", 1, "payload-a")], sch)
-    b = spark.createDataFrame([("k1", 1, "payload-b")], sch)
-    t1, t2 = str(tmp_path / "t1"), str(tmp_path / "t2")
-    sink.merge_latest(spark, t1, a, key="filepath", latest_col="seq")
-    sink.merge_latest(spark, t1, b, key="filepath", latest_col="seq")
-    sink.merge_latest(spark, t2, b, key="filepath", latest_col="seq")
-    sink.merge_latest(spark, t2, a, key="filepath", latest_col="seq")
-    r1 = sorted(map(tuple, spark.read.parquet(t1).collect()))
-    r2 = sorted(map(tuple, spark.read.parquet(t2).collect()))
-    assert r1 == r2 and len(r1) == 1
-
-
-def test_streaming_upsert_sink_merges_batches(spark, tmp_path, embeddings):
-    """foreachBatch upsert sink: two micro-batches (maxFilesPerTrigger=1)
-    where the second updates half the first's keys — the final table must
-    hold one row per key with last-writer-wins payloads, identical to
-    running the batch upserts by hand."""
-    from rclip_server_spark.streaming import sink
-
-    src_dir = str(tmp_path / "incoming")
-    os.makedirs(src_dir)
-    table = str(tmp_path / "table")
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-        F.col("vec_id").alias("seq"),
-    ).limit(100)
-    upd = base.limit(50).withColumn("size", F.lit(-1)).withColumn(
-        "seq", F.col("seq") + 1000
-    )
-    # two files -> two micro-batches, in name order is not guaranteed, but
-    # last-writer-wins is decided by seq, not arrival
-    base.coalesce(1).write.parquet(os.path.join(src_dir, "b0.parquet"))
-    upd.coalesce(1).write.parquet(os.path.join(src_dir, "b1.parquet"))
-
-    stream = (
-        spark.readStream.schema("filepath string, size bigint, seq bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir + "/*.parquet")
-    )
-    q = sink.start_stream_upsert(
-        stream, spark, table, key="filepath", latest_col="seq",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = spark.read.parquet(table)
-    assert got.count() == 100
-    assert got.where("size = -1").count() == 50
-    # replay-proofness: replaying the OLDER base batch must not clobber the
-    # newer rows (conditional merge on seq), and replaying the update batch
-    # must be a no-op
-    sink.merge_latest(spark, table, base, key="filepath", latest_col="seq")
-    sink.merge_latest(spark, table, upd, key="filepath", latest_col="seq")
-    again = spark.read.parquet(table)
-    assert again.count() == 100 and again.where("size = -1").count() == 50
-
-
-def test_streaming_bucketed_upsert_sink(spark, tmp_path, embeddings):
-    """Streaming ingest into the bucketed layout: two micro-batches upsert
-    through foreachBatch -> upsert_parquet_bucketed; the final table equals
-    the flat-sink result and replaying a batch by hand is a no-op
-    (replace-on-key idempotence)."""
-    from rclip_server_spark.sources.writer import (
-        create_bucketed_table,
-        read_bucketed,
-        upsert_parquet_bucketed,
-    )
-    from rclip_server_spark.streaming import sink
-
-    src_dir = str(tmp_path / "incoming")
-    os.makedirs(src_dir)
-    table = str(tmp_path / "btable")
-
-    base = embeddings.select(
-        F.concat(F.lit("f"), "vec_id").alias("filepath"),
-        F.col("vec_id").alias("size"),
-    ).limit(100)
-    create_bucketed_table(
-        spark, table, base.limit(0), key="filepath", n_buckets=8
-    )
-    upd = base.limit(50).withColumn("size", F.lit(-1))
-    base.coalesce(1).write.parquet(os.path.join(src_dir, "b0.parquet"))
-    upd.coalesce(1).write.parquet(os.path.join(src_dir, "b1.parquet"))
-
-    stream = (
-        spark.readStream.schema("filepath string, size bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir + "/*.parquet")
-    )
-    q = sink.start_stream_upsert(
-        stream, spark, table, key="filepath", bucketed=True,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = read_bucketed(spark, table)
-    assert got.count() == 100
-    # ordering of the two micro-batches isn't guaranteed; whichever won,
-    # a manual replay of the LAST state must be a no-op
-    snapshot = sorted(map(tuple, got.collect()))
-    upsert_parquet_bucketed(
-        spark, table, spark.createDataFrame(snapshot, got.schema)
-    )
-    assert sorted(map(tuple, read_bucketed(spark, table).collect())) == snapshot
-
-
 def test_stream_stream_interval_join_equals_batch(spark, events, events_stream_dir):
     """Stream-stream inner join with watermarks on both sides and an
     interval bound (the state-expiry requirement) — append-mode output must
@@ -890,7 +438,7 @@ def test_stream_stream_interval_join_equals_batch(spark, events, events_stream_d
 
 
 # ---------------------------------------------------------------------------
-# sorted / z-ordered layout writers
+# z-order key
 # ---------------------------------------------------------------------------
 
 
@@ -902,50 +450,6 @@ def test_zorder_value_hand_computed(spark):
     # interleave: x bits at even positions, y at odd
     # (3,0)->0b0101=5  (0,3)->0b1010=10  (1,1)->0b11=3  (2,3)->0b1110=14
     assert out == [5, 10, 3, 14]
-
-
-def test_write_sorted_files_are_range_disjoint(spark, tmp_path):
-    import glob
-    from rclip_server_spark.sources import writer as W
-    from rclip_server_spark.sources import load_table
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    path = str(tmp_path / "li_sorted")
-    W.write_sorted(li, path, ["l_orderkey"], n_files=4)
-    back = spark.read.parquet(path)
-    assert back.count() == li.count()  # lossless
-    ranges = []
-    for f in glob.glob(path + "/part-*.parquet"):
-        r = spark.read.parquet(f).agg(
-            F.min("l_orderkey").alias("lo"), F.max("l_orderkey").alias("hi")
-        ).first()
-        if r.lo is not None:
-            ranges.append((r.lo, r.hi))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint global order across files
-
-
-def test_write_zordered_lossless_and_clustered(spark, tmp_path):
-    import glob
-    from rclip_server_spark.sources import writer as W
-
-    rows = [(x, y) for x in range(32) for y in range(32)]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    path = str(tmp_path / "zed")
-    W.write_zordered(df, path, "x", "y", n_files=4, bits=8)
-    back = spark.read.parquet(path)
-    assert back.count() == 1024
-    assert {(r.x, r.y) for r in back.collect()} == set(rows)
-    assert "__z" not in back.columns
-    # locality: a quadrant query should NOT need every file
-    files = glob.glob(path + "/part-*.parquet")
-    hit = 0
-    for f in files:
-        n = spark.read.parquet(f).where((F.col("x") < 8) & (F.col("y") < 8)).count()
-        hit += 1 if n > 0 else 0
-    assert hit < len(files)
 
 
 class TestVersionedTable:
@@ -1945,16 +1449,14 @@ class TestVersionedTable:
         with pytest.raises(ValueError, match="NULL"):
             B.read_point_lookup(spark, t, "id", [None])
 
-    def test_bloom_zone_hybrid_and_index_stream(self, spark, tmp_path):
-        """(a) Point lookups combine zone maps with Bloom sidecars: on a
+    def test_bloom_zone_hybrid_pruning(self, spark, tmp_path):
+        """Point lookups combine zone maps with Bloom sidecars: on a
         CLUSTERED key, zone maps prune segments even before any sidecar
         exists (both passes are conservative, so the intersection never
-        false-prunes). (b) start_bloom_index_stream keeps sidecars
-        current as the table ingests — new segments get indexed without
-        a manual build, and the lookup result stays exact."""
+        false-prunes), and once every segment has a sidecar an absent
+        value prunes them all while the lookup result stays exact."""
         from rclip_server_spark.sources import bloomindex as B
         from rclip_server_spark.sources import versioned as V
-        from rclip_server_spark.streaming import sink
 
         t = str(tmp_path / "t")
         mk = lambda rows: spark.createDataFrame(rows, "id long, v string")
@@ -1967,31 +1469,10 @@ class TestVersionedTable:
         lookup = B.read_point_lookup(spark, t, "id", [150])
         assert {(r.id, r.v) for r in lookup.collect()} == {(150, "b150")}
         assert len({f.split("/")[-2] for f in lookup.inputFiles()}) == 1
-        # typo'd column fails synchronously, not as a stream crash
-        with pytest.raises(ValueError, match="idd"):
-            sink.start_bloom_index_stream(spark, t, "idd")
-        # continuous sidecar maintenance: stream indexes new segments;
-        # the wait probe is SIDE-EFFECT-FREE (bloom_surviving_segments
-        # never builds) so the stream alone must do the indexing
-        q = sink.start_bloom_index_stream(
-            spark, t, "id", checkpoint_dir=str(tmp_path / "cp"))
-        try:
-            V.append(spark, t, mk([(i, f"d{i}") for i in range(300, 400)]))
-            import time as _time
-            deadline = _time.time() + 60
-            keep, total = [None], 0
-            while _time.time() < deadline:
-                q.processAllAvailable()
-                # absent value prunes EVERY segment only once all four
-                # sidecars exist (unindexed segments are kept
-                # conservatively)
-                keep, total = B.bloom_surviving_segments(t, "id", [999_999])
-                if total == 4 and keep == []:
-                    break
-                _time.sleep(0.3)
-        finally:
-            q.stop()
-        assert (total, keep) == (4, []), (total, keep)
+        V.append(spark, t, mk([(i, f"d{i}") for i in range(300, 400)]))
+        B.build_bloom_index(spark, t, "id")
+        # absent value prunes EVERY segment once all four sidecars exist
+        assert B.bloom_surviving_segments(t, "id", [999_999]) == ([], 4)
         got = {(r.id, r.v) for r in
                B.read_point_lookup(spark, t, "id", [42, 333]).collect()}
         assert got == {(42, "a42"), (333, "d333")}
@@ -2891,11 +2372,9 @@ class TestVersionedTable:
             ids = {r.doc_id for r in V.read(spark, vw, v).collect()}
             assert 1 in ids  # doc 1 present in every committed state
 
-    def test_describe_and_sql_view(self, spark, tmp_path):
+    def test_describe_flat_and_bucketed(self, spark, tmp_path):
         """describe() answers 'what is this table?' from one manifest read
-        (layout, rows, vectors, schema, app spec); register_sql_view pins
-        a snapshot under a name for spark.sql — including time travel, and
-        isolation from commits made after registration."""
+        (layout, rows, vectors, schema, app spec) on both layouts."""
         from rclip_server_spark.sources import versioned as V
 
         t = str(tmp_path / "v")
@@ -2909,24 +2388,13 @@ class TestVersionedTable:
         assert d["pending_delete_vectors"] == 1
         assert set(d["col_types"]) == {"id", "val"}
         assert d["stat_cols"] == ["id"]
-        V.register_sql_view(spark, "vt_head", t)
-        V.register_sql_view(spark, "vt_v1", t, version=1)
-        assert {r.id for r in
-                spark.sql("SELECT id FROM vt_head").collect()} == {1, 3}
-        assert spark.sql("SELECT count(*) n FROM vt_v1").first().n == 2
-        # snapshot isolation: commits after registration are invisible
-        V.append(spark, t, self._df(spark, [(9, "z")]))
-        assert {r.id for r in
-                spark.sql("SELECT id FROM vt_head").collect()} == {1, 3}
-        # bucketed layout reports its spec and registers too
+        # bucketed layout reports its spec
         tb = str(tmp_path / "vb")
         V.create_bucketed(spark, tb, self._df(spark, [(i, "x") for i in
                                                       range(10)]),
                           "id", n_buckets=4)
         db = V.describe(tb)
         assert db["layout"] == "bucketed" and db["n_buckets"] == 4
-        V.register_sql_view(spark, "vtb", tb)
-        assert spark.sql("SELECT count(*) n FROM vtb").first().n == 10
 
     def test_view_refresh_after_source_vacuum_names_the_contract(
         self, spark, tmp_path

@@ -1,6 +1,6 @@
 """Parity pin for functions/xxh.py: the driver-side XXH64 must be
 bit-identical to Spark's ``xxhash64`` expression (and its pmod-bucket
-composition identical to writer._bucket_expr) — the bucketed index
+composition identical to versioned._bucket_expr) — the bucketed index
 serving paths prune FILES with it, so any divergence here would make
 a query silently read the wrong buckets. Every tail-length class of
 the algorithm (0, 1-3, 4-7, 8-31, 32+, stripe remainders) is covered
@@ -45,7 +45,7 @@ def test_xxh64_matches_spark_all_tail_classes(spark):
 
 
 def test_bucket_of_matches_writer_expr_for_long_keys(spark):
-    from rclip_server_spark.sources.writer import _bucket_expr
+    from rclip_server_spark.sources.versioned import _bucket_expr
 
     vals = [0, 1, -1, 7, 42, 2**31, -(2**31), 2**62, -(2**62) + 3]
     for n in (8, 64, 256):
@@ -57,7 +57,7 @@ def test_bucket_of_matches_writer_expr_for_long_keys(spark):
 
 
 def test_bucket_of_matches_writer_expr_for_string_keys(spark):
-    from rclip_server_spark.sources.writer import _bucket_expr
+    from rclip_server_spark.sources.versioned import _bucket_expr
 
     vals = ["", "the", "zebra", "ünïcødé", "a b c", "x" * 100]
     df = spark.createDataFrame([(v,) for v in vals], "k string")
