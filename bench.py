@@ -75,7 +75,7 @@ FLOOR_SEC = {
     # D/U/I MERGE on the bucketed layout — one inner + one anti join
     # feeding ONE bucket-scoped delete-vector + per-bucket-append
     # commit, zero buckets rewritten (flat across 8x table growth,
-    # BASELINE.md bucketed_dv_scale_proof)
+    # BASELINE.md, tools/scale_bench.py bucketed_dv)
     "bucketed_conditional_dml_2k": 1.914,
     # late-round-11 first-committed floor (idle, calib 0.664): the
     # training-shard export — one shard-keyed exchange (plan-asserted
@@ -256,7 +256,7 @@ def main() -> None:
 
     # late-round-9 widening: the SQL DML flagship — a full-upsert MERGE
     # statement (parse -> one delete-vector + append commit, zero
-    # target read; tools/merge_scale_proof.py proves it flat in table
+    # target read; tools/scale_bench.py merge proves it flat in table
     # size). Own target per the isolation rule; each timed run merges a
     # fresh 2k source (1k updated images + 1k new keys).
     mrg = os.path.join(vt_tmp, "mrg")
@@ -303,7 +303,7 @@ def main() -> None:
         # per-bucket-append commit; ZERO buckets rewritten (contrast
         # bucketed_merge_2k's full-upsert touched-bucket rewrite).
         # Scale-proved flat across 8x table growth in BASELINE.md
-        # (tools/bucketed_dv_scale_proof.py).
+        # (tools/scale_bench.py bucketed_dv).
         shift = next(_batch_no) * 1_000_000_000
         src = orders.limit(1000).withColumn(
             "price_cents", F.col("price_cents") + 3).unionByName(
@@ -518,7 +518,7 @@ def main() -> None:
         # quantiles. The Bloom-pruned anti-join is deliberately NOT a
         # headliner: at toy scale a broadcast anti-join always wins (its
         # build+probe overhead only pays off past the broadcast threshold),
-        # so it is measured for scale SHAPE in tools/scale_sweep.py instead
+        # so it is measured for scale SHAPE by tools/scale_bench.py sweep
         # — same treatment as the bucketed upsert.
         "weighted_fixed_k": lambda: _QUERIES["samp_weighted_fixed_k"](
             spark, SF_DIR

@@ -86,22 +86,14 @@ def resolve_query(
     image_lookup: Callable[[int], np.ndarray] | None = None,
     random_image: Callable[[], np.ndarray] | None = None,
     image_embed: Callable[[str], np.ndarray] | None = None,
-    _cache: dict[str, np.ndarray] | None = None,
 ) -> np.ndarray | None:
-    """Parse + resolve + weighted-sum + normalize. ``_cache`` plays the role
-    of the reference's per-process lru_cache (rclip_server.py:144); at cluster
-    scale the equivalent is a persisted (term, vector) cache table."""
+    """Parse + resolve + weighted-sum + normalize."""
     terms = parse_query(q)
     if not terms:
         return None
     acc = np.zeros(embedder.dim, dtype=np.float64)
     for t in terms:
-        if _cache is not None and t.text in _cache:
-            e = _cache[t.text]
-        else:
-            e = resolve_term(t.text, embedder, image_lookup, random_image, image_embed)
-            if _cache is not None:
-                _cache[t.text] = e
+        e = resolve_term(t.text, embedder, image_lookup, random_image, image_embed)
         acc = acc + e * t.weight
     norm = np.linalg.norm(acc)
     if norm == 0.0:

@@ -178,7 +178,7 @@ def _broadcast_bound_rows(n_key_cols: int = 1) -> int:
 # incremental because the SUM of bounds is compared to the SUM of
 # heads. Local wall-clock cannot refine this constant: at test scale
 # fixed stage floors (~0.3-0.6 s) dominate both paths and recompute
-# "wins" everywhere (tools/fraction_crossover.py, table in
+# "wins" everywhere (tools/scale_bench.py fraction_crossover, table in
 # BASELINE.md) — the row model is the 100 TB-honest choice. Pass
 # recompute_fraction=None to force pure incremental (what the
 # signed-delta proofs pin), or any other fraction to re-tune.

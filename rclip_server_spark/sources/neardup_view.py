@@ -32,7 +32,7 @@ view with DELETE retraction:
       ``vt_near_dup_pairs_view`` pins exactly that).
 
 Refresh cost is bounded by Δ docs × band collisions — flat in corpus
-size (tools/neardup_scale_proof.py; BASELINE.md). The view registers
+size (tools/scale_bench.py neardup; BASELINE.md). The view registers
 in matview's graph (_VIEW_KINDS "near_dup"), so refresh_view /
 refresh_cascade / describe_view / vacuum_source_safely all dispatch
 to it; a pure insert-only interval needs no function handle at all.

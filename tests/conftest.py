@@ -100,6 +100,8 @@ _SLOW_TESTS = {
     "test_incremental_refresh_frozen_centroids",
     "test_streaming_enrichment_equals_batch",
     "test_search_api_shape_and_default_k",
+    # every proof in tools/scale_bench.py at smoke scale
+    "test_every_proof_passes_at_smoke_scale",
 }
 
 

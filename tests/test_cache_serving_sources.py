@@ -1,4 +1,4 @@
-"""Term-cache hook (A5), serving layer (A15), external sources (B11/B12),
+"""Serving layer (A15), external sources (B11/B12),
 TF-IDF, and exact-vs-approx phrase scoring (A13)."""
 
 import json
@@ -14,17 +14,10 @@ from conftest import SF_DIR, spark_jobs
 
 from rclip_server_spark.operators import similarity, text_analysis
 from rclip_server_spark.plans import serving
-from rclip_server_spark.plans.combinator import resolve_query
 from rclip_server_spark.plans.embedder import DeterministicEmbedder
 from rclip_server_spark.sources import external, project_dynamic
 
 E = DeterministicEmbedder(64)
-
-
-def test_term_cache_warms_resolve_query():
-    d = {"zebra": E.embed_text("zebra")}
-    got = resolve_query("zebra", E, _cache=d)
-    np.testing.assert_allclose(got, E.embed_text("zebra"), atol=1e-12)
 
 
 def test_visualize_embedding_html():

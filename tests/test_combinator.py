@@ -69,12 +69,6 @@ def test_url_term_without_image_embed_raises():
         resolve_query("http://example.com/cat.jpg", E)
 
 
-def test_term_cache_is_used():
-    cache = {}
-    resolve_query("zebra zebra", E, _cache=cache)
-    assert "zebra zebra" in cache
-
-
 def test_executor_embedder_matches_driver_embedder():
     # operators.multimodal inlines the embed function for UDF serialization;
     # this pins it to plans.embedder.DeterministicEmbedder
