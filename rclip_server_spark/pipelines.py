@@ -150,23 +150,18 @@ def resolve_live(live: DataFrame, q: str, embedder):
     )
 
 
-def search_api(
-    spark: SparkSession,
-    table_path: str,
-    q: str,
-    embedder,
-    num: int | None = None,
-) -> DataFrame:
-    """The /search_api lifecycle (reference §3.1) over an indexed table:
-    parse → combinator → live-row filter → cosine top-k → (id, score).
-    The table is opened once; resolution and the scan share it."""
+def search_api(live: DataFrame, q: str, embedder,
+               num: int | None = None) -> DataFrame:
+    """The /search_api lifecycle (reference §3.1) over a table's live
+    ``(id, vector)`` rows: parse → combinator → cosine top-k → (id,
+    score). Resolution and the scan share ``live``; api.RclipServerApi
+    passes its pinned frame."""
     from .operators import similarity
 
-    df = writer.live_rows(spark.read.parquet(table_path))
-    qv = resolve_live(df, q, embedder)
+    qv = resolve_live(live, q, embedder)
     if qv is None:
-        return values_df(spark, [], "id long, score double")
-    return similarity.topk_similar(df, qv, k=num or 12, id_col="id", vec_col="vector")
+        return values_df(live.sparkSession, [], "id long, score double")
+    return similarity.topk_similar(live, qv, k=num or 12, id_col="id", vec_col="vector")
 
 
 def build_words_table(

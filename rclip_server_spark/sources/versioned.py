@@ -1258,20 +1258,24 @@ def truncate(spark: SparkSession, path: str) -> int:
 _CLONE_DIR = "_clones"
 
 
-def _register_clone_ref(owner_path: str, clone_path: str) -> str:
+def _register_clone_ref(owner_path: str, clone_path: str,
+                        segs: list[str]) -> str:
     """Pin ``owner_path``'s segments for a shallow clone: one ref file
     per (owner, clone) under the owner's ``_clones/``, written
     atomically (fsync + rename). The owner's vacuum reads these refs
     and keeps every segment a LIVE clone's manifests still name; a ref
     whose clone directory is gone (DROPped) is dead and reaped by the
     next vacuum — same liveness-by-filesystem contract as the catalog
-    lock and the version floors."""
+    lock and the version floors. ``segs`` (the owner's segment names
+    the clone starts from) tells vacuum they were committed, so once
+    unpinned they are reaped at once, not aged like an uncommitted
+    write."""
     croot = os.path.join(owner_path, _CLONE_DIR)
     os.makedirs(croot, exist_ok=True)
     p = os.path.join(croot, f"ref-{uuid.uuid4().hex[:12]}.json")
     tmp = p + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"clone": os.path.realpath(clone_path)}, f)
+        json.dump({"clone": os.path.realpath(clone_path), "segs": segs}, f)
         f.flush()
         os.fsync(f.fileno())
     os.rename(tmp, p)
@@ -1323,7 +1327,8 @@ def clones_still_referencing(path: str) -> list[str]:
     return sorted(out)
 
 
-def _clone_pinned_segments(path: str, reap: bool = True
+def _clone_pinned_segments(path: str, reap: bool = True,
+                           committed: set[str] | None = None
                            ) -> set[str] | None:
     """Segment NAMES of ``path`` that live clones still reference —
     unioned into vacuum's keep set. Returns ``None`` (pin everything,
@@ -1332,7 +1337,8 @@ def _clone_pinned_segments(path: str, reap: bool = True
     landed before its first commit precisely so a racing vacuum backs
     off. Dead refs (clone directory gone) are reaped here; ref temp
     files from a crashed registration are reaped after the same
-    minimum age as commit temp files."""
+    minimum age as commit temp files. Every ref's registered segment
+    names, live or dead, are added to ``committed``."""
     import time as _time
 
     croot = os.path.join(path, _CLONE_DIR)
@@ -1352,9 +1358,12 @@ def _clone_pinned_segments(path: str, reap: bool = True
             continue
         try:
             with open(p) as fh:
-                clone = json.load(fh)["clone"]
+                ref = json.load(fh)
+            clone = ref["clone"]
         except (OSError, ValueError, KeyError):
             continue  # unreadable ref: never a reason to reap data
+        if committed is not None:
+            committed.update(ref.get("segs", ()))
         if not os.path.isdir(os.path.join(clone, _SNAP_DIR)):
             if reap:
                 _suppress_remove(p)  # clone dropped — dead ref
@@ -1460,7 +1469,9 @@ def clone(src_path: str, dst_path: str, version: int | None = None
     refs = []
     try:
         for owner in sorted({os.path.dirname(s) for s in all_refs}):
-            refs.append(_register_clone_ref(owner, dst_path))
+            refs.append(_register_clone_ref(owner, dst_path, sorted(
+                os.path.basename(s) for s in all_refs
+                if os.path.dirname(s) == owner)))
         _commit(dst_path, 1, segments, "clone", extra=extra)
         missing = [s for s in all_refs if not os.path.isdir(s)]
         if missing:
@@ -2064,6 +2075,8 @@ def vacuum(path: str, keep_last: int = 1,
         cutoff = min(cutoff, int(floor))
     now = _time.time()
     keep_segs: set[str] = set()
+    # segments known committed: a manifest read here or a clone ref names it
+    committed: set[str] = set()
     snap_dir = os.path.join(path, _SNAP_DIR)
     for v in _manifest_versions(path):
         p = _snap_path(path, v)
@@ -2072,9 +2085,10 @@ def vacuum(path: str, keep_last: int = 1,
             and now - os.path.getmtime(p) < float(retain_seconds)
         )
         m = _manifest(path, v)
+        segs = set(_manifest_segments(m)) | set(m.get("delete_segs") or [])
+        committed |= segs
         if v >= cutoff or recent:
-            keep_segs.update(_manifest_segments(m))
-            keep_segs.update(m.get("delete_segs") or [])
+            keep_segs |= segs
         elif not dry_run:
             os.remove(p)
     # Orphaned commit temp files: only reap when OLDER than a minimum
@@ -2096,7 +2110,8 @@ def vacuum(path: str, keep_last: int = 1,
     # LIVE clone's manifests still reference (None = a clone is
     # mid-creation; pin everything this run and let the next vacuum
     # see its manifest)
-    clone_pins = _clone_pinned_segments(path, reap=not dry_run)
+    clone_pins = _clone_pinned_segments(path, reap=not dry_run,
+                                        committed=committed)
     if clone_pins is None:
         keep_segs.update(
             d for d in os.listdir(path)
@@ -2105,18 +2120,23 @@ def vacuum(path: str, keep_last: int = 1,
         keep_segs.update(clone_pins)
     deleted = []
     for d in sorted(os.listdir(path)):
+        p = os.path.join(path, d)
         if (d.startswith("seg-") or d.startswith("del-")) \
                 and d not in keep_segs:
-            if not dry_run:
-                shutil.rmtree(os.path.join(path, d))
-            deleted.append(d)
+            # a committed segment nothing keeps goes now; one that no
+            # manifest or clone ref names is a write whose manifest has
+            # not linked it yet (and may any moment), so it gets the
+            # same min-age guard as the staging dirs below
+            if d in committed or now - os.path.getmtime(p) >= tmp_cutoff:
+                if not dry_run:
+                    shutil.rmtree(p)
+                deleted.append(d)
         elif d.startswith(".zorder-"):
             # crashed cluster_zorder staging dir: same min-age guard as
             # commit temp files (a live recluster is seconds between
             # write and rename; minutes of slack is decisively safe).
             # The dry run previews these too — the real run counts them
             # in its returned deletion list
-            p = os.path.join(path, d)
             if now - os.path.getmtime(p) >= tmp_cutoff:
                 if not dry_run:
                     shutil.rmtree(p)

@@ -1,5 +1,5 @@
-"""Write path: upsert, soft-delete, incremental skip, DDL, reload
-(reference B5-B9, B18).
+"""Write path: upsert, soft-delete, incremental skip, DDL (reference
+B5-B9; B18's reload is api.RclipServerApi.reload).
 
 The reference upserts into SQLite under a filelock
 (index_wikimedia.py:86-103, 47-48) and soft-deletes with a point UPDATE
@@ -129,13 +129,6 @@ def create_images_table(spark: SparkSession, path: str) -> None:
     plain parquet, materialize an empty table with the declared schema."""
     if not os.path.exists(path):
         spark.createDataFrame([], IMAGES_SCHEMA).write.parquet(path)
-
-
-def reload_table(spark: SparkSession, path: str) -> DataFrame:
-    """B18 full reload (reference /reload re-init, rclip_server.py:430-433):
-    drop any cached plans for the path and re-read."""
-    spark.catalog.clearCache()
-    return spark.read.parquet(path)
 
 
 def write_partitioned(

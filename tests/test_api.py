@@ -29,7 +29,9 @@ def api(spark, tmp_path_factory):
          ["zebra", "stripes", "spots", "lion", "cat", "dog", "bird", "fish"]],
         "word string, vector array<double>",
     )
-    return RclipServerApi(spark, table, E, words_df=words, censorship_key="k3y")
+    api = RclipServerApi(spark, table, E, words_df=words, censorship_key="k3y")
+    yield api
+    api.close()
 
 
 def test_search_api_shape_and_default_k(api):

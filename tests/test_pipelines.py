@@ -11,6 +11,13 @@ from rclip_server_spark.plans.embedder import DeterministicEmbedder
 E = DeterministicEmbedder(64)
 
 
+def _live(spark, table):
+    """The table's live (id, vector) rows, the frame search_api scans."""
+    from rclip_server_spark.sources import writer
+
+    return writer.live_rows(spark.read.parquet(table)).select("id", "vector")
+
+
 @pytest.fixture()
 def meta_ndjson(tmp_path):
     p = tmp_path / "quality_metadata.ndjson"
@@ -77,7 +84,7 @@ def test_local_binary_ingest_end_to_end(spark, tmp_path):
     assert pipelines.index_local_images(spark, str(d), table) == 1
     assert spark.read.parquet(table).count() == 10
     # the indexed table is a live search target (§3.1 lifecycle)
-    out = pipelines.search_api(spark, table, "zebra", E, num=3)
+    out = pipelines.search_api(_live(spark, table), "zebra", E, num=3)
     assert out.count() == 3
 
 
@@ -85,21 +92,21 @@ def test_search_api_over_indexed_table(spark, tmp_path, meta_ndjson):
     table = str(tmp_path / "images")
     pipelines.index_images(spark, meta_ndjson, table)
 
-    out = pipelines.search_api(spark, table, "zebra -stripes", E, num=5)
+    out = pipelines.search_api(_live(spark, table), "zebra -stripes", E, num=5)
     rows = out.collect()
     assert len(rows) == 5
     scores = [r.score for r in rows]
     assert scores == sorted(scores, reverse=True)
 
     # empty query -> empty result (reference rclip_server.py:138-139, 389)
-    assert pipelines.search_api(spark, table, "", E).count() == 0
+    assert pipelines.search_api(_live(spark, table), "", E).count() == 0
 
     # soft-deleted rows disappear from search
     from rclip_server_spark.sources import writer
 
     all_ids = [r.id for r in spark.read.parquet(table).select("id").collect()]
     writer.soft_delete(spark, table, all_ids[:10], id_col="id")
-    assert pipelines.search_api(spark, table, "zebra", E, num=100).count() == 8
+    assert pipelines.search_api(_live(spark, table), "zebra", E, num=100).count() == 8
 
 
 def test_words_table_and_similar_words_from_corpus(spark, documents):

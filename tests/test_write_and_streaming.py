@@ -141,16 +141,6 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_reload_table_sees_new_data(spark, tmp_table, embeddings):
-    base = embeddings.select(F.col("vec_id").alias("id"),
-                             F.concat(F.lit("f"), "vec_id").alias("filepath"))
-    writer.upsert_parquet(spark, tmp_table, base.limit(100), key="filepath")
-    assert writer.reload_table(spark, tmp_table).count() == 100
-    writer.upsert_parquet(spark, tmp_table, base, key="filepath")
-    # B18 full reload: re-read reflects the new table state
-    assert writer.reload_table(spark, tmp_table).count() == base.count()
-
-
 def test_streaming_sliding_equals_batch(spark, events, events_stream_dir):
     batch = {
         (r.window_start, r.event_type): r.n_events
@@ -2641,6 +2631,30 @@ class TestVersionedTable:
         assert [tuple(r) for r in V.read(spark, t).collect()] == [(3, "c")]
         with pytest.raises(FileNotFoundError):
             V.read(spark, t, 1)
+
+
+def test_vacuum_spares_an_uncommitted_segment_until_min_age(spark, tmp_path):
+    """A segment no manifest references is a write that has not linked
+    its manifest yet: vacuum leaves it alone until it is older than the
+    staging-dir minimum age (300 s), then reaps it. A dropped manifest's
+    segments still go at once."""
+    from rclip_server_spark.sources import versioned as V
+
+    t = str(tmp_path / "v")
+    schema = "id INT, val INT"
+    V.create(spark, t, spark.createDataFrame([(1, 10)], schema))
+    V.overwrite(spark, t, spark.createDataFrame([(2, 20)], schema))
+    dropped = sorted(V._manifest_segments(V._manifest(t, 1)))
+    seg = os.path.join(t, "seg-x")
+    spark.createDataFrame([(7, 70)], schema).write.parquet(seg)
+    assert V.vacuum(t, keep_last=1, dry_run=True) == dropped
+    assert V.vacuum(t, keep_last=1) == dropped
+    assert os.path.isdir(seg)
+    old = os.path.getmtime(seg) - 301
+    os.utime(seg, (old, old))
+    assert V.vacuum(t, keep_last=1) == ["seg-x"]
+    assert not os.path.exists(seg)
+    assert [tuple(r) for r in V.read(spark, t).collect()] == [(2, 20)]
 
 
 def test_spark_bucketed_table_join_and_agg_shuffle_free(spark, tmp_path, embeddings):
