@@ -3505,10 +3505,7 @@ _register(
 # filter argument) — the vector-DB "search with metadata filter"
 # feature. The payload column is a derived modular class so the oracle
 # recomputes it from vec_id; the semantics pinned here are "top-k
-# among probed candidates matching the filter" (the adaptive
-# min_results widening ladder is pinned by tests — its terminal tier
-# is plain filtered brute force, already oracle-covered by the
-# a1/a2 rows' family).
+# among probed candidates matching the filter".
 # ===========================================================================
 
 _AF_CORPUS_SQL = (

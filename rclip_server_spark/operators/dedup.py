@@ -263,7 +263,6 @@ def minhash_near_dup(
     bands: int = 8,
     threshold: float = 0.7,
     seed: int = 42,
-    sig_prefilter: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → signature-agreement prefilter
     → exact shingle-set Jaccard verification ≥ threshold. The standard 100 TB
@@ -273,7 +272,7 @@ def minhash_near_dup(
     set intersection away from the low-similarity bulk. The prefilter cut is
     set 4+ binomial standard deviations below the threshold (miss probability
     < 1e-4 per true pair); the DuckDB oracle mirrors it, so cross-engine
-    parity is exact either way.
+    parity is exact.
 
     Verification compares 60-bit-hashed shingle sets rather than the raw
     strings: identical Jaccard up to a ~1e-13 per-doc collision probability,
@@ -312,8 +311,7 @@ def minhash_near_dup(
         )
         .where(_first_band_only(F.col("a.sig"), F.col("b.sig"), F.col("a.band"), rows_per_band))
     )
-    if sig_prefilter:
-        cands = cands.where(_sig_agreement(num_hashes, threshold))
+    cands = cands.where(_sig_agreement(num_hashes, threshold))
     cands = cands.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     return _jaccard_verified(cands, grams, grams, threshold)
 
@@ -741,7 +739,6 @@ def minhash_near_dup_incremental(
     bands: int = 8,
     threshold: float = 0.7,
     seed: int = 42,
-    sig_prefilter: bool = True,
 ) -> DataFrame:
     """Incremental ingestion dedup: near-dup pairs BETWEEN an incoming
     ``batch`` and the existing ``corpus`` (never corpus x corpus) — the
@@ -770,7 +767,6 @@ def minhash_near_dup_incremental(
     cands = a.join(
         b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
     ).where(_first_band_only(F.col("a.sig"), F.col("b.sig"), F.col("a.band"), rows_per_band))
-    if sig_prefilter:
-        cands = cands.where(_sig_agreement(num_hashes, threshold))
+    cands = cands.where(_sig_agreement(num_hashes, threshold))
     cands = cands.select(F.col("a.id").alias("corpus_id"), F.col("b.id").alias("batch_id"))
     return _jaccard_verified(cands, gc_, gb_, threshold, "corpus_id", "batch_id")

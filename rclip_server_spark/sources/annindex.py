@@ -28,8 +28,10 @@ physical pruning. Joins the matview graph through the standard marker
 registry (``ai_source``), so REFRESH / CASCADE / DESCRIBE / cursor-
 safe VACUUM / refresh streams all work with no extra wiring. The
 lifecycle it shares with the other index kinds (spec and state reads,
-refresh, bucketed layout) is one descriptor in indexkind.py; this
-module holds the bucketing and the probe rule.
+refresh, bucketed layout) is one descriptor in indexkind.py, and both
+query forms run indexkind's shared path (query_vector, and
+query_vector_batch for M queries); this module holds the bucketing
+and the probe rule, ``_probe_rule``, written once for both.
 """
 
 from __future__ import annotations
@@ -111,13 +113,15 @@ def refresh_ann_index(
 def query_ann_index(
     spark: SparkSession, view_path: str, query_vec, k: int = 10,
     n_probe_bits: int = 1, version: int | None = None,
-    where: str | None = None, min_results: int | None = None,
+    where: str | None = None,
 ) -> DataFrame:
     """Approximate top-k FROM the maintained index: the query's bucket
-    and its ≤``n_probe_bits``-Hamming neighbors are computed driver-
-    side from the spec's deterministic planes, the state is filtered
-    to those buckets (O(probe fraction) rows), and only they are
-    scored by exact dot product. Returns (<key>, score) — the same
+    and its ≤``n_probe_bits``-Hamming neighbors (``_probe_rule``) are
+    computed driver-side from the spec's deterministic planes, the
+    state is filtered to those buckets (O(probe fraction) rows; on a
+    bucketed layout only their segment files enter the plan), and only
+    they are scored by exact dot product — the shared single-query
+    path, indexkind.query_vector. Returns (<key>, score) — the same
     probe set, scoring, ordering, and tie-break as
     ann.lsh_topk_multiprobe over the current source.
 
@@ -125,55 +129,11 @@ def query_ann_index(
     (``include_cols`` at CREATE) and key — FILTERED vector search.
     The predicate evaluates inside the probed scan (parquet-pushed:
     at 100 TB non-matching row groups never decode), so the semantics
-    are "top-k among probed candidates matching the filter". A
-    selective filter can leave fewer than k probed survivors; pass
-    ``min_results`` (≤ k) to adaptively WIDEN: each escalation adds a
-    probe tier (more Hamming neighbors, finally ALL buckets — the
-    exact filtered answer) and costs one extra count job, so the
-    common non-selective case stops at the first tier with one count.
-    Returns (<key>, score[, payload cols referenced stay internal])."""
-    v, spec = IK.spec_at("ann_index", view_path, version)
-    key, vec_col = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, dim = int(spec["ai_n_planes"]), int(spec["ai_dim"])
-    qv = np.asarray(query_vec, dtype=np.float64)
-    if qv.shape != (dim,):
-        raise ValueError(f"query dim {qv.shape} != index dim ({dim},)")
-    qbucket = _bucket_of(_planes(spec), qv)
-
-    def _plan(probes: set | None) -> DataFrame:
-        # at-rest pruning: on a hash-bucketed index state
-        # (convert_index_to_bucketed) the probed LSH buckets resolve
-        # to their physical buckets driver-side and ONLY those
-        # buckets' segment files are named in the plan — non-probed
-        # buckets are skipped at manifest resolution (files, not
-        # rows). probes=None is the guarantee tier: every bucket
-        # (exact filtered scan).
-        cand = IK.apply_where(IK.probed(
-            spark, "ann_index", view_path, v,
-            None if probes is None else sorted(probes)), where)
-        scored = cand.withColumn(
-            "score", VEC.dot(vec_col, VEC.vec_lit_sql(qv)))
-        return (scored.select(key, "score")
-                .orderBy(F.desc("score"), F.asc(key))
-                .limit(k))
-
-    probes = _probe_set(qbucket, n_planes, n_probe_bits)
-    out = _plan(probes)
-    if min_results is None:
-        return out
-    want = min(int(min_results), int(k))
-    # widening ladder: next multiprobe tier(s), then ALL buckets. The
-    # ladder re-plans (files re-prune per tier) — candidates already
-    # scored are re-scored, which keeps every tier's result exactly
-    # the single-shot answer at that tier (no cross-tier merge state).
-    ladder = [_probe_set(qbucket, n_planes, b)
-              for b in range(n_probe_bits + 1, 3)]
-    ladder.append(None)
-    for wider in ladder:
-        if out.count() >= want:
-            return out
-        out = _plan(wider)
-    return out
+    are "top-k among probed candidates matching the filter"; a
+    selective filter can leave fewer than k probed survivors."""
+    return IK.query_vector(spark, "ann_index", view_path, query_vec, k,
+                           version, where,
+                           lambda spec: _probe_rule(spec, n_probe_bits))
 
 
 def _planes(spec: dict) -> np.ndarray:
@@ -181,17 +141,10 @@ def _planes(spec: dict) -> np.ndarray:
                        int(spec["ai_seed"]))
 
 
-def _bucket_of(planes: np.ndarray, q: np.ndarray) -> int:
-    """The LSH bucket of one query vector: bit i set when it lies on
-    the non-negative side of plane i."""
-    return int(sum((1 << i) for i, p in enumerate(planes)
-                   if float(p @ q) >= 0))
-
-
 def _flip_masks(n_planes: int, n_probe_bits: int) -> list[int]:
     """Every XOR mask of at most ``n_probe_bits`` (≤ 2) bit flips, the
-    identity first — the single multiprobe rule all serving tiers
-    share."""
+    identity first — the multiprobe masks of ``_probe_rule`` and of
+    knn_join_via_index's left-side explode."""
     masks = [0]
     if n_probe_bits >= 1:
         masks += [1 << i for i in range(n_planes)]
@@ -202,10 +155,20 @@ def _flip_masks(n_planes: int, n_probe_bits: int) -> list[int]:
     return masks
 
 
-def _probe_set(qbucket: int, n_planes: int, n_probe_bits: int) -> set:
-    """The query bucket plus every bucket within n_probe_bits bit
-    flips."""
-    return {int(qbucket) ^ m for m in _flip_masks(n_planes, n_probe_bits)}
+def _probe_rule(spec: dict, n_probe_bits: int):
+    """The probe rule query_ann_index and its batch share: query vector
+    -> the sorted query bucket (bit i set when the query lies on the
+    non-negative side of plane i) plus every bucket within
+    ``n_probe_bits`` bit flips."""
+    planes = _planes(spec)
+    masks = _flip_masks(int(spec["ai_n_planes"]), n_probe_bits)
+
+    def rule(q: np.ndarray) -> list[int]:
+        qbucket = sum((1 << i) for i, p in enumerate(planes)
+                      if float(p @ q) >= 0)
+        return sorted({qbucket ^ m for m in masks})
+
+    return rule
 
 
 def query_ann_index_batch(
@@ -229,14 +192,9 @@ def query_ann_index_batch(
     bit-identical literals, same (score DESC, key ASC) total order).
 
     Returns (qid, <key>, score) ordered (qid, score DESC, key)."""
-    def rule(spec):
-        planes, n_planes = _planes(spec), int(spec["ai_n_planes"])
-        return lambda q: sorted(_probe_set(_bucket_of(planes, q),
-                                           n_planes, n_probe_bits))
-
-    return IK.query_vector_batch(spark, "ann_index", view_path, queries,
-                                 k, version, qid_col, where, rule,
-                                 "BIGINT")
+    return IK.query_vector_batch(
+        spark, "ann_index", view_path, queries, k, version, qid_col,
+        where, lambda spec: _probe_rule(spec, n_probe_bits), "BIGINT")
 
 
 def knn_join_via_index(
@@ -244,8 +202,7 @@ def knn_join_via_index(
     n_probe_bits: int = 1, id_col: str = "vec_id",
     vec_col: str = "embedding", version: int | None = None,
     max_expected_candidates: int | None = 50_000_000,
-    n_left: int | None = None, skew_prepass: bool = False,
-    where: str | None = None,
+    n_left: int | None = None, where: str | None = None,
 ) -> DataFrame:
     """Approximate k-NN JOIN against the MAINTAINED index — the
     two-large-tables alignment primitive (ann.lsh_knn_join) with the
@@ -264,14 +221,12 @@ def knn_join_via_index(
 
     The left side buckets ONCE (n_planes dots) and explodes its probe
     masks; one equi-join on the bucket; per-left-row top-k window.
-    ``skew_prepass`` inserts the per-partition partial top-k guard for
-    extreme right-side skew (bit-identical on or off). ``where`` is a
-    payload predicate over the index's include_cols (+ key) applied to
-    the CORPUS side before the join — parquet-pushed into the state
-    scan, so a filtered k-NN join ("nearest in-license corpus rows for
-    every candidate doc") shrinks the candidate volume instead of
-    post-filtering ranked rows. Returns (id_a, id_b, cosine, rnk)."""
-    from ..operators.ann import partition_partial_topk
+    ``where`` is a payload predicate over the index's include_cols
+    (+ key) applied to the CORPUS side before the join — parquet-pushed
+    into the state scan, so a filtered k-NN join ("nearest in-license
+    corpus rows for every candidate doc") shrinks the candidate volume
+    instead of post-filtering ranked rows. Returns (id_a, id_b, cosine,
+    rnk)."""
     from ..operators.dedup import ScaleGuardError
 
     v, spec = IK.spec_at("ann_index", view_path, version)
@@ -303,10 +258,6 @@ def knn_join_via_index(
     scored = (lf.join(rt, "bucket")
               .withColumn("cosine", VEC.dot("va", "vb"))
               .select("id_a", "id_b", "cosine"))
-    if skew_prepass:
-        scored = partition_partial_topk(
-            scored, k, query_id="id_a", id_col="id_b",
-            score_col="cosine")
     from pyspark.sql import Window
 
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"),

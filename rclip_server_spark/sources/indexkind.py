@@ -5,12 +5,15 @@ table ``kinds()``, and everything they share runs once over it — the
 kind-checked spec read, the probed state read, the canonical read,
 the at-rest bucketed conversion, the registry's ``state`` and
 ``delta`` (matview._create and matview._refresh_once run the create,
-refresh, heal and OCC skeleton around them), the payload filter, and
-the batch guards. The kind modules keep only their own logic (bucketing
-and the probe rule, cell assignment and drift, tokenization and
-BM25); matview's REFRESH / DESCRIBE INDEX dispatch and SQL's
-OPTIMIZE ... BUCKET BY / ``OPTIONS (buckets=N)`` are one lookup in
-the table.
+refresh, heal and OCC skeleton around them), the payload filter, the
+batch guards, and the vector kinds' one query path: ``query_vector``
+for one query and ``query_vector_batch`` for M, both driven by the
+kind's probe rule (``annindex._probe_rule``, ``ivfindex._probe_rule``:
+spec -> query vector -> probe values). The kind modules keep only
+their own logic (bucketing and the probe rule, cell assignment and
+drift, tokenization and BM25); matview's REFRESH / DESCRIBE INDEX
+dispatch and SQL's OPTIMIZE ... BUCKET BY / ``OPTIONS (buckets=N)``
+are one lookup in the table.
 
 On-disk contract: a kind's spec lives in the view manifest's ``app``
 namespace under ``<prefix>_*`` fields, and ``<prefix>_source`` marks
@@ -290,6 +293,44 @@ def check_batch(name: str, spec: dict, queries, qid_col: str,
     if len(set(qids)) != len(qids):
         raise ValueError("duplicate qids in batch")
     return qids
+
+
+def candidates(spark: SparkSession, name: str, view_path: str,
+               query_vec, version: int | None, where: str | None,
+               probe_rule) -> tuple[dict, np.ndarray, DataFrame]:
+    """(spec, query, candidates) of ONE vector query: one consistent
+    spec read, the dim check, the kind's probe rule and the probed,
+    payload-filtered state scan — what query_vector scores exactly and
+    IVF's ADC tier scores from its PQ codes."""
+    v, spec = spec_at(name, view_path, version)
+    dim = int(spec[f"{kinds()[name].prefix}_dim"])
+    q = np.asarray(query_vec, dtype=np.float64)
+    if q.shape != (dim,):
+        raise ValueError(f"query dim {q.shape} != index dim ({dim},)")
+    return spec, q, apply_where(
+        probed(spark, name, view_path, v, probe_rule(spec)(q)), where)
+
+
+def query_vector(spark: SparkSession, name: str, view_path: str,
+                 query_vec, k: int, version: int | None,
+                 where: str | None, probe_rule) -> DataFrame:
+    """One vector query — the single-query twin of query_vector_batch,
+    the one plan query_ann_index and query_ivf_index serve.
+    ``probe_rule(spec)`` is the kind's driver-side rule (query vector
+    -> probe values), the same one its batch passes. Only the probed
+    rows (file-pruned on a bucketed layout) that match ``where`` are
+    scored, by exact dot product against the query literal.
+
+    Returns (<key>, score) ordered (score DESC, key ASC), top ``k``."""
+    spec, q, cand = candidates(spark, name, view_path, query_vec,
+                               version, where, probe_rule)
+    kind = kinds()[name]
+    key = spec[f"{kind.prefix}_key"]
+    scored = cand.withColumn(
+        "score", VEC.dot(spec[kind.col_field], VEC.vec_lit_sql(q)))
+    return (scored.select(key, "score")
+            .orderBy(F.desc("score"), F.asc(key))
+            .limit(k))
 
 
 def query_vector_batch(spark: SparkSession, name: str, view_path: str,

@@ -36,8 +36,11 @@ greatest-of-structs over literal centroids); at rest the state can be
 hash-bucketed on ``ivf_cell`` (convert_index_to_bucketed) so probe
 queries skip FILES at manifest resolution — only the probed cells'
 buckets' segments are ever named in the plan. The lifecycle it shares
-with the other index kinds is one descriptor in indexkind.py; this
-module holds cell assignment, the probe rule and drift governance.
+with the other index kinds is one descriptor in indexkind.py, and both
+query forms run indexkind's shared path (query_vector, and
+query_vector_batch for M queries); this module holds cell assignment,
+the probe rule (``_probe_rule``, written once for both) and drift
+governance.
 """
 
 from __future__ import annotations
@@ -461,99 +464,72 @@ def query_ivf_index(
     spark: SparkSession, view_path: str, query_vec, k: int = 10,
     n_probe: int = 2, version: int | None = None,
     method: str = "exact", shortlist: int = 200,
-    where: str | None = None, min_results: int | None = None,
+    where: str | None = None,
 ) -> DataFrame:
     """Approximate top-k FROM the maintained index: the ``n_probe``
-    nearest cells are ranked driver-side from the spec's stored
-    centroids (zero Spark jobs), the state is filtered to those cells
-    (file-pruned on a bucketed layout), and the candidates are scored
-    by one of two tiers:
+    nearest cells (``_probe_rule``) are ranked driver-side from the
+    spec's stored centroids (zero Spark jobs), the state is filtered
+    to those cells (file-pruned on a bucketed layout), and the
+    candidates are scored by one of two tiers:
 
     * ``method='exact'`` — exact dot product over every probed row
-      (the re-rank tier the oracle row pins): same probe order
+      (the re-rank tier the oracle row pins), through the shared
+      single-query path indexkind.query_vector: same probe order
       (np.argsort(-dots), ties by cell index), scoring, ordering, and
       tie-break as ann.ivf_topk over the current source.
     * ``method='adc'`` (IVFADC index only, built with ``pq_m``) —
-      candidates score from their stored residual PQ codes via one
-      (m_sub × k_cent) lookup table (q·centroid + ADC, the
-      Jegou/Douze/Schmid pipeline), a ``shortlist`` survives, and the
-      final k re-rank EXACTLY against the index's own full-precision
-      column — row-identical to ann.ivf_pq_topk over this state with
-      the frozen centroids/codebooks. At 100 TB the ADC pass reads
-      code bytes, not vectors: the memory-bound tier.
+      the same probed candidates (indexkind.candidates) score from
+      their stored residual PQ codes via one (m_sub × k_cent) lookup
+      table (q·centroid + ADC, the Jegou/Douze/Schmid pipeline), a
+      ``shortlist`` survives, and the final k re-rank EXACTLY against
+      the index's own full-precision column — row-identical to
+      ann.ivf_pq_topk over this state with the frozen
+      centroids/codebooks. At 100 TB the ADC pass reads code bytes,
+      not vectors: the memory-bound tier.
 
     ``where`` is a SQL predicate over the index's payload columns
     (``include_cols`` at CREATE) and key — FILTERED vector search,
     evaluated inside the probed-cell scan (parquet-pushed): top-k
-    among probed candidates matching the filter. A selective filter
-    can leave fewer than k probed survivors; pass ``min_results``
-    (≤ k) to adaptively WIDEN the probe: each escalation doubles
-    n_probe (finally ALL cells — the exact filtered answer) and costs
-    one extra count job.
+    among probed candidates matching the filter.
 
     Returns (<key>, score); final scores are exact dots either way."""
-    v, spec = IK.spec_at("ivf_index", view_path, version)
-    key, vec_col = spec["ii_key"], spec["ii_vec_col"]
-    dim = int(spec["ii_dim"])
-    n_cells = int(spec["ii_n_cells"])
-    qv = np.asarray(query_vec, dtype=np.float64)
-    if qv.shape != (dim,):
-        raise ValueError(f"query dim {qv.shape} != index dim ({dim},)")
-    cents = _centroids(spec)
     if int(n_probe) < 1:
-        # also the widening ladder's loop variant: doubling from 0
-        # would never reach n_cells
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
     if method not in ("exact", "adc"):
         raise ValueError(f"unknown method {method!r}; "
                          f"use 'exact' or 'adc'")
 
-    def _plan(probe_n: int) -> DataFrame:
-        cand = IK.apply_where(IK.probed(
-            spark, "ivf_index", view_path, v,
-            _nearest_cells(cents, qv, probe_n)), where)
-        if method == "adc":
-            from ..operators.ann import ivf_pq_topk
+    def rule(spec):
+        return _probe_rule(spec, n_probe)
 
-            books = _codebooks(spec)
-            if books is None:
-                raise ValueError(
-                    f"{view_path} was built without PQ codebooks — "
-                    f"recreate with pq_m=<subspaces> for method='adc'")
-            # the probed-cell filter is already applied (and file-
-            # pruned); ivf_pq_topk re-applies it idempotently from the
-            # same probe rule, then ADC-shortlists and exact-re-ranks
-            # in-state. The payload filter above shrinks its
-            # candidate set BEFORE the LUT pass.
-            return ivf_pq_topk(cand, qv, cents, books, k=k,
-                               n_probe=probe_n, shortlist=shortlist,
-                               id_col=key, vec_col=vec_col)
-        scored = cand.withColumn(
-            "score", VEC.dot(vec_col, VEC.vec_lit_sql(qv)))
-        return (scored.select(key, "score")
-                .orderBy(F.desc("score"), F.asc(key))
-                .limit(k))
+    if method == "exact":
+        return IK.query_vector(spark, "ivf_index", view_path, query_vec,
+                               k, version, where, rule)
+    from ..operators.ann import ivf_pq_topk
 
-    out = _plan(int(n_probe))
-    if min_results is None:
-        return out
-    want = min(int(min_results), int(k))
-    # widening ladder: double the probed cells until all cells are in
-    # (the exact filtered answer). Each tier is a fresh single-shot
-    # plan — file pruning re-resolves, no cross-tier merge state.
-    probe_n = int(n_probe)
-    while probe_n < n_cells:
-        if out.count() >= want:
-            return out
-        probe_n = min(probe_n * 2, n_cells)
-        out = _plan(probe_n)
-    return out
+    spec, qv, cand = IK.candidates(spark, "ivf_index", view_path,
+                                   query_vec, version, where, rule)
+    books = _codebooks(spec)
+    if books is None:
+        raise ValueError(
+            f"{view_path} was built without PQ codebooks — "
+            f"recreate with pq_m=<subspaces> for method='adc'")
+    # the probed-cell filter is already applied (and file-pruned);
+    # ivf_pq_topk re-applies it idempotently from the same nearest-
+    # centroid order, then ADC-shortlists and exact-re-ranks in-state.
+    # The payload filter shrinks its candidate set BEFORE the LUT pass.
+    return ivf_pq_topk(cand, qv, _centroids(spec), books, k=k,
+                       n_probe=int(n_probe), shortlist=shortlist,
+                       id_col=spec["ii_key"], vec_col=spec["ii_vec_col"])
 
 
-def _nearest_cells(cents: np.ndarray, q: np.ndarray, n_probe: int) -> list:
-    """The probe rule: the ``n_probe`` cells whose centroids score
-    highest against the query (np.argsort order, ties by cell index)."""
-    return [int(i) for i in np.argsort(-(cents @ q))[:int(n_probe)]]
+def _probe_rule(spec: dict, n_probe: int):
+    """The probe rule query_ivf_index and its batch share: query vector
+    -> the ``n_probe`` cells whose stored centroids score highest
+    against it (np.argsort order, ties by cell index)."""
+    cents = _centroids(spec)
+    return lambda q: [int(i)
+                      for i in np.argsort(-(cents @ q))[:int(n_probe)]]
 
 
 def query_ivf_index_batch(
@@ -576,9 +552,6 @@ def query_ivf_index_batch(
     by chunking calls).
 
     Returns (qid, <key>, score) ordered (qid, score DESC, key)."""
-    def rule(spec):
-        cents = _centroids(spec)
-        return lambda q: _nearest_cells(cents, q, n_probe)
-
-    return IK.query_vector_batch(spark, "ivf_index", view_path, queries,
-                                 k, version, qid_col, where, rule, "INT")
+    return IK.query_vector_batch(
+        spark, "ivf_index", view_path, queries, k, version, qid_col,
+        where, lambda spec: _probe_rule(spec, n_probe), "INT")

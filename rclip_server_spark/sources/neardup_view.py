@@ -60,14 +60,12 @@ from ..operators.dedup import (_first_band_only, _jaccard_verified,
                                _sig_agreement)
 from . import matview as M
 from . import versioned as V
+from .matview import _INSERTING, _RETRACTING  # canonical CDC classes
 
 PAIR_COL = "_nd_pair"
 _SEP = "\x01"
 GRAMS_SUFFIX = "_grams"
 BANDS_SUFFIX = "_bands"
-
-_RETRACTING = ("delete", "update_preimage")
-_INSERTING = ("insert", "update_post", "update_postimage")
 
 
 def _grams_transform(key: str, text_col: str, shingle_n: int):

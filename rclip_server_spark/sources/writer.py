@@ -29,26 +29,14 @@ from pyspark.sql import types as T
 
 def anti_join_skip(
     new_df: DataFrame, done_df: DataFrame, key: str | list[str],
-    use_bloom: bool = False, fpp: float = 0.001,
 ) -> DataFrame:
     """B8: keep only rows of ``new_df`` whose key is NOT already in ``done_df``
     (reference builds a driver-side set, IW:73-77/190-192 — the anti join is
     the distributed form; Spark broadcasts the smaller side automatically).
-
-    ``use_bloom=True`` routes through the Bloom-pruned exact anti-join
-    (operators/sketches.bloom_prune_anti_join) — the shape for when the
-    done-set outgrows the broadcast threshold: a ~10-bits/key filter prunes
-    the batch map-side and only the might-contain sliver pays the shuffle.
-    Single-key only (concat a composite key first); result is bit-identical
-    either way."""
+    When the done-set outgrows the broadcast threshold, the Bloom-pruned
+    exact anti-join (operators/sketches.bloom_prune_anti_join) is the
+    shape to call instead."""
     keys = [key] if isinstance(key, str) else list(key)
-    if use_bloom:
-        if len(keys) != 1:
-            raise ValueError("use_bloom supports a single key column; "
-                             "concat composite keys into one first")
-        from ..operators.sketches import bloom_prune_anti_join
-
-        return bloom_prune_anti_join(new_df, done_df, keys[0], fpp=fpp)
     return new_df.join(done_df.select(*keys).distinct(), keys, "left_anti")
 
 

@@ -76,8 +76,14 @@ _TS_LITERAL = re.compile(r"\s*'((?:[^']|'')*)'")
 # nor trigger catalog reads, while offsets into the REAL text stay
 
 
-_INDEX_FN = re.compile(r"\b(text_search|ann_search|phrase_search|"
-                       r"knn_join|ivf_search)\s*\(", re.IGNORECASE)
+# each index table function -> the index kind its view must be
+_INDEX_FN_KIND = {
+    "text_search": "text_index", "phrase_search": "text_index",
+    "ann_search": "ann_index", "ivf_search": "ivf_index",
+    "knn_join": "ann_index",
+}
+_INDEX_FN = re.compile(r"\b(" + "|".join(_INDEX_FN_KIND) + r")\s*\(",
+                       re.IGNORECASE)
 
 
 def _str_arg(a: str, fn: str, what: str) -> str:
@@ -105,9 +111,12 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
     (textindex.query_phrase_index), and
     ``ANN_SEARCH('view', array(x, y, ...), k[, probe_bits])`` → the
     multiprobe-LSH top-k FROM the ANN index (annindex.query_ann_index:
-    O(probe fraction), file-pruned on a bucketed layout). Each call is
-    evaluated against the index VIEW named by its first argument and
-    spliced in as a temp view, so the result composes with full Spark
+    O(probe fraction), file-pruned on a bucketed layout), with its
+    IVF twin ``IVF_SEARCH`` and the ``KNN_JOIN`` of a table against an
+    ANN index. Each call is evaluated against the index VIEW named by
+    its first argument — of the kind ``_INDEX_FN_KIND`` names for the
+    function, else SqlError naming both kinds — and spliced in as a
+    temp view, so the result composes with full Spark
     SQL — joins, CTEs, window functions, aliases all work. k and
     probe_bits must be literals (the plan is resolved at parse time,
     exactly like VERSION AS OF)."""
@@ -130,6 +139,10 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
         vname = _str_arg(args[0] if args else "''", fn.upper(),
                          "view name")
         e = catalog.get(vname)
+        want_kind = _INDEX_FN_KIND[fn]
+        if e["kind"] != want_kind:
+            raise SqlError(f"{fn.upper()} reads a {want_kind} view; "
+                           f"{vname} is a {e['kind']}")
         # CONTENT-KEYED temp-view name (fn + args + the index's
         # current version): two concurrent statements on one session
         # can only collide when they'd register the identical frame —
@@ -156,9 +169,6 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
             from ..sources import annindex as AI
             from ..sources import indexkind as IK
 
-            if e["kind"] != "ann_index":
-                raise SqlError(f"KNN_JOIN reads an ann_index view; "
-                               f"{vname} is a {e['kind']}")
             lname = args[1]
             if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", lname):
                 raise SqlError(f"KNN_JOIN's left side must be a "
@@ -249,9 +259,6 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
                 raise SqlError(f"{up}('view', 'terms', k[, filter])")
             from ..sources import textindex as TI
 
-            if e["kind"] != "text_index":
-                raise SqlError(f"{up} reads a text_index view; "
-                               f"{vname} is a {e['kind']}")
             terms = _str_arg(args[1], up, "terms string")
             k = _int_arg(args[2], up, "k")
             # optional 4th arg: payload filter predicate (filtered
@@ -270,17 +277,18 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
                 raise SqlError(str(ex)) from ex
             q.createOrReplaceTempView(tmp)
         else:
+            # ANN_SEARCH('view', array(...), k[, probe_bits[, filter]])
+            # and IVF_SEARCH('view', array(...), k[, n_probe[, method[,
+            # filter]]]): 'adc' routes IVF through the IVFADC tier
+            # (PQ-code scoring + exact re-rank); the filter is a
+            # payload predicate evaluated inside the probed scan
             up = fn.upper()
-            max_args = 6 if fn == "ivf_search" else 5
-            if not (3 <= len(args) <= max_args):
-                raise SqlError(
-                    f"{up}('view', array(...), k"
-                    f"[, {'n_probe[, method[, filter]]' if fn == 'ivf_search' else 'probe_bits[, filter]'}])")
-            want_kind = ("ivf_index" if fn == "ivf_search"
-                         else "ann_index")
-            if e["kind"] != want_kind:
-                raise SqlError(f"{up} reads a {want_kind} view; "
-                               f"{vname} is a {e['kind']}")
+            ivf = fn == "ivf_search"
+            opt = ["n_probe", "method", "filter"] if ivf else \
+                ["probe_bits", "filter"]
+            if not (3 <= len(args) <= 3 + len(opt)):
+                raise SqlError(f"{up}('view', array(...), k[, "
+                               + "[, ".join(opt) + "]" * len(opt) + ")")
             am = re.match(r"array\s*\((.*)\)\s*$", args[1],
                           re.IGNORECASE | re.DOTALL)
             if not am:
@@ -292,39 +300,26 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
             except ValueError as ex:
                 raise SqlError(f"bad vector literal: {ex}") from ex
             k = _int_arg(args[2], up, "k")
+            probe = _int_arg(args[3], up, opt[0]) if len(args) >= 4 \
+                else (2 if ivf else 1)
+            method = _str_arg(args[4], up, "method") \
+                if ivf and len(args) >= 5 else "exact"
+            vwhere = _str_arg(args[-1], up, "filter") \
+                if len(args) == 3 + len(opt) else None
+            from ..sources import annindex as AI
+            from ..sources import ivfindex as II
+
             try:
-                if fn == "ivf_search":
-                    from ..sources import ivfindex as II
-
-                    n_probe = _int_arg(args[3], up, "n_probe") \
-                        if len(args) >= 4 else 2
-                    # optional 5th arg: 'adc' routes through the
-                    # IVFADC tier (PQ-code scoring + exact re-rank);
-                    # optional 6th arg: a payload filter predicate
-                    # (filtered vector search — evaluated inside the
-                    # probed-cell scan, include_cols at CREATE)
-                    method = _str_arg(args[4], up, "method") \
-                        if len(args) >= 5 else "exact"
-                    iwhere = _str_arg(args[5], up, "filter") \
-                        if len(args) == 6 else None
-                    II.query_ivf_index(spark, e["path"], qv, k=k,
-                                       n_probe=n_probe, version=ver,
-                                       method=method, where=iwhere)\
-                        .createOrReplaceTempView(tmp)
-                else:
-                    from ..sources import annindex as AI
-
-                    probes = _int_arg(args[3], up, "probe_bits") \
-                        if len(args) >= 4 else 1
-                    # optional 5th arg: payload filter predicate
-                    awhere = _str_arg(args[4], up, "filter") \
-                        if len(args) == 5 else None
-                    AI.query_ann_index(spark, e["path"], qv, k=k,
-                                       n_probe_bits=probes,
-                                       version=ver, where=awhere)\
-                        .createOrReplaceTempView(tmp)
+                q = (II.query_ivf_index(spark, e["path"], qv, k=k,
+                                        n_probe=probe, version=ver,
+                                        method=method, where=vwhere)
+                     if ivf else
+                     AI.query_ann_index(spark, e["path"], qv, k=k,
+                                        n_probe_bits=probe, version=ver,
+                                        where=vwhere))
             except ValueError as ex:
                 raise SqlError(str(ex)) from ex
+            q.createOrReplaceTempView(tmp)
         spans.append((m.start(), close + 1, tmp))
     if not spans:
         return text

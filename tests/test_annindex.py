@@ -228,8 +228,8 @@ def test_knn_join_via_index_matches_adhoc(spark, vecs, cat,
                                           embeddings):
     """r12: the cross-table k-NN join served FROM the maintained index
     is row-identical to ann.lsh_knn_join over the current source with
-    the same parameters — including after churn + refresh, on the
-    bucketed layout, and with the skew prepass on."""
+    the same parameters — including after churn + refresh and on the
+    bucketed layout."""
     vp = _mk(spark, vecs, cat, "kj")
     S.execute(spark, "OPTIMIZE kj_ann BUCKET BY (bucket, 16)", cat)
     S.execute(spark, "DELETE FROM kj WHERE vec_id % 8 = 0", cat)
@@ -245,10 +245,6 @@ def test_knn_join_via_index_matches_adhoc(spark, vecs, cat,
                        round(r["cosine"], 9)) for r in df.collect())
     assert rows(got) == rows(want)
     assert got.count() > 0
-    # skew prepass is bit-identical
-    got_sp = AI.knn_join_via_index(spark, left, vp, k=4,
-                                   n_probe_bits=1, skew_prepass=True)
-    assert rows(got_sp) == rows(want)
     # the scale guard plans with the MANIFEST count (no count() job)
     # and fires loudly when the expected candidate volume explodes
     from rclip_server_spark.operators.dedup import ScaleGuardError
@@ -289,7 +285,7 @@ def test_filtered_query_matches_filtered_brute_force(spark, vecs, cat):
 
     qb = int(sum((1 << i) for i, p in enumerate(planes)
                  if float(p @ np.asarray(QV)) >= 0))
-    probes = sorted(AI._probe_set(qb, 4, 1))
+    probes = sorted({qb} | {qb ^ (1 << i) for i in range(4)})
     want = (state.where(F.col("bucket").isin(probes))
             .where("category = 2 AND NOT flagged")
             .withColumn("score", VEC.dot(F.col("embedding"),
@@ -298,29 +294,6 @@ def test_filtered_query_matches_filtered_brute_force(spark, vecs, cat):
             .orderBy(F.desc("score"), F.asc("vec_id")).limit(10))
     assert _ids_scores(got) == _ids_scores(want)
     assert len(got.collect()) > 0
-
-
-def test_filtered_widening_reaches_exact_answer(spark, vecs, cat):
-    """min_results escalates the probe ladder to its terminal tier
-    (ALL buckets = exact filtered top-k) when the filter is so
-    selective the probed buckets cannot satisfy it."""
-    vp = _mk_payload(spark, vecs, cat, "wide")
-    from rclip_server_spark.functions import vector as VEC
-
-    # only 3 rows match globally (vec_id in {2, 12, 22}) but
-    # min_results=5: NO tier can satisfy, so the ladder must run to
-    # its terminal ALL-buckets tier — the exact filtered answer
-    got = AI.query_ann_index(
-        spark, vp, QV, k=5, n_probe_bits=0,
-        where="category = 2 AND vec_id < 30", min_results=5)
-    want = (AI.read_ann_index(spark, vp)
-            .where("category = 2 AND vec_id < 30")
-            .withColumn("score", VEC.dot(F.col("embedding"),
-                                         VEC.vec_lit(QV)))
-            .select("vec_id", "score")
-            .orderBy(F.desc("score"), F.asc("vec_id")).limit(5))
-    assert len(want.collect()) == 3
-    assert _ids_scores(got) == _ids_scores(want)
 
 
 def test_filtered_batch_matches_per_query_loop(spark, vecs, cat):

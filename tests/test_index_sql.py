@@ -282,17 +282,25 @@ def three(spark, documents, embeddings, tmp_path_factory):
     return cat
 
 
-# kind -> (read, query, refresh, probe column)
+_ARR = "array(" + ", ".join(str(x) for x in QV) + ")"
+
+# kind -> (read, query, refresh, probe column, its SQL table functions
+# over view {v})
 _KIND_API = {
     "text_index": (TI.read_text_index,
                    lambda sp, vp: TI.query_text_index(sp, vp, "data"),
-                   TI.refresh_text_index, "term"),
+                   TI.refresh_text_index, "term",
+                   ["TEXT_SEARCH('{v}', 'data', 5)",
+                    "PHRASE_SEARCH('{v}', 'data', 5)"]),
     "ann_index": (AI.read_ann_index,
                   lambda sp, vp: AI.query_ann_index(sp, vp, QV),
-                  AI.refresh_ann_index, "bucket"),
+                  AI.refresh_ann_index, "bucket",
+                  [f"ANN_SEARCH('{{v}}', {_ARR}, 5)",
+                   "KNN_JOIN('{v}', k3e, 3)"]),
     "ivf_index": (II.read_ivf_index,
                   lambda sp, vp: II.query_ivf_index(sp, vp, QV),
-                  II.refresh_ivf_index, "ivf_cell"),
+                  II.refresh_ivf_index, "ivf_cell",
+                  [f"IVF_SEARCH('{{v}}', {_ARR}, 5)"]),
 }
 
 
@@ -301,15 +309,21 @@ _KIND_API = {
 def test_wrong_kind_fails_loudly(spark, three, kind, view):
     """One kind's read/query/refresh on another kind's view raises
     ValueError naming the view (never reads it under the wrong spec),
-    and OPTIMIZE ... BUCKET BY on a column that is not the view's probe
-    column raises SqlError."""
+    the kind's SQL table functions over it raise SqlError naming both
+    kinds, and OPTIMIZE ... BUCKET BY on a column that is not the
+    view's probe column raises SqlError."""
     import re
 
     vp = three.get(f"v_{view}")["path"]
-    read, query, refresh, probe_col = _KIND_API[kind]
+    read, query, refresh, probe_col, table_fns = _KIND_API[kind]
     for call in (read, query, refresh):
         with pytest.raises(ValueError, match=re.escape(vp)):
             call(spark, vp)
+    for fn in table_fns:
+        with pytest.raises(S.SqlError,
+                           match=f"reads a {kind} view; .* is a {view}$"):
+            S.execute(spark, "SELECT * FROM " + fn.format(v=f"v_{view}"),
+                      three)
     with pytest.raises(S.SqlError, match="buckets by its"):
         S.execute(spark, f"OPTIMIZE v_{view} BUCKET BY ({probe_col}, 4)",
                   three)
@@ -412,8 +426,7 @@ def test_index_is_a_reserved_name_and_n_probe_guard(spark, embeddings,
     """r14 review findings: 'index' became a grammar word (DESCRIBE
     INDEX / RETRAIN INDEX), so it must be unregisterable as a table
     name — a table named index would be impossible to DESCRIBE; and
-    IVF_SEARCH with n_probe < 1 must error instead of spinning the
-    widening ladder forever."""
+    an IVF query with n_probe < 1 must raise ValueError."""
     from rclip_server_spark.sources import ivfindex as II
 
     with pytest.raises(S.SqlError):
@@ -427,4 +440,4 @@ def test_index_is_a_reserved_name_and_n_probe_guard(spark, embeddings,
                      "n_cells=4, iters=1)", cat)
     with pytest.raises(ValueError):
         II.query_ivf_index(spark, cat.get("npi")["path"], QV, k=5,
-                           n_probe=0, min_results=5)
+                           n_probe=0)

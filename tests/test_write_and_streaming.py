@@ -3120,20 +3120,6 @@ def test_versioned_upsert_retry_rebases_on_conflict(spark, tmp_path, monkeypatch
     assert got == [(1, "a"), (2, "B"), (3, "c")]  # BOTH writers' changes
 
 
-def test_anti_join_skip_bloom_path_equivalent(spark, embeddings):
-    """B8 with use_bloom=True must produce the identical row set as the
-    broadcast path (the Bloom is a router, not an approximation)."""
-    new = embeddings.select(F.col("vec_id").alias("id")).where(F.col("id") < 400)
-    done = embeddings.select(F.col("vec_id").alias("id")).where(F.col("id") % 3 == 0)
-    a = sorted(r.id for r in writer.anti_join_skip(new, done, "id").collect())
-    b = sorted(r.id for r in writer.anti_join_skip(new, done, "id",
-                                                   use_bloom=True).collect())
-    assert a == b and len(a) > 0
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        writer.anti_join_skip(new, done, ["id", "id"], use_bloom=True)
-
-
 class TestJoinViewRound8:
     """Round-8 join-view surface: composite (multi-column) equi-keys,
     LEFT-outer maintained aggregates, and cost-based refresh-vs-

@@ -501,7 +501,7 @@ def filtered(spark, sf_dir, sizes, tmp):
         planes = ann.hyperplanes(6, 64, 42)
         qb = int(sum((1 << i) for i, p in enumerate(planes)
                      if float(p @ np.asarray(QV)) >= 0))
-        probes = sorted(AI._probe_set(qb, 6, 1))
+        probes = sorted({qb} | {qb ^ (1 << i) for i in range(6)})
         want = (AI.read_ann_index(spark, idx)
                 .where(F.col("bucket").isin(probes)).where(where)
                 .withColumn("score", VEC.dot(F.col("embedding"),
