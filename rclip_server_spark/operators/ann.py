@@ -1,15 +1,39 @@
 """Similarity search over embedding columns: exact brute-force top-k (the
 semantics baseline, reference A1/A2) and approximate scale tiers
-(random-hyperplane LSH buckets; IVF-style coarse quantization).
+(random-hyperplane LSH buckets; IVF-style coarse quantization; PCA,
+binary and product-quantized shortlists).
 
 Scale shape: brute force is map-side score + TakeOrderedAndProject — it
 *works* at 100 TB but reads everything. The LSH/IVF tiers cut the scan to a
 bucket subset; both are built from deterministic literal projections so
 results are reproducible and oracle-checkable.
+
+Each approximate tier is exact over its probed candidates only while every
+place that probes means the same thing, so each vector-search rule is
+written once, here, and the maintained indexes (sources/annindex.py,
+sources/ivfindex.py) call the same code:
+
+* ``flip_masks`` — the Hamming-ball probe masks (every XOR mask of at most
+  n bit flips);
+* ``lsh_probe_rule`` — the query's sign-bit bucket XOR those masks, the
+  LSH probe set (``lsh_topk_multiprobe`` and the ANN index queries);
+* ``ivf_probe_rule`` — the n_probe nearest cells (``ivf_topk``,
+  ``ivf_pq_topk`` and the IVF index queries);
+* ``infer_dim`` — the one empty-input dim probe;
+* ``_exact_topk`` — exact dot against the query literal, (score DESC, id
+  ASC) top-k over the candidates a tier kept;
+* ``_knn_join`` — the k-NN join body: candidate-volume scale guard,
+  left-side bucket + probe explode, bucket equi-join, per-left-row window
+  (``lsh_knn_join`` and ``annindex.knn_join_via_index``);
+* the PQ tail — ``_pq_argmin`` (per-subspace GEMM argmin), ``_adc`` (the
+  lookup table and its gathers), ``_ivf_adc_topk`` (IVFADC over probed
+  candidates, also IVF's ``method='adc'`` index tier) and ``_rerank``
+  (shortlist, broadcast the ids back, exact re-score, top-k).
 """
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Iterator
 
 import numpy as np
@@ -52,6 +76,67 @@ def hyperplane_bucket_col(vec_col, planes: np.ndarray):
         )
         bucket = bucket + bit
     return bucket
+
+
+def flip_masks(n_planes: int, n_probe_bits: int) -> list[int]:
+    """The Hamming-ball probe masks: every XOR mask of at most
+    ``n_probe_bits`` flips of ``n_planes`` sign bits — the identity first,
+    then by width, each width in ``itertools.combinations`` order
+    (1 + C(p,1) + ... + C(p,n) masks; a width past ``n_planes`` adds
+    none). A negative width raises ValueError."""
+    if n_probe_bits < 0:
+        raise ValueError(f"n_probe_bits must be >= 0, got {n_probe_bits}")
+    return [sum(1 << i for i in flips)
+            for w in range(min(int(n_probe_bits), n_planes) + 1)
+            for flips in itertools.combinations(range(n_planes), w)]
+
+
+def lsh_probe_rule(planes: np.ndarray, n_probe_bits: int):
+    """The LSH probe rule: query vector -> the sorted buckets within
+    ``n_probe_bits`` flips of the query's sign-bit bucket (bit i set when
+    the query lies on the non-negative side of plane i — the driver-side
+    twin of hyperplane_bucket_col)."""
+    masks = flip_masks(len(planes), n_probe_bits)
+
+    def rule(q: np.ndarray) -> list[int]:
+        qbucket = sum((1 << i) for i, p in enumerate(planes)
+                      if float(p @ q) >= 0)
+        return sorted({qbucket ^ m for m in masks})
+
+    return rule
+
+
+def ivf_probe_rule(centroids: np.ndarray, n_probe: int):
+    """The IVF probe rule: query vector -> the ``n_probe`` cells whose
+    centroids score highest against it (max dot, np.argsort order). An
+    ``n_probe`` below 1 raises ValueError."""
+    if int(n_probe) < 1:
+        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
+    C = np.asarray(centroids, dtype=np.float64)
+    return lambda q: [int(i) for i in np.argsort(-(C @ q))[:int(n_probe)]]
+
+
+def infer_dim(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
+    """``dim`` when given (plan construction stays lazy), else the length
+    of one row's ``vec_col`` — one probe job; an empty input raises
+    ValueError."""
+    if dim is not None:
+        return int(dim)
+    probe = df.select(F.size(vec_col)).first()
+    if probe is None or probe[0] is None:
+        raise ValueError(f"cannot infer the {vec_col} dim from an empty "
+                         f"input; pass dim=")
+    return int(probe[0])
+
+
+def _exact_topk(cand: DataFrame, q, k: int, id_col: str,
+                vec_col: str) -> DataFrame:
+    """(id, score) top-k of candidates by exact dot against the query
+    literal, ordered (score DESC, id ASC)."""
+    return (cand.select(F.col(id_col),
+                        V.dot(vec_col, V.vec_lit_sql(q)).alias("score"))
+            .orderBy(F.desc("score"), F.asc(id_col))
+            .limit(k))
 
 
 def brute_force_topk_multi(
@@ -237,20 +322,11 @@ def lsh_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: only rows in the query's hyperplane bucket are
-    scored. At scale the table is written partitioned by bucket so the scan
-    prunes to 1/2^n_planes of the data before any scoring happens."""
-    dim = len(np.asarray(query_vec))
-    planes = hyperplanes(n_planes, dim, seed)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
-    bucketed = df.withColumn("bucket", hyperplane_bucket_col(vec_col, planes))
-    cand = bucketed.where(F.col("bucket") == qbucket)
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    scored — ``lsh_topk_multiprobe`` with ``n_probe_bits=0``. At scale the
+    table is written partitioned by bucket so the scan prunes to
+    1/2^n_planes of the data before any scoring happens."""
+    return lsh_topk_multiprobe(df, query_vec, k, n_planes, n_probe_bits=0,
+                               seed=seed, id_col=id_col, vec_col=vec_col)
 
 
 def hyperplane_lsh_near_dup(
@@ -264,34 +340,14 @@ def hyperplane_lsh_near_dup(
 ) -> DataFrame:
     """Embedding near-dup at scale: bucket by hyperplane signs, exact-verify
     cosine only within buckets (near-identical vectors share all sign bits
-    with high probability; multiple seeded plane-sets would raise recall).
+    with high probability) — ``hyperplane_lsh_near_dup_multiset`` with one
+    plane set; more sets raise recall.
 
     Pass ``dim`` explicitly to keep plan construction lazy; when absent one
     probe row is read to infer it (errors clearly on an empty input)."""
-    if dim is None:
-        probe = df.select(F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError(
-                "cannot infer embedding dim from an empty DataFrame; pass dim="
-            )
-        dim = int(probe[0])
-    planes = hyperplanes(n_planes, dim, seed)
-    bucketed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        hyperplane_bucket_col(vec_col, planes).alias("bucket"),
-    )
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    pairs = a.join(
-        b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id"))
-    )
-    return (
-        pairs.withColumn("cos", V.dot("a.v", "b.v"))
-        .where(F.col("cos") >= threshold)
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), F.col("cos").alias("cosine")
-        )
-    )
+    return hyperplane_lsh_near_dup_multiset(
+        df, threshold, n_planes, n_sets=1, seed=seed, id_col=id_col,
+        vec_col=vec_col, dim=dim)
 
 
 def lsh_topk_multiprobe(
@@ -305,28 +361,16 @@ def lsh_topk_multiprobe(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-probe LSH top-k: scan the query's bucket plus every bucket within
-    Hamming distance ``n_probe_bits`` of it. The standard recall lever — the
-    scan fraction grows from 1/2^p to (1 + C(p,1) + ...)/2^p while staying
-    partition-prunable when the table is written bucketed."""
-    dim = len(np.asarray(query_vec))
-    planes = hyperplanes(n_planes, dim, seed)
+    Hamming distance ``n_probe_bits`` of it (``lsh_probe_rule``). The
+    standard recall lever — the scan fraction grows from 1/2^p to
+    (1 + C(p,1) + ...)/2^p while staying partition-prunable when the table
+    is written bucketed."""
     qv = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
-    probes = {qbucket}
-    if n_probe_bits >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
-    if n_probe_bits >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qbucket ^ (1 << i) ^ (1 << j))
+    planes = hyperplanes(n_planes, len(qv), seed)
+    probes = lsh_probe_rule(planes, n_probe_bits)(qv)
     bucketed = df.withColumn("bucket", hyperplane_bucket_col(vec_col, planes))
-    cand = bucketed.where(F.col("bucket").isin(sorted(probes)))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(bucketed.where(F.col("bucket").isin(probes)), qv, k,
+                       id_col, vec_col)
 
 
 def lsh_similarity_join(
@@ -344,12 +388,7 @@ def lsh_similarity_join(
     verify cosine ≥ threshold only within buckets. The A×B generalization of
     hyperplane_lsh_near_dup — at 100 TB both sides write bucketed and the
     join is partition-pruned per bucket."""
-    if dim is None:
-        probe = df_a.select(F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError("cannot infer embedding dim from an empty left side; pass dim=")
-        dim = int(probe[0])
-    planes = hyperplanes(n_planes, dim, seed)
+    planes = hyperplanes(n_planes, infer_dim(df_a, vec_col, dim), seed)
     a = df_a.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
@@ -385,11 +424,7 @@ def hyperplane_lsh_near_dup_multiset(
     independent sets the miss probability decays exponentially (for cosine
     θ, P(miss) = (1-(1-θ/π)^p)^s). Cost is s bucketing passes, still zero
     all-pairs anywhere."""
-    if dim is None:
-        probe = df.select(F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError("cannot infer embedding dim from an empty DataFrame; pass dim=")
-        dim = int(probe[0])
+    dim = infer_dim(df, vec_col, dim)
     cands = None
     for s in range(n_sets):
         planes = hyperplanes(n_planes, dim, seed + s)
@@ -537,17 +572,12 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF probe: score only rows assigned to the n_probe centroids nearest
-    the query."""
+    the query (``ivf_probe_rule``)."""
     qv = np.asarray(query_vec, dtype=np.float64)
-    order = np.argsort(-(centroids @ qv))[:n_probe]
+    cells = ivf_probe_rule(centroids, n_probe)(qv)
     assigned = ivf_assign(df, centroids, id_col, vec_col)
-    cand = assigned.where(F.col("ivf_cell").isin([int(i) for i in order]))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(assigned.where(F.col("ivf_cell").isin(cells)), qv, k,
+                       id_col, vec_col)
 
 
 def pca_coarse_topk(
@@ -584,19 +614,10 @@ def pca_coarse_topk(
         q = q - np.asarray(mean, dtype=np.float64)
     q_red = np.asarray(components, dtype=np.float64) @ q
 
-    short = (
-        index_df.select(id_col, pca_col)
-        .withColumn("score_red", V.dot(pca_col, V.vec_lit_sql(q_red)))
-        .orderBy(F.desc("score_red"), F.asc(id_col))
-        .limit(shortlist)
-        .select(id_col)
-    )
-    wide = full_df if full_df is not None else index_df
-    cands = wide.join(F.broadcast(short), id_col)
-    scored = cands.select(
-        F.col(id_col), V.dot(vec_col, V.vec_lit_sql(query_vec)).alias("score")
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    scored = index_df.select(id_col, pca_col).withColumn(
+        "score_red", V.dot(pca_col, V.vec_lit_sql(q_red)))
+    return _rerank(scored, "score_red", shortlist, index_df, full_df,
+                   query_vec, k, id_col, vec_col)
 
 
 def binary_hamming_topk(
@@ -620,10 +641,6 @@ def binary_hamming_topk(
     no shuffle beyond the two k·P-row merges; ties broken by id so the
     shortlist boundary is deterministic cross-engine.
     """
-    import numpy as np
-
-    from ..functions import vector as V
-
     qv = np.asarray(query_vec, dtype=np.float64)
     d = dim or int(qv.shape[0])
     qwords = []
@@ -641,12 +658,7 @@ def binary_hamming_topk(
         .orderBy(F.asc("hamming"), F.asc(id_col))
         .limit(shortlist)
     )
-    return (
-        short.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(short, qv, k, id_col, vec_col)
 
 
 def ivf_outliers(
@@ -742,23 +754,14 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    df: DataFrame, codebooks: np.ndarray,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, pq_codes array<int>): the index-time artifact. One Arrow-batched
-    pass; per batch the encode is m_sub vectorized argmin's over the
-    (k_cent, dsub) codebook — no per-row Python. Store this table at rest
-    (optionally alongside the int8/binary columns) and scan IT instead of
-    the float column."""
-    books = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m_sub, kc, dsub = books.shape
+def _pq_argmin(books: np.ndarray):
+    """The PQ encode rule, as an executor-side closure: (n, dim) float64
+    rows -> (n, m_sub) int32 codes, per subspace the nearest codebook
+    centroid by one GEMM. Built driver-side so Spark pickles it by value
+    (executors don't have the repo on sys.path)."""
+    m_sub, _, dsub = books.shape
 
-    @F.pandas_udf("array<int>")
-    def enc(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        X = np.vstack(vs.to_numpy()).astype(np.float64)
+    def encode(X: np.ndarray) -> np.ndarray:
         codes = np.empty((X.shape[0], m_sub), dtype=np.int32)
         for m in range(m_sub):
             S = X[:, m * dsub:(m + 1) * dsub]
@@ -766,7 +769,67 @@ def pq_encode(
             # per row, so argmin over (-2 s.c + ||c||^2) suffices (GEMM form)
             d2 = -2.0 * (S @ books[m].T) + (books[m] ** 2).sum(axis=1)[None, :]
             codes[:, m] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
+        return codes
+
+    return encode
+
+
+def _adc(books: np.ndarray, q: np.ndarray):
+    """ADC for one query, as an executor-side closure: the (m_sub x
+    k_cent) lookup table of q's sub-dot-products against each subspace's
+    codebook, and a pandas Series of code arrays -> their approximate
+    dots (m_sub table gathers + adds per row, vectorized over the batch).
+    Built driver-side so Spark pickles it by value."""
+    m_sub, _, dsub = books.shape
+    lut = np.vstack([
+        books[m] @ q[m * dsub:(m + 1) * dsub] for m in range(m_sub)
+    ])  # (m_sub, k_cent)
+
+    def score(codes: pd.Series) -> np.ndarray:
+        if len(codes) == 0:
+            return np.zeros(0)
+        C = np.vstack(codes.to_numpy()).astype(np.int64)  # (n, m_sub)
+        return lut[np.arange(m_sub)[None, :], C].sum(axis=1)
+
+    return score
+
+
+def _rerank(scored: DataFrame, score_col: str, shortlist: int,
+            index_df: DataFrame, full_df: DataFrame | None, q, k: int,
+            id_col: str, vec_col: str) -> DataFrame:
+    """The ladder's exact tail: the ``shortlist`` best ids by the
+    approximate ``score_col`` (score DESC, id ASC) re-enter the
+    full-precision table (``full_df``, else ``index_df``) as a broadcast
+    semi-join point read, and their exact dots give the final top-k.
+    The full-precision table must carry ``vec_col``."""
+    wide = full_df if full_df is not None else index_df
+    if vec_col not in wide.columns:
+        raise ValueError(
+            f"exact re-rank needs full-precision vectors — pass full_df, "
+            f"or include {vec_col!r} in the scanned frame (an encode "
+            f"output alone holds only codes)")
+    short = (scored.orderBy(F.desc(score_col), F.asc(id_col))
+             .limit(shortlist).select(id_col))
+    return _exact_topk(wide.join(F.broadcast(short), id_col), q, k, id_col,
+                       vec_col)
+
+
+def pq_encode(
+    df: DataFrame, codebooks: np.ndarray,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, pq_codes array<int>): the index-time artifact. One Arrow-batched
+    pass; per batch the encode is m_sub vectorized argmin's over the
+    (k_cent, dsub) codebook (``_pq_argmin``) — no per-row Python. Store
+    this table at rest (optionally alongside the int8/binary columns) and
+    scan IT instead of the float column."""
+    encode = _pq_argmin(np.ascontiguousarray(codebooks, dtype=np.float64))
+
+    @F.pandas_udf("array<int>")
+    def enc(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype=object)
+        return pd.Series(list(encode(np.vstack(vs.to_numpy()).astype(np.float64))))
 
     return df.select(F.col(id_col), enc(F.col(vec_col)).alias("pq_codes"))
 
@@ -795,42 +858,17 @@ def pq_adc_topk(
     vectors table, joined on ``id_col``), or ``codes_df`` must itself
     carry ``vec_col`` alongside the codes (pq_encode output alone holds
     only (id, codes) — join the embeddings back first)."""
-    if full_df is None and vec_col not in codes_df.columns:
-        raise ValueError(
-            f"pq_adc_topk: exact re-rank needs full-precision vectors — "
-            f"pass full_df, or include {vec_col!r} in codes_df "
-            f"(pq_encode output alone holds only codes)"
-        )
-    books = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m_sub, kc, dsub = books.shape
     q = np.asarray(query_vec, dtype=np.float64)
-    lut = np.vstack([
-        books[m] @ q[m * dsub:(m + 1) * dsub] for m in range(m_sub)
-    ])  # (m_sub, k_cent)
+    score = _adc(np.ascontiguousarray(codebooks, dtype=np.float64), q)
 
     @F.pandas_udf("double")
     def adc(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=np.float64)
-        C = np.vstack(codes.to_numpy()).astype(np.int64)  # (n, m_sub)
-        return pd.Series(lut[np.arange(m_sub)[None, :], C].sum(axis=1))
+        return pd.Series(score(codes))
 
-    short = (
-        codes_df.select(id_col, codes_col)
-        .withColumn("score_adc", adc(F.col(codes_col)))
-        .orderBy(F.desc("score_adc"), F.asc(id_col))
-        .limit(shortlist)
-        .select(id_col)
-    )
-    wide = full_df if full_df is not None else codes_df
-    cands = wide.join(F.broadcast(short), id_col)
-    return (
-        cands.select(
-            F.col(id_col), V.dot(vec_col, V.vec_lit_sql(q)).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    scored = codes_df.select(id_col, codes_col).withColumn(
+        "score_adc", adc(F.col(codes_col)))
+    return _rerank(scored, "score_adc", shortlist, codes_df, full_df, q, k,
+                   id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -869,13 +907,12 @@ def ivf_pq_encode(
     """(id, ivf_cell, pq_codes[, *keep_cols]): the at-rest IVF-PQ index
     — 1 small int + m_sub codes per vector. One Arrow pass: cell
     assignment (GEMM argmax), residual subtraction, per-subspace
-    GEMM-form argmin. Write partitioned by ivf_cell so probes prune at
-    planning time. ``keep_cols`` carries extra columns (e.g. the
-    full-precision vector for the exact re-rank tier) through the same
-    single pass — no join-back needed."""
+    GEMM-form argmin (``_pq_argmin``). Write partitioned by ivf_cell so
+    probes prune at planning time. ``keep_cols`` carries extra columns
+    (e.g. the full-precision vector for the exact re-rank tier) through
+    the same single pass — no join-back needed."""
     C = np.ascontiguousarray(centroids, dtype=np.float64)
-    books = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m_sub, kc, dsub = books.shape
+    encode = _pq_argmin(np.ascontiguousarray(codebooks, dtype=np.float64))
 
     @F.pandas_udf("struct<ivf_cell: int, pq_codes: array<int>>")
     def enc(vs: pd.Series) -> pd.DataFrame:
@@ -883,14 +920,9 @@ def ivf_pq_encode(
             return pd.DataFrame({"ivf_cell": [], "pq_codes": []})
         X = np.vstack(vs.to_numpy()).astype(np.float64)
         cells = (X @ C.T).argmax(axis=1)
-        R = X - C[cells]
-        codes = np.empty((X.shape[0], m_sub), dtype=np.int32)
-        for m in range(m_sub):
-            S = R[:, m * dsub:(m + 1) * dsub]
-            d2 = -2.0 * (S @ books[m].T) + (books[m] ** 2).sum(axis=1)[None, :]
-            codes[:, m] = d2.argmin(axis=1)
         return pd.DataFrame(
-            {"ivf_cell": cells.astype(np.int32), "pq_codes": list(codes)}
+            {"ivf_cell": cells.astype(np.int32),
+             "pq_codes": list(encode(X - C[cells]))}
         )
 
     extra = [c for c in (keep_cols or []) if c != id_col]
@@ -913,56 +945,42 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVFADC top-k: probe the n_probe max-dot cells (a cell-id filter —
-    partition pruning on an ivf_cell-partitioned table), approximate each
-    candidate as q·centroid[cell] + ADC(residual codes) with ONE shared
-    (m_sub x k_cent) LUT, shortlist, exact re-rank. Non-probed cells are
-    never read; scanned bytes per candidate are the code row, not the
-    vector.
+    """IVFADC top-k: probe the n_probe max-dot cells (``ivf_probe_rule``;
+    a cell-id filter — partition pruning on an ivf_cell-partitioned
+    table), approximate each candidate as q·centroid[cell] + ADC(residual
+    codes) with ONE shared (m_sub x k_cent) LUT, shortlist, exact
+    re-rank (``_ivf_adc_topk``). Non-probed cells are never read; scanned
+    bytes per candidate are the code row, not the vector.
 
     As with pq_adc_topk, the exact re-rank needs full-precision vectors:
     pass ``full_df``, or ``index_df`` must carry ``vec_col`` alongside the
     (ivf_cell, pq_codes) columns."""
-    if full_df is None and vec_col not in index_df.columns:
-        raise ValueError(
-            f"ivf_pq_topk: exact re-rank needs full-precision vectors — "
-            f"pass full_df, or include {vec_col!r} in index_df "
-            f"(ivf_pq_encode output alone holds only cell + codes)"
-        )
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
-    books = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m_sub, kc, dsub = books.shape
     q = np.asarray(query_vec, dtype=np.float64)
-    cell_dots = C @ q
-    probes = np.argsort(-cell_dots)[:n_probe]
-    lut = np.vstack([
-        books[m] @ q[m * dsub:(m + 1) * dsub] for m in range(m_sub)
-    ])
+    cand = index_df.where(
+        F.col("ivf_cell").isin(ivf_probe_rule(centroids, n_probe)(q)))
+    return _ivf_adc_topk(cand, index_df, full_df, q, centroids, codebooks,
+                         k, shortlist, id_col, vec_col)
+
+
+def _ivf_adc_topk(cand: DataFrame, index_df: DataFrame,
+                  full_df: DataFrame | None, q: np.ndarray, centroids,
+                  codebooks, k: int, shortlist: int, id_col: str,
+                  vec_col: str) -> DataFrame:
+    """IVFADC over already-probed candidates (ivf_cell, pq_codes): score
+    q·centroid[cell] + ADC(codes), then ``_rerank``. ivf_pq_topk probes
+    first; the maintained IVF index hands over its probed state scan."""
+    cell_dots = np.ascontiguousarray(centroids, dtype=np.float64) @ q
+    score = _adc(np.ascontiguousarray(codebooks, dtype=np.float64), q)
 
     @F.pandas_udf("double")
     def adc(cell: pd.Series, codes: pd.Series) -> pd.Series:
-        if len(cell) == 0:
-            return pd.Series([], dtype=np.float64)
-        Cc = np.vstack(codes.to_numpy()).astype(np.int64)
-        base = cell_dots[cell.to_numpy(dtype=np.int64)]
-        return pd.Series(base + lut[np.arange(m_sub)[None, :], Cc].sum(axis=1))
+        return pd.Series(cell_dots[cell.to_numpy(dtype=np.int64)]
+                         + score(codes))
 
-    short = (
-        index_df.where(F.col("ivf_cell").isin([int(i) for i in probes]))
-        .withColumn("score_adc", adc(F.col("ivf_cell"), F.col("pq_codes")))
-        .orderBy(F.desc("score_adc"), F.asc(id_col))
-        .limit(shortlist)
-        .select(id_col)
-    )
-    wide = full_df if full_df is not None else index_df
-    cands = wide.join(F.broadcast(short), id_col)
-    return (
-        cands.select(
-            F.col(id_col), V.dot(vec_col, V.vec_lit_sql(q)).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    scored = cand.withColumn("score_adc", adc(F.col("ivf_cell"),
+                                              F.col("pq_codes")))
+    return _rerank(scored, "score_adc", shortlist, index_df, full_df, q, k,
+                   id_col, vec_col)
 
 
 def lsh_knn_join(
@@ -1023,32 +1041,43 @@ def lsh_knn_join(
     triggers ZERO Spark jobs. When absent, the guard falls back to
     ``count()`` (and a ``first()`` for dim), which RE-EXECUTES both
     upstream plans — persist the inputs first if they are expensive."""
-    if dim is None:
-        probe = left.select(F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError("cannot infer dim from an empty left side; pass dim=")
-        dim = int(probe[0])
-    planes = hyperplanes(n_planes, dim, seed)
-    masks = [0]
-    if n_probe_bits >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if n_probe_bits >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_planes) for j in range(i + 1, n_planes)
-        ]
+    planes = hyperplanes(n_planes, infer_dim(left, vec_col, dim), seed)
+    return _knn_join(
+        left, lambda: right.select(
+            F.col(id_col).alias("id_b"),
+            F.col(vec_col).alias("vb"),
+            hyperplane_bucket_col(vec_col, planes).alias("bucket"),
+        ), k, planes, n_probe_bits, id_col, vec_col, max_expected_candidates,
+        n_left, n_right, skew_prepass)
+
+
+def _knn_join(left: DataFrame, right_of, k: int, planes: np.ndarray,
+              n_probe_bits: int, id_col: str, vec_col: str,
+              max_expected_candidates: int | None, n_left: int | None,
+              n_right: int | None, skew_prepass: bool = False) -> DataFrame:
+    """The one LSH k-NN join body: lsh_knn_join buckets its right table
+    per call, annindex.knn_join_via_index reads the index's probed state.
+    The candidate-volume guard (``n_left``/``n_right`` when known, else a
+    ``count()``), the left side's once-computed bucket XOR every probe
+    mask, one equi-join on the bucketed right side ``right_of()`` builds
+    (columns bucket, id_b, vb; built once the guard has passed, after the
+    left side), exact dots, and the per-left-row window (cosine DESC,
+    id_b ASC). Returns (id_a, id_b, cosine, rnk)."""
+    n_planes = len(planes)
+    masks = flip_masks(n_planes, n_probe_bits)
     if max_expected_candidates is not None:
         from .dedup import ScaleGuardError
 
         nl = int(n_left) if n_left is not None else left.count()
-        nr = int(n_right) if n_right is not None else right.count()
+        nr = int(n_right) if n_right is not None else right_of().count()
         expected = nl * nr * len(masks) / (1 << n_planes)
         if expected > max_expected_candidates:
             raise ScaleGuardError(
-                f"lsh_knn_join expects ~{expected:.2e} candidate pairs "
+                f"the k-NN join expects ~{expected:.2e} candidate pairs "
                 f"(|L|*|R|*{len(masks)}/2^{n_planes}) > "
                 f"{max_expected_candidates:.0e}; raise n_planes so "
-                f"2^n_planes tracks |right|, lower n_probe_bits, or pass "
+                f"2^n_planes tracks |right| (an index is rebuilt with "
+                f"more planes), lower n_probe_bits, or pass "
                 f"max_expected_candidates=None to override deliberately."
             )
     # compute the bucket ONCE per left row, then XOR the probe masks against
@@ -1067,13 +1096,8 @@ def lsh_knn_join(
             F.array(*[F.col("b0").bitwiseXOR(F.lit(m)) for m in masks])
         ).alias("bucket"),
     )
-    r = right.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        hyperplane_bucket_col(vec_col, planes).alias("bucket"),
-    )
     scored = (
-        l.join(r, "bucket")
+        l.join(right_of(), "bucket")
         .withColumn("cosine", V.dot("va", "vb"))
         .select("id_a", "id_b", "cosine")
     )

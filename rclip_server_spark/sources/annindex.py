@@ -21,8 +21,8 @@ in the spec — the same ``ann.hyperplanes`` every ad-hoc tier uses — so
 by an oracle row against the DuckDB bucket+dot twin).
 
 Scale: the index build is one map pass (bucket column is a row-local
-sign fold); queries filter to ≤(1 + C(p,1) + C(p,2)) of 2^n_planes
-buckets and score only those rows. At rest the state can additionally
+sign fold); queries filter to the 1 + C(p,1) + ... + C(p,n) buckets
+within n probe bits of the query's and score only those rows. At rest the state can additionally
 be laid out by versioned.convert_to_bucketed on the bucket for
 physical pruning. Joins the matview graph through the standard marker
 registry (``ai_source``), so REFRESH / CASCADE / DESCRIBE / cursor-
@@ -30,8 +30,14 @@ safe VACUUM / refresh streams all work with no extra wiring. The
 lifecycle it shares with the other index kinds (spec and state reads,
 refresh, bucketed layout) is one descriptor in indexkind.py, and both
 query forms run indexkind's shared path (query_vector, and
-query_vector_batch for M queries); this module holds the bucketing
-and the probe rule, ``_probe_rule``, written once for both.
+query_vector_batch for M queries). The vector-search rules themselves
+live once in operators/ann.py and are shared with the ad-hoc tiers:
+the probe masks and the query's sign-bit bucket (``ann.flip_masks``,
+``ann.lsh_probe_rule``, bound to the spec's planes by ``_probe_rule``
+for both query forms), the dim probe (``ann.infer_dim``) and the k-NN
+join body (``ann._knn_join``, which knn_join_via_index feeds with the
+index's probed state). This module holds the bucketed rows and the
+spec binding.
 """
 
 from __future__ import annotations
@@ -40,8 +46,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import vector as VEC
-from ..operators.ann import hyperplane_bucket_col, hyperplanes
+from ..operators.ann import (_knn_join, hyperplane_bucket_col, hyperplanes,
+                             infer_dim, lsh_probe_rule)
 from . import indexkind as IK
 from . import matview as M
 from . import versioned as V
@@ -62,15 +68,9 @@ def create_ann_index(
     vector search never joins back to the source — the vector-DB
     "metadata filter" feature at lakehouse scale."""
     def prepare(df):
-        d = dim
-        if d is None:
-            probe = df.select(F.size(vec_col)).first()
-            if probe is None or probe[0] is None:
-                raise ValueError("cannot infer embedding dim from an "
-                                 "empty source; pass dim=")
-            d = int(probe[0])
-        return {"ai_dim": int(d), "ai_include_cols": IK.check_include_cols(
-            df, key, vec_col, include_cols, reserved=("bucket",))}
+        return {"ai_dim": infer_dim(df, vec_col, dim),
+                "ai_include_cols": IK.check_include_cols(
+                    df, key, vec_col, include_cols, reserved=("bucket",))}
 
     return M._create(spark, "ann_index", view_path, {
         "ai_source": source_path, "ai_key": key,
@@ -141,34 +141,10 @@ def _planes(spec: dict) -> np.ndarray:
                        int(spec["ai_seed"]))
 
 
-def _flip_masks(n_planes: int, n_probe_bits: int) -> list[int]:
-    """Every XOR mask of at most ``n_probe_bits`` (≤ 2) bit flips, the
-    identity first — the multiprobe masks of ``_probe_rule`` and of
-    knn_join_via_index's left-side explode."""
-    masks = [0]
-    if n_probe_bits >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if n_probe_bits >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(n_planes)
-                  for j in range(i + 1, n_planes)]
-    return masks
-
-
 def _probe_rule(spec: dict, n_probe_bits: int):
-    """The probe rule query_ann_index and its batch share: query vector
-    -> the sorted query bucket (bit i set when the query lies on the
-    non-negative side of plane i) plus every bucket within
-    ``n_probe_bits`` bit flips."""
-    planes = _planes(spec)
-    masks = _flip_masks(int(spec["ai_n_planes"]), n_probe_bits)
-
-    def rule(q: np.ndarray) -> list[int]:
-        qbucket = sum((1 << i) for i, p in enumerate(planes)
-                      if float(p @ q) >= 0)
-        return sorted({qbucket ^ m for m in masks})
-
-    return rule
+    """The probe rule query_ann_index and its batch share: the one LSH
+    rule (ann.lsh_probe_rule) under the spec's frozen planes."""
+    return lsh_probe_rule(_planes(spec), n_probe_bits)
 
 
 def query_ann_index_batch(
@@ -219,50 +195,22 @@ def knn_join_via_index(
       the same parameters (same probe masks, same exact dot scoring,
       same (cosine DESC, id_b ASC) total order).
 
-    The left side buckets ONCE (n_planes dots) and explodes its probe
-    masks; one equi-join on the bucket; per-left-row top-k window.
+    The join body is ann.lsh_knn_join's own (ann._knn_join): the left
+    side buckets ONCE (n_planes dots) and explodes its probe masks; one
+    equi-join on the bucket; per-left-row top-k window; this function
+    supplies only the right side and its manifest row count.
     ``where`` is a payload predicate over the index's include_cols
     (+ key) applied to the CORPUS side before the join — parquet-pushed
     into the state scan, so a filtered k-NN join ("nearest in-license
     corpus rows for every candidate doc") shrinks the candidate volume
     instead of post-filtering ranked rows. Returns (id_a, id_b, cosine,
     rnk)."""
-    from ..operators.dedup import ScaleGuardError
-
     v, spec = IK.spec_at("ann_index", view_path, version)
-    key, ivec = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, planes = int(spec["ai_n_planes"]), _planes(spec)
-    masks = _flip_masks(n_planes, n_probe_bits)
-    if max_expected_candidates is not None:
-        nl = int(n_left) if n_left is not None else left.count()
-        nr = V.table_row_count(view_path, v)  # manifest, zero jobs
-        expected = nl * nr * len(masks) / (1 << n_planes)
-        if expected > max_expected_candidates:
-            raise ScaleGuardError(
-                f"knn_join_via_index expects ~{expected:.2e} candidate "
-                f"pairs (|L|*|R|*{len(masks)}/2^{n_planes}) > "
-                f"{max_expected_candidates:.0e}; rebuild the index "
-                f"with more planes (2^n_planes should track |corpus|), "
-                f"lower n_probe_bits, or pass "
-                f"max_expected_candidates=None deliberately.")
-    lf = left.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        hyperplane_bucket_col(vec_col, planes).alias("b0"),
-    ).select(
-        "id_a", "va",
-        F.explode(F.array(*[F.col("b0").bitwiseXOR(F.lit(m))
-                            for m in masks])).alias("bucket"))
-    rt = IK.apply_where(IK.probed(spark, "ann_index", view_path, v),
-                        where).select(
-        "bucket", F.col(key).alias("id_b"), F.col(ivec).alias("vb"))
-    scored = (lf.join(rt, "bucket")
-              .withColumn("cosine", VEC.dot("va", "vb"))
-              .select("id_a", "id_b", "cosine"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"),
-                                           F.asc("id_b"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("id_a", "id_b", "cosine",
-                    F.col("rnk").cast("long").alias("rnk")))
+    return _knn_join(
+        left, lambda: IK.apply_where(
+            IK.probed(spark, "ann_index", view_path, v), where).select(
+            "bucket", F.col(spec["ai_key"]).alias("id_b"),
+            F.col(spec["ai_vec_col"]).alias("vb")),
+        k, _planes(spec), n_probe_bits, id_col, vec_col,
+        max_expected_candidates, n_left,
+        V.table_row_count(view_path, v))  # manifest, zero jobs

@@ -9,11 +9,15 @@ refresh, heal and OCC skeleton around them), the payload filter, the
 batch guards, and the vector kinds' one query path: ``query_vector``
 for one query and ``query_vector_batch`` for M, both driven by the
 kind's probe rule (``annindex._probe_rule``, ``ivfindex._probe_rule``:
-spec -> query vector -> probe values). The kind modules keep only
-their own logic (bucketing and the probe rule, cell assignment and
-drift, tokenization and BM25); matview's REFRESH / DESCRIBE INDEX
-dispatch and SQL's OPTIMIZE ... BUCKET BY / ``OPTIONS (buckets=N)``
-are one lookup in the table.
+spec -> query vector -> probe values). Those bind the spec's frozen
+planes or centroids to the one LSH and IVF rules of operators/ann.py
+(``ann.lsh_probe_rule``, ``ann.ivf_probe_rule``), the same rules the
+ad-hoc tiers probe with; IVF's ADC tier hands ``candidates`` to
+``ann._ivf_adc_topk`` and the ANN k-NN join feeds ``probed`` to
+``ann._knn_join``. The kind modules keep only their own logic
+(bucketed rows, cell assignment and drift, tokenization and BM25);
+matview's REFRESH / DESCRIBE INDEX dispatch and SQL's OPTIMIZE ...
+BUCKET BY / ``OPTIONS (buckets=N)`` are one lookup in the table.
 
 On-disk contract: a kind's spec lives in the view manifest's ``app``
 namespace under ``<prefix>_*`` fields, and ``<prefix>_source`` marks

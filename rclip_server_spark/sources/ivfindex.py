@@ -39,8 +39,13 @@ buckets' segments are ever named in the plan. The lifecycle it shares
 with the other index kinds is one descriptor in indexkind.py, and both
 query forms run indexkind's shared path (query_vector, and
 query_vector_batch for M queries); this module holds cell assignment,
-the probe rule (``_probe_rule``, written once for both) and drift
-governance.
+the spec binding of the probe rule (``_probe_rule``, for both query
+forms) and drift governance. The rules themselves live once in
+operators/ann.py, shared with the ad-hoc tiers: the nearest-cells
+probe (``ann.ivf_probe_rule``), the PQ encode (``ann._pq_argmin``
+inside ``ann.ivf_pq_encode``) and the IVFADC scoring and exact
+re-rank (``ann._ivf_adc_topk``, which ``method='adc'`` feeds with the
+probed candidates).
 """
 
 from __future__ import annotations
@@ -51,7 +56,8 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as VEC
 from ..functions.localrel import values_df
-from ..operators.ann import ivf_assign, ivf_train_kmeans
+from ..operators.ann import (_ivf_adc_topk, ivf_assign, ivf_probe_rule,
+                             ivf_train_kmeans)
 from . import indexkind as IK
 from . import matview as M
 from . import versioned as V
@@ -474,13 +480,14 @@ def query_ivf_index(
 
     * ``method='exact'`` — exact dot product over every probed row
       (the re-rank tier the oracle row pins), through the shared
-      single-query path indexkind.query_vector: same probe order
-      (np.argsort(-dots), ties by cell index), scoring, ordering, and
-      tie-break as ann.ivf_topk over the current source.
+      single-query path indexkind.query_vector: the same probe rule
+      (ann.ivf_probe_rule), scoring, ordering, and tie-break as
+      ann.ivf_topk over the current source.
     * ``method='adc'`` (IVFADC index only, built with ``pq_m``) —
-      the same probed candidates (indexkind.candidates) score from
-      their stored residual PQ codes via one (m_sub × k_cent) lookup
-      table (q·centroid + ADC, the Jegou/Douze/Schmid pipeline), a
+      the same probed candidates (indexkind.candidates) go to the
+      shared IVFADC tail (ann._ivf_adc_topk): they score from their
+      stored residual PQ codes via one (m_sub × k_cent) lookup table
+      (q·centroid + ADC, the Jegou/Douze/Schmid pipeline), a
       ``shortlist`` survives, and the final k re-rank EXACTLY against
       the index's own full-precision column — row-identical to
       ann.ivf_pq_topk over this state with the frozen
@@ -492,9 +499,9 @@ def query_ivf_index(
     evaluated inside the probed-cell scan (parquet-pushed): top-k
     among probed candidates matching the filter.
 
+    An ``n_probe`` below 1 raises ValueError (ann.ivf_probe_rule).
+
     Returns (<key>, score); final scores are exact dots either way."""
-    if int(n_probe) < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
     if method not in ("exact", "adc"):
         raise ValueError(f"unknown method {method!r}; "
                          f"use 'exact' or 'adc'")
@@ -505,8 +512,6 @@ def query_ivf_index(
     if method == "exact":
         return IK.query_vector(spark, "ivf_index", view_path, query_vec,
                                k, version, where, rule)
-    from ..operators.ann import ivf_pq_topk
-
     spec, qv, cand = IK.candidates(spark, "ivf_index", view_path,
                                    query_vec, version, where, rule)
     books = _codebooks(spec)
@@ -514,22 +519,17 @@ def query_ivf_index(
         raise ValueError(
             f"{view_path} was built without PQ codebooks — "
             f"recreate with pq_m=<subspaces> for method='adc'")
-    # the probed-cell filter is already applied (and file-pruned);
-    # ivf_pq_topk re-applies it idempotently from the same nearest-
-    # centroid order, then ADC-shortlists and exact-re-ranks in-state.
-    # The payload filter shrinks its candidate set BEFORE the LUT pass.
-    return ivf_pq_topk(cand, qv, _centroids(spec), books, k=k,
-                       n_probe=int(n_probe), shortlist=shortlist,
-                       id_col=spec["ii_key"], vec_col=spec["ii_vec_col"])
+    # the probed (file-pruned), payload-filtered candidates are both the
+    # ADC scan and the exact re-rank's full-precision side: the index
+    # carries its own vector column
+    return _ivf_adc_topk(cand, cand, None, qv, _centroids(spec), books, k,
+                         shortlist, spec["ii_key"], spec["ii_vec_col"])
 
 
 def _probe_rule(spec: dict, n_probe: int):
-    """The probe rule query_ivf_index and its batch share: query vector
-    -> the ``n_probe`` cells whose stored centroids score highest
-    against it (np.argsort order, ties by cell index)."""
-    cents = _centroids(spec)
-    return lambda q: [int(i)
-                      for i in np.argsort(-(cents @ q))[:int(n_probe)]]
+    """The probe rule query_ivf_index and its batch share: the one IVF
+    rule (ann.ivf_probe_rule) over the spec's stored centroids."""
+    return ivf_probe_rule(_centroids(spec), n_probe)
 
 
 def query_ivf_index_batch(

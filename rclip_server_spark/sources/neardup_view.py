@@ -348,12 +348,9 @@ def create_embed_near_dup_pairs_view(
     alongside. ``dim`` is frozen in the spec (inferred from the source
     when omitted) so every refresh derives identical planes."""
     if dim is None:
-        probe = M._read_source(spark, source_path).select(
-            F.size(vec_col)).first()
-        if probe is None or probe[0] is None:
-            raise ValueError(f"cannot infer {vec_col} dim from an "
-                             f"empty source; pass dim=")
-        dim = int(probe[0])
+        from ..operators.ann import infer_dim
+
+        dim = infer_dim(M._read_source(spark, source_path), vec_col)
     return _create_pairs_view(
         spark, "embed_near_dup", source_path, view_path, {
             "ed_source": source_path, "ed_key": key, "ed_vec_col": vec_col,

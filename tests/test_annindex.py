@@ -40,7 +40,8 @@ def _mk(spark, vecs, cat, name="emb"):
     return cat.get(f"{name}_ann")["path"]
 
 
-def test_state_and_query_match_adhoc(spark, vecs, cat):
+@pytest.mark.parametrize("n_probe_bits", [0, 1, 2, 3])
+def test_state_and_query_match_adhoc(spark, vecs, cat, n_probe_bits):
     vp = _mk(spark, vecs, cat)
     # state = the ad-hoc bucketing of the same rows
     planes = ann.hyperplanes(4, 64, 42)
@@ -50,11 +51,16 @@ def test_state_and_query_match_adhoc(spark, vecs, cat):
     got_state = AI.read_ann_index(spark, vp).select("bucket", "vec_id")
     assert sorted(map(tuple, got_state.collect())) == \
         sorted(map(tuple, want_state.collect()))
-    # indexed query == the ad-hoc multiprobe tier, row for row
-    got = AI.query_ann_index(spark, vp, QV, k=10, n_probe_bits=1)
+    # indexed query == the ad-hoc multiprobe tier, row for row, at every
+    # probe width
+    got = AI.query_ann_index(spark, vp, QV, k=10, n_probe_bits=n_probe_bits)
     want = ann.lsh_topk_multiprobe(vecs, QV, k=10, n_planes=4,
-                                   n_probe_bits=1, seed=42)
+                                   n_probe_bits=n_probe_bits, seed=42)
     assert _ids_scores(got) == _ids_scores(want)
+    if n_probe_bits == 0:
+        # the single-bucket tier is the same query
+        assert _ids_scores(ann.lsh_topk(vecs, QV, k=10, n_planes=4,
+                                        seed=42)) == _ids_scores(want)
 
 
 def test_incremental_refresh_equals_rebuild(spark, vecs, cat,
@@ -294,6 +300,44 @@ def test_filtered_query_matches_filtered_brute_force(spark, vecs, cat):
             .orderBy(F.desc("score"), F.asc("vec_id")).limit(10))
     assert _ids_scores(got) == _ids_scores(want)
     assert len(got.collect()) > 0
+
+
+def test_probe_width_3_scans_15_buckets_and_negative_raises(spark, vecs,
+                                                             cat):
+    """A probe width above 2 is honoured, not capped: on a 4-plane index
+    n_probe_bits=3 probes every bucket within 3 flips of the query's
+    (15 of 16), and with k covering every row the query returns exactly
+    the brute-force ranking of those 15 buckets' rows. A negative width
+    raises — ValueError from the API, SqlError from ANN_SEARCH and
+    KNN_JOIN — instead of answering as width 0."""
+    import numpy as np
+
+    from rclip_server_spark.functions import vector as VEC
+
+    vp = _mk(spark, vecs, cat, "w3")
+    planes = ann.hyperplanes(4, 64, 42)
+    qb = int(sum((1 << i) for i, p in enumerate(planes)
+                 if float(p @ np.asarray(QV)) >= 0))
+    probes = [b for b in range(16) if bin(b ^ qb).count("1") <= 3]
+    assert len(probes) == 15
+    n = vecs.count()
+    got = AI.query_ann_index(spark, vp, QV, k=n, n_probe_bits=3)
+    want = (AI.read_ann_index(spark, vp)
+            .where(F.col("bucket").isin(probes))
+            .withColumn("score", VEC.dot(F.col("embedding"),
+                                         VEC.vec_lit(QV)))
+            .select("vec_id", "score")
+            .orderBy(F.desc("score"), F.asc("vec_id")))
+    assert _ids_scores(got) == _ids_scores(want)
+    with pytest.raises(ValueError):
+        AI.query_ann_index(spark, vp, QV, k=5, n_probe_bits=-1)
+    arr = ", ".join(str(x) for x in QV)
+    with pytest.raises(S.SqlError, match="n_probe_bits"):
+        S.execute(spark, f"SELECT * FROM ANN_SEARCH('w3_ann', "
+                         f"array({arr}), 5, -1)", cat)
+    with pytest.raises(S.SqlError, match="n_probe_bits"):
+        S.execute(spark, "SELECT * FROM KNN_JOIN('w3_ann', w3, 3, -1)",
+                  cat)
 
 
 def test_filtered_batch_matches_per_query_loop(spark, vecs, cat):

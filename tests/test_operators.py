@@ -239,9 +239,20 @@ def test_best_phrases_small_pool_no_crash(spark, embeddings):
     assert all(r.score is not None for r in out)
 
 
-def test_hyperplane_near_dup_empty_df_raises(spark, embeddings):
-    with pytest.raises(ValueError):
-        ann.hyperplane_lsh_near_dup(embeddings.limit(0))
+@pytest.mark.parametrize("op", [
+    lambda empty, full: ann.hyperplane_lsh_near_dup(empty),
+    lambda empty, full: ann.lsh_similarity_join(empty, full),
+    lambda empty, full: ann.hyperplane_lsh_near_dup_multiset(empty),
+    lambda empty, full: ann.lsh_knn_join(empty, full, n_left=0,
+                                         n_right=500),
+], ids=["hyperplane_lsh_near_dup", "lsh_similarity_join",
+        "hyperplane_lsh_near_dup_multiset", "lsh_knn_join"])
+def test_hyperplane_near_dup_empty_df_raises(spark, embeddings, op):
+    """Every operator that infers the embedding dim from its (left)
+    input raises the one dim-probe error on an empty input; lsh_knn_join
+    gets its sizes, so the dim probe is what raises."""
+    with pytest.raises(ValueError, match="cannot infer the embedding dim"):
+        op(embeddings.limit(0), embeddings)
 
 
 def test_partition_partial_topk_bounds_rows(spark, embeddings):
