@@ -14,6 +14,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ann import infer_dim
+
 
 def feature_minmax(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Per-dimension min/max/range over all vectors → (dim, min_x, max_x, range_x)."""
@@ -73,10 +75,7 @@ def gramian_long(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     the alternative pure-SQL i×j explode would amplify the table dim²×).
     The final groupBy sums the partials. Emitted for i <= j only (the
     Gramian is symmetric), halving the shuffle again."""
-    dim_row = df.select(F.size(vec_col)).first()
-    if dim_row is None or dim_row[0] is None:
-        raise ValueError("cannot infer dim from an empty DataFrame")
-    dim = int(dim_row[0])
+    dim = infer_dim(df, vec_col)
 
     def _partial(batches):
         # closure-self-contained: executors don't have the repo on sys.path

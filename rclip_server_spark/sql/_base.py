@@ -64,46 +64,52 @@ class _Tok:
         return self.text.lower()
 
 
-def _tokenize(text: str) -> list[_Tok]:
-    toks, pos = [], 0
-    while pos < len(text):
-        if text[pos].isspace():
-            pos += 1
-            continue
-        m = _TOKEN_RE.match(text, pos)
-        if not m or m.end() == pos:
-            raise SqlError(f"cannot tokenize at offset {pos}: "
-                           f"{text[pos:pos + 20]!r}")
-        kind = m.lastgroup
-        toks.append(_Tok(kind, m.group(kind), m.start(kind), m.end(kind)))
-        pos = m.end()
-    return toks
-
-
 class _Cursor:
-    def __init__(self, toks: list[_Tok], text: str):
-        self.toks, self.text, self.i = toks, text, 0
+    """The tokens of ``text``, lexed on demand: only what a statement
+    peeks at or takes is tokenized, so a Spark SQL body handed on with
+    ``rest()`` or ``paren()`` is never tokenized."""
+
+    def __init__(self, text: str):
+        self.text, self.pos, self.ahead = text, 0, []
 
     def peek(self, ahead: int = 0) -> _Tok | None:
-        j = self.i + ahead
-        return self.toks[j] if j < len(self.toks) else None
+        while len(self.ahead) <= ahead:
+            at = self.pos
+            while at < len(self.text) and self.text[at].isspace():
+                at += 1
+            if at == len(self.text):
+                return None
+            m = _TOKEN_RE.match(self.text, at)
+            if not m:
+                raise SqlError(f"cannot tokenize at offset {at}: "
+                               f"{self.text[at:at + 20]!r}")
+            kind = m.lastgroup
+            self.ahead.append(_Tok(kind, m.group(kind), m.start(kind),
+                                   m.end(kind)))
+            self.pos = m.end()
+        return self.ahead[ahead]
 
     def at_kw(self, *kws: str) -> bool:
         t = self.peek()
         return t is not None and t.kind == "ident" and t.lower in kws
 
     def take(self) -> _Tok:
-        t = self.peek()
-        if t is None:
+        if self.peek() is None:
             raise SqlError("unexpected end of statement")
-        self.i += 1
-        return t
+        return self.ahead.pop(0)
 
-    def expect_kw(self, kw: str) -> _Tok:
-        t = self.take()
-        if t.kind != "ident" or t.lower != kw:
-            raise SqlError(f"expected {kw.upper()}, got {t.text!r}")
-        return t
+    def take_kw(self, kw: str) -> bool:
+        """Take the keyword ``kw`` if it is next."""
+        if not self.at_kw(kw):
+            return False
+        self.take()
+        return True
+
+    def expect_kw(self, *kws: str) -> None:
+        for kw in kws:
+            t = self.take()
+            if t.kind != "ident" or t.lower != kw:
+                raise SqlError(f"expected {kw.upper()}, got {t.text!r}")
 
     def expect_op(self, op: str) -> _Tok:
         t = self.take()
@@ -117,8 +123,47 @@ class _Cursor:
             raise SqlError(f"expected identifier, got {t.text!r}")
         return t.text
 
+    def expect_word(self) -> str:
+        """Any identifier, reserved words included: a column or
+        constraint name no grammar word can follow ambiguously."""
+        t = self.take()
+        if t.kind != "ident":
+            raise SqlError(f"expected identifier, got {t.text!r}")
+        return t.text
+
+    def expect_int(self) -> int:
+        t = self.take()
+        if t.kind != "num" or "." in t.text:
+            raise SqlError(f"expected an integer, got {t.text!r}")
+        return int(t.text)
+
+    def expect_str(self) -> str:
+        """The value of a quoted string literal."""
+        t = self.take()
+        if t.kind != "str":
+            raise SqlError(f"expected a quoted string, got {t.text!r}")
+        return t.text[1:-1].replace("''", "'")
+
     def done(self) -> bool:
-        return self.i >= len(self.toks)
+        return self.peek() is None
+
+    def rest(self) -> str:
+        """The raw text from the next token to the end, consumed
+        untokenized."""
+        start = self.ahead[0].start if self.ahead else self.pos
+        out = self.text[start:].strip()
+        if not out:
+            raise SqlError("unexpected end of statement")
+        self.ahead, self.pos = [], len(self.text)
+        return out
+
+    def paren(self) -> str:
+        """The raw text inside the parenthesized group at the cursor,
+        consumed untokenized (parens inside literals do not count)."""
+        start = self.expect_op("(").start
+        close = _matching_paren(_mask(self.text), start)
+        self.ahead, self.pos = [], close + 1
+        return self.text[start + 1:close].strip()
 
 
 def _ident_list(cur: _Cursor) -> list[str]:
@@ -166,11 +211,6 @@ _MASK_RE = re.compile(
 
 def _mask(text: str) -> str:
     return _MASK_RE.sub(lambda m: " " * len(m.group(0)), text)
-
-
-def _tk(text: str):
-    return _tokenize(text), text
-
 
 
 def _split_top_level(text: str, fm: str, sep: str) -> list[str]:

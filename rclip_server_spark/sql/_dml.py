@@ -44,11 +44,16 @@ def _is_bucketed(e: dict, version: int | None = None) -> bool:
     return "buckets" in V._manifest(e["path"], v)
 
 
-def _insert(spark: SparkSession, catalog: Catalog, name: str,
-            body: str, overwrite: bool = False) -> dict:
+def _insert(spark: SparkSession, catalog: Catalog, cur, name: str,
+            overwrite: bool):
     """INSERT INTO = O(batch) append commit; INSERT OVERWRITE = one
     full-replace commit (versioned.overwrite — the full-reload path,
     old versions stay readable until VACUUM, RESTORE undoes it)."""
+    if not cur.at_kw("select", "with", "values"):
+        raise SqlError("INSERT INTO|OVERWRITE t SELECT ... | "
+                       "VALUES ...")
+    body = cur.rest()
+    yield
     df = _run_select(spark, body, catalog)
     verb = "INSERT OVERWRITE" if overwrite else "INSERT INTO"
     e = _writable_table(catalog, name, verb)
@@ -69,8 +74,17 @@ def _insert(spark: SparkSession, catalog: Catalog, name: str,
     return {"status": "inserted", "name": name, "version": ver}
 
 
-def _delete(spark: SparkSession, catalog: Catalog, name: str,
-            pred: str) -> dict:
+def _insert_into(spark, catalog, cur, name):
+    return _insert(spark, catalog, cur, name, overwrite=False)
+
+
+def _insert_overwrite(spark, catalog, cur, name):
+    return _insert(spark, catalog, cur, name, overwrite=True)
+
+
+def _delete(spark: SparkSession, catalog: Catalog, cur, name: str):
+    pred = cur.rest()
+    yield
     e = _writable_table(catalog, name, "DELETE FROM")
     key = e["meta"].get("key")
     if not key:
@@ -82,9 +96,7 @@ def _delete(spark: SparkSession, catalog: Catalog, name: str,
     return {"status": "deleted", "name": name, "version": ver}
 
 
-
-def _update(spark: SparkSession, catalog: Catalog, name: str,
-            set_clause: str, pred: str) -> dict:
+def _update(spark: SparkSession, catalog: Catalog, cur, name: str):
     """``UPDATE t SET col = expr [, ...] WHERE pred`` via ONE
     delete-vector + append commit (versioned.delete_and_append): the
     matched rows' keys go into a delete vector scoped to the parent's
@@ -92,6 +104,15 @@ def _update(spark: SparkSession, catalog: Catalog, name: str,
     untouched data, so cost is O(matched), not O(table). Assignment
     RHSs see the OLD row (single projection), standard SQL UPDATE
     semantics; the row-identity column itself may not be assigned."""
+    body = cur.rest()
+    # WHERE is found on the MASK, so a literal containing the word
+    # can't split the statement
+    wm = _find_top_level_kw(_mask(body), "where", 0)
+    if not wm:
+        raise SqlError(
+            "UPDATE t SET col = expr [, ...] WHERE <predicate>")
+    set_clause, pred = body[:wm.start()], body[wm.end():]
+    yield
     e = _writable_table(catalog, name, "UPDATE")
     key = e["meta"].get("key")
     if not key:
@@ -334,7 +355,7 @@ def _parse_merge_action(action: str, is_matched: bool) -> tuple:
     return ("insert", list(zip(cols, vals)))
 
 
-def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
+def _merge(spark: SparkSession, catalog: Catalog, cur, name: str):
     """``MERGE INTO t USING src ON t.k = s.k WHEN ... THEN ...`` with
     the Delta MERGE clause surface: ``WHEN MATCHED [AND <cond>] THEN
     UPDATE SET * | SET col = expr, ...``, ``WHEN MATCHED [AND <cond>]
@@ -365,23 +386,18 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
     source rows never match (SQL NULL equality), so they fall to the
     WHEN NOT MATCHED clauses and are ignored by a matched-only
     MERGE."""
-    fm = _mask(text)
-    m = re.match(
-        r"merge\s+into\s+([A-Za-z_][A-Za-z0-9_]*)"
-        r"(?:\s+(?:as\s+)?(?!using\b)([A-Za-z_][A-Za-z0-9_]*))?"
-        r"\s+using\s+", fm,
-        re.IGNORECASE)
-    if not m:
-        raise SqlError(_MERGE_SYNTAX)
-    name = text[m.start(1):m.end(1)]
-    t_alias = text[m.start(2):m.end(2)] if m.group(2) else name
-    on_m = _find_top_level_kw(fm, "on", m.end())
-    when_m = _find_top_level_kw(fm, "when", m.end())
+    t_alias = name
+    if cur.take_kw("as") or not cur.at_kw("using"):
+        t_alias = cur.expect_ident()
+    cur.expect_kw("using")
+    rest = cur.rest()
+    fm = _mask(rest)
+    on_m = _find_top_level_kw(fm, "on", 0)
+    when_m = _find_top_level_kw(fm, "when", 0)
     if not on_m or not when_m or when_m.start() < on_m.start():
         raise SqlError("MERGE needs USING <src> ON <cond> WHEN ...")
-    src_text = text[m.end():m.end() + on_m.start()].strip()
-    on_text = text[m.end() + on_m.end():m.end() + when_m.start()].strip()
-    rest = text[m.end() + when_m.start():]
+    src_text = rest[:on_m.start()].strip()
+    on_text = rest[on_m.end():when_m.start()].strip()
 
     qi = r"(?:[A-Za-z_][A-Za-z0-9_]*\.)?([A-Za-z_][A-Za-z0-9_]*)"
     on_eq = re.match(rf"{qi}\s*=\s*{qi}\s*$", on_text)
@@ -390,8 +406,10 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
             f"MERGE ON must be a single same-named column equality "
             f"(t.k = s.k), got: {on_text!r}")
     on_key = on_eq.group(1)
-    matched, not_matched, nmbs = _parse_merge_clauses(rest)
-
+    matched, not_matched, nmbs = _parse_merge_clauses(
+        rest[when_m.start():])
+    src_sql, s_alias = _parse_merge_source(src_text)
+    yield
     e = _writable_table(catalog, name, "MERGE INTO")
     decl_key = e["meta"].get("key")
     if not decl_key:
@@ -403,7 +421,6 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
             f"MERGE ON must use {name}'s declared row-identity "
             f"column {decl_key!r} (got {on_key!r}) — merging on a "
             f"non-unique column would collapse matched rows")
-    src_sql, s_alias = _parse_merge_source(src_text)
     src = _run_select(spark, src_sql, catalog)
 
     ver0 = V.current_version(e["path"])

@@ -19,7 +19,7 @@ from ._base import (
     _RESERVED,
     _Cursor,
     _ident_list,
-    _tk,
+    _parse_options,
 )
 from ._catalog import Catalog
 
@@ -530,7 +530,7 @@ def _synth_transform(sql_text: str):
     """(fn, name) for a stack-internal transform view, reconstructed
     from its synthetic SQL exactly the way _mv_transforms rebuilds
     user-declared transforms — one code path for both."""
-    cur = _Cursor(*_tk(sql_text))
+    cur = _Cursor(sql_text)
     plan = _parse_mv_body(cur)
     return _transform_fn(plan.items, plan.where), _transform_name(
         sql_text)
@@ -630,14 +630,18 @@ def _include_cols_opt(kw: dict, opts: dict) -> None:
                               if c.strip()]
 
 
-def _create_using(spark: SparkSession, catalog: Catalog, name: str,
-                  kind: str, opts: dict) -> dict:
-    """``CREATE MATERIALIZED VIEW v USING near_dup OPTIONS (source='t',
-    key='id'[, text_col='text', shingle_n=5, num_hashes=32, bands=8,
-    threshold=0.7, seed=42])`` — the maintained banded-MinHash pair
-    table (sources/neardup_view.py), the one view kind whose definition
-    is an algorithm, not a SQL shape. REFRESH / DESCRIBE / VACUUM /
-    SELECT all work on it like any other registered view."""
+def _create_using(spark: SparkSession, catalog: Catalog, cur: _Cursor,
+                  name: str):
+    """``CREATE MATERIALIZED VIEW v USING <kind> OPTIONS (source='t',
+    key='id', ...)`` — the view kinds whose definition is an
+    algorithm, not a SQL shape: the maintained banded-MinHash /
+    hyperplane-LSH pair tables (sources/neardup_view.py), the BM25
+    postings index, and the ANN / IVF vector indexes. REFRESH /
+    DESCRIBE / VACUUM / SELECT all work on them like any other
+    registered view."""
+    kind = cur.expect_ident().lower()
+    opts = _parse_options(cur)
+    yield
     if kind not in ("near_dup", "embed_near_dup", "text_index",
                     "ann_index", "ivf_index"):
         raise SqlError(f"unknown USING kind {kind!r}; supported: "
@@ -699,12 +703,7 @@ def _create_using(spark: SparkSession, catalog: Catalog, name: str,
 
     def _build() -> dict:
         if kind in IK.kinds():
-            # option coercions run inside the wrap too: n_cells='abc'
-            # must surface as SqlError, the layer's error contract
-            try:
-                _create_index()
-            except ValueError as ex:
-                raise SqlError(str(ex)) from ex
+            _create_index()
         elif kind == "near_dup":
             kw = {k: opts[k] for k in ("text_col", "shingle_n",
                                        "num_hashes", "bands",
@@ -731,7 +730,7 @@ def _mv_transforms(catalog: Catalog) -> dict:
     out = {}
     for n, e in sorted(catalog.snapshot().items()):
         if e["kind"] == "transform" and e["meta"].get("sql"):
-            cur = _Cursor(*_tk(e["meta"]["sql"]))
+            cur = _Cursor(e["meta"]["sql"])
             plan = _parse_mv_body(cur)
             out[e["path"]] = (_transform_fn(plan.items, plan.where),
                               _transform_name(e["meta"]["sql"]))

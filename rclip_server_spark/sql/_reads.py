@@ -246,10 +246,10 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
                     id_col=spec["ai_key"], vec_col=spec["ai_vec_col"],
                     n_left=n_left, where=jwhere,
                     version=ver).createOrReplaceTempView(tmp)
-            except (ValueError, KeyError, ScaleGuardError) as ex:
-                # ScaleGuardError included: SQL has no
-                # max_expected_candidates escape hatch, so the guard
-                # must surface through the layer's SqlError contract
+            except (KeyError, ScaleGuardError) as ex:
+                # SQL has no max_expected_candidates escape hatch, so
+                # the guard must surface through the layer's SqlError
+                # contract
                 raise SqlError(str(ex)) from ex
             spans.append((m.start(), close + 1, tmp))
             continue
@@ -265,16 +265,11 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
             # lexical search over include_cols; idf stays global)
             twhere = _str_arg(args[3], up, "filter") \
                 if len(args) == 4 else None
-            try:
-                q = (TI.query_text_index(spark, e["path"], terms,
-                                         k=k, version=ver,
-                                         where=twhere)
-                     if fn == "text_search" else
-                     TI.query_phrase_index(spark, e["path"], terms,
-                                           k=k, version=ver,
-                                           where=twhere))
-            except ValueError as ex:
-                raise SqlError(str(ex)) from ex
+            q = (TI.query_text_index(spark, e["path"], terms, k=k,
+                                     version=ver, where=twhere)
+                 if fn == "text_search" else
+                 TI.query_phrase_index(spark, e["path"], terms, k=k,
+                                       version=ver, where=twhere))
             q.createOrReplaceTempView(tmp)
         else:
             # ANN_SEARCH('view', array(...), k[, probe_bits[, filter]])
@@ -309,16 +304,13 @@ def _rewrite_index_searches(spark: SparkSession, text: str,
             from ..sources import annindex as AI
             from ..sources import ivfindex as II
 
-            try:
-                q = (II.query_ivf_index(spark, e["path"], qv, k=k,
-                                        n_probe=probe, version=ver,
-                                        method=method, where=vwhere)
-                     if ivf else
-                     AI.query_ann_index(spark, e["path"], qv, k=k,
-                                        n_probe_bits=probe, version=ver,
-                                        where=vwhere))
-            except ValueError as ex:
-                raise SqlError(str(ex)) from ex
+            q = (II.query_ivf_index(spark, e["path"], qv, k=k,
+                                    n_probe=probe, version=ver,
+                                    method=method, where=vwhere)
+                 if ivf else
+                 AI.query_ann_index(spark, e["path"], qv, k=k,
+                                    n_probe_bits=probe, version=ver,
+                                    where=vwhere))
             q.createOrReplaceTempView(tmp)
         spans.append((m.start(), close + 1, tmp))
     if not spans:
@@ -368,10 +360,7 @@ def _run_select(spark: SparkSession, text: str, catalog: Catalog
             continue
         ts = lm.group(1).replace("''", "'")
         entry = catalog.get(name)
-        try:
-            ver = V.version_at_timestamp(entry["path"], ts)
-        except ValueError as ex:
-            raise SqlError(str(ex)) from ex
+        ver = V.version_at_timestamp(entry["path"], ts)
         pinned = f"{name}__v{ver}"
         _read_entry(spark, entry, ver).createOrReplaceTempView(pinned)
         pins.append((m.start(), lm.end(), pinned))

@@ -9,7 +9,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from ._base import SqlError
+from ._base import SqlError, _parse_options
 from ._catalog import Catalog
 from ._mvdef import _mv_transforms
 
@@ -36,8 +36,8 @@ def _reap_stream_ckpts(catalog: Catalog, name: str) -> None:
     shutil.rmtree(_ckpt_root(catalog, name), ignore_errors=True)
 
 
-def _start_refresh_stream(spark: SparkSession, catalog: Catalog,
-                          name: str) -> dict:
+def _start_refresh_stream(spark: SparkSession, catalog: Catalog, cur,
+                          name: str):
     """``START REFRESH STREAM ON VIEW v [CASCADE]`` — continuous
     maintenance: one streaming query tails the view composition's
     BASE-table manifest logs and cascades a refresh bottom-up per
@@ -54,6 +54,8 @@ def _start_refresh_stream(spark: SparkSession, catalog: Catalog,
     the starter runs one synchronous catch-up cascade before the tail
     begins, so the stream only needs future wakes. The previous
     checkpoint (same process) is reaped on the next START/STOP."""
+    cur.take_kw("cascade")
+    yield
     e = catalog.get(name)
     if e["kind"] == "table":
         raise SqlError(f"{name} is a base table — refresh streams "
@@ -89,7 +91,9 @@ def _start_refresh_stream(spark: SparkSession, catalog: Catalog,
             "stream_id": str(q.id)}
 
 
-def _stop_refresh_stream(catalog: Catalog, name: str) -> dict:
+def _stop_refresh_stream(spark: SparkSession, catalog: Catalog, cur,
+                         name: str):
+    yield
     catalog.get(name)  # unknown names error the same way everywhere
     key = _stream_key(catalog, name)
     q = _STREAMS.get(key)
@@ -109,6 +113,24 @@ def _stop_refresh_stream(catalog: Catalog, name: str) -> dict:
     if ckpt:
         shutil.rmtree(ckpt, ignore_errors=True)
     return {"status": "stream_stopped", "name": name}
+
+
+def _show_streams(spark: SparkSession, catalog: Catalog, cur):
+    """Every live streaming query THIS process started through the
+    frontend (refresh + copy ingest); handles are process-local, the
+    same contract DESCRIBE VIEW's liveness states."""
+    yield
+    out = []
+    for (root, label), q in _STREAMS.items():
+        if root != catalog.root or not q.isActive:
+            continue
+        if label.startswith("copy:"):
+            out.append({"name": label[5:], "type": "copy",
+                        "stream_id": str(q.id)})
+        else:
+            out.append({"name": label, "type": "refresh",
+                        "stream_id": str(q.id)})
+    return sorted(out, key=lambda r: (r["name"], r["type"]))
 
 
 def _stream_liveness(catalog: Catalog, name: str) -> dict:
@@ -134,8 +156,7 @@ def _copy_ckpt_root(catalog: Catalog, name: str) -> str:
                         "copy-" + name.lower())
 
 
-def _start_copy_stream(spark: SparkSession, catalog: Catalog,
-                       name: str, src: str, opts: dict) -> dict:
+def _start_copy_stream(spark: SparkSession, catalog: Catalog, cur):
     """``START COPY STREAM FROM '<dir>' INTO t [OPTIONS (...)]`` —
     continuous file ingest (streaming/sink.start_file_ingest_stream):
     each micro-batch reads only newly-landed files and commits through
@@ -149,6 +170,11 @@ def _start_copy_stream(spark: SparkSession, catalog: Catalog,
     identity's checkpoint exists (a fresh checkpoint would restart
     batch ids at 0 and the exactly-once log would silently skip them).
     DROP TABLE reaps the identity with the table."""
+    src = cur.expect_str()
+    cur.expect_kw("into")
+    name = cur.expect_ident()
+    opts = _parse_options(cur)
+    yield
     import hashlib
     import json
 
@@ -185,16 +211,13 @@ def _start_copy_stream(spark: SparkSession, catalog: Catalog,
     os.makedirs(croot, exist_ok=True)
     with open(os.path.join(croot, ident + ".json"), "w") as f:
         json.dump({"src": os.path.abspath(src), "format": fmt}, f)
-    try:
-        mf = int(opts["max_files"]) if "max_files" in opts else None
-        header = opts.get("header", True)
-        if isinstance(header, str):
-            header = header.strip().lower() == "true"
-        q = sink.start_file_ingest_stream(
-            spark, src, e["path"], fmt=fmt, header=bool(header),
-            checkpoint_dir=ckpt, max_files_per_trigger=mf)
-    except ValueError as ex:
-        raise SqlError(str(ex)) from ex
+    mf = int(opts["max_files"]) if "max_files" in opts else None
+    header = opts.get("header", True)
+    if isinstance(header, str):
+        header = header.strip().lower() == "true"
+    q = sink.start_file_ingest_stream(
+        spark, src, e["path"], fmt=fmt, header=bool(header),
+        checkpoint_dir=ckpt, max_files_per_trigger=mf)
     _STREAMS[key] = q
     # resume marker for DESCRIBE: the head before this process's tail
     setattr(q, "_rclip_ckpt", None)  # persistent — never auto-reaped
@@ -203,7 +226,9 @@ def _start_copy_stream(spark: SparkSession, catalog: Catalog,
             "resumed": V.committed_batch_ids(e["path"]) != set()}
 
 
-def _stop_copy_stream(catalog: Catalog, name: str) -> dict:
+def _stop_copy_stream(spark: SparkSession, catalog: Catalog, cur,
+                      name: str):
+    yield
     catalog.get(name)
     key = _copy_stream_key(catalog, name)
     q = _STREAMS.get(key)

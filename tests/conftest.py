@@ -96,7 +96,6 @@ _SLOW_TESTS = {
     "test_refresh_view_dispatch_and_describe",
     "test_matches_numpy_reference",
     "test_dangling_mass_redistributes",
-    "test_filtered_query_and_widening",
     "test_incremental_refresh_frozen_centroids",
     "test_streaming_enrichment_equals_batch",
     "test_search_api_shape_and_default_k",

@@ -1876,3 +1876,35 @@ def test_optimize_bucket_by_migration(spark, events, cat, base):
     got2 = S.execute(spark, "SELECT event_id, user_id, event_type, "
                             "cents FROM ev", cat)
     assert _rows(got2) == _rows(want)
+
+
+@pytest.mark.parametrize("stmt", [
+    "DROP TABLE ev2, ev", "SHOW TABLES please ignore me",
+    "DESCRIBE HISTORY ev whatever", "DESCRIBE CASCADE tv whatever"])
+def test_trailing_tokens_fail_before_the_statement_runs(spark, cat, base,
+                                                        stmt):
+    """Every statement form refuses tokens after its header, and does
+    so before it runs: ``DROP TABLE a, b`` must not drop ``a``."""
+    S.execute(spark, "CREATE TABLE ev2 AS SELECT * FROM ev", cat)
+    S.execute(spark, "CREATE MATERIALIZED VIEW tv AS SELECT event_type, "
+                     "COUNT(*) AS n FROM ev GROUP BY event_type", cat)
+    with pytest.raises(S.SqlError, match="trailing"):
+        S.execute(spark, stmt, cat)
+    assert {"ev", "ev2", "tv"} <= set(cat.names())
+    assert os.path.isdir(cat.get("ev2")["path"])
+
+
+def test_unsupported_head_names_every_statement(spark, cat):
+    """An unknown head is reported before the rest of the statement is
+    tokenized, with the full list of statement heads."""
+    with pytest.raises(S.SqlError,
+                       match="unsupported statement head 'frobnicate'"
+                       ) as ei:
+        S.execute(spark, 'frobnicate "x"', cat)
+    heads = {key[0].upper() for key in S._STATEMENTS}
+    assert {"SELECT", "VALUES", "MERGE", "RETRAIN", "START"} <= heads
+    assert [h for h in heads if h not in str(ei.value)] == []
+    # a known head with an unknown form lists that head's forms
+    with pytest.raises(S.SqlError, match="CREATE supports") as ei:
+        S.execute(spark, "CREATE VIEW v AS SELECT 1", cat)
+    assert "CLONE" in str(ei.value) and "USING" in str(ei.value)
