@@ -47,11 +47,21 @@ def normalize_plan(plan: str) -> str:
 
     plan = re.sub(r"#\d+", _sub, plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=X", plan)
+    # query-vector literals come out of BLAS (np.linalg.norm), whose
+    # summation order depends on the CPU: their last digits differ
+    # between hosts, so long float literals are written at 12 digits
+    plan = re.sub(r"(?<![\w.])-?\d+\.\d+(?:E-?\d+)?", _fixed_float, plan)
     # audit scratch tables live in per-run mkdtemp dirs with random
     # names and content-hashed segment files; fixture paths (stable,
     # informative) are left intact
     return re.sub(r"file:/tmp/\S+?(?=[\],\s]|$)", "file:/tmp/...",
                   plan)
+
+
+def _fixed_float(m) -> str:
+    s = m.group(0)
+    digits = sum(c.isdigit() for c in s.split("E")[0])
+    return s if digits <= 12 else "%.12g" % float(s)
 
 
 def normalize_label(verdict: str, names: dict) -> str:
