@@ -20,8 +20,10 @@ sources/ivfindex.py) call the same code:
 * ``ivf_probe_rule`` — the n_probe nearest cells (``ivf_topk``,
   ``ivf_pq_topk`` and the IVF index queries);
 * ``infer_dim`` — the one empty-input dim probe;
-* ``_exact_topk`` — exact dot against the query literal, (score DESC, id
-  ASC) top-k over the candidates a tier kept;
+* the exact tail of every tier is ``similarity.topk_similar`` (exact dot
+  against the query literal, (score DESC, id ASC) top-k) over the
+  candidates the tier kept, and every per-query top-k is
+  ``similarity.top_k_per``;
 * ``_knn_join`` — the k-NN join body: candidate-volume scale guard,
   left-side bucket + probe explode, bucket equi-join, per-left-row window
   (``lsh_knn_join`` and ``annindex.knn_join_via_index``);
@@ -38,10 +40,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from . import similarity
 
 
 def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
@@ -129,16 +132,6 @@ def infer_dim(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
     return int(probe[0])
 
 
-def _exact_topk(cand: DataFrame, q, k: int, id_col: str,
-                vec_col: str) -> DataFrame:
-    """(id, score) top-k of candidates by exact dot against the query
-    literal, ordered (score DESC, id ASC)."""
-    return (cand.select(F.col(id_col),
-                        V.dot(vec_col, V.vec_lit_sql(q)).alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
-
-
 def brute_force_topk_multi(
     df: DataFrame,
     queries_df: DataFrame,
@@ -166,12 +159,8 @@ def brute_force_topk_multi(
         V.dot(vec_col, query_vec).alias("score"),
     )
     partial = partition_partial_topk(scored, k, query_id=query_id, id_col=id_col)
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id, id_col, "score", "rank")
-    )
+    return similarity.top_k_per(partial, k, query_id, id_col).select(
+        query_id, id_col, "score", "rank")
 
 
 def partition_partial_topk(
@@ -304,12 +293,8 @@ def brute_force_topk_multi_gemm(
         yield pd.concat(frames, ignore_index=True)
 
     partial = df.select(id_col, vec_col).mapInPandas(_gemm_partial_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, "score", "rank")
-    )
+    return similarity.top_k_per(partial, k, "query_id", id_col).select(
+        "query_id", id_col, "score", F.col("rank").cast("long").alias("rank"))
 
 
 def lsh_topk(
@@ -369,8 +354,8 @@ def lsh_topk_multiprobe(
     planes = hyperplanes(n_planes, len(qv), seed)
     probes = lsh_probe_rule(planes, n_probe_bits)(qv)
     bucketed = df.withColumn("bucket", hyperplane_bucket_col(vec_col, planes))
-    return _exact_topk(bucketed.where(F.col("bucket").isin(probes)), qv, k,
-                       id_col, vec_col)
+    return similarity.topk_similar(bucketed.where(F.col("bucket").isin(probes)),
+                                   qv, k, id_col, vec_col)
 
 
 def lsh_similarity_join(
@@ -483,12 +468,9 @@ def ivf_init_maximin(
             for c in cents
         ]
         dmin = dists[0] if len(dists) == 1 else F.least(*dists)
-        row = (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), dmin.alias("d"))
-            .orderBy(F.desc("d"), F.asc("id"))
-            .limit(1)
-            .collect()
-        )
+        row = similarity.top_k(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), dmin.alias("d")),
+            1, "id", "d").collect()
         cents.append(np.asarray(row[0]["v"], dtype=np.float64))
     return np.stack(cents)
 
@@ -576,8 +558,8 @@ def ivf_topk(
     qv = np.asarray(query_vec, dtype=np.float64)
     cells = ivf_probe_rule(centroids, n_probe)(qv)
     assigned = ivf_assign(df, centroids, id_col, vec_col)
-    return _exact_topk(assigned.where(F.col("ivf_cell").isin(cells)), qv, k,
-                       id_col, vec_col)
+    return similarity.topk_similar(assigned.where(F.col("ivf_cell").isin(cells)),
+                                   qv, k, id_col, vec_col)
 
 
 def pca_coarse_topk(
@@ -658,7 +640,7 @@ def binary_hamming_topk(
         .orderBy(F.asc("hamming"), F.asc(id_col))
         .limit(shortlist)
     )
-    return _exact_topk(short, qv, k, id_col, vec_col)
+    return similarity.topk_similar(short, qv, k, id_col, vec_col)
 
 
 def ivf_outliers(
@@ -808,10 +790,9 @@ def _rerank(scored: DataFrame, score_col: str, shortlist: int,
             f"exact re-rank needs full-precision vectors — pass full_df, "
             f"or include {vec_col!r} in the scanned frame (an encode "
             f"output alone holds only codes)")
-    short = (scored.orderBy(F.desc(score_col), F.asc(id_col))
-             .limit(shortlist).select(id_col))
-    return _exact_topk(wide.join(F.broadcast(short), id_col), q, k, id_col,
-                       vec_col)
+    short = similarity.top_k(scored, shortlist, id_col, score_col).select(id_col)
+    return similarity.topk_similar(wide.join(F.broadcast(short), id_col), q, k,
+                                   id_col, vec_col)
 
 
 def pq_encode(
@@ -1105,9 +1086,5 @@ def _knn_join(left: DataFrame, right_of, k: int, planes: np.ndarray,
         scored = partition_partial_topk(
             scored, k, query_id="id_a", id_col="id_b", score_col="cosine"
         )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("id_a", "id_b", F.col("cosine"), F.col("rnk").cast("long").alias("rnk"))
-    )
+    return similarity.top_k_per(scored, k, "id_a", "id_b", "cosine", "rnk").select(
+        "id_a", "id_b", "cosine", F.col("rnk").cast("long").alias("rnk"))

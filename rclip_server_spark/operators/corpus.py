@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions.hashing import portable_hash32
+from .similarity import top_k, top_k_per
 
 _HASH_SPACE = 1 << 32
 
@@ -42,13 +43,12 @@ def token_topk(df: DataFrame, k: int = 20, text_col: str = "text") -> DataFrame:
     across engines and partitionings. Plan: explode is map-side, the count
     is one partial-agg shuffle over the (small) vocab, and the top-k is
     TakeOrderedAndProject — no full sort is ever materialized."""
-    return (
+    counts = (
         df.select(F.explode(TXT.tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("token"))
-        .limit(k)
     )
+    return top_k(counts, k, "token", "cnt")
 
 
 def source_stats(
@@ -420,8 +420,6 @@ def cluster_topic_terms(
     shuffle keyed (cell, token); the per-cell top-k is a window over
     cell-partitioned counts — cells are few, counts are vocab-sized.
     Deterministic order: count desc, token asc."""
-    from pyspark.sql import Window
-
     from .ann import ivf_assign
 
     assigned = ivf_assign(emb, centroids, id_col=vec_id_col).select(
@@ -433,12 +431,8 @@ def cluster_topic_terms(
         .where(~F.col("token").isin(*sorted(TXT.STOPWORDS)))
     )
     counts = toks.groupBy("ivf_cell", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("ivf_cell").orderBy(F.desc("cnt"), F.asc("token"))
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k_terms)
-        .select("ivf_cell", "rank", "token", "cnt")
-    )
+    return top_k_per(counts, k_terms, "ivf_cell", "token", "cnt").select(
+        "ivf_cell", "rank", "token", "cnt")
 
 
 def contrastive_triplets(

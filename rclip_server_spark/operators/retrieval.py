@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions.hashing import single_partition_key
+from .similarity import top_k
 
 RRF_K = 60
 
@@ -129,12 +130,8 @@ def bm25_topk(
     """Top-k by BM25, deterministic tie-break on id; zero-score docs are
     excluded (a doc with no query term is not a hit)."""
     scored = bm25_scores(df, terms, k1, b, id_col, text_col)
-    return (
-        scored.where(F.col("bm25") > 0.0)
-        .orderBy(F.desc("bm25"), F.asc(id_col))
-        .limit(k)
-        .select(id_col, "bm25")
-    )
+    return top_k(scored.where(F.col("bm25") > 0.0), k, id_col,
+                 "bm25").select(id_col, "bm25")
 
 
 def rrf_fusion(
@@ -154,8 +151,7 @@ def rrf_fusion(
     so the rank windows never see more than ``pool`` rows.
     """
     t = (
-        text_side.orderBy(F.desc(text_score), F.asc(id_col))
-        .limit(pool)
+        top_k(text_side, pool, id_col, text_score)
         .withColumn(
             # constant-zero partition key: input is `pool` rows by
             # construction (keeps WindowExec's no-partition warning log
@@ -169,8 +165,7 @@ def rrf_fusion(
         .select(F.col(id_col).alias("id"), "t_rank")
     )
     v = (
-        vec_side.orderBy(F.desc(vec_score), F.asc(id_col))
-        .limit(pool)
+        top_k(vec_side, pool, id_col, vec_score)
         .withColumn(
             "v_rank",
             F.row_number().over(
@@ -192,7 +187,7 @@ def rrf_fusion(
         "v_rank",
         (recip(F.col("t_rank")) + recip(F.col("v_rank"))).alias("rrf"),
     )
-    return fused.orderBy(F.desc("rrf"), F.asc(id_col)).limit(k)
+    return top_k(fused, k, id_col, "rrf")
 
 
 def more_like_this(
@@ -253,4 +248,4 @@ def more_like_this(
             ).alias("cosine"),
         )
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return top_k(scored, k, id_col, "cosine")

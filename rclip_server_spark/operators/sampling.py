@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash32, single_partition_key
+from .similarity import top_k
 
 _HASH_SPACE = 1 << 32  # portable_hash32 range: [0, 2^32)
 
@@ -190,12 +191,10 @@ def weighted_fixed_k_sample(
     q = (F.col(weight_col).cast("double") * F.lit(float(_HASH_SPACE))) / h1.cast(
         "double"
     )
-    topk1 = (
+    topk1 = top_k(
         df.where(F.col(weight_col) > 0)
-        .select(F.col(id_col), F.col(weight_col), q.alias("__q"))
-        .orderBy(F.desc("__q"), F.asc(id_col))
-        .limit(int(k) + 1)
-    )
+        .select(F.col(id_col), F.col(weight_col), q.alias("__q")),
+        int(k) + 1, id_col, "__q")
     # constant partition key: the input is k+1 rows (post-
     # TakeOrderedAndProject), so a single-partition window is the point —
     # the non-foldable zero key keeps this bounded-by-construction case

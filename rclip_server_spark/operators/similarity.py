@@ -13,13 +13,27 @@ design distributes the same exact computation and improves the sort:
     reference's O(N log N) full sort. This is the shape that survives 100 TB:
     the scan scales out, only k·P rows ever cross the wire.
 
+The engine's ranking rule (score DESC, ties broken by key ASC, keep the
+first k) is written here once, in two forms, and every operator and index
+query ranks through them:
+  * ``top_k`` — one global ranking, the ``TakeOrderedAndProject`` above;
+  * ``top_k_per`` — one ranking per group: ``row_number()`` over a window
+    partitioned by the group, which Spark plans as a partial and a final
+    ``WindowGroupLimit`` around the group exchange, with the 1-based
+    position kept as a rank column.
+Both raise ValueError for a negative k. Every exact vector top-k (the
+``/search_api`` scan, the word and phrase lookups, the ANN tiers' exact
+tails and the vector index queries) is ``topk_similar``: ``with_score``
+then ``top_k``.
+
 Two scoring paths with identical semantics:
   * ``method='sql'``  — pure higher-order-function expression (functions/
     vector.py), JVM-side, whole-stage-codegen'd, DuckDB-oracle-checkable.
+    The default, and what ``/search_api`` and the index queries use.
   * ``method='gemv'`` — scalar-iterator pandas_udf: each Arrow batch becomes a
     NumPy matrix and one ``M @ q`` BLAS call, preserving the reference's
     vectorized execution *and* partition parallelism. Faster for wide vectors
-    / large N; the default for the serving path.
+    / large N.
 """
 
 from __future__ import annotations
@@ -28,22 +42,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..functions.localrel import values_df
-
-
-def score_col_sql(vec_col, query_vec) -> Column:
-    """score = dot(embedding, query) as a pure-SQL column (unit-norm ⇒ cosine).
-
-    Accepts a column NAME (preferred: the whole expression then builds as
-    one parsed SQL string — same tree, ~50x cheaper driver-side) or a
-    Column (lambda-built fallback)."""
-    if isinstance(vec_col, (str,)) or isinstance(vec_col, V.SqlExpr):
-        return V.dot(vec_col, V.vec_lit_sql(query_vec))
-    return V.dot(vec_col, V.vec_lit(list(query_vec)))
 
 
 def score_col_gemv(vec_col, query_vec) -> Column:
@@ -60,36 +63,45 @@ def score_col_gemv(vec_col, query_vec) -> Column:
     return _score(vec_col)
 
 
-def choose_score_method(query_vec) -> str:
-    """Cost-based scoring-path choice — the Python-level stand-in for the
-    SURVEY §7 'optional SQL-to-BLAS rewrite rule' (a true Catalyst rule
-    needs Scala; this dispatcher makes the same decision one level up).
-
-    Measured tradeoff (PLANS.md / ann.brute_force_topk_multi_gemm
-    docstring): at dim<=512 a SINGLE query's codegen'd SQL fold matches
-    Arrow-GEMV wall-for-wall, and the SQL form is oracle-checkable and
-    stays inside whole-stage codegen — so it wins up to the dim where the
-    expression tree outgrows codegen's comfort (JIT'd method bloat);
-    beyond that the Arrow batch transfer amortizes and BLAS wins. Batched
-    multi-query scoring should use brute_force_topk_multi_gemm instead —
-    one data pass for all queries — which no per-row expression can
-    match."""
-    dim = len(np.asarray(query_vec))
-    return "sql" if dim <= 512 else "gemv"
-
-
-def with_score(
-    df: DataFrame,
-    query_vec,
-    vec_col: str = "embedding",
-    method: str = "sql",
-    score_name: str = "score",
-) -> DataFrame:
-    if method == "auto":
-        method = choose_score_method(query_vec)
+def with_score(df: DataFrame, query_vec, vec_col: str = "embedding",
+               method: str = "sql") -> DataFrame:
+    """``df`` plus ``score`` = dot(``vec_col``, query), the one scoring
+    kernel (unit-norm => cosine). ``method='sql'`` builds the dot as one
+    parsed SQL string over the query literal (same tree as the lambda
+    form, ~50x cheaper driver-side); ``'gemv'`` is the Arrow-batched
+    BLAS path."""
     if method == "sql":
-        return df.withColumn(score_name, score_col_sql(vec_col, query_vec))
-    return df.withColumn(score_name, score_col_gemv(F.col(vec_col), query_vec))
+        score = V.dot(vec_col, V.vec_lit_sql(query_vec))
+    elif method == "gemv":
+        score = score_col_gemv(F.col(vec_col), query_vec)
+    else:
+        raise ValueError(f"unknown score method {method!r}; use 'sql' or "
+                         f"'gemv'")
+    return df.withColumn("score", score)
+
+
+def _check_k(k: int) -> None:
+    if k < 0:
+        raise ValueError(f"k must be >= 0; got {k}")
+
+
+def top_k(df: DataFrame, k: int, key: str, score: str = "score") -> DataFrame:
+    """The ``k`` best rows of ``df`` by (``score`` DESC, ``key`` ASC) — the
+    global form of the ranking rule, planned as TakeOrderedAndProject.
+    A negative ``k`` raises ValueError; ``k = 0`` keeps no row."""
+    _check_k(k)
+    return df.orderBy(F.desc(score), F.asc(key)).limit(k)
+
+
+def top_k_per(df: DataFrame, k: int, by: str, key: str,
+              score: str = "score", rank: str = "rank") -> DataFrame:
+    """Per ``by`` group, the ``k`` best rows of ``df`` by (``score`` DESC,
+    ``key`` ASC), with their 1-based position as the INT column ``rank``
+    — the per-group form of the ranking rule. A negative ``k`` raises
+    ValueError; ``k = 0`` keeps no row."""
+    _check_k(k)
+    w = Window.partitionBy(by).orderBy(F.desc(score), F.asc(key))
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
 
 
 def topk_similar(
@@ -100,17 +112,14 @@ def topk_similar(
     vec_col: str = "embedding",
     method: str = "sql",
 ) -> DataFrame:
-    """Top-k rows by cosine against ``query_vec`` → (id, score).
+    """Top-k rows by cosine against ``query_vec`` → (id, score), the one
+    exact vector top-k.
 
     Deterministic tie-break on id so results are stable across partitionings
     (float ties are rare but a correctness gate should never flap).
     """
     scored = with_score(df, query_vec, vec_col=vec_col, method=method)
-    return (
-        scored.select(F.col(id_col), F.col("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return top_k(scored.select(F.col(id_col), F.col("score")), k, id_col)
 
 
 def best_words(
@@ -123,12 +132,7 @@ def best_words(
 ) -> DataFrame:
     """Reverse lookup (reference A11, rclip_server.py:310-312): score the query
     vector against the word-embedding table, top-k."""
-    scored = with_score(words_df, query_vec, vec_col=vec_col, method=method)
-    return (
-        scored.select(F.col(word_col), F.col("score"))
-        .orderBy(F.desc("score"), F.asc(word_col))
-        .limit(k)
-    )
+    return topk_similar(words_df, query_vec, k, word_col, vec_col, method)
 
 
 def phrase_embedding_df(
@@ -210,14 +214,9 @@ def best_phrases(
         return spark.createDataFrame([], "phrase string, score double")
     cand_df = values_df(spark, candidates, "phrase string, words array<string>")
 
-    emb = phrase_embedding_df(words_df, cand_df.withColumnRenamed("phrase", "phrase_id"),
-                              word_col=word_col, vec_col=vec_col, phrase_id="phrase_id")
-    scored = with_score(emb, query_vec, vec_col=vec_col, method="sql")
-    return (
-        scored.select(F.col("phrase_id").alias("phrase"), "score")
-        .orderBy(F.desc("score"), F.asc("phrase"))
-        .limit(k)
-    )
+    emb = phrase_embedding_df(words_df, cand_df, word_col=word_col,
+                              vec_col=vec_col, phrase_id="phrase")
+    return topk_similar(emb, query_vec, k, "phrase", vec_col)
 
 
 def phrase_scores_exact_vs_approx(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TXT
+from .similarity import top_k_per
 
 
 def tfidf(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -104,15 +105,9 @@ def top_terms_per_doc(df: DataFrame, k: int = 5, id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
     """Top-k TF-IDF terms per document (rank ties broken on token for
     determinism)."""
-    from pyspark.sql import Window
-
-    scored = tfidf(df, id_col, text_col)
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("token"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-        .select(id_col, "token", "tfidf", "rnk")
-    )
+    return top_k_per(tfidf(df, id_col, text_col), k, id_col, "token",
+                     "tfidf", "rnk").select(
+        id_col, "token", "tfidf", F.col("rnk").cast("long").alias("rnk"))
 
 
 def clean_corpus(

@@ -32,11 +32,12 @@ from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as VEC
 from ..functions.localrel import _render
+from ..operators import similarity
 from . import matview as M
 from . import versioned as V
 
@@ -323,18 +324,14 @@ def query_vector(spark: SparkSession, name: str, view_path: str,
     ``probe_rule(spec)`` is the kind's driver-side rule (query vector
     -> probe values), the same one its batch passes. Only the probed
     rows (file-pruned on a bucketed layout) that match ``where`` are
-    scored, by exact dot product against the query literal.
+    scored by ``topk_similar``, the one exact vector top-k.
 
     Returns (<key>, score) ordered (score DESC, key ASC), top ``k``."""
     spec, q, cand = candidates(spark, name, view_path, query_vec,
                                version, where, probe_rule)
     kind = kinds()[name]
-    key = spec[f"{kind.prefix}_key"]
-    scored = cand.withColumn(
-        "score", VEC.dot(spec[kind.col_field], VEC.vec_lit_sql(q)))
-    return (scored.select(key, "score")
-            .orderBy(F.desc("score"), F.asc(key))
-            .limit(k))
+    return similarity.topk_similar(cand, q, k, spec[f"{kind.prefix}_key"],
+                                   spec[kind.col_field])
 
 
 def query_vector_batch(spark: SparkSession, name: str, view_path: str,
@@ -386,14 +383,12 @@ def query_vector_batch(spark: SparkSession, name: str, view_path: str,
     # query lookup
     cand = apply_where(probed(spark, name, view_path, v, sorted(union)),
                        where)
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(key))
-    return (cand
-            .withColumn(qid_col, F.explode(F.expr(
-                f"element_at({pmap}, {kind.probe_col})")))
-            .withColumn("score", VEC.dot(
-                F.col(vec_col),
-                F.expr(f"element_at({qmap}, `{qid_col}`)")))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
+    scored = (cand
+              .withColumn(qid_col, F.explode(F.expr(
+                  f"element_at({pmap}, {kind.probe_col})")))
+              .withColumn("score", VEC.dot(
+                  F.col(vec_col),
+                  F.expr(f"element_at({qmap}, `{qid_col}`)"))))
+    return (similarity.top_k_per(scored, k, qid_col, key, rank="_rn")
             .select(qid_col, key, "score")
             .orderBy(qid_col, F.desc("score"), F.asc(key)))

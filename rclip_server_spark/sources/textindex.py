@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TXT
 from ..functions.localrel import values_df
+from ..operators import similarity
 from . import indexkind as IK
 from . import matview as M
 from .indexkind import convert_index_to_bucketed  # noqa: F401  (public)
@@ -215,10 +216,8 @@ def query_text_index(
     cand = IK.apply_where(
         hits.withColumn("_c", mult_map[F.col("term")] * idf * tfp), where)
     scored = cand.groupBy(key).agg(F.sum("_c").alias("bm25"))
-    return (scored.where(F.col("bm25") > 0.0)
-            .orderBy(F.desc("bm25"), F.asc(key))
-            .limit(k)
-            .select(key, "bm25"))
+    return similarity.top_k(scored.where(F.col("bm25") > 0.0), k, key,
+                            "bm25").select(key, "bm25")
 
 
 def _multiplicities(terms: list[str] | str) -> dict:
@@ -289,8 +288,6 @@ def query_text_index_batch(
     same multiplicity fold, same (bm25 DESC, key ASC) order).
 
     Returns (qid, <key>, bm25) ordered (qid, bm25 DESC, key)."""
-    from pyspark.sql import Window
-
     v, spec = IK.spec_at("text_index", view_path, version)
     key = spec["ti_key"]
     qids = IK.check_batch("text_index", spec, queries, qid_col, "bm25",
@@ -316,11 +313,8 @@ def query_text_index_batch(
               .withColumn("_c", F.col("_mult") * F.col("_idf")
                           * F.col("_tfp"))
               .groupBy(qid_col, key).agg(F.sum("_c").alias("bm25")))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("bm25"),
-                                            F.asc(key))
-    return (scored.where(F.col("bm25") > 0.0)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
+    return (similarity.top_k_per(scored.where(F.col("bm25") > 0.0), k,
+                                 qid_col, key, "bm25", "_rn")
             .select(qid_col, key, "bm25")
             .orderBy(qid_col, F.desc("bm25"), F.asc(key)))
 
@@ -376,7 +370,5 @@ def query_phrase_index(
             F.lit(True)))
     out = (per_doc
            .select(key, F.size(chain).cast("long").alias("phrase_tf"))
-           .where(F.col("phrase_tf") > 0)
-           .orderBy(F.desc("phrase_tf"), F.asc(key))
-           .limit(k))
-    return out
+           .where(F.col("phrase_tf") > 0))
+    return similarity.top_k(out, k, key, "phrase_tf")

@@ -658,16 +658,6 @@ def test_canonical_url_dedups_campaign_variants(spark):
     assert out[4] == ("", "plain text")  # non-URLs pass through untouched
 
 
-def test_auto_score_method_dispatch(spark, embeddings):
-    from rclip_server_spark.operators import similarity
-
-    assert similarity.choose_score_method([0.1] * 64) == "sql"
-    assert similarity.choose_score_method([0.1] * 1024) == "gemv"
-    auto = similarity.topk_similar(embeddings, QV, k=5, method="auto").collect()
-    sql = similarity.topk_similar(embeddings, QV, k=5, method="sql").collect()
-    assert [(r.vec_id, r.score) for r in auto] == [(r.vec_id, r.score) for r in sql]
-
-
 def test_containment_catches_excerpt_jaccard_misses(spark, documents):
     """A 200-char excerpt of a long doc: containment ~1.0 (found), while
     its Jaccard vs the full doc is far below any useful threshold."""
